@@ -6,7 +6,7 @@ sf dir, after a warm pass at sf0.001, and optionally dumps
 
 Usage:
   python bench_extra.py [--sf DIR] [--reps N] [--plans TAG:SUFFIX] q1 q2 ...
-  python bench_extra.py --sf /root/testdata/sf1.0 --reps 2 dedup_embedding
+  python bench_extra.py --sf /tmp/szs_sf1.0 --reps 2 dedup_embedding
 
 Same session config as bench.py (local[$SPARK_GRAFT_CPUS], AQE on, Arrow
 on) so the numbers are comparable to the frozen harness.
@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf1.0")
+    ap.add_argument("--sf", default="/tmp/szs_sf1.0")
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--warm-sf", default="/root/testdata/sf0.001")
     ap.add_argument("--plans", default="", help="TAG:SUFFIX -> plans/TAG/<q>_SUFFIX.txt")

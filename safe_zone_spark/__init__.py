@@ -20,9 +20,14 @@ Layout:
                  replacements: toxicity lexicon, TCKN checksum, Luhn)
     streaming/   prefix-consistent incremental scrubber (stream-sync mode)
     multimodal/  opaque binary columns + stubbed decode plumbing
+    _worker      once-per-Python-worker set-up (zip finder sealing)
 """
 
 __version__ = "0.1.0"
+
+from ._worker import seal_in_spark_task  # noqa: E402
+
+seal_in_spark_task()
 
 # Convenience top-level API mirroring the reference's surface:
 #   detect(text)      — single text  (POST /detect; SDK detect_text)

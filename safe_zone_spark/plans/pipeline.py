@@ -26,6 +26,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -169,18 +170,28 @@ def assign_units(df: DataFrame, num_units: int, *, key_col: str = "url",
     )
 
 
-def completed_units(spark: SparkSession, manifest_path: str, run_id: str) -> DataFrame:
-    """Units already committed for this run (empty DF if no manifest yet)."""
+def completed_units(spark: SparkSession, manifest_path: str, run_id: str) -> DataFrame | None:
+    """Units already committed for this run, or None when the manifest holds
+    no rows yet: its path does not exist, or it is a directory without data
+    files (a crash during the first manifest append leaves one). A manifest
+    that exists but cannot be read raises, since treating it as empty would
+    re-run every unit and append duplicate manifest rows."""
     try:
         m = spark.read.parquet(manifest_path)
-    except Exception:
-        return spark.createDataFrame([], f"{UNIT_COL} int")
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
     return m.filter(F.col("run_id") == run_id).select(UNIT_COL).distinct()
 
 
 def resume_filter(df_with_unit: DataFrame, manifest_path: str, run_id: str) -> DataFrame:
-    """Drop rows whose unit is already in the manifest (broadcast anti-join)."""
+    """Drop rows whose unit is already in the manifest (broadcast anti-join).
+    Without manifest rows the input is returned as is, with no join and no
+    relation to build for the empty unit list."""
     done = completed_units(df_with_unit.sparkSession, manifest_path, run_id)
+    if done is None:
+        return df_with_unit
     return df_with_unit.join(F.broadcast(done), UNIT_COL, "left_anti")
 
 

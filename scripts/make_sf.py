@@ -23,7 +23,7 @@ runs produce identical bytes):
 This is measurement infrastructure only — nothing in queries() or the
 oracle reads it unless SPARK_GRAFT_SF_DIR points at the output.
 
-Usage: python scripts/make_sf.py [outdir=/root/testdata/sf1.0]
+Usage: python scripts/make_sf.py [outdir=/tmp/szs_sf1.0]
 """
 
 from __future__ import annotations
@@ -41,7 +41,7 @@ SRC = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf1.0"
+    out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/szs_sf1.0"
     if os.path.exists(os.path.join(out, "_DONE")):
         print(f"{out} already complete")
         return

@@ -22,6 +22,10 @@ from safe_zone_spark.oracle import (
 from safe_zone_spark.rules import RuleSet, default_rules
 
 REF_DATA = Path("/root/reference/tests/data")
+needs_ref_data = pytest.mark.skipif(
+    not REF_DATA.exists(),
+    reason=f"reference fixture data not present at {REF_DATA}; the inline pinned cases still run",
+)
 
 
 # --- resolveAction (guardrails_test.go:14-33, 195-220) ---
@@ -87,6 +91,7 @@ def test_hit_weight():
 # --- reference PII matrix (tests/data/pii_cases.json via
 #     tests/integration/pii_matrix_integration_test.go:37-84) ---
 
+@needs_ref_data
 def test_pii_cases_matrix():
     cases = json.loads((REF_DATA / "pii_cases.json").read_text())
     for case in cases:
@@ -97,6 +102,7 @@ def test_pii_cases_matrix():
             assert t in got_types, f"{case['name']}: missing {t} in {got_types}"
 
 
+@needs_ref_data
 def test_golden_email_ssn():
     inp = json.loads((REF_DATA / "detect_email_ssn_input.json").read_text())
     expect = json.loads((REF_DATA / "detect_email_ssn_expect.json").read_text())

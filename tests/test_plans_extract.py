@@ -133,6 +133,20 @@ def test_resume_filter_empty_manifest_passthrough(spark, corpus, tmp_path):
     staged = assign_units(corpus, 4)
     pending = resume_filter(staged, str(tmp_path / "nope"), "r9")
     assert pending.count() == corpus.count()
+    # a crash in the first manifest append leaves a directory with no data
+    (tmp_path / "empty").mkdir()
+    pending = resume_filter(staged, str(tmp_path / "empty"), "r9")
+    assert pending.count() == corpus.count()
+
+
+def test_resume_filter_raises_on_unreadable_manifest(spark, corpus, tmp_path):
+    """A manifest that exists but cannot be read must not pass for "nothing
+    completed": that would re-run every unit and duplicate manifest rows."""
+    manifest = tmp_path / "m"
+    manifest.mkdir()
+    (manifest / "part-00000.parquet").write_bytes(b"PAR1 not a parquet footer")
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        resume_filter(assign_units(corpus, 4), str(manifest), "r9")
 
 
 def test_rule_tables_roundtrip_and_hot_reload(spark, tmp_path):

@@ -64,6 +64,8 @@ def test_resume_filter_uses_broadcast_join(spark, tmp_path):
     staged = assign_units(corpus, 8)
     # no manifest yet → passthrough (no join at all)
     pending = resume_filter(staged, str(tmp_path / "m"), "r")
+    plan = plan_of(pending)
+    assert "Join" not in plan and "ExistingRDD" not in plan
     # write a manifest and check the anti-join broadcasts the unit list
     staged.limit(10).groupBy("unit").count().select(
         F.lit("r").alias("run_id"), "unit"
