@@ -434,7 +434,7 @@ def q_dedup_lines(spark, sf_dir):
 
 
 def q_dedup_paragraphs(spark, sf_dir):
-    """RefinedWeb-style PARAGRAPH dedup: same combiner plan as dedup_lines
+    """RefinedWeb-style PARAGRAPH dedup: same window plan as dedup_lines
     at a coarser span. The corpus has no paragraph breaks, so the query
     derives them deterministically (a break after every 5th word —
     identical regex on both engines: explicit [^ ] class, no \\s

@@ -28,6 +28,12 @@ CORPUS_PATH = os.environ.get(
 )
 
 
+def driver_memory() -> str:
+    """24g, or half the host's physical memory when that is less."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{min(24 << 10, half_mib)}m"
+
+
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -42,7 +48,7 @@ def build_spark(cpus: int):
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("BENCH_ARROW_BATCH", "10000"))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -1303,7 +1303,7 @@ WHERE list_dot_product(a.v, b.v)
 
 def dedup_lines(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
-    min_line_len: int = 20, strategy: str = "window", sep: str = "\n",
+    min_line_len: int = 20, sep: str = "\n",
 ) -> DataFrame:
     """Remove duplicate LINES corpus-wide, keeping each line's first
     occurrence (ordered by (id, line position)); lines shorter than
@@ -1312,52 +1312,27 @@ def dedup_lines(
     "\n" = C4 line dedup, "\n\n" = RefinedWeb-style PARAGRAPH dedup —
     identical plan, coarser spans.
 
-    Two plans, identical results (same oracle hash):
-
-    * ``window`` (default since r6): row_number over (line) — ONE pass over
-      the exploded lines and one line-keyed exchange. The combiner form's
-      map-side partial min only shrinks the KEEPER aggregate; its join
-      probe still ships every occurrence's bytes through the same
-      line-keyed exchange, so the worst-case boilerplate-skew exposure is
-      identical — and the join form consumes the explode from three
-      branches (keeper build, probe, short-line union), re-running the
-      scan/explode three times (no CSE across DataFrame branches). Measured
-      at the sf1.0 set: 2.4-7.2 s combiner vs 1.1-1.9 s window, rows
-      identical.
-    * ``combiner`` — keeper-per-line = ``min(struct(id, idx))`` hash
-      aggregate with map-side partial min + join back; kept as the
-      equivalence twin and for engines where window-over-hot-key planning
-      is worse than a skew-handled join (AQE skew-join applies to joins
-      only).
+    One plan: row_number over (line) — ONE pass over the exploded lines
+    and one line-keyed exchange. A keeper-per-line aggregate + join-back
+    form was measured slower at the sf1.0 set (2.4-7.2 s vs 1.1-1.9 s,
+    rows identical): its join probe ships every occurrence's bytes through
+    the same line-keyed exchange, and it consumes the explode from three
+    branches (no CSE across DataFrame branches). The DuckDB twin
+    :func:`dedup_lines_sql` is the reference.
     """
     import re as _re
+
+    from pyspark.sql import Window
 
     lines = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), _re.escape(sep))).alias("idx", "line"),
     )
-    if strategy == "combiner":
-        long = lines.filter(F.length("line") >= min_line_len)
-        keepers = long.groupBy("line").agg(
-            F.min(F.struct(F.col(id_col).alias("i"), F.col("idx").alias("x"))).alias("k")
-        )
-        long_flagged = long.join(keepers, "line").select(
-            id_col, "idx", "line",
-            ((F.col(id_col) == F.col("k.i")) & (F.col("idx") == F.col("k.x"))
-             ).alias("keep_line"),
-        )
-        short = lines.filter(F.length("line") < min_line_len).withColumn(
-            "keep_line", F.lit(True)
-        )
-        flagged = long_flagged.unionByName(short.select(id_col, "idx", "line", "keep_line"))
-    else:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("line").orderBy(F.col(id_col), F.col("idx"))
-        flagged = lines.withColumn("rn", F.row_number().over(w)).withColumn(
-            "keep_line",
-            (F.length("line") < min_line_len) | (F.col("rn") == 1),
-        )
+    w = Window.partitionBy("line").orderBy(F.col(id_col), F.col("idx"))
+    flagged = lines.withColumn("rn", F.row_number().over(w)).withColumn(
+        "keep_line",
+        (F.length("line") < min_line_len) | (F.col("rn") == 1),
+    )
     rebuilt = (
         flagged.groupBy(id_col)
         .agg(
@@ -1460,13 +1435,12 @@ def cdc_dedup(
     Returns (id, text_deduped). Expected chunk length = mod chars; spans
     >= ~2*mod shared across docs dedup with high probability.
 
-    Plan (all shuffles combiner-friendly or tiny):
+    Plan:
     1. chunk — one Arrow crossing per doc batch (:func:`cdc_chunks_udf`);
        posexplode emits (id, idx, chunk) only, so total generated bytes ==
        corpus bytes (never corpus × gram-count);
-    2. keeper per duplicate chunk = min(struct(id, idx)) hash aggregate
-       with map-side partial min (hot boilerplate chunks collapse per map
-       task, the dedup_lines combiner argument);
+    2. keeper per duplicate chunk = min(struct(id, idx)) over a window
+       keyed by the chunk's md5 (one exchange, chunker run once);
     3. rebuild — ordered concat of kept chunks (chunks partition the doc
        exactly, so concat of all-kept == original text).
     """

@@ -2,20 +2,24 @@
 
 The reference processes one HTTP request at a time
 (/root/reference/internal/guardrails/guardrails.go:60-377); here a whole
-Arrow batch of documents flows through ``mapInPandas`` at once and the
-expensive step — regex find-all over text — is executed **once per pattern
-per batch**, not once per pattern per document:
+Arrow batch of documents flows through ``mapInPandas`` at once, and each
+pattern's regex find-all follows one rule, domain × mode:
 
-    batch texts → one UTF-8 blob with NUL separators
-                → compiled_pattern.finditer(blob)      (C speed, one pass)
-                → np.searchsorted(doc_boundaries, ...) (vectorized doc assign)
+* **domain** — the pattern's gate picks the docs it can possibly match:
+  every doc, the docs holding an ASCII digit, or the docs holding one of
+  its necessary literals (gates are keyed by exact regex source and only
+  shrink the domain; they never add or drop a match);
+* **mode** — a blob-safe pattern runs ONE finditer per batch over its
+  domain's NUL-joined sub-blob and routes matches back to docs with one
+  vectorized ``np.searchsorted`` over the doc starts; a pattern that could
+  match the NUL separator or anchor to text edges (``^``, ``$``, ``.``,
+  negated classes …) runs finditer doc by doc over its domain.
 
-This is semantics-preserving for the seed patterns because none of them can
-match a NUL byte (all literals/classes are ASCII-printable), so no match can
-cross a document boundary; patterns containing ``^``/``$`` anchors fall back
-to the per-document path automatically. The reference scans its 20 patterns
-serially per request (guardrails.go:171) — the blob scan is the genuine
-improvement Spark's batching buys, with identical results.
+The blob mode is semantics-preserving because a blob-safe pattern cannot
+match a NUL byte, so no match crosses a document boundary, and ``\\b``
+sees the separator exactly as a document edge. The reference scans its 20
+patterns serially per request (guardrails.go:171) — the blob scan is the
+genuine improvement Spark's batching buys, with identical results.
 
 Per-document sequential steps (canonical sort, greedy overlap resolution,
 scrub rebuild) reuse the oracle's functions directly — those are cheap
@@ -34,7 +38,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import re
+from itertools import repeat
 from typing import Iterator
 
 import numpy as np
@@ -91,6 +95,18 @@ def scan_output_schema(input_schema):
 
 _SEP = b"\x00"
 
+
+def _join(parts: list[bytes]) -> tuple[bytes, np.ndarray]:
+    """NUL-join ``parts`` into one blob; part i occupies
+    ``blob[starts[i] : starts[i] + len(parts[i])]``."""
+    n = len(parts)
+    lengths = np.fromiter((len(b) for b in parts), dtype=np.int64, count=n)
+    starts = np.zeros(n, dtype=np.int64)
+    if n > 1:
+        np.cumsum(lengths[:-1] + 1, out=starts[1:])
+    return _SEP.join(parts), starts
+
+
 def _blob_safe(src: str) -> bool:
     """True if the pattern may scan the NUL-joined batch blob: it must be
     unable to match across the NUL separator or anchor to text boundaries.
@@ -130,19 +146,6 @@ def _blob_safe(src: str) -> bool:
     return True
 
 
-def _append_matches(
-    per_doc, matches, starts, blob, p, score, placeholder, allow
-) -> None:
-    m_starts = np.fromiter((s for s, _ in matches), dtype=np.int64, count=len(matches))
-    doc_idx = np.searchsorted(starts, m_starts, side="right") - 1
-    for (s, e), di in zip(matches, doc_idx):
-        base = int(starts[di])
-        value = blob[s:e].decode("utf-8", "surrogateescape")
-        if value in allow:
-            continue
-        per_doc[di].append(Detection(p.name, value, placeholder, s - base, e - base, score))
-
-
 # ---------------------------------------------------------------------------
 # Necessary-condition gates: a pattern keyed here (by EXACT regex source, so
 # custom rules never inherit a wrong gate) can only match text that either
@@ -176,129 +179,83 @@ _LITERAL_GATES = {
     r"(?i)(DAN mode|do anything now)": (b"dan mode", b"do anything now"),
 }
 # NB: UUID_PII / MAC_ADDRESS / AWS_SECRET_KEY have NO valid digit gate —
-# their hex/base62 classes can match letters-only values — so they scan the
-# full blob ungated.
+# their hex/base62 classes can match letters-only values — so they scan
+# every doc.
 
 
-def _candidate_docs(lblob: bytes, starts: np.ndarray, literals) -> set[int]:
-    """Docs containing any of the lowercase literals (memchr-speed finds)."""
-    out: set[int] = set()
-    for lit in literals:
-        pos = 0
-        while True:
-            idx = lblob.find(lit, pos)
-            if idx == -1:
-                break
-            out.add(int(np.searchsorted(starts, idx, side="right") - 1))
-            pos = idx + 1
-    return out
+def _gate_docs(gate, blob: bytes, starts: np.ndarray, lower: bytes | None) -> list[int]:
+    """Sorted indices of the docs a gate admits: docs holding an ASCII digit
+    (``"digit"``), or docs whose ASCII-lowercased bytes (``lower``) contain
+    one of the gate's literals."""
+    if gate == "digit":
+        # pad one byte so reduceat indices stay in range when the last doc
+        # is empty (starts[last] == len(blob))
+        arr = np.frombuffer(blob + _SEP, dtype=np.uint8)
+        return np.flatnonzero(np.add.reduceat((arr >= 48) & (arr <= 57), starts)).tolist()
+    hits = []
+    for lit in gate:
+        idx = lower.find(lit)
+        while idx != -1:
+            hits.append(idx)
+            idx = lower.find(lit, idx + 1)
+    if not hits:
+        return []
+    return np.unique(np.searchsorted(starts, hits, side="right") - 1).tolist()
 
 
 def _scan_blob_patterns(
+    encoded: list[bytes],
     blob: bytes,
     starts: np.ndarray,
-    n_docs: int,
     rules: RuleSet,
     placeholder_style: str,
-    encoded: list[bytes] | None = None,
 ) -> list[list[Detection]]:
-    """One finditer pass per blob-safe pattern over the whole batch blob
-    (matches routed back to documents via vectorized searchsorted); patterns
-    that could anchor to or cross the NUL separators (``_blob_safe`` false)
-    scan per document instead — same results, just without the batch win.
+    """Per-doc pattern candidates for one batch (``blob, starts`` =
+    ``_join(encoded)``), by one rule: domain × mode.
 
-    Gated patterns scan a reduced domain: digit-gated patterns run over a
-    sub-blob of only digit-containing documents (~20-30% of clean web text);
-    literal-gated patterns run per-doc over only the docs containing a
-    necessary literal. Measured ~4x on the synthetic corpus, bit-identical
-    results.
-    """
+    * Domain — a pattern's gate picks the docs it can possibly match: all
+      docs, digit docs, or docs holding one of its literals.
+    * Mode — a blob-safe pattern (``_blob_safe``) runs one finditer over
+      its domain's NUL-joined sub-blob, built once per gate per batch, and
+      its matches are routed back to docs by one vectorized searchsorted;
+      any other pattern runs finditer doc by doc over its domain.
+
+    Both modes feed one emit loop (decode → allowlist → ``Detection``).
+    Offsets are byte offsets into each doc's UTF-8 encoding."""
+    n_docs = len(encoded)
     per_doc: list[list[Detection]] = [[] for _ in range(n_docs)]
     allow = rules.allowlist
-
-    compiled_patterns = compile_patterns(rules)
-    any_digit_gate = any(p.regex in _DIGIT_GATED for p, _ in compiled_patterns)
-    digit_blob = digit_starts = digit_docidx = None
-    if any_digit_gate:
-        # pad one byte so reduceat indices stay in range when the last doc
-        # is empty (starts[last] == len(blob))
-        arr = np.frombuffer(blob + b"\x00", dtype=np.uint8)
-        is_digit = (arr >= 48) & (arr <= 57)
-        seg_has = np.add.reduceat(is_digit, starts) > 0
-        digit_docidx = np.nonzero(seg_has)[0]
-        if encoded is not None:
-            parts = [encoded[int(i)] for i in digit_docidx]
-        else:
-            parts = [
-                blob[int(starts[i]): (int(starts[i + 1]) - 1 if i + 1 < n_docs else len(blob))]
-                for i in digit_docidx
-            ]
-        m = len(parts)
-        lengths = np.fromiter((len(b) for b in parts), dtype=np.int64, count=m)
-        digit_starts = np.zeros(m, dtype=np.int64)
-        if m > 1:
-            np.cumsum(lengths[:-1] + 1, out=digit_starts[1:])
-        digit_blob = _SEP.join(parts)
-
-    lblob = None  # lazily lowercased once if any literal gate fires
-
-    for p, compiled in compiled_patterns:
-        score = round_confidence(compute_confidence(category=p.category, active=p.is_active))
-        placeholder = make_placeholder(p.name, style=placeholder_style)
-        if p.regex in _DIGIT_GATED and digit_blob is not None:
-            if len(digit_blob):
-                matches = [(m_.start(), m_.end()) for m_ in compiled.finditer(digit_blob)]
-                for (s, e) in matches:
-                    di_local = int(np.searchsorted(digit_starts, s, side="right") - 1)
-                    di = int(digit_docidx[di_local])
-                    base = int(digit_starts[di_local])
-                    value = digit_blob[s:e].decode("utf-8", "surrogateescape")
-                    if value in allow:
-                        continue
-                    per_doc[di].append(
-                        Detection(p.name, value, placeholder, s - base, e - base, score)
-                    )
-            continue
-        gate_lits = _LITERAL_GATES.get(p.regex)
-        if gate_lits is not None:
-            if lblob is None:
-                lblob = blob.lower()
-            cands = _candidate_docs(lblob, starts, gate_lits)
-            for i in sorted(cands):
-                data = (
-                    encoded[i]
-                    if encoded is not None
-                    else blob[int(starts[i]): (int(starts[i + 1]) - 1 if i + 1 < n_docs
-                                               else len(blob))]
-                )
-                for m_ in compiled.finditer(data):
-                    value = data[m_.start(): m_.end()].decode("utf-8", "surrogateescape")
-                    if value in allow:
-                        continue
-                    per_doc[i].append(
-                        Detection(p.name, value, placeholder, m_.start(), m_.end(), score)
-                    )
+    # gate -> (domain doc indices, sub-blob, sub-blob starts)
+    domains = {None: (range(n_docs), blob, starts)}
+    lower = None
+    for p, compiled in compile_patterns(rules):
+        gate = "digit" if p.regex in _DIGIT_GATED else _LITERAL_GATES.get(p.regex)
+        if gate not in domains:
+            if gate != "digit" and lower is None:
+                lower = blob.lower()
+            docs = _gate_docs(gate, blob, starts, lower)
+            domains[gate] = (docs, *_join([encoded[i] for i in docs]))
+        docs, sub, sub_starts = domains[gate]
+        if not docs:
             continue
         if _blob_safe(p.regex):
-            matches = [(m.start(), m.end()) for m in compiled.finditer(blob)]
-            if matches:
-                _append_matches(per_doc, matches, starts, blob, p, score, placeholder, allow)
+            spans = [m.span() for m in compiled.finditer(sub)]
+            if not spans:
+                continue
+            local = np.searchsorted(sub_starts, [s for s, _ in spans], side="right") - 1
+            # plain ints: per-match numpy scalar indexing is measurably slower
+            hits = zip([docs[j] for j in local.tolist()], repeat(sub),
+                       sub_starts[local].tolist(), spans)
         else:
-            docs = encoded if encoded is not None else [
-                blob[int(starts[i]): int(starts[i]) + (
-                    (int(starts[i + 1]) - 1 - int(starts[i])) if i + 1 < n_docs
-                    else len(blob) - int(starts[i])
-                )]
-                for i in range(n_docs)
-            ]
-            for i, data in enumerate(docs):
-                for m in compiled.finditer(data):
-                    value = data[m.start(): m.end()].decode("utf-8", "surrogateescape")
-                    if value in allow:
-                        continue
-                    per_doc[i].append(
-                        Detection(p.name, value, placeholder, m.start(), m.end(), score)
-                    )
+            hits = ((i, encoded[i], 0, m.span())
+                    for i in docs for m in compiled.finditer(encoded[i]))
+        score = round_confidence(compute_confidence(category=p.category, active=p.is_active))
+        placeholder = make_placeholder(p.name, style=placeholder_style)
+        for i, data, base, (s, e) in hits:
+            value = data[s:e].decode("utf-8", "surrogateescape")
+            if value in allow:
+                continue
+            per_doc[i].append(Detection(p.name, value, placeholder, s - base, e - base, score))
     return per_doc
 
 
@@ -348,17 +305,10 @@ def detect_batch(
     texts = texts.tolist() if hasattr(texts, "tolist") else list(texts)
     encoded = [("" if t is None else t).encode("utf-8") for t in texts]
     n = len(encoded)
-    lengths = np.fromiter((len(b) for b in encoded), dtype=np.int64, count=n)
-    # doc i occupies blob[starts[i] : starts[i] + lengths[i]]
-    starts = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(lengths[:-1] + 1, out=starts[1:])
-    blob = _SEP.join(encoded)
+    blob, starts = _join(encoded)
 
     block_per_doc = _scan_blob_blocklist(blob, starts, n, rules)
-    pat_per_doc = _scan_blob_patterns(
-        blob, starts, n, rules, placeholder_style, encoded=encoded
-    )
+    pat_per_doc = _scan_blob_patterns(encoded, blob, starts, rules, placeholder_style)
 
     # shared per-doc validator results (same names for every doc in the job)
     out = {
@@ -579,12 +529,7 @@ def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_i
             texts = pdf[text_col]
             encoded = [("" if t is None else t).encode("utf-8") for t in texts]
             n = len(encoded)
-            lengths = np.fromiter((len(b) for b in encoded), dtype=np.int64, count=n)
-            starts = np.zeros(n, dtype=np.int64)
-            if n > 1:
-                np.cumsum(lengths[:-1] + 1, out=starts[1:])
-            blob = _SEP.join(encoded)
-            per_doc = _scan_blob_patterns(blob, starts, n, r, "type", encoded=encoded)
+            per_doc = _scan_blob_patterns(encoded, *_join(encoded), r, "type")
             ids, types, hits = [], [], []
             id_values = pdf[id_col].tolist()
             for i in range(n):

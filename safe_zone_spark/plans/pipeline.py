@@ -40,101 +40,6 @@ def salted_repartition(df: DataFrame, num_partitions: int, *, key_col: str = "ur
     return df.repartition(num_partitions, F.xxhash64(F.col(key_col), F.lit(salt)))
 
 
-def _estimate_scan_splits(df: DataFrame) -> int | None:
-    """File-scan task count from source-file metadata only, reproducing
-    FilePartition's arithmetic (maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, totalBytes/defaultParallelism)); files chunked at
-    maxSplitBytes; chunks + openCost bin-packed into maxSplitBytes bins).
-    Returns None when the plan has no local file source — the caller then
-    falls back to the authoritative ``df.rdd`` conversion (which forces
-    physical planning of the whole lineage, the cost this estimate
-    avoids)."""
-    import os
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    # The file arithmetic describes the SCAN only, so the estimate is used
-    # solely for scan-shaped plans: an ALLOWLIST of node kinds (a denylist
-    # missed partition-changing nodes like FlatMapGroupsInPandas); anything
-    # unrecognized falls back to the authoritative RDD path.
-    plan = str(df._jdf.queryExecution().analyzed())  # noqa: SLF001
-    scan_shaped = ("Relation", "LogicalRelation", "Project", "Filter",
-                   "SubqueryAlias", "View", "ResolvedHint")
-    for line in plan.splitlines():
-        node = line.lstrip(" :+-").split(" ", 1)[0].split("[", 1)[0]
-        if node and not any(node.startswith(ok) for ok in scan_shaped):
-            return None
-
-    def _bytes(conf_val: str, default: int) -> int:
-        """Parse Spark byte-string syntax: bare number (bytes) or a
-        k/m/g/t/p suffix with optional trailing 'b' ('512m', '1g',
-        '134217728b')."""
-        v = str(conf_val).strip().lower()
-        mult = 1
-        if v.endswith("b"):
-            v = v[:-1]
-        suffixes = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
-                    "t": 1 << 40, "p": 1 << 50}
-        if v and v[-1] in suffixes:
-            mult = suffixes[v[-1]]
-            v = v[:-1]
-        try:
-            return int(v) * mult
-        except ValueError:
-            return default
-
-    conf = df.sparkSession.conf
-    mpb = _bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728"), 134217728)
-    open_cost = _bytes(conf.get("spark.sql.files.openCostInBytes", "4194304"), 4194304)
-    sizes = []
-    for f in files:
-        if f.startswith("file:"):
-            path = f[len("file://"):] if f.startswith("file://") else f[len("file:"):]
-        else:
-            return None  # remote FS — metadata stat not cheap/portable here
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return None
-    total = sum(sizes) + open_cost * len(sizes)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    max_split = min(mpb, max(open_cost, (total // max(1, parallelism)) or 1))
-    # FileSourceScanExec: EVERY file is chunked at max_split first, then
-    # ALL chunks are globally sorted by size descending
-    # (splitFiles.sortBy(_.length).reverse) BEFORE bin-packing — sorting
-    # files and emitting their chunks in file order would interleave small
-    # remainder chunks between full ones and over-count bins for
-    # heterogeneous file sizes (e.g. 200MB+150MB at 128MB: Spark packs 3
-    # partitions, per-file chunk order says 4).
-    chunks: list[int] = []
-    for size in sizes:
-        offset = 0
-        while True:
-            chunks.append(min(size - offset, max_split))
-            offset += max_split
-            if offset >= size:
-                break
-    chunks.sort(reverse=True)
-    # FilePartition.getFilePartitions: a chunk closes the current bin when
-    # its BYTES don't fit, then accounts bytes + openCost toward the fill.
-    n_bins, fill = 0, 0
-    open_bin = False
-    for c in chunks:
-        if open_bin and fill + c > max_split:
-            n_bins += 1
-            fill = 0
-            open_bin = False
-        fill += c + open_cost
-        open_bin = True
-    if open_bin:
-        n_bins += 1
-    return n_bins
-
-
 def ensure_parallelism(df: DataFrame, min_partitions: int, *, key_col: str = "url",
                        salt: int = 42) -> DataFrame:
     """Salted-repartition ONLY when the input can't feed every core.
@@ -146,18 +51,12 @@ def ensure_parallelism(df: DataFrame, min_partitions: int, *, key_col: str = "ur
     pay one shuffle to unlock full width. This keeps the flagship pipeline
     narrow end-to-end in the common case (SURVEY §3.1).
 
-    The split count comes from file metadata (no ``df.rdd`` conversion —
-    that forces physical planning of the whole lineage per call), and is
-    used ONLY when the analyzed plan is scan-shaped (project/filter over a
-    file source): any repartitioning node above the scan — coalesce,
-    joins, aggregates — invalidates the file arithmetic, so those plans
-    take the authoritative RDD path. The estimate reproduces
-    FilePartition's exact packing (verified equal across 1/3/12/40-file
-    layouts), so it neither over- nor under-counts for the plans it
-    serves."""
-    est = _estimate_scan_splits(df)
-    n = est if est is not None else df.rdd.getNumPartitions()
-    if n >= min_partitions:
+    The partition count is Spark's own (``df.rdd.getNumPartitions()``), so
+    the decision follows every split setting (``spark.sql.files.*``
+    partition bytes and counts, ``leafNodeDefaultParallelism`` …) and any
+    repartitioning node above the scan. Over a file scan this plans the
+    scan without running a job."""
+    if df.rdd.getNumPartitions() >= min_partitions:
         return df
     return salted_repartition(df, min_partitions, key_col=key_col, salt=salt)
 

@@ -44,19 +44,44 @@ __all__ = [
 
 
 def run_token_for_checkpoint(checkpoint_dir: str) -> str:
-    """Stable per-stream token namespacing this run's store appends.
+    """Per-stream token namespacing this run's store appends, kept in a
+    ``run_token`` file inside the (local) checkpoint dir.
 
-    Derived from the checkpoint path because that IS the stream's identity:
-    a restart from the same checkpoint continues the same batch-id sequence
-    (replay exclusion must keep applying across the restart), while a NEW
-    crawl streamed over the same store uses a fresh checkpoint — its batch
-    ids restart at 0, and without namespacing its `K >= batch_id` replay
-    exclusion silently excluded ALL of the prior run's appends from dedup
-    and overwrote the prior run's same-named dirs (cross-run dedup loss +
-    store corruption)."""
+    The checkpoint IS the stream's identity: a restart from the same
+    checkpoint continues the same batch-id sequence (replay exclusion must
+    keep applying across the restart), while a NEW crawl streamed over the
+    same store uses a fresh checkpoint — its batch ids restart at 0, and
+    without namespacing its `K >= batch_id` replay exclusion silently
+    excluded ALL of the prior run's appends from dedup and overwrote the
+    prior run's same-named dirs (cross-run dedup loss + store corruption).
+
+    So the token is read from the checkpoint when present and otherwise
+    created there: a fresh uuid, so a checkpoint dir that is deleted and
+    reused starts a new namespace (a token derived from the path would
+    return the old one). A checkpoint that already holds Spark's
+    ``offsets/`` but no token file was started before tokens were stored;
+    it gets the md5-of-path token that run has been writing under."""
     import hashlib
+    import uuid
 
-    return hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+    path = os.path.join(checkpoint_dir, "run_token")
+    try:
+        with open(path) as f:
+            return f.read().strip()
+    except FileNotFoundError:
+        pass
+    if os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
+        token = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+    else:
+        token = uuid.uuid4().hex
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        f.write(token)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    return token
 
 
 def compact_signature_store(

@@ -82,7 +82,7 @@ def test_resume_skips_completed_and_completes(spark, corpus, tmp_path):
     ).count() == 0
 
 
-def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus):
+def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus, tmp_path):
     wide = corpus.repartition(8)
     # enough partitions → returned as-is, no extra shuffle stage
     assert ensure_parallelism(wide, 4) is wide
@@ -91,42 +91,19 @@ def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus):
     assert out.rdd.getNumPartitions() == 6
     assert out.count() == corpus.count()
 
-
-def test_estimate_scan_splits_mixed_file_sizes(spark, tmp_path):
-    """_estimate_scan_splits must reproduce FileSourceScanExec's packing on
-    HETEROGENEOUS file sizes: Spark sorts ALL split chunks size-descending
-    before bin-packing, so a big file's small remainder chunk packs with
-    other small chunks, not between its siblings. Equal-size layouts can't
-    expose a per-file chunk-order bug; this one can (and did — ADVICE r2)."""
-    import glob
-    import os
-
-    from safe_zone_spark.plans.pipeline import _estimate_scan_splits
-
-    src = tmp_path / "mixed"
-    # heterogeneous single-file parquets: ~3 size classes, written one by one
-    for i, rows in enumerate((9000, 5000, 2500, 1200, 400, 80, 10)):
-        spark.range(rows).select(
-            F.col("id"), F.concat(F.lit("x" * 80), F.col("id")).alias("pad")
-        ).coalesce(1).write.parquet(str(src / f"f{i}"))
-    files = sorted(glob.glob(str(src / "*" / "*.parquet")))
-    flat = tmp_path / "flat"
-    os.makedirs(flat)
-    for i, f in enumerate(files):
-        os.link(f, flat / f"part-{i}.parquet")
-    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_cost = spark.conf.get("spark.sql.files.openCostInBytes")
+    # the decision follows Spark's split settings: 16 small files pack into
+    # fewer than 8 splits at local[4], but minPartitionNum=8 yields 8
+    path = str(tmp_path / "files16")
+    spark.range(1600).selectExpr("cast(id as string) as url").repartition(16) \
+        .write.parquet(path)
+    files = spark.read.parquet(path)
+    assert ensure_parallelism(files, 8) is not files
+    spark.conf.set("spark.sql.files.minPartitionNum", "8")
     try:
-        # force multi-chunk splitting + non-trivial packing at test scale
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
-        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
-        df = spark.read.parquet(str(flat))
-        est = _estimate_scan_splits(df)
-        actual = df.rdd.getNumPartitions()
-        assert est == actual, (est, actual)
+        files = spark.read.parquet(path)
+        assert ensure_parallelism(files, 8) is files
     finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
+        spark.conf.unset("spark.sql.files.minPartitionNum")
 
 
 def test_resume_filter_empty_manifest_passthrough(spark, corpus, tmp_path):

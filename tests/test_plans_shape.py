@@ -111,16 +111,6 @@ def test_mix_sample_is_narrow_and_jvm_only(spark):
     assert "EvalPython" not in plan  # no row-at-a-time or Arrow Python
 
 
-def test_dedup_lines_combiner_has_partial_min(spark):
-    """The combiner plan's keeper aggregate must do a map-side partial min
-    (the property that absorbs hot-boilerplate skew before the shuffle)."""
-    from safe_zone_spark.operators.dedup import dedup_lines
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(dedup_lines(docs, strategy="combiner"))
-    assert "partial_min" in plan or "partial_min".upper() in plan.upper()
-
-
 def test_embedding_near_dups_candidate_join_carries_only_ids(spark):
     """The (table, bucket) self-join and pair dedup must NOT shuffle the
     64-double vectors — vectors re-attach after the distinct-pair set."""

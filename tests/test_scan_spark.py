@@ -184,6 +184,29 @@ def test_blob_unsafe_patterns_fall_back_to_per_doc():
     # q.z must NOT match across the doc boundary between 'abcq' and 'zdef'
     assert not res["contains_pii"][2] and not res["contains_pii"][3]
 
+    # gated blob patterns beside the per-doc ones: US_SSN (digit gate) and
+    # EMAIL (literal gate), an allowlisted gated value, a doc without
+    # digits, a doc without '@' and an empty last doc (reduceat padding)
+    seed = {p.name: p for p in default_rules().patterns}
+    mixed = RuleSet(
+        patterns=(seed["US_SSN"], rules.patterns[0], seed["EMAIL"], rules.patterns[1]),
+        allowlist=frozenset({"ok@example.com"}),
+    )
+    texts = pd.Series([
+        "Subject: hi a@b.co and ok@example.com, qaz",
+        "no digits at all, mail x@y.org",
+        "ssn 123-45-6789 then 987-65-4321 quz",
+        "Subject: x 111-22-3333 c@d.io",
+        "",
+    ])
+    res = detect_batch(texts, mixed)
+    for i, text in enumerate(texts):
+        o = detect(text, mixed, mode="MASK")
+        got = [(d["type"], d["start"], d["end"], d["value"]) for d in res["detections"][i]]
+        assert got == [(d.type, d.start, d.end, d.value) for d in o.detections], text
+        assert res["scrubbed_text"][i] == o.redacted_text
+    assert [len(d) for d in res["detections"]] == [3, 1, 3, 3, 0]
+
 
 def test_checksums_reject_unicode_digits():
     from safe_zone_spark.checksums import (

@@ -238,3 +238,26 @@ def test_second_run_dedups_against_first_runs_appends(spark, tmp_path, corpora):
     store_files_after = sorted(os.listdir(store))
     assert set(store_files_before) <= set(store_files_after)
     assert len(store_files_after) > len(store_files_before)
+
+
+def test_run_token_follows_the_checkpoint_not_its_path(tmp_path):
+    """The same checkpoint keeps its token; a deleted-and-reused checkpoint
+    path starts a new namespace; a checkpoint Spark already wrote offsets
+    into before tokens were stored keeps the md5-of-path token its appends
+    carry."""
+    import hashlib
+    import shutil
+
+    from safe_zone_spark.streaming.incremental import run_token_for_checkpoint
+
+    ckpt = str(tmp_path / "ckpt")
+    first = run_token_for_checkpoint(ckpt)
+    assert run_token_for_checkpoint(ckpt) == first
+    shutil.rmtree(ckpt)
+    assert run_token_for_checkpoint(ckpt) != first
+
+    legacy = tmp_path / "legacy"
+    (legacy / "offsets").mkdir(parents=True)
+    want = hashlib.md5(os.path.abspath(str(legacy)).encode()).hexdigest()[:8]
+    assert run_token_for_checkpoint(str(legacy)) == want
+    assert run_token_for_checkpoint(str(legacy)) == want
