@@ -733,8 +733,12 @@ def _run_stream_to_memory(spark, stream_df, prefix: str, *,
     import tempfile
     import uuid
 
+    if sink == "parquet" and output_mode != "append":
+        raise ValueError(
+            f"sink='parquet' needs output_mode='append', got {output_mode!r}"
+        )
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    if sink == "parquet" and output_mode == "append":
+    if sink == "parquet":
         out = tempfile.mkdtemp(prefix=f"szs_stream_{name}_")
         if not _STREAM_OUT_DIRS:
             atexit.register(
@@ -772,19 +776,31 @@ def _events_is_big(sf_dir: str, threshold: int = 8_000_000) -> bool:
     heavy-input shapes (split staging, distributed sink) pay fixed
     task-launch/commit overhead that LOSES at small inputs (measured both
     ways at sf0.1 vs the sf1.0-shaped set), so they switch on input bytes
-    — the streaming analog of AQE's size-adaptive decisions."""
+    — the streaming analog of AQE's size-adaptive decisions.
+
+    A directory table counts every data file below it (partition dirs
+    included), skipping ``_``/``.`` names as Spark's file index does. A
+    missing table is not big; any other filesystem error raises."""
     import os
+    import stat
 
     p = f"{sf_dir}/events.parquet"
-    if os.path.isfile(p):
-        return os.path.getsize(p) > threshold
     try:
-        return sum(
-            os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
-            if not f.startswith(("_", "."))
-        ) > threshold
-    except OSError:
+        st = os.stat(p)
+    except FileNotFoundError:
         return False
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_size > threshold
+
+    def fail(err: OSError) -> None:
+        raise err
+
+    total = 0
+    for root, dirs, files in os.walk(p, onerror=fail):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        total += sum(os.path.getsize(os.path.join(root, f)) for f in files
+                     if not f.startswith(("_", ".")))
+    return total > threshold
 
 
 def _stage_events_split(spark, events: DataFrame, sf_dir: str) -> str:

@@ -2,9 +2,10 @@
 
 Runs the headline queries from __spark_entry__.queries() at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32), plus the flagship end-to-end
-corpus-safety pipeline (html→text extract → quality exprs → detect/scrub →
-keep/drop) over a deterministic synthetic Common-Crawl-style corpus
+``local[$SPARK_GRAFT_CPUS]`` (default: the cores this process may run on,
+``os.sched_getaffinity``), plus the flagship end-to-end corpus-safety
+pipeline (html→text extract → quality exprs → detect/scrub → keep/drop)
+over a deterministic synthetic Common-Crawl-style corpus
 (BENCH_CORPUS_ROWS rows, seed 42), reporting docs/sec.
 
 Output: {"metric": "e2e_pipeline_sec", "value": N, "unit": "sec",
@@ -21,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 CORPUS_ROWS = int(os.environ.get("BENCH_CORPUS_ROWS", "120000"))
 CORPUS_PATH = os.environ.get(
     "BENCH_CORPUS_PATH", f"/tmp/szs_bench_corpus_{CORPUS_ROWS}.parquet"

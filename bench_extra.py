@@ -32,12 +32,11 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    from bench import build_spark
+    from bench import CPUS, build_spark
 
     import __spark_entry__ as entry_mod
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_spark(cpus)
+    spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
     try:
@@ -86,7 +85,7 @@ def main() -> None:
 
     spark.stop()
     print(json.dumps({
-        "sf_dir": args.sf, "cpus": cpus,
+        "sf_dir": args.sf, "cpus": CPUS,
         "queries_min": {k: min(v) for k, v in timings.items()},
         "queries_samples": timings,
     }))

@@ -18,6 +18,13 @@ Design for 100 TB:
   completed units — O(completed units) driver state, no input rescan of
   finished work thanks to partition pruning when the output is
   partitioned by unit.
+* **Layout**: rows are rebalanced by unit before the commit (AQE's
+  ``RebalancePartitions``), so each unit is written by one task rather than
+  by every task of the transform: files per unit are bounded by
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (a larger unit is
+  split into several files), not multiplied by the task count. Without AQE
+  Spark plans a plain hash exchange on ``unit``, so one task writes each
+  unit.
 * **Atomicity**: outputs land under ``.../unit=<k>/`` via Spark's committer;
   the manifest row for a unit is appended only after the output job
   commits, so a crash between the two re-processes (idempotently
@@ -131,7 +138,15 @@ def run_with_manifest(
     """Checkpointed execution: assign units → skip completed → transform →
     commit output (partitioned by unit) → append manifest. Returns the
     number of units processed this invocation. ``max_units`` caps work per
-    call (used by tests to simulate a mid-run crash)."""
+    call (used by tests to simulate a mid-run crash).
+
+    The transform runs once (its output is persisted); the commit reads the
+    cache through a rebalance on ``unit``, so each unit is written by one
+    task and its file count is bounded by the advisory partition size
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) rather than by
+    the number of transform tasks. The rebalance needs AQE; without it the
+    hint plans a plain hash exchange on ``unit`` and one task writes each
+    unit."""
     spark = df.sparkSession
     staged = assign_units(df, num_units, key_col=key_col)
     pending = resume_filter(staged, manifest_path, run_id)
@@ -152,7 +167,7 @@ def run_with_manifest(
         if n_units == 0:
             return 0
         (
-            out.write.mode("overwrite")
+            out.hint("rebalance", UNIT_COL).write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(UNIT_COL)
             .parquet(output_path)

@@ -82,6 +82,68 @@ def test_resume_skips_completed_and_completes(spark, corpus, tmp_path):
     ).count() == 0
 
 
+def _data_files_per_dir(root, prefix):
+    """{partition dir name: data file count} for the ``prefix=`` dirs under
+    ``root`` (Spark's ``_SUCCESS`` and ``.crc`` files are not data)."""
+    import os
+
+    return {
+        d: sum(not f.startswith(("_", ".")) for f in os.listdir(os.path.join(root, d)))
+        for d in os.listdir(root) if d.startswith(f"{prefix}=")
+    }
+
+
+@pytest.fixture()
+def multi_split_corpus(spark, corpus, tmp_path):
+    """The corpus read back from 8 files, so the transform runs as >= 4
+    tasks that each hold rows of every unit."""
+    path = str(tmp_path / "src")
+    corpus.repartition(8).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() >= 4
+    return df
+
+
+def _keep_all(df):
+    return df.withColumn("keep", F.lit(True))
+
+
+def test_commit_writes_one_file_per_unit(spark, multi_split_corpus, tmp_path):
+    """The commit rebalances rows by unit: each unit dir holds one file,
+    not one per transform task."""
+    out_path = str(tmp_path / "out")
+    n = run_with_manifest(
+        multi_split_corpus, _keep_all, output_path=out_path,
+        manifest_path=str(tmp_path / "manifest"), run_id="r1", num_units=8,
+    )
+    assert n == 8
+    assert _data_files_per_dir(out_path, "unit") == {f"unit={k}": 1 for k in range(8)}
+    assert spark.read.parquet(out_path).count() == 300
+
+
+def test_commit_splits_units_past_the_advisory_size(spark, multi_split_corpus, tmp_path):
+    """Files per unit are bounded by size: under a small advisory partition
+    size a unit is written as several files, and no row is lost or doubled."""
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8k")
+    try:
+        n = run_with_manifest(
+            multi_split_corpus, _keep_all, output_path=out_path,
+            manifest_path=man_path, run_id="r1", num_units=8,
+        )
+    finally:
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    assert n == 8
+    assert max(_data_files_per_dir(out_path, "unit").values()) > 1
+    final = spark.read.parquet(out_path)
+    assert final.count() == 300
+    assert final.select("url").distinct().count() == 300
+    man = spark.read.parquet(man_path)
+    assert man.count() == 8
+    assert man.agg(F.sum("n_docs")).head()[0] == 300
+
+
 def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus, tmp_path):
     wide = corpus.repartition(8)
     # enough partitions → returned as-is, no extra shuffle stage
