@@ -54,8 +54,6 @@ from safe_zone_spark.operators.dedup import (
     decontaminate_sql,
     dedup_lines,
     dedup_lines_sql,
-    embedding_near_dup_pairs,
-    embedding_near_dup_sql,
     fuzzy_dedup_docs,
     fuzzy_dedup_docs_sql,
     incremental_minhash_dedup,
@@ -87,6 +85,7 @@ from safe_zone_spark.operators.url_filter import (
 _canon_url_sql = canonical_url_sql("url")
 from safe_zone_spark.operators.scan import pattern_hit_counts, scan
 from safe_zone_spark.operators.similarity import (
+    _dot,
     ann_lsh_topk,
     ann_lsh_topk_sql,
     embedding_near_dups_sql,
@@ -97,7 +96,7 @@ from safe_zone_spark.operators.validate import (
     validator_columns,
     validator_sql,
 )
-from safe_zone_spark.rules import SEED_PATTERNS, Pattern, RuleSet, default_rules
+from safe_zone_spark.rules import SEED_PATTERNS, RuleSet, default_rules
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -338,14 +337,8 @@ def q_knn_cosine(spark, sf_dir):
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     qarr = F.array(*[F.lit(float(x)) for x in qvec])
     e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
     cos = F.round(
-        dot(e, qarr) / (F.sqrt(dot(e, e)) * F.sqrt(dot(qarr, qarr))), 3
+        _dot(e, qarr) / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(qarr, qarr))), 3
     ).alias("cos_sim")
     return (
         emb.select("vec_id", cos)
@@ -1792,8 +1785,10 @@ def variant_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     from safe_zone_spark.functions.bpe import bpe_token_count_sql
     from safe_zone_spark.functions.quality_model import quality_model_oracle_sql
+    from safe_zone_spark.operators.ai_score import ai_confidence_sql_fragment
     from safe_zone_spark.operators.multimodal import media_metadata_oracle_sql
 
+    ai_score = ai_confidence_sql_fragment("value")
     cpath, tri_path, ctx_path, bpe_path, q_path = _model_tables()
     return {
         "langid_ngram": langid_ngram_oracle_sql(cpath),
@@ -1943,11 +1938,8 @@ def oracle_sql() -> dict[str, str]:
             f"{AUG_CTE}, emails AS ("
             f"  SELECT doc_id, regexp_extract(text, '{EMAIL_RE}') AS value FROM aug"
             ") "
-            "SELECT doc_id, value, "
-            "(list_sum(list_transform(regexp_extract_all(md5(value), '.'), "
-            "c -> ascii(c))) % 101) / 100.0 AS ai_score, "
-            "(CAST(0.60 AS DOUBLE) + (list_sum(list_transform(regexp_extract_all(md5(value), '.'), "
-            "c -> ascii(c))) % 101) / 100.0) / 2.0 AS fused "
+            f"SELECT doc_id, value, {ai_score} AS ai_score, "
+            f"(CAST(0.60 AS DOUBLE) + {ai_score}) / 2.0 AS fused "
             "FROM emails WHERE value <> ''"
         ),
         "scrub_full": scrub_full_sql(AUG_CTE, SCAN_RULES),

@@ -50,6 +50,7 @@ def main() -> None:
         .getOrCreate()
     )
 
+    from safe_zone_spark.plans.pipeline import read_manifest
     from safe_zone_spark.rules import default_rules
     from safe_zone_spark.sources.corpus import corpus_schema
     from safe_zone_spark.streaming.pipeline import run_pipeline
@@ -73,10 +74,8 @@ def main() -> None:
     else:
         import json
 
-        try:
-            n_batches = len(spark.read.parquet(f"{args.output}/manifests").collect())
-        except Exception:
-            n_batches = 0
+        manifests = read_manifest(spark, f"{args.output}/manifests")
+        n_batches = 0 if manifests is None else manifests.count()
         print(json.dumps({"drained": True, "total_manifest_rows": n_batches}))
     spark.stop()
 

@@ -259,11 +259,6 @@ def bpe_token_counts(texts: "list[str]") -> "tuple[list[int], list[int]]":
     return n_words, n_tokens
 
 
-def bpe_count_series(texts: pd.Series) -> "list[int]":
-    """extra_scorers-compatible entry point: BPE token count per text."""
-    return bpe_token_counts(texts.fillna("").tolist())[1]
-
-
 def bpe_count_udf():
     @F.pandas_udf("long")
     def _udf(texts: pd.Series) -> pd.Series:

@@ -80,138 +80,21 @@ def gopher_quality_columns(text: Column | str = "text") -> dict[str, Column]:
 # --- Gopher repetition filters (Rae et al. §A1.1, Table A1) ------------------
 # The heavier "repetitious text" family the O(n) array forms above cannot
 # express: duplicate-line CHARACTER fraction and most-frequent-n-gram
-# character fractions need per-group counting, so they are RELATIONAL
-# (explode → per-doc aggregation; every shuffle is keyed by doc id — no
-# cross-doc hot keys, map-side combine applies).
+# character fractions need per-doc counting, done doc-locally in one numpy
+# batch (``repetition_metrics_fused``); ``repetition_oracle_sql`` is the
+# relational DuckDB twin.
 
 MAX_DUP_LINE_FRAC = 0.30
 MAX_DUP_LINE_CHAR_FRAC = 0.20
 TOP_NGRAM_CAPS = {2: 0.20, 3: 0.18, 4: 0.16}  # Gopher Table A1
 
 
-def repetition_metrics(df, *, id_col: str = "doc_id", text_col: str = "text"):
-    """Per-document Gopher repetition metrics + keep flag.
-
-    Definitions (identical in the DuckDB twin, ``repetition_oracle_sql``):
-    * lines = split on \\n, EMPTY LINES EXCLUDED — blank-line paragraph
-      separators are formatting, not repetition; counting them as
-      duplicates would fail every normally-formatted multi-paragraph page
-      at the 0.30 cap;
-      dup_line_frac     = (n_lines - n_distinct_lines) / n_lines (0 when
-      there are no non-empty lines);
-      dup_line_char_frac = chars in lines occurring more than once / chars
-      in all lines (0 when the denominator is 0);
-    * words = non-empty single-space tokens; the top n-gram (n = 2, 3, 4)
-      is the most frequent space-joined word n-gram, ties broken by the
-      lexicographically smallest gram;
-      top{{n}}gram_char_frac = count · len(gram) / len(text).
-    rep_keep applies the raw (unrounded) fractions against the Gopher
-    Table A1 caps; emitted fractions are rounded to 4 (filter on RAW,
-    emit rounded — the repo-wide twin convention)."""
-    from pyspark.sql import Window as W
-
-    base = df.select(
-        F.col(id_col), F.col(text_col).alias("_t"), F.length(text_col).alias("_n")
-    )
-
-    lines = base.select(
-        id_col, F.explode(F.split("_t", "\n")).alias("line")
-    ).filter(F.length("line") > 0)
-    line_stats = (
-        lines.groupBy(id_col, "line")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
-        .agg(
-            F.sum("c").alias("n_lines"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.sum(F.col("c") * F.length("line")).alias("line_chars"),
-            F.sum(
-                F.when(F.col("c") > 1, F.col("c") * F.length("line")).otherwise(0)
-            ).alias("dup_chars"),
-        )
-    )
-
-    words = F.filter(F.split(F.col("_t"), " "), lambda x: x != "")
-    wpos = base.select(id_col, F.posexplode(words).alias("pos", "w"))
-    win = W.partitionBy(id_col).orderBy("pos")
-    leads = wpos.select(
-        id_col, "w",
-        F.lead("w", 1).over(win).alias("w1"),
-        F.lead("w", 2).over(win).alias("w2"),
-        F.lead("w", 3).over(win).alias("w3"),
-    )
-    gram_rels = []
-    for n in (2, 3, 4):
-        parts = ["w"] + [f"w{j}" for j in range(1, n)]
-        gram_rels.append(
-            leads.filter(F.col(f"w{n - 1}").isNotNull()).select(
-                id_col, F.lit(n).alias("n"), F.concat_ws(" ", *parts).alias("gram")
-            )
-        )
-    grams = gram_rels[0].unionByName(gram_rels[1]).unionByName(gram_rels[2])
-    top = (
-        grams.groupBy(id_col, "n", "gram")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                W.partitionBy(id_col, "n").orderBy(F.desc("c"), F.asc("gram"))
-            ),
-        )
-        .filter(F.col("rk") == 1)
-    )
-    top_fracs = top.groupBy(id_col).agg(
-        *[
-            F.max(
-                F.when(F.col("n") == n, F.col("c") * F.length("gram"))
-            ).alias(f"_top{n}_chars")
-            for n in (2, 3, 4)
-        ]
-    )
-
-    out = (
-        base.join(line_stats, id_col, "left")
-        .join(top_fracs, id_col, "left")
-    )
-    # all-empty docs fall out of the filtered lines relation entirely
-    dup_line_frac = F.when(
-        F.coalesce(F.col("n_lines"), F.lit(0)) > 0,
-        (F.col("n_lines") - F.col("n_distinct")).cast("double") / F.col("n_lines"),
-    ).otherwise(F.lit(0.0))
-    dup_char_frac = F.when(
-        F.coalesce(F.col("line_chars"), F.lit(0)) > 0,
-        F.col("dup_chars").cast("double") / F.col("line_chars"),
-    ).otherwise(F.lit(0.0))
-    tf = {
-        n: F.coalesce(F.col(f"_top{n}_chars"), F.lit(0)).cast("double")
-        / F.greatest(F.col("_n"), F.lit(1))
-        for n in (2, 3, 4)
-    }
-    keep = (
-        (dup_line_frac <= MAX_DUP_LINE_FRAC)
-        & (dup_char_frac <= MAX_DUP_LINE_CHAR_FRAC)
-        & (tf[2] <= TOP_NGRAM_CAPS[2])
-        & (tf[3] <= TOP_NGRAM_CAPS[3])
-        & (tf[4] <= TOP_NGRAM_CAPS[4])
-    )
-    return out.select(
-        id_col,
-        F.round(dup_line_frac, 4).alias("dup_line_frac"),
-        F.round(dup_char_frac, 4).alias("dup_line_char_frac"),
-        F.round(tf[2], 4).alias("top2gram_char_frac"),
-        F.round(tf[3], 4).alias("top3gram_char_frac"),
-        F.round(tf[4], 4).alias("top4gram_char_frac"),
-        keep.alias("rep_keep"),
-    )
-
-
 def _repetition_raw(t: str) -> tuple[float, float, float, float, float]:
     """One doc → raw (dup_line_frac, dup_line_char_frac, top2/3/4 gram char
-    fracs). Python-batch twin of the relational definitions above —
-    np.unique's sorted-ascending output makes argmax(counts) EXACTLY the
-    (count DESC, gram ASC) tie-break the window form and the SQL twin use
-    (argmax returns the FIRST max, and first-in-sorted = lexicographically
-    smallest)."""
+    fracs), as defined in :func:`repetition_metrics_fused` — np.unique's
+    sorted-ascending output makes argmax(counts) EXACTLY the (count DESC,
+    gram ASC) tie-break the SQL twin's window uses (argmax returns the
+    FIRST max, and first-in-sorted = lexicographically smallest)."""
     n_chars = max(len(t), 1)
     lines = [ln for ln in t.split("\n") if ln]
     if lines:
@@ -264,13 +147,26 @@ def repetition_series(texts: "pd.Series") -> "pd.DataFrame":
 
 
 def repetition_metrics_fused(df, *, id_col: str = "doc_id", text_col: str = "text"):
-    """Repetition metrics as ONE Arrow crossing, zero shuffles — the scale
-    form (VERDICT r3 #4: the relational plan shuffles ~3× the corpus words
-    through 4 shuffle/sort stages for a metric computable doc-locally; this
-    is the simhash pattern — numpy batch Spark-side, the relational
-    DuckDB twin ``repetition_oracle_sql`` stays the independent referee,
-    and :func:`repetition_metrics` remains the in-engine relational twin
-    for the equivalence test)."""
+    """Per-document Gopher repetition metrics + keep flag, as ONE Arrow
+    crossing with zero shuffles (the metrics are doc-local; a relational
+    plan shuffles ~3× the corpus words through 4 shuffle/sort stages).
+
+    Definitions (identical in the DuckDB twin, ``repetition_oracle_sql``):
+    * lines = split on \\n, EMPTY LINES EXCLUDED — blank-line paragraph
+      separators are formatting, not repetition; counting them as
+      duplicates would fail every normally-formatted multi-paragraph page
+      at the 0.30 cap;
+      dup_line_frac     = (n_lines - n_distinct_lines) / n_lines (0 when
+      there are no non-empty lines);
+      dup_line_char_frac = chars in lines occurring more than once / chars
+      in all lines (0 when the denominator is 0);
+    * words = non-empty single-space tokens; the top n-gram (n = 2, 3, 4)
+      is the most frequent space-joined word n-gram, ties broken by the
+      lexicographically smallest gram;
+      top{{n}}gram_char_frac = count · len(gram) / len(text).
+    rep_keep applies the raw (unrounded) fractions against the Gopher
+    Table A1 caps; emitted fractions are rounded to 4 JVM-side (filter on
+    RAW, emit rounded — the repo-wide twin convention)."""
     raw_udf = F.pandas_udf(
         "dlf double, dcf double, f2 double, f3 double, f4 double, rep_keep boolean"
     )(repetition_series)
@@ -287,8 +183,8 @@ def repetition_metrics_fused(df, *, id_col: str = "doc_id", text_col: str = "tex
 
 
 def repetition_oracle_sql(*, table: str = "documents", id_col: str = "doc_id") -> str:
-    """DuckDB twin of :func:`repetition_metrics` (identical definitions,
-    identical tie-breaks, raw-filter/rounded-emit convention)."""
+    """DuckDB twin of :func:`repetition_metrics_fused` (identical
+    definitions, identical tie-breaks, raw-filter/rounded-emit convention)."""
 
     def gram_expr(n: int) -> str:
         return " || ' ' || ".join(

@@ -259,17 +259,6 @@ def quality_logit_udf(model=None):
     return _udf
 
 
-def quality_pred_udf(model=None, *, threshold: int | None = None):
-    th = GATE_THRESHOLD if threshold is None else threshold
-
-    @F.pandas_udf("boolean")
-    def _udf(texts: pd.Series) -> pd.Series:
-        scores = quality_scores(texts.fillna("").tolist(), model=model)
-        return pd.Series([h - lo >= th for h, lo in scores], index=texts.index)
-
-    return _udf
-
-
 # --- DuckDB twin --------------------------------------------------------------
 
 

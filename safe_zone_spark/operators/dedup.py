@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import _dot
+
 # ---------------------------------------------------------------------------
 # Shingling (shared by MinHash and Jaccard) — pure Catalyst expressions.
 # ---------------------------------------------------------------------------
@@ -268,6 +270,22 @@ def banded_signatures(
     )
 
 
+def _est_jaccard(num_hashes: int):
+    """Estimated Jaccard of a candidate pair's signature columns ``sa`` and
+    ``sb``: the fraction of equal MinHash components, one JVM fold."""
+    return (
+        F.aggregate(
+            F.zip_with(
+                F.col("sa"), F.col("sb"),
+                lambda x, y: F.when(x == y, F.lit(1.0)).otherwise(F.lit(0.0)),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        / F.lit(float(num_hashes))
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     num_hashes: int = 16, bands: int = 4, shingle_n: int = 3,
@@ -308,18 +326,9 @@ def minhash_lsh_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    est = (
-        F.aggregate(
-            F.zip_with(
-                F.col("sa"), F.col("sb"),
-                lambda x, y: F.when(x == y, F.lit(1.0)).otherwise(F.lit(0.0)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(float(num_hashes))
+    return pairs.select(
+        "id_a", "id_b", F.round(_est_jaccard(num_hashes), 4).alias("est_jaccard")
     )
-    return pairs.select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
 
 
 def minhash_lsh_pairs_sql(
@@ -409,18 +418,9 @@ def incremental_minhash_dedup(
         )
         .dropDuplicates([id_col, "_prior_id"])
     )
-    est = (
-        F.aggregate(
-            F.zip_with(
-                F.col("sa"), F.col("sb"),
-                lambda x, y: F.when(x == y, F.lit(1.0)).otherwise(F.lit(0.0)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(float(num_hashes))
+    dup_ids = (
+        cand.filter(_est_jaccard(num_hashes) >= F.lit(threshold)).select(id_col).distinct()
     )
-    dup_ids = cand.filter(est >= F.lit(threshold)).select(id_col).distinct()
     return (
         new_docs.select(id_col)
         .distinct()
@@ -1255,10 +1255,6 @@ FROM {table} t LEFT JOIN hexed ON t.{id_col} = hexed.{id_col}
 # ---------------------------------------------------------------------------
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
     threshold: float = 0.4,
@@ -1281,19 +1277,6 @@ def embedding_near_dup_pairs(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-
-
-def embedding_near_dup_sql(*, table: str = "embeddings", id_col: str = "vec_id",
-                           threshold: float = 0.4) -> str:
-    return f"""
-WITH e AS (SELECT {id_col}, CAST(embedding AS DOUBLE[]) AS v FROM {table})
-SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-  round(list_dot_product(a.v, b.v)
-        / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-FROM e a JOIN e b ON a.{id_col} < b.{id_col}
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= {threshold}
-"""
 
 
 # ---------------------------------------------------------------------------

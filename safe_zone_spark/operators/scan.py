@@ -208,7 +208,6 @@ def _scan_blob_patterns(
     blob: bytes,
     starts: np.ndarray,
     rules: RuleSet,
-    placeholder_style: str,
 ) -> list[list[Detection]]:
     """Per-doc pattern candidates for one batch (``blob, starts`` =
     ``_join(encoded)``), by one rule: domain × mode.
@@ -250,7 +249,7 @@ def _scan_blob_patterns(
             hits = ((i, encoded[i], 0, m.span())
                     for i in docs for m in compiled.finditer(encoded[i]))
         score = round_confidence(compute_confidence(category=p.category, active=p.is_active))
-        placeholder = make_placeholder(p.name, style=placeholder_style)
+        placeholder = make_placeholder(p.name)
         for i, data, base, (s, e) in hits:
             value = data[s:e].decode("utf-8", "surrogateescape")
             if value in allow:
@@ -286,7 +285,6 @@ def detect_batch(
     rules: RuleSet,
     *,
     mode: str = "MASK",
-    placeholder_style: str = "type",
     validator_names: tuple[str, ...] = (),
     expected_formats=None,
 ) -> pd.DataFrame:
@@ -308,7 +306,7 @@ def detect_batch(
     blob, starts = _join(encoded)
 
     block_per_doc = _scan_blob_blocklist(blob, starts, n, rules)
-    pat_per_doc = _scan_blob_patterns(encoded, blob, starts, rules, placeholder_style)
+    pat_per_doc = _scan_blob_patterns(encoded, blob, starts, rules)
 
     # shared per-doc validator results (same names for every doc in the job)
     out = {
@@ -414,7 +412,6 @@ def extract_and_scan(
     html_col: str = "html",
     keep_cols: tuple[str, ...] = ("url", "warc_ts"),
     mode: str | None = None,
-    placeholder_style: str = "type",
     fields: tuple[str, ...] | None = None,
     extra_scorers: "dict[str, tuple[str, object]] | None" = None,
 ):
@@ -475,9 +472,7 @@ def extract_and_scan(
             texts = pd.Series(
                 [extract_text_from_html(h) for h in pdf[html_col]], index=pdf.index
             )
-            res = detect_batch(
-                texts, r, mode=mode_resolved, placeholder_style=placeholder_style
-            )
+            res = detect_batch(texts, r, mode=mode_resolved)
             res.index = pdf.index
             out = pdf[list(keep_cols)].copy()
             out["text"] = texts
@@ -529,7 +524,7 @@ def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_i
             texts = pdf[text_col]
             encoded = [("" if t is None else t).encode("utf-8") for t in texts]
             n = len(encoded)
-            per_doc = _scan_blob_patterns(encoded, *_join(encoded), r, "type")
+            per_doc = _scan_blob_patterns(encoded, *_join(encoded), r)
             ids, types, hits = [], [], []
             id_values = pdf[id_col].tolist()
             for i in range(n):
@@ -551,7 +546,6 @@ def scan(
     *,
     text_col: str = "text",
     mode: str | None = None,
-    placeholder_style: str = "type",
     validator_names: tuple[str, ...] = (),
     expected_format_col: str | None = None,
 ):
@@ -584,7 +578,6 @@ def scan(
                 pdf[text_col],
                 r,
                 mode=mode_resolved,
-                placeholder_style=placeholder_style,
                 validator_names=validator_names,
                 expected_formats=fmts,
             )

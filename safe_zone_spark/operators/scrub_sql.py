@@ -152,19 +152,6 @@ rebuilt AS (
 )"""
 
 
-def detections_sql(aug_cte: str, rules: RuleSet) -> str:
-    """The kept-detections relation itself — (doc_id, type, sta, fin,
-    confidence) after sort + greedy — for oracling C1/C2 independently of
-    the string rebuild."""
-    full = scrub_full_sql(aug_cte, rules)
-    head, _, _ = full.rpartition("SELECT a.doc_id,")
-    return (
-        head
-        + "SELECT doc_id, typ AS type, CAST(sta AS BIGINT) AS sta, "
-        "CAST(fin AS BIGINT) AS fin, conf AS confidence FROM kept"
-    )
-
-
 def stream_scrub_oracle_sql(
     base_select: str, rules: RuleSet, *,
     halt_default_msg: str = "Assistant response blocked by TSZ security policy",

@@ -76,18 +76,26 @@ def assign_units(df: DataFrame, num_units: int, *, key_col: str = "url",
     )
 
 
-def completed_units(spark: SparkSession, manifest_path: str, run_id: str) -> DataFrame | None:
-    """Units already committed for this run, or None when the manifest holds
-    no rows yet: its path does not exist, or it is a directory without data
-    files (a crash during the first manifest append leaves one). A manifest
-    that exists but cannot be read raises, since treating it as empty would
-    re-run every unit and append duplicate manifest rows."""
+def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
+    """The manifest table, or None when it holds no rows yet: its path does
+    not exist, or it is a directory without data files (a crash during the
+    first manifest append leaves one). A manifest that exists but cannot be
+    read raises, since treating it as empty would re-run committed work and
+    append duplicate manifest rows."""
     try:
-        m = spark.read.parquet(manifest_path)
+        return spark.read.parquet(manifest_path)
     except AnalysisException as e:
         if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None
         raise
+
+
+def completed_units(spark: SparkSession, manifest_path: str, run_id: str) -> DataFrame | None:
+    """Units already committed for this run, or None when the manifest holds
+    no rows yet (:func:`read_manifest`)."""
+    m = read_manifest(spark, manifest_path)
+    if m is None:
+        return None
     return m.filter(F.col("run_id") == run_id).select(UNIT_COL).distinct()
 
 

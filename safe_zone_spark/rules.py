@@ -197,25 +197,3 @@ def compile_patterns(rules: RuleSet) -> list[tuple[Pattern, re.Pattern[bytes]]]:
             continue
     return out
 
-
-def rules_to_dataframe(spark, rules: RuleSet):
-    """Expose the pattern table as a DataFrame (config-as-data; the Iceberg
-    ``rules.patterns`` analog). Useful for SQL joins and for persisting rules
-    next to the corpus."""
-    from pyspark.sql.types import (
-        BooleanType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("name", StringType(), False),
-            StructField("regex", StringType(), False),
-            StructField("category", StringType(), False),
-            StructField("is_active", BooleanType(), False),
-        ]
-    )
-    rows = [(p.name, p.regex, p.category, p.is_active) for p in rules.patterns]
-    return spark.createDataFrame(rows, schema)

@@ -112,6 +112,37 @@ def _sentence(rng: random.Random, lang: str, n_words: int) -> str:
     return joiner.join(words)
 
 
+_BASE_TS = dt.datetime(2025, 6, 1, 0, 0, 0)
+_HEAVY_HOSTS = tuple(f"heavy{k}.example" for k in range(5))
+
+
+def _corpus_row(rng: random.Random, i: int, pii_fraction: float,
+                skew_fraction: float) -> dict:
+    lang = LANGS[rng.randrange(len(LANGS))]
+    n_sent = rng.randint(2, 6)
+    sentences = [_sentence(rng, lang, rng.randint(6, 18)) for _ in range(n_sent)]
+    case_name, injected, expected_type = "", "", ""
+    if rng.random() < pii_fraction:
+        case_name, injected, expected_type = PII_BANK[rng.randrange(len(PII_BANK))]
+        # splice the PII value mid-document at a sentence boundary
+        pos = rng.randrange(len(sentences))
+        sentences.insert(pos, injected)
+    text = ". ".join(sentences)
+    if rng.random() < skew_fraction:
+        host = _HEAVY_HOSTS[rng.randrange(len(_HEAVY_HOSTS))]
+    else:
+        host = f"host{rng.randrange(1000)}.example"
+    return {
+        "url": f"https://{host}/p/{i:08d}",
+        "warc_ts": _BASE_TS + dt.timedelta(days=rng.randrange(30), seconds=rng.randrange(86400)),
+        "html": wrap_html(text, i),
+        "text": text,
+        "lang": lang,
+        "pii_case": case_name,
+        "pii_expected_type": expected_type,
+    }
+
+
 def generate_corpus_pandas(
     n_rows: int,
     seed: int = 42,
@@ -121,71 +152,12 @@ def generate_corpus_pandas(
 ) -> pd.DataFrame:
     """Build the corpus as pandas (driver-side; scales used in tests are
     ≤50k rows — the big-data path writes this out as parquet once and reads
-    it back through Spark)."""
+    it back through Spark). One ``random.Random(seed)`` feeds every row in
+    order."""
     rng = random.Random(seed)
-    base_ts = dt.datetime(2025, 6, 1, 0, 0, 0)
-    heavy_hosts = [f"heavy{k}.example" for k in range(5)]
-
-    rows = []
-    for i in range(n_rows):
-        lang = LANGS[rng.randrange(len(LANGS))]
-        n_sent = rng.randint(2, 6)
-        sentences = [_sentence(rng, lang, rng.randint(6, 18)) for _ in range(n_sent)]
-
-        case_name, injected, expected_type = "", "", ""
-        if rng.random() < pii_fraction:
-            case_name, injected, expected_type = PII_BANK[rng.randrange(len(PII_BANK))]
-            # splice the PII value mid-document at a sentence boundary
-            pos = rng.randrange(len(sentences))
-            sentences.insert(pos, injected)
-
-        text = ". ".join(sentences)
-        if rng.random() < skew_fraction:
-            host = heavy_hosts[rng.randrange(len(heavy_hosts))]
-        else:
-            host = f"host{rng.randrange(1000)}.example"
-        url = f"https://{host}/p/{i:08d}"
-        warc_ts = base_ts + dt.timedelta(
-            days=rng.randrange(30), seconds=rng.randrange(86400)
-        )
-        rows.append(
-            {
-                "url": url,
-                "warc_ts": warc_ts,
-                "html": wrap_html(text, i),
-                "text": text,
-                "lang": lang,
-                "pii_case": case_name,
-                "pii_expected_type": expected_type,
-            }
-        )
-    return pd.DataFrame(rows)
-
-
-def _corpus_row(rng: random.Random, i: int, pii_fraction: float, skew_fraction: float,
-                base_ts: dt.datetime, heavy_hosts: list[str]) -> dict:
-    lang = LANGS[rng.randrange(len(LANGS))]
-    n_sent = rng.randint(2, 6)
-    sentences = [_sentence(rng, lang, rng.randint(6, 18)) for _ in range(n_sent)]
-    case_name, injected, expected_type = "", "", ""
-    if rng.random() < pii_fraction:
-        case_name, injected, expected_type = PII_BANK[rng.randrange(len(PII_BANK))]
-        pos = rng.randrange(len(sentences))
-        sentences.insert(pos, injected)
-    text = ". ".join(sentences)
-    if rng.random() < skew_fraction:
-        host = heavy_hosts[rng.randrange(len(heavy_hosts))]
-    else:
-        host = f"host{rng.randrange(1000)}.example"
-    return {
-        "url": f"https://{host}/p/{i:08d}",
-        "warc_ts": base_ts + dt.timedelta(days=rng.randrange(30), seconds=rng.randrange(86400)),
-        "html": wrap_html(text, i),
-        "text": text,
-        "lang": lang,
-        "pii_case": case_name,
-        "pii_expected_type": expected_type,
-    }
+    return pd.DataFrame(
+        [_corpus_row(rng, i, pii_fraction, skew_fraction) for i in range(n_rows)]
+    )
 
 
 def corpus_schema():
@@ -214,15 +186,13 @@ def generate_corpus_distributed(spark, n_rows: int, seed: int = 42, *,
     the same recipe would emit 10^12 rows on a real cluster (no driver-side
     materialization)."""
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    base_ts = dt.datetime(2025, 6, 1, 0, 0, 0)
-    heavy_hosts = [f"heavy{k}.example" for k in range(5)]
     schema = corpus_schema()
 
     def gen(batches):
         for pdf in batches:
             rows = [
                 _corpus_row(random.Random((seed << 32) ^ int(i)), int(i),
-                            pii_fraction, skew_fraction, base_ts, heavy_hosts)
+                            pii_fraction, skew_fraction)
                 for i in pdf["id"]
             ]
             yield pd.DataFrame(rows)
@@ -232,17 +202,4 @@ def generate_corpus_distributed(spark, n_rows: int, seed: int = 42, *,
 
 def generate_corpus(spark, n_rows: int, seed: int = 42, **kw):
     """Spark DataFrame variant (Arrow-converted from the pandas build)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-            T.StructField("pii_case", T.StringType(), True),
-            T.StructField("pii_expected_type", T.StringType(), True),
-        ]
-    )
-    return spark.createDataFrame(generate_corpus_pandas(n_rows, seed, **kw), schema)
+    return spark.createDataFrame(generate_corpus_pandas(n_rows, seed, **kw), corpus_schema())

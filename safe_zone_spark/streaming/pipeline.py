@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quality import gopher_quality_columns
 from ..operators.scan import extract_and_scan
+from ..plans.pipeline import read_manifest
 from ..rules import RuleSet, default_rules
 
 
@@ -90,11 +91,8 @@ def run_pipeline(
 
     def committed(batch_id: int) -> bool:
         """True iff this batch id already has its manifest commit marker."""
-        try:
-            manifests = spark.read.parquet(manifest_path)
-        except Exception:
-            return False  # first batch ever — no manifest table yet
-        return bool(
+        manifests = read_manifest(spark, manifest_path)
+        return manifests is not None and bool(
             manifests.filter(
                 (F.col("run_id") == run_id) & (F.col("batch_id") == batch_id)
             ).head(1)

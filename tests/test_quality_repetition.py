@@ -1,9 +1,15 @@
-"""Gopher repetition filters (relational forms) + langid top-2 scores."""
+"""Gopher repetition filters (fused form vs its DuckDB twin) + langid top-2 scores."""
 
 from __future__ import annotations
 
+import duckdb
+import pandas as pd
+
 from safe_zone_spark.functions.langid import classify_texts, score_texts_top2
-from safe_zone_spark.functions.quality import repetition_metrics
+from safe_zone_spark.functions.quality import (
+    repetition_metrics_fused,
+    repetition_oracle_sql,
+)
 
 
 def test_repetition_metrics_edges(spark):
@@ -26,7 +32,7 @@ def test_repetition_metrics_edges(spark):
             "fourth paragraph for good measure and length"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in repetition_metrics(df).collect()}
+    out = {r["doc_id"]: r.asDict() for r in repetition_metrics_fused(df).collect()}
 
     # doc 0: 5 lines, 2 distinct -> dup_line_frac = 3/5; dup chars dominate
     assert abs(out[0]["dup_line_frac"] - 0.6) < 1e-9
@@ -77,15 +83,13 @@ def test_langid_top2_scores_consistent_with_argmax():
     assert top2[0][1] - top2[0][3] > 0 and top2[1][1] - top2[1][3] > 0
 
 
-def test_repetition_fused_equals_relational(spark):
-    """The fused numpy-batch form must be row-identical to the relational
-    form (which the oracle gate already proves against DuckDB) — including
-    the half-up rounding boundary: doc 10 has dup_line_frac exactly 1/32 =
-    0.03125, where banker's rounding in the Python stage would emit 0.0312
-    vs the engines' 0.0313 (the reason repetition_series emits RAW doubles
-    and rounding stays JVM-side)."""
-    from safe_zone_spark.functions.quality import repetition_metrics_fused
-
+def test_repetition_fused_equals_duckdb_twin(spark):
+    """The fused numpy-batch form must be row-identical to the DuckDB twin
+    ``repetition_oracle_sql`` — including the half-up rounding boundary:
+    doc 10 has dup_line_frac exactly 1/32 = 0.03125, where banker's
+    rounding in the Python stage would emit 0.0312 vs the engines' 0.0313
+    (the reason repetition_series emits RAW doubles and rounding stays
+    JVM-side)."""
     lines = [f"unique line number {i} with several words" for i in range(31)]
     boundary = "\n".join(lines + [lines[0]])  # 32 lines, 1 dup
     rows = [
@@ -99,8 +103,10 @@ def test_repetition_fused_equals_relational(spark):
         (10, boundary),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    rel = sorted(tuple(r) for r in repetition_metrics(df).collect())
     fus = sorted(tuple(r) for r in repetition_metrics_fused(df).collect())
-    assert rel == fus
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    duck = sorted(con.execute(repetition_oracle_sql()).fetchall())
+    assert fus == duck
     by = {t[0]: t for t in fus}
     assert by[10][1] == 0.0313  # half-up at the exact 1/32 boundary

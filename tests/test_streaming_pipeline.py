@@ -133,3 +133,17 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(f"{out}/kept_docs").count() == kept0
     assert spark.read.parquet(f"{out}/security_events").count() == ev0
     assert spark.read.parquet(f"{out}/manifests").count() == 1
+
+
+def test_unreadable_manifest_fails_the_batch(spark, tmp_path):
+    """A manifest that exists but cannot be read must not pass for "batch
+    not committed": the batch would re-run and append a duplicate marker."""
+    src = str(tmp_path / "src")
+    out = tmp_path / "out"
+    generate_corpus(spark, 20, seed=5).coalesce(1).write.parquet(src)
+    (out / "manifests").mkdir(parents=True)
+    (out / "manifests" / "part-0.parquet").write_bytes(b"PAR1 not a parquet footer")
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        run_pipeline(spark, src, str(out), schema=corpus_schema(), rules=RULES,
+                     run_id="bad")
+    assert not (out / "kept_docs").exists()
