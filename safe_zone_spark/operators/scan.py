@@ -3,17 +3,19 @@
 The reference processes one HTTP request at a time
 (/root/reference/internal/guardrails/guardrails.go:60-377); here a whole
 Arrow batch of documents flows through ``mapInPandas`` at once, and each
-pattern's regex find-all follows one rule, domain × mode:
+needle — the blocklist words (sorted, as escaped regexes) then the active
+patterns in table order — follows one rule, domain × mode, both read from
+Python's own parse of the needle's regex (``_plan``):
 
-* **domain** — the pattern's gate picks the docs it can possibly match:
-  every doc, the docs holding an ASCII digit, or the docs holding one of
-  its necessary literals (gates are keyed by exact regex source and only
-  shrink the domain; they never add or drop a match);
-* **mode** — a blob-safe pattern runs ONE finditer per batch over its
+* **domain** — the docs holding every *factor* of the regex, a set of
+  byte strings one of which each match must contain (a required byte
+  class, a run of literals, or the union over an alternation's branches);
+  factors only shrink the domain, they never add or drop a match;
+* **mode** — a blob-safe needle runs ONE finditer per batch over its
   domain's NUL-joined sub-blob and routes matches back to docs with one
-  vectorized ``np.searchsorted`` over the doc starts; a pattern that could
-  match the NUL separator or anchor to text edges (``^``, ``$``, ``.``,
-  negated classes …) runs finditer doc by doc over its domain.
+  vectorized ``np.searchsorted`` over the doc starts; a needle that could
+  match the NUL separator or anchor to text edges (``^``, ``$``, ``\\B``,
+  ``.``, negated classes …) runs finditer doc by doc over its domain.
 
 The blob mode is semantics-preserving because a blob-safe pattern cannot
 match a NUL byte, so no match crosses a document boundary, and ``\\b``
@@ -38,7 +40,12 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import functools
+import re
+from dataclasses import replace
 from itertools import repeat
+from re import _constants as C
+from re import _parser
 from typing import Iterator
 
 import numpy as np
@@ -53,7 +60,7 @@ from ..oracle import (
     round_confidence,
     scrub_text,
 )
-from ..rules import RuleSet, compile_patterns, default_rules
+from ..rules import RuleSet, compile_bytes_regex, compile_patterns, default_rules
 from ..validators import validate_format
 
 # Appended by scan(); every input column is passed through unchanged.
@@ -107,140 +114,158 @@ def _join(parts: list[bytes]) -> tuple[bytes, np.ndarray]:
     return _SEP.join(parts), starts
 
 
-def _blob_safe(src: str) -> bool:
-    """True if the pattern may scan the NUL-joined batch blob: it must be
-    unable to match across the NUL separator or anchor to text boundaries.
-
-    Unsafe constructs — in a *bytes* regex: unescaped ``.`` matches \\x00;
-    negated classes ``[^…]`` and the complements ``\\S \\D \\W`` match \\x00;
-    ``^ $ \\A \\Z`` anchor to the blob, not the document. ``\\b``/``\\B``
-    ARE safe: \\x00 is a non-word byte, so boundaries behave exactly as at
-    document edges. Literal ``.``/``^``/``$`` inside character classes are
-    fine. Conservative on anything it can't prove."""
-    i, n = 0, len(src)
-    in_class = False
-    while i < n:
-        c = src[i]
-        if c == "\\":
-            nxt = src[i + 1] if i + 1 < n else ""
-            if nxt in ("S", "D", "W"):  # complement shorthands match \x00
-                return False
-            if not in_class and nxt in ("A", "Z", "z"):  # text anchors
-                return False
-            i += 2
-            continue
-        if in_class:
-            if c == "]":
-                in_class = False
-            i += 1
-            continue
-        if c == "[":
-            in_class = True
-            if i + 1 < n and src[i + 1] == "^":
-                return False  # negated class matches \x00
-            i += 1
-            continue
-        if c in ".^$":
-            return False
-        i += 1
-    return True
+_ALL = frozenset(range(256))
+_DIGIT, _SPACE = frozenset(b"0123456789"), frozenset(b" \t\n\r\f\v")
+_WORD = _DIGIT | frozenset(b"_abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
+# in a bytes regex \d \s \w and their complements are ASCII classes
+_CATEGORY = {C.CATEGORY_DIGIT: _DIGIT, C.CATEGORY_SPACE: _SPACE, C.CATEGORY_WORD: _WORD,
+             C.CATEGORY_NOT_DIGIT: _ALL - _DIGIT, C.CATEGORY_NOT_SPACE: _ALL - _SPACE,
+             C.CATEGORY_NOT_WORD: _ALL - _WORD}
 
 
-# ---------------------------------------------------------------------------
-# Necessary-condition gates: a pattern keyed here (by EXACT regex source, so
-# custom rules never inherit a wrong gate) can only match text that either
-# contains an ASCII digit ("digit") or contains one of the listed lowercase
-# literals. Gates shrink the scan domain — they can never add or drop a
-# match (pinned by the oracle-parity and property tests).
-# ---------------------------------------------------------------------------
-
-_DIGIT_GATED = frozenset({
-    r"\b[1-9][0-9]{9}[02468]\b",                                   # TCKN
-    r"\b(?:(?:\+?90)|0)?5\d{2}(?:\s*|-)\d{3}(?:\s*|-)\d{2}(?:\s*|-)\d{2}\b",  # PHONE_TR
-    r"\b\+(?:[0-9] ?){6,14}[0-9]\b",                               # PHONE_INT
-    r"\b(?:\d[ -]*?){13,16}\b",                                    # CREDIT_CARD
-    r"\bTR\d{2}\s?(\d{4}\s?){5}\d{2}\b",                           # IBAN_TR
-    r"\b\d{2}[./-]\d{2}[./-]\d{4}\b",                              # DATE
-    r"\b(0[1-9]|[1-7][0-9]|8[01])\s?[A-Z]{1,3}\s?\d{2,4}\b",       # TURKISH_PLATE
-    r"\b\d{10}\b",                                                  # VKN
-    r"\b\d{16}\b",                                                  # MERSIS
-    r"\b\d{3}-\d{2}-\d{4}\b",                                       # US_SSN
-    r"\b[A-CEGHJ-PR-TW-Z]{1}[A-CEGHJ-NPR-TW-Z]{1}[0-9]{6}[A-D]{1}\b",  # UK_NINO
-})
-
-_LITERAL_GATES = {
-    r"(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}": (b"@",),               # EMAIL
-    r"\bAKIA[0-9A-Z]{16}\b": (b"akia",),                                  # AWS_ACCESS_KEY
-    r"-----BEGIN (?:RSA|DSA|EC|PGP) PRIVATE KEY-----": (b"-----begin ",),
-    r"\b(api_key|apikey|access_token|auth_token)\s*[:=]\s*[A-Za-z0-9-_]{16,64}\b":
-        (b"api_key", b"apikey", b"access_token", b"auth_token"),
-    r"(?i)(ignore previous instructions|forget all prior instructions)":
-        (b"ignore previous instructions", b"forget all prior instructions"),
-    r"(?i)(DAN mode|do anything now)": (b"dan mode", b"do anything now"),
-}
-# NB: UUID_PII / MAC_ADDRESS / AWS_SECRET_KEY have NO valid digit gate —
-# their hex/base62 classes can match letters-only values — so they scan
-# every doc.
+def _byte_factor(op, av) -> frozenset[bytes] | None:
+    """The bytes a one-byte node can match, ASCII-case-folded (all a bytes
+    regex's IGNORECASE folds), or ``None`` for any other node."""
+    if op is C.LITERAL:
+        got = {av}
+    elif op is C.NOT_LITERAL:
+        got = _ALL - {av}
+    elif op is C.ANY:
+        got = _ALL
+    elif op is C.IN:
+        got = set()
+        for iop, iav in av:
+            if iop is C.LITERAL:
+                got.add(iav)
+            elif iop is C.RANGE:
+                got.update(range(iav[0], iav[1] + 1))
+            elif iop is C.CATEGORY and iav in _CATEGORY:
+                got |= _CATEGORY[iav]
+            elif iop is not C.NEGATE:  # unknown item: any byte
+                return _byte_factor(C.ANY, None)
+        if av and av[0][0] is C.NEGATE:
+            got = _ALL - got
+    else:
+        return None
+    return frozenset(bytes((b,)) for b in {*got, *(b ^ 32 for b in got if 97 <= b | 32 <= 122)})
 
 
-def _gate_docs(gate, blob: bytes, starts: np.ndarray, lower: bytes | None) -> list[int]:
-    """Sorted indices of the docs a gate admits: docs holding an ASCII digit
-    (``"digit"``), or docs whose ASCII-lowercased bytes (``lower``) contain
-    one of the gate's literals."""
-    if gate == "digit":
-        # pad one byte so reduceat indices stay in range when the last doc
-        # is empty (starts[last] == len(blob))
-        arr = np.frombuffer(blob + _SEP, dtype=np.uint8)
-        return np.flatnonzero(np.add.reduceat((arr >= 48) & (arr <= 57), starts)).tolist()
+@functools.cache
+def _plan(source: str) -> tuple[bool, bool, tuple[frozenset[bytes], ...]]:
+    """``(blob_safe, icase, factors)`` from the regex's bytes parse. Blob-safe:
+    no node can match byte 0 and no anchor but ``\\b``. Every match holds
+    a string of each factor: a required byte class; a run of 2+ required
+    literals (lowercased under ``(?i)``); one factor per alternation branch,
+    unioned. Min-0 repeats and lookarounds add none; an unknown opcode adds
+    none and is unsafe: a plan may widen a scan, never drop a match."""
+    tree = _parser.parse(source.encode("utf-8"))
+    icase = bool(tree.state.flags & C.SRE_FLAG_IGNORECASE)
+    if tree.state.flags & C.SRE_FLAG_LOCALE:  # locale classes and folding
+        return False, icase, ()
+    safe = True
+
+    def walk(seq, runs: bool) -> list[frozenset[bytes]]:
+        # runs=False in a case-sensitive regex's (?i:…) group (raw-blob find)
+        nonlocal safe
+        out: list[frozenset[bytes]] = []
+        run = bytearray()
+        for op, av in [*seq, (None, None)]:
+            if op is C.LITERAL and runs:
+                run.append(av)
+                safe &= av != 0
+                continue
+            if run:
+                out.append(_byte_factor(C.LITERAL, run[0]) if len(run) == 1 else
+                           frozenset((bytes(run).lower() if icase else bytes(run),)))
+            run.clear()
+            factor = _byte_factor(op, av)
+            if factor is not None:
+                safe &= b"\x00" not in factor
+                out.append(factor)
+            elif op is C.SUBPATTERN and not av[1] & C.SRE_FLAG_LOCALE:
+                out += walk(av[3], runs and (icase or not av[1] & C.SRE_FLAG_IGNORECASE))
+            elif op is C.BRANCH:
+                branches = [walk(b, runs) for b in av[1]]
+                if all(branches):
+                    out.append(frozenset().union(
+                        *(min(b, key=lambda f: (-min(map(len, f)), len(f))) for b in branches)))
+            elif op in (C.MAX_REPEAT, C.MIN_REPEAT, C.POSSESSIVE_REPEAT):
+                inner = walk(av[2], runs)
+                out += inner if av[0] else []
+            elif op is C.ATOMIC_GROUP:
+                out += walk(av, runs)
+            elif op is C.ASSERT or op is C.ASSERT_NOT:
+                walk(av[1], runs)
+            elif op is C.AT:
+                safe &= av is C.AT_BOUNDARY  # \B matches an empty doc's NUL
+            elif op is not None:
+                safe = False
+        return out
+
+    factors = walk(tree, True)
+    # drop a factor that holds all of another's strings (it admits every doc
+    # the other does); one-byte factors first, as they only read the table
+    factors = [f for f in dict.fromkeys(factors) if not any(g < f for g in factors)]
+    return safe, icase, tuple(sorted(factors, key=lambda f: max(map(len, f)) > 1))
+
+
+def _factor_docs(factor, table: np.ndarray, hay: bytes, starts: np.ndarray) -> np.ndarray:
+    """Doc mask of a factor: bytes read the table, strings ``find`` ``hay``."""
+    mask = table[:, [s[0] for s in factor if len(s) == 1]].any(axis=1)
     hits = []
-    for lit in gate:
-        idx = lower.find(lit)
+    for lit in (s for s in factor if len(s) > 1):
+        idx = hay.find(lit)
         while idx != -1:
             hits.append(idx)
-            idx = lower.find(lit, idx + 1)
-    if not hits:
-        return []
-    return np.unique(np.searchsorted(starts, hits, side="right") - 1).tolist()
+            idx = hay.find(lit, idx + 1)
+    mask[np.searchsorted(starts, hits, side="right") - 1] = True
+    return mask
 
 
-def _scan_blob_patterns(
-    encoded: list[bytes],
-    blob: bytes,
-    starts: np.ndarray,
-    rules: RuleSet,
-) -> list[list[Detection]]:
-    """Per-doc pattern candidates for one batch (``blob, starts`` =
-    ``_join(encoded)``), by one rule: domain × mode.
+def _needles(rules: RuleSet) -> list[tuple]:
+    """``(type, regex, compiled, placeholder, score, allowlist)`` in candidate
+    order: sorted blocklist words as escaped regexes, then active patterns."""
+    out = [("BLOCKLIST", src, compile_bytes_regex(src), "[BLOCKED]", 1.0, frozenset())
+           for src in (re.escape(w) for w in sorted(rules.blocklist) if w)]
+    for p, compiled in compile_patterns(rules):
+        score = round_confidence(compute_confidence(category=p.category, active=p.is_active))
+        out.append((p.name, p.regex, compiled, make_placeholder(p.name), score, rules.allowlist))
+    return out
 
-    * Domain — a pattern's gate picks the docs it can possibly match: all
-      docs, digit docs, or docs holding one of its literals.
-    * Mode — a blob-safe pattern (``_blob_safe``) runs one finditer over
-      its domain's NUL-joined sub-blob, built once per gate per batch, and
-      its matches are routed back to docs by one vectorized searchsorted;
-      any other pattern runs finditer doc by doc over its domain.
 
-    Both modes feed one emit loop (decode → allowlist → ``Detection``).
-    Offsets are byte offsets into each doc's UTF-8 encoding."""
+def _scan_blob(encoded: list[bytes], blob: bytes, starts: np.ndarray,
+               rules: RuleSet) -> list[list[Detection]]:
+    """Per-doc candidates for one batch (``blob, starts`` = ``_join(encoded)``),
+    each needle by domain × mode. A factor's doc mask and a domain's sub-blob
+    are built once per batch; the all-docs domain is the batch blob. Offsets
+    are byte offsets into each doc's UTF-8 encoding."""
     n_docs = len(encoded)
     per_doc: list[list[Detection]] = [[] for _ in range(n_docs)]
-    allow = rules.allowlist
-    # gate -> (domain doc indices, sub-blob, sub-blob starts)
-    domains = {None: (range(n_docs), blob, starts)}
-    lower = None
-    for p, compiled in compile_patterns(rules):
-        gate = "digit" if p.regex in _DIGIT_GATED else _LITERAL_GATES.get(p.regex)
-        if gate not in domains:
-            if gate != "digit" and lower is None:
-                lower = blob.lower()
-            docs = _gate_docs(gate, blob, starts, lower)
-            domains[gate] = (docs, *_join([encoded[i] for i in docs]))
-        docs, sub, sub_starts = domains[gate]
+    # doc × 256 byte presence (a doc's row also marks the NUL after it)
+    table = np.zeros((n_docs, 256), dtype=bool)
+    table[np.repeat(np.arange(n_docs, dtype=np.int32), np.diff(starts, append=len(blob) + 1))[:-1],
+          np.frombuffer(blob, dtype=np.uint8)] = True
+    hays = {False: blob, True: blob.lower()}
+    masks, domains = {}, {}
+    for name, source, compiled, placeholder, score, allow in _needles(rules):
+        safe, icase, factors = _plan(source)
+        admit = np.ones(n_docs, dtype=bool)
+        for factor in factors:
+            if (icase, factor) not in masks:
+                masks[icase, factor] = _factor_docs(factor, table, hays[icase], starts)
+            admit &= masks[icase, factor]
+        if admit.all():
+            docs, sub, sub_starts = range(n_docs), blob, starts
+        else:
+            key = admit.tobytes()
+            if key not in domains:
+                docs = np.flatnonzero(admit).tolist()
+                domains[key] = (docs, *_join([encoded[i] for i in docs]))
+            docs, sub, sub_starts = domains[key]
         if not docs:
             continue
-        if _blob_safe(p.regex):
+        if safe:
             spans = [m.span() for m in compiled.finditer(sub)]
-            if not spans:
-                continue
             local = np.searchsorted(sub_starts, [s for s, _ in spans], side="right") - 1
             # plain ints: per-match numpy scalar indexing is measurably slower
             hits = zip([docs[j] for j in local.tolist()], repeat(sub),
@@ -248,35 +273,11 @@ def _scan_blob_patterns(
         else:
             hits = ((i, encoded[i], 0, m.span())
                     for i in docs for m in compiled.finditer(encoded[i]))
-        score = round_confidence(compute_confidence(category=p.category, active=p.is_active))
-        placeholder = make_placeholder(p.name)
         for i, data, base, (s, e) in hits:
             value = data[s:e].decode("utf-8", "surrogateescape")
             if value in allow:
                 continue
-            per_doc[i].append(Detection(p.name, value, placeholder, s - base, e - base, score))
-    return per_doc
-
-
-def _scan_blob_blocklist(
-    blob: bytes, starts: np.ndarray, n_docs: int, rules: RuleSet
-) -> list[list[Detection]]:
-    per_doc: list[list[Detection]] = [[] for _ in range(n_docs)]
-    for word in sorted(rules.blocklist):
-        wb = word.encode("utf-8")
-        if not wb:
-            continue
-        pos = 0
-        while True:
-            idx = blob.find(wb, pos)
-            if idx == -1:
-                break
-            di = int(np.searchsorted(starts, idx, side="right") - 1)
-            base = int(starts[di])
-            per_doc[di].append(
-                Detection("BLOCKLIST", word, "[BLOCKED]", idx - base, idx - base + len(wb), 1.0)
-            )
-            pos = idx + len(wb)
+            per_doc[i].append(Detection(name, value, placeholder, s - base, e - base, score))
     return per_doc
 
 
@@ -305,8 +306,7 @@ def detect_batch(
     n = len(encoded)
     blob, starts = _join(encoded)
 
-    block_per_doc = _scan_blob_blocklist(blob, starts, n, rules)
-    pat_per_doc = _scan_blob_patterns(encoded, blob, starts, rules)
+    per_doc = _scan_blob(encoded, blob, starts, rules)
 
     # shared per-doc validator results (same names for every doc in the job)
     out = {
@@ -348,7 +348,7 @@ def detect_batch(
                     conf = 0.7
                 validator_results.append((valid and err is None, round_confidence(conf)))
 
-        detections = resolve_overlaps(block_per_doc[i] + pat_per_doc[i])
+        detections = resolve_overlaps(per_doc[i])
 
         breakdown: dict[str, int] = {}
         rows = []
@@ -524,7 +524,7 @@ def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_i
             texts = pdf[text_col]
             encoded = [("" if t is None else t).encode("utf-8") for t in texts]
             n = len(encoded)
-            per_doc = _scan_blob_patterns(encoded, *_join(encoded), r)
+            per_doc = _scan_blob(encoded, *_join(encoded), replace(r, blocklist=frozenset()))
             ids, types, hits = [], [], []
             id_values = pdf[id_col].tolist()
             for i in range(n):

@@ -15,9 +15,11 @@ Design for 100 TB:
   crawl) share a url-hash, but hashing the full url (not the host) spreads
   them; the salt decorrelates from any downstream hash-partitioning.
 * **Resume** = broadcast anti-join of the input against the manifest's
-  completed units — O(completed units) driver state, no input rescan of
-  finished work thanks to partition pruning when the output is
-  partitioned by unit.
+  completed units — O(completed units) driver state. It is not free:
+  every call re-reads every input row (with the columns the transform
+  needs), assigns its unit and anti-joins before anything is skipped, so
+  finished work is not transformed or written again but its input is
+  still scanned; a resume with nothing pending costs a full input scan.
 * **Layout**: rows are rebalanced by unit before the commit (AQE's
   ``RebalancePartitions``), so each unit is written by one task rather than
   by every task of the transform: files per unit are bounded by

@@ -21,6 +21,7 @@ text. This pins three semantics to the Go reference in one move:
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 
@@ -170,20 +171,14 @@ def default_rules(**overrides) -> RuleSet:
 # Mirrors guardrails.go:19-32 getCachedRegex.
 # ---------------------------------------------------------------------------
 
-_REGEX_CACHE: dict[str, re.Pattern[bytes]] = {}
-
-
+@functools.cache
 def compile_bytes_regex(source: str) -> re.Pattern[bytes]:
     """Compile a pattern for byte-offset scanning over UTF-8 text.
 
     Bytes patterns give ASCII-only ``\\b``/``\\d``/``\\w`` and byte offsets —
     both matching Go's RE2 behavior on the seed patterns.
     """
-    pat = _REGEX_CACHE.get(source)
-    if pat is None:
-        pat = re.compile(source.encode("utf-8"))
-        _REGEX_CACHE[source] = pat
-    return pat
+    return re.compile(source.encode("utf-8"))
 
 
 def compile_patterns(rules: RuleSet) -> list[tuple[Pattern, re.Pattern[bytes]]]:

@@ -29,6 +29,7 @@ reference's pinned test matrices):
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import xml.etree.ElementTree as ET
@@ -73,17 +74,16 @@ def _go_anchored(rule: str) -> str:
     return _TRAILING_DOLLAR.sub(r"\\Z", rule)
 
 
-_REGEX_RULE_CACHE: dict[str, re.Pattern[str]] = {}
+@functools.cache
+def _compile_rule(rule: str) -> re.Pattern[str]:
+    return re.compile(_go_anchored(rule))
 
 
 def regex_match(rule: str, text: str) -> tuple[bool, str | None]:
-    pat = _REGEX_RULE_CACHE.get(rule)
-    if pat is None:
-        try:
-            pat = re.compile(_go_anchored(rule))
-        except re.error as e:
-            return False, f"bad regex: {e}"
-        _REGEX_RULE_CACHE[rule] = pat
+    try:
+        pat = _compile_rule(rule)
+    except re.error as e:
+        return False, f"bad regex: {e}"
     return pat.search(text) is not None, None
 
 

@@ -13,9 +13,11 @@ salad, partial/overlapping candidates, unicode noise — and asserts:
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
 from safe_zone_spark.operators.scan import detect_batch
@@ -180,3 +182,66 @@ def test_batched_scorers_equal_per_doc_forms(texts):
             assert got[i] == DEGENERATE_PPL
         else:
             assert got[i] == float(np.exp(-_doc_logps(b, _LM).mean()))
+
+
+# Custom-pattern fuzz for the scan plan (``scan._plan``): generated regexes
+# mix literals (ASCII, non-ASCII, NUL), classes and negated classes, ``.``,
+# anchors, \d \w \s and their complements, alternations, quantifiers and
+# (?i); the blob scan with its derived gates must answer exactly like the
+# per-doc oracle, which scans every doc ungated.
+_regex_atom = st.one_of(
+    st.sampled_from(list("abzAZ09@.-_ ")).map(re.escape),
+    st.sampled_from(["é", "ß", "中", "\\x00", "\\t"]),
+    st.sampled_from([".", "^", "$", "\\A", "\\Z", "\\b", "\\B",
+                     "\\d", "\\D", "\\w", "\\W", "\\s", "\\S"]),
+    st.builds(
+        lambda neg, items: "[" + "^" * neg + "".join(items) + "]",
+        st.booleans(),
+        st.lists(st.sampled_from(["a", "b-d", "0-9", "A-F", "@", ".", "\\x00", "\\s", "\\d", "é"]),
+                 min_size=1, max_size=3),
+    ),
+)
+_regex = st.tuples(
+    st.booleans(),
+    st.recursive(_regex_atom, lambda inner: st.one_of(
+        st.lists(inner, min_size=2, max_size=4).map("".join),
+        st.lists(inner, min_size=2, max_size=3).map(lambda b: "(?:" + "|".join(b) + ")"),
+        st.tuples(inner, st.sampled_from(["?", "*", "+", "{2}", "{1,3}", "{0,2}"]))
+          .map(lambda t: "(" + t[0] + ")" + t[1]),
+    ), max_leaves=8),
+).map(lambda t: "(?i)" * t[0] + t[1])
+_regex_doc = st.lists(
+    st.one_of(st.sampled_from(PII_FRAGMENTS),
+              st.text(alphabet="abzAZ09@.-_ \t\néß中\x00", max_size=10)),
+    max_size=6,
+).map(" ".join)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(_regex, min_size=1, max_size=3),
+    st.sets(st.text(alphabet="ab-\x00Z", min_size=1, max_size=3), max_size=3),
+    st.lists(_regex_doc, min_size=2, max_size=6),
+)
+def test_derived_gate_never_drops_a_match(sources, blocklist, texts):
+    """A derived gate never drops a match: ``detect_batch`` ≡ ``oracle.detect``
+    per doc, in detections and scrubbed text, for generated custom patterns
+    beside every seed pattern, with a blocklist."""
+    from safe_zone_spark.rules import Pattern, RuleSet
+
+    for src in sources:
+        try:
+            re.compile(src.encode("utf-8"))
+        except re.error:
+            assume(False)
+    rules = RuleSet(
+        patterns=tuple(Pattern(f"CUSTOM_{k}", src) for k, src in enumerate(sources)) + SEED_PATTERNS,
+        blocklist=frozenset(blocklist) | {"BLOCKME"},
+        allowlist=frozenset({"safe@example.com"}),
+    )
+    res = detect_batch(pd.Series(texts), rules, mode="MASK")
+    for i, t in enumerate(texts):
+        o = detect(t, rules, mode="MASK")
+        got = [(d["type"], d["start"], d["end"], d["value"]) for d in res["detections"][i]]
+        assert got == [(d.type, d.start, d.end, d.value) for d in o.detections], (sources, t)
+        assert res["scrubbed_text"][i] == o.redacted_text

@@ -160,18 +160,45 @@ def test_extract_and_scan_fused_extra_scorers_match_udfs(spark, corpus_pdf):
 
 def test_blob_unsafe_patterns_fall_back_to_per_doc():
     """Anchored / NUL-capable patterns must not leak across the batch blob
-    (regression: blob finditer would anchor ^ to the blob and let `.` cross
-    the NUL separators)."""
-    from safe_zone_spark.operators.scan import _blob_safe, detect_batch
+    (regression: blob finditer would anchor ^ to the blob and let `.`, a
+    class holding NUL or a blocklist word holding NUL cross the NUL
+    separators)."""
+    from safe_zone_spark.operators.scan import _plan, detect_batch
     from safe_zone_spark.rules import Pattern, RuleSet
 
-    assert not _blob_safe(r"^Subject:")
-    assert not _blob_safe(r"a.b")
-    assert not _blob_safe(r"[^x]+")
-    assert not _blob_safe(r"\S+")
-    assert not _blob_safe(r"end$")
-    assert _blob_safe(r"(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}")  # class dots ok
-    assert _blob_safe(r"\b\d{3}-\d{2}-\d{4}\b")
+    def blob_safe(source):
+        return _plan(source)[0]
+
+    assert not blob_safe(r"^Subject:")
+    assert not blob_safe(r"a.b")
+    assert not blob_safe(r"[^x]+")
+    assert not blob_safe(r"\S+")
+    assert not blob_safe(r"end$")
+    assert not blob_safe(r"[\x00-\x7f]{3,}")
+    assert not blob_safe(r"\x00")
+    assert not blob_safe(r"[\0-\x20]ab")
+    assert blob_safe(r"(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}")  # class dots ok
+    assert blob_safe(r"\b\d{3}-\d{2}-\d{4}\b")
+
+    def assert_oracle(texts, rules):
+        res = detect_batch(pd.Series(texts), rules)
+        for i, text in enumerate(texts):
+            o = detect(text, rules, mode="MASK")
+            got = [(d["type"], d["start"], d["end"], d["value"]) for d in res["detections"][i]]
+            assert got == [(d.type, d.start, d.end, d.value) for d in o.detections], text
+            assert res["scrubbed_text"][i] == o.redacted_text
+        return res
+
+    # custom classes that can match NUL, and a blocklist word holding NUL
+    nul = RuleSet(patterns=(
+        Pattern("ASCII_RUN", r"[\x00-\x7f]{3,}"),
+        Pattern("NUL", r"\x00"),
+        Pattern("LOW_AB", r"[\0-\x20]ab"),
+    ))
+    res = assert_oracle(["abc", "def", "ghi", " ab\x00ab"], nul)
+    assert [d["value"] for d in res["detections"][0]] == ["abc"]
+    res = assert_oracle(["xa", "by", "za\x00bz"], RuleSet(patterns=(), blocklist=frozenset({"a\x00b"})))
+    assert res["scrubbed_text"].tolist() == ["xa", "by", "z[BLOCKED]z"]
 
     rules = RuleSet(patterns=(
         Pattern("SUBJ", r"^Subject: \w+"),
@@ -184,9 +211,9 @@ def test_blob_unsafe_patterns_fall_back_to_per_doc():
     # q.z must NOT match across the doc boundary between 'abcq' and 'zdef'
     assert not res["contains_pii"][2] and not res["contains_pii"][3]
 
-    # gated blob patterns beside the per-doc ones: US_SSN (digit gate) and
-    # EMAIL (literal gate), an allowlisted gated value, a doc without
-    # digits, a doc without '@' and an empty last doc (reduceat padding)
+    # gated blob patterns beside the per-doc ones: US_SSN (digit factor) and
+    # EMAIL ('@' factor), an allowlisted gated value, a doc without digits,
+    # a doc without '@' and an empty last doc (the byte table's last row)
     seed = {p.name: p for p in default_rules().patterns}
     mixed = RuleSet(
         patterns=(seed["US_SSN"], rules.patterns[0], seed["EMAIL"], rules.patterns[1]),
@@ -199,13 +226,27 @@ def test_blob_unsafe_patterns_fall_back_to_per_doc():
         "Subject: x 111-22-3333 c@d.io",
         "",
     ])
-    res = detect_batch(texts, mixed)
-    for i, text in enumerate(texts):
-        o = detect(text, mixed, mode="MASK")
-        got = [(d["type"], d["start"], d["end"], d["value"]) for d in res["detections"][i]]
-        assert got == [(d.type, d.start, d.end, d.value) for d in o.detections], text
-        assert res["scrubbed_text"][i] == o.redacted_text
+    res = assert_oracle(texts, mixed)
     assert [len(d) for d in res["detections"]] == [3, 1, 3, 3, 0]
+
+
+def test_seed_plans_are_pinned():
+    """The plans read from ``re._parser`` for the seed patterns: a change in
+    that private parser must fail here, not silently scan every doc."""
+    from safe_zone_spark.operators.scan import _plan
+    from safe_zone_spark.rules import SEED_PATTERNS
+
+    plans = {p.name: _plan(p.regex) for p in SEED_PATTERNS}
+    assert len(plans) == 20
+    assert all(safe for safe, _, _ in plans.values())
+    assert all(factors for n, (_, _, factors) in plans.items() if n != "AWS_SECRET_KEY")
+    assert frozenset({b"-"}) in plans["UUID_PII"][2]
+    assert frozenset({b":", b"-"}) in plans["MAC_ADDRESS"][2]
+    assert frozenset({b"@"}) in plans["EMAIL"][2]
+    digits = {bytes((b,)) for b in b"0123456789"}
+    for name in ("TCKN", "PHONE_TR", "PHONE_INT", "CREDIT_CARD", "IBAN_TR", "DATE",
+                 "TURKISH_PLATE", "VKN", "MERSIS", "US_SSN", "UK_NINO"):
+        assert any(f <= digits for f in plans[name][2]), name
 
 
 def test_checksums_reject_unicode_digits():

@@ -7,7 +7,7 @@ class, same lowercasing, same distinct-gram first-occurrence order — or
 the operator's results silently drift from the DuckDB oracle. This test
 compares them over the real sf0.01 corpus AND a curated edge-case set
 (empty / whitespace-only / short docs, tabs, vertical tabs, repeated
-grams, mixed case, punctuation)."""
+grams, mixed case, punctuation, non-ASCII case mappings)."""
 
 from __future__ import annotations
 
@@ -39,6 +39,12 @@ EDGE_TEXTS = [
     "  leading and trailing  ",
     "punct, marks! kept? as-is; ok.",
     "Tab\tsep\tand  double  space",
+    # non-ASCII case mappings where lowercasing can disagree between engines
+    "İstanbul İZMİR dİ",  # Turkish dotted capital I (lowers to i + U+0307)
+    "ΟΔΟΣ ΣΟΦΟΣ Σ ΑΣ.",  # Greek capital sigma: final ς vs medial σ
+    "ﬁle ﬂow ﬁﬂ",  # ﬁ/ﬂ ligatures (no single-char lowercase)
+    "Straße STRASSE ẞ ß",  # sharp s and capital sharp s
+    "5 \u212a Kelvin \u212a\u212a",  # Kelvin sign
     None,
 ]
 
