@@ -10,12 +10,15 @@ perplexity = exp(-mean log P(b_i | b_{i-2} b_{i-1})) over the byte stream,
 where P backs off to 1/(n(ctx)+256) for an unseen byte in a seen context
 and to 1/256 for an unseen context (the add-one row mass, exactly).
 
-The model is SPARSE — only observed trigrams and contexts are stored (a
-dense 256^3 table would be 16.7M rows for no benefit) — and scoring is
-fully vectorized: the document's UTF-8 bytes become packed int64 trigram
-keys, matched against the sorted key arrays with np.searchsorted, misses
-fall through to the context table then the constant. No per-character
-Python. A real KenLM export maps onto the same (key, logp) tables.
+The model is stored SPARSE — only observed trigrams and contexts, as two
+(key, logp) tables — and scored DENSE: every model is built through
+``_build_lm``, which turns those tables into a direct-mapped two-level
+table (a 2^16-entry context → row index and one 256-entry log-prob row
+per observed context, with the backoff resolved into the rows), so a
+lookup is one indexed load per trigram. The document's UTF-8 bytes become
+packed trigram keys and the whole batch is looked up at once. No
+per-character Python. A real KenLM export maps onto the same (key, logp)
+tables.
 """
 
 from __future__ import annotations
@@ -28,14 +31,17 @@ from pyspark.sql import functions as F
 
 
 class TrigramLM(NamedTuple):
-    """Sparse backoff LM: sorted packed keys + log-probs.
+    """Backoff LM: the sparse packed keys + log-probs, and the dense lookup
+    table built from them (``_build_lm``; build every model through it).
     tri key = p2·65536 + p1·256 + c; ctx key = p2·256 + p1."""
 
-    tri_keys: np.ndarray   # int64, sorted
+    tri_keys: np.ndarray   # int64, unique, in [0, 2^24)
     tri_logp: np.ndarray   # float64, log((n3+1)/(n2+256))
-    ctx_keys: np.ndarray   # int64, sorted
+    ctx_keys: np.ndarray   # int64, unique, in [0, 2^16)
     ctx_logp: np.ndarray   # float64, log(1/(n2+256)) — unseen byte in ctx
     default_logp: float    # log(1/256) — unseen context
+    ctx_row: np.ndarray    # int64[2^16], ctx key → offset of its row in rows
+    rows: np.ndarray       # float64[256·(1 + contexts)], row 0 = unseen ctx
 
 
 DEFAULT_LOGP = float(np.log(1.0 / 256.0))
@@ -68,13 +74,48 @@ def train_trigram_lm(texts) -> TrigramLM:
     # are observed by construction → exact match guaranteed)
     ctx_of_tri = np.searchsorted(ctx_keys, tri_keys >> 8)
     denom = n2[ctx_of_tri] + 256.0
-    return TrigramLM(
-        tri_keys=tri_keys,
-        tri_logp=np.log((n3 + 1.0) / denom),
-        ctx_keys=ctx_keys,
-        ctx_logp=np.log(1.0 / (n2 + 256.0)),
-        default_logp=DEFAULT_LOGP,
-    )
+    return _build_lm(tri_keys, np.log((n3 + 1.0) / denom),
+                     ctx_keys, np.log(1.0 / (n2 + 256.0)))
+
+
+def _build_lm(tri_keys, tri_logp, ctx_keys, ctx_logp) -> TrigramLM:
+    """The one constructor of every ``TrigramLM`` (training, parquet load,
+    embedded load): checks the keys, then builds the lookup table.
+
+    Raises ``ValueError`` for a trigram key outside [0, 2^24), a context
+    key outside [0, 2^16) or a duplicated key in either table — a loaded
+    table is outside input, and a silent first-wins or an out-of-range
+    alias would score against the wrong row.
+
+    The table resolves the backoff chain (trigram → context → constant)
+    once: ``ctx_row`` maps each of the 2^16 context keys to the offset of
+    its 256-entry row in ``rows``. Row 0 is the unseen context, filled with
+    ``default_logp``. Every context of either table gets one row, prefilled
+    with its ``ctx_logp`` (``default_logp`` when a trigram's context is
+    missing from the context table) and then overwritten at its observed
+    trigrams with their ``tri_logp``. A lookup is
+    ``rows[ctx_row[k3 >> 8] + (k3 & 255)]``. The key space bounds the table
+    at 65,537 rows × 2 KiB = 128 MiB; the embedded LM's 206 contexts take
+    0.4 MiB."""
+    tri_keys = np.asarray(tri_keys, dtype=np.int64)
+    ctx_keys = np.asarray(ctx_keys, dtype=np.int64)
+    tri_logp = np.asarray(tri_logp, dtype=np.float64)
+    ctx_logp = np.asarray(ctx_logp, dtype=np.float64)
+    for name, keys, bits in (("trigram", tri_keys, 24), ("context", ctx_keys, 16)):
+        if len(keys) and (keys.min() < 0 or keys.max() >= 1 << bits):
+            raise ValueError(f"{name} key outside [0, 2^{bits})")
+        if len(np.unique(keys)) != len(keys):
+            raise ValueError(f"duplicated {name} key")
+    contexts = np.union1d(ctx_keys, tri_keys >> 8)
+    ctx_row = np.zeros(1 << 16, dtype=np.int64)
+    ctx_row[contexts] = np.arange(1, len(contexts) + 1) * 256
+    backoff = np.full(len(contexts) + 1, DEFAULT_LOGP)
+    backoff[ctx_row[ctx_keys] >> 8] = ctx_logp
+    rows = np.repeat(backoff, 256)
+    rows[ctx_row[tri_keys >> 8] + (tri_keys & 255)] = tri_logp
+    return TrigramLM(tri_keys=tri_keys, tri_logp=tri_logp, ctx_keys=ctx_keys,
+                     ctx_logp=ctx_logp, default_logp=DEFAULT_LOGP,
+                     ctx_row=ctx_row, rows=rows)
 
 
 def _seed_corpus() -> list[str]:
@@ -93,21 +134,9 @@ def _seed_corpus() -> list[str]:
 
 def _lookup_logps(k3: np.ndarray, lm: TrigramLM) -> np.ndarray:
     """Vectorized log-prob lookup for a stream of trigram keys (any number
-    of docs' keys concatenated — the lookup is positionwise)."""
-    lp = np.full(len(k3), lm.default_logp, dtype=np.float64)
-    if len(lm.tri_keys):
-        pos = np.searchsorted(lm.tri_keys, k3)
-        pos_c = np.minimum(pos, len(lm.tri_keys) - 1)
-        hit = lm.tri_keys[pos_c] == k3
-        lp[hit] = lm.tri_logp[pos_c[hit]]
-        miss = np.nonzero(~hit)[0]
-        if len(miss) and len(lm.ctx_keys):
-            k2 = k3[miss] >> 8
-            pos2 = np.searchsorted(lm.ctx_keys, k2)
-            pos2_c = np.minimum(pos2, len(lm.ctx_keys) - 1)
-            hit2 = lm.ctx_keys[pos2_c] == k2
-            lp[miss[hit2]] = lm.ctx_logp[pos2_c[hit2]]
-    return lp
+    of docs' keys concatenated — the lookup is positionwise): one indexed
+    load from the model's direct-mapped table per key."""
+    return lm.rows[lm.ctx_row[k3 >> 8] + (k3 & 255)]
 
 
 def _doc_logps(b: np.ndarray, lm: TrigramLM) -> np.ndarray:
@@ -119,15 +148,17 @@ def _doc_logps(b: np.ndarray, lm: TrigramLM) -> np.ndarray:
 
 def perplexity_batch(texts, lm: TrigramLM | None = None) -> np.ndarray:
     """Whole-batch scoring: every doc's trigram keys are concatenated (with
-    the 2 boundary-straddling windows per doc masked out) so the sorted-key
-    binary search runs ONCE per batch instead of once per ~200-byte doc —
+    the 2 boundary-straddling windows per doc masked out) so the table
+    lookup runs ONCE per chunk of docs instead of once per ~200-byte doc —
     the per-doc form spent ~45 µs/doc in numpy dispatch, 6x the arithmetic.
-    Bit-identical to the per-doc form: lookups are positionwise and each
-    doc's mean is still ``np.mean`` (pairwise summation) over exactly its
-    own slice of the lp stream. Docs are processed in ~128 KiB chunks
-    (langid._CHUNK_BYTES rationale: whole-Arrow-batch passes made every
-    temporary DRAM-sized and 32 concurrent workers saturated memory
-    bandwidth; chunked, temporaries stay L2-resident)."""
+    Bit-identical to the per-doc form ``exp(-_doc_logps(b).mean())``:
+    lookups are positionwise, each doc's sum is ``np.add.reduce`` (the
+    pairwise summation ``np.mean`` runs) over exactly its own slice of the
+    lp stream, divided by its trigram count as ``np.mean`` does, and one
+    vectorized ``np.exp`` finishes the batch. Docs are processed in
+    ~128 KiB chunks (langid._CHUNK_BYTES rationale: whole-Arrow-batch
+    passes made every temporary DRAM-sized and 32 concurrent workers
+    saturated memory bandwidth; chunked, temporaries stay L2-resident)."""
     from .text_analysis import _CHUNK_BYTES, _chunk_bounds, _window3_keep
 
     model = _LM if lm is None else lm
@@ -142,18 +173,18 @@ def perplexity_batch(texts, lm: TrigramLM | None = None) -> np.ndarray:
     if not enc:
         return out
     lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=len(enc))
+    sums = np.empty(len(enc), dtype=np.float64)
     for lo, hi in _chunk_bounds(lens, _CHUNK_BYTES):
-        data = np.frombuffer(b"".join(enc[lo:hi]), dtype=np.uint8).astype(np.int64)
+        # int32 keys (< 2^24) halve the temporaries' bytes against int64
+        data = np.frombuffer(b"".join(enc[lo:hi]), dtype=np.uint8).astype(np.int32)
         k3_all = (data[:-2] << 16) | (data[1:-1] << 8) | data[2:]
         lp = _lookup_logps(
             k3_all[_window3_keep(lens[lo:hi], len(k3_all))], model
         )
-        bounds = np.zeros(hi - lo + 1, dtype=np.int64)
-        np.cumsum(lens[lo:hi] - 2, out=bounds[1:])
-        for j in range(hi - lo):
-            out[pos[lo + j]] = float(
-                np.exp(-lp[bounds[j]:bounds[j + 1]].mean())
-            )
+        ends = np.cumsum(lens[lo:hi] - 2).tolist()
+        sums[lo:hi] = [np.add.reduce(lp[s:e])
+                       for s, e in zip([0] + ends[:-1], ends)]
+    out[pos] = np.exp(-(sums / (lens - 2)))
     return out
 
 
@@ -208,24 +239,20 @@ def write_trigram_parquet(tri_path: str, ctx_path: str,
     return tri_path, ctx_path
 
 
-def _sorted_kv(t) -> tuple[np.ndarray, np.ndarray]:
-    """(key, logp) arrow table → aligned arrays re-sorted by key (stable)
-    so searchsorted scoring is valid regardless of the table's row order."""
-    k = np.asarray(t.column("key").to_pylist(), dtype=np.int64)
-    lp = np.asarray(t.column("logp").to_pylist(), dtype=np.float64)
-    order = np.argsort(k, kind="stable")
-    return k[order], lp[order]
+def _kv(t) -> tuple[np.ndarray, np.ndarray]:
+    """(key, logp) arrow table → aligned arrays in the table's row order
+    (the lookup table does not need sorted keys)."""
+    return (np.asarray(t.column("key").to_numpy(), dtype=np.int64),
+            np.asarray(t.column("logp").to_numpy(), dtype=np.float64))
 
 
 def load_trigram_parquet(tri_path: str, ctx_path: str) -> TrigramLM:
     """Inverse of ``write_trigram_parquet`` — load (trained here or adapted
-    from a real KenLM export) for engine-side scoring."""
+    from a real KenLM export) for engine-side scoring. Raises
+    ``ValueError`` for out-of-range or duplicated keys (``_build_lm``)."""
     import pyarrow.parquet as pq
 
-    tk, tl = _sorted_kv(pq.read_table(tri_path))
-    ck, cl = _sorted_kv(pq.read_table(ctx_path))
-    return TrigramLM(tri_keys=tk, tri_logp=tl, ctx_keys=ck, ctx_logp=cl,
-                     default_logp=DEFAULT_LOGP)
+    return _build_lm(*_kv(pq.read_table(tri_path)), *_kv(pq.read_table(ctx_path)))
 
 
 # --- import-time model bootstrap: load the persisted sparse tables, train
@@ -261,10 +288,7 @@ def _load_embedded_lm() -> TrigramLM | None:
     if any(t is None for t in tabs):
         return None
     try:
-        tk, tl = _sorted_kv(tabs[0])
-        ck, cl = _sorted_kv(tabs[1])
-        return TrigramLM(tri_keys=tk, tri_logp=tl, ctx_keys=ck, ctx_logp=cl,
-                         default_logp=DEFAULT_LOGP)
+        return _build_lm(*_kv(tabs[0]), *_kv(tabs[1]))
     except Exception:
         return None
 

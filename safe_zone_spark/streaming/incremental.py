@@ -60,7 +60,14 @@ def run_token_for_checkpoint(checkpoint_dir: str) -> str:
     reused starts a new namespace (a token derived from the path would
     return the old one). A checkpoint that already holds Spark's
     ``offsets/`` but no token file was started before tokens were stored;
-    it gets the md5-of-path token that run has been writing under."""
+    it gets the md5-of-path token that run has been writing under.
+
+    Upgrade constraint: a stream started on code that wrote un-tokened
+    ``stream-batch-K`` dirs must be drained before it restarts on this
+    code. Under its new token those dirs count as prior appends
+    (``_prior_store_paths``), so a batch replayed across the upgrade
+    would dedup against its own earlier attempt and drop every doc it had
+    kept."""
     import hashlib
     import uuid
 
@@ -171,10 +178,14 @@ def _prior_store_paths(
     load-bearing for MULTI-RUN stores: a later crawl's batch ids restart
     at 0, and un-namespaced exclusion silently dropped every prior run's
     append from dedup. Legacy un-tokened ``stream-batch-K`` dirs (written
-    by pre-token code) can only belong to this run when no token is in
-    play; under a token they are some earlier run's appends and count as
-    prior. Listed via the Hadoop FileSystem API so any Spark-supported
-    store URI works."""
+    by pre-token code) are excluded as this run's only when no token is in
+    play; under a token they all count as prior. That is right for another
+    run's appends but not for a stream that was started on pre-token code
+    and restarted on tokened code: its own legacy dirs then count as prior,
+    and a replayed batch collides with its own previous attempt. Drain such
+    a stream (let every started batch commit) before upgrading it; see
+    ``run_token_for_checkpoint``. Listed via the Hadoop FileSystem API so
+    any Spark-supported store URI works."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(store_path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -167,6 +167,114 @@ def test_ood_trigram_lm_import_engine_matches_oracle(tmp_path):
     assert max(engine[:5]) < engine[5]
 
 
+def _write_kv(path, keys, logps):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"key": pa.array(keys, pa.int64()),
+                             "logp": pa.array(logps, pa.float64())}), path)
+    return path
+
+
+def test_loaded_trigram_keys_are_checked(tmp_path):
+    """load_trigram_parquet reads outside input: a key outside its packed
+    range would alias another context's row, and a duplicated key would
+    silently keep one of its log-probs. All three raise."""
+    import pytest
+
+    from safe_zone_spark.functions.perplexity import load_trigram_parquet
+
+    tri = str(tmp_path / "tri.parquet")
+    ctx = str(tmp_path / "ctx.parquet")
+    good_tri = ([0x616263, 0x616264], [-1.0, -2.0])
+    good_ctx = ([0x6162], [-5.0])
+    cases = [
+        ("trigram key outside", ([0x616263, 1 << 24], [-1.0, -2.0]), good_ctx),
+        ("trigram key outside", ([-1, 0x616263], [-1.0, -2.0]), good_ctx),
+        ("context key outside", good_tri, ([0x6162, 1 << 16], [-5.0, -6.0])),
+        ("context key outside", good_tri, ([-1], [-5.0])),
+        ("duplicated trigram key", ([0x616263, 0x616263], [-1.0, -2.0]), good_ctx),
+        ("duplicated context key", good_tri, ([0x6162, 0x6162], [-5.0, -6.0])),
+    ]
+    for msg, (tk, tl), (ck, cl) in cases:
+        _write_kv(tri, tk, tl)
+        _write_kv(ctx, ck, cl)
+        with pytest.raises(ValueError, match=msg):
+            load_trigram_parquet(tri, ctx)
+    _write_kv(tri, *good_tri)
+    _write_kv(ctx, *good_ctx)
+    load_trigram_parquet(tri, ctx)
+
+
+def test_trigram_with_missing_context_backs_off_to_the_constant(tmp_path):
+    """A trigram whose context is absent from the context table keeps its
+    own log-prob; every other byte after that context scores the unseen
+    constant, as if the context had never been seen."""
+    from safe_zone_spark.functions.perplexity import (
+        DEFAULT_LOGP,
+        _doc_logps,
+        load_trigram_parquet,
+    )
+
+    # "abc" stored but its context "ab" is not; context "xy" is stored
+    lm = load_trigram_parquet(
+        _write_kv(str(tmp_path / "tri.parquet"), [0x616263], [-1.5]),
+        _write_kv(str(tmp_path / "ctx.parquet"), [0x7879], [-7.0]),
+    )
+    b = np.frombuffer(b"abcabdxyzxyq", dtype=np.uint8).astype(np.int64)
+    #      abc   bca   cab   abd   bdx   dxy   xyz   yzx   zxy   xyq
+    want = [-1.5, DEFAULT_LOGP, DEFAULT_LOGP, DEFAULT_LOGP, DEFAULT_LOGP,
+            DEFAULT_LOGP, -7.0, DEFAULT_LOGP, DEFAULT_LOGP, -7.0]
+    assert _doc_logps(b, lm).tolist() == want
+
+
+def test_lookup_table_equals_sparse_backoff_on_every_key(tmp_path):
+    """For all 2^24 trigram keys, the direct-mapped table answers exactly
+    the sparse backoff definition computed here from the model's own key
+    arrays: the trigram's log-prob if the trigram is stored, else its
+    context's if the context is stored, else the unseen constant. Runs on
+    the embedded LM and on an LM trained on text with non-ASCII bytes,
+    loaded back from parquet files whose rows are shuffled."""
+    import pyarrow.parquet as pq
+
+    from safe_zone_spark.functions.perplexity import (
+        _LM,
+        _lookup_logps,
+        load_trigram_parquet,
+    )
+
+    mixed = train_trigram_lm([
+        "naïve café — déjà vu, smörgåsbord", "Straße über Köln",
+        "日本語のテキストです", "привет мир как дела", "plain ascii text",
+    ])
+    assert mixed.tri_keys.max() >= 0x800000  # lead bytes ≥ 0x80 are in play
+    tri, ctx = write_trigram_parquet(str(tmp_path / "tri.parquet"),
+                                     str(tmp_path / "ctx.parquet"), mixed)
+    rng = np.random.default_rng(7)
+    for path in (tri, ctx):
+        t = pq.read_table(path)
+        pq.write_table(t.take(rng.permutation(t.num_rows)), path)
+    loaded = load_trigram_parquet(tri, ctx)
+
+    for lm in (_LM, loaded):
+        tri_order = np.argsort(lm.tri_keys)
+        tri_keys, tri_logp = lm.tri_keys[tri_order], lm.tri_logp[tri_order]
+        ctx_order = np.argsort(lm.ctx_keys)
+        ctx_keys, ctx_logp = lm.ctx_keys[ctx_order], lm.ctx_logp[ctx_order]
+        step = 1 << 20
+        for lo in range(0, 1 << 24, step):
+            k3 = np.arange(lo, lo + step, dtype=np.int64)
+            want = np.full(step, lm.default_logp)
+            k2 = k3 >> 8
+            c = np.minimum(np.searchsorted(ctx_keys, k2), len(ctx_keys) - 1)
+            hit = ctx_keys[c] == k2
+            want[hit] = ctx_logp[c[hit]]
+            t = np.minimum(np.searchsorted(tri_keys, k3), len(tri_keys) - 1)
+            hit = tri_keys[t] == k3
+            want[hit] = tri_logp[t[hit]]
+            assert np.array_equal(_lookup_logps(k3, lm), want), hex(lo)
+
+
 def test_batched_scoring_is_bit_identical_to_per_doc_forms():
     """The batched scorers (langid._batch_trigram_scores gather/reduceat,
     perplexity_batch's one-searchsorted-per-batch) replaced per-doc numpy
