@@ -13,6 +13,8 @@ identical everywhere and live here ONCE:
 - ``persist_model_files``: write-to-tmp then ``os.replace`` per file —
   concurrent importing workers must never read a half-written parquet.
   Best-effort: read-only/zip installs just retrain per process.
+- ``model_table_path``: the on-disk path of a persisted table for the
+  DuckDB referee, which must score the same model the engine loaded.
 """
 
 from __future__ import annotations
@@ -43,6 +45,27 @@ def read_model_table(model_file: str, expected_train_key: str):
         return t
     except Exception:
         return None
+
+
+def model_table_path(model_file: str, expected_train_key: str) -> str:
+    """Absolute path of models/<model_file>, checked to hold the model the
+    importing module loaded or trained. Raises ``FileNotFoundError`` when the
+    table is absent (e.g. the best-effort persist failed) and ``ValueError``
+    when its ``train_key`` differs — a SQL twin must never score a
+    different model than the engine."""
+    import pyarrow.parquet as pq
+
+    path = os.path.abspath(os.path.join(_MODELS_DIR, model_file))
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"model table {path} is missing")
+    meta = pq.read_schema(path).metadata or {}
+    found = meta.get(b"train_key", b"").decode()
+    if found != expected_train_key:
+        raise ValueError(
+            f"model table {path} has train_key {found!r}, "
+            f"the loaded model has {expected_train_key!r}"
+        )
+    return path
 
 
 def persist_model_files(files: "list[str]", write_fn) -> None:

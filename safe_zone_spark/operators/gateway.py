@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..rules import RuleSet, default_rules
 from .scan import scan
+from .scrub_sql import scrub_cte_chain
 
 
 def gateway_guardrails(
@@ -127,3 +128,52 @@ def write_security_events(
         )
     )
     ev.write.mode("append").parquet(path)
+
+
+def security_events_oracle_sql(aug_cte: str, rules: RuleSet) -> str:
+    """DuckDB twin of ``write_security_events(scan(aug, rules))`` read back
+    with run_id 'drv': the scrub chain's kept relation with the threshold
+    action mapping. ``aug_cte`` as for ``scrub_sql.scrub_full_sql``."""
+    return scrub_cte_chain(aug_cte, rules) + """
+SELECT 'drv' AS run_id, doc_id, typ AS type,
+  CASE WHEN conf >= 0.85 THEN 'BLOCK'
+       WHEN conf < 0.30 THEN 'ALLOW' ELSE 'MASK' END AS action,
+  conf AS confidence,
+  CAST(sta AS INT) AS start, CAST(fin AS INT) AS "end"
+FROM kept
+"""
+
+
+def gateway_modes_oracle_sql(aug_cte: str, rules: RuleSet) -> str:
+    """DuckDB twin of the per-conversation block-mode matrix: docs pair up
+    into conversations (conv_id = doc_id % 50, even ids are user turns),
+    and the scrub chain's per-doc blocked/type relations roll up once per
+    conversation, crossed with the three GATEWAY_BLOCK_MODE values.
+    ``aug_cte`` as for ``scrub_sql.scrub_full_sql``."""
+    return scrub_cte_chain(aug_cte, rules) + """
+, per_msg AS (
+  SELECT a.doc_id, a.doc_id % 50 AS conv_id,
+         CASE WHEN a.doc_id % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+         coalesce(r.blocked, FALSE) AS blocked
+  FROM aug a LEFT JOIN rebuilt r USING (doc_id)
+),
+conv_types AS (
+  SELECT m.conv_id,
+         array_to_string(list_sort(list(DISTINCT k.typ)), ',') AS triggered
+  FROM per_msg m JOIN kept k USING (doc_id) GROUP BY 1
+),
+conv AS (
+  SELECT conv_id,
+    bool_or(role = 'user' AND blocked) AS in_b,
+    bool_or(role <> 'user' AND blocked) AS out_b,
+    bool_or(blocked) AS any_b
+  FROM per_msg GROUP BY 1
+)
+SELECT c.conv_id, m.mode,
+  CASE WHEN m.mode = 'BLOCK' THEN (c.in_b OR c.out_b) ELSE c.in_b END AS blocked,
+  c.any_b AS any_message_blocked,
+  coalesce(ct.triggered, '') AS triggered
+FROM conv c
+CROSS JOIN (VALUES ('BLOCK'), ('MASK'), ('WARN')) m(mode)
+LEFT JOIN conv_types ct USING (conv_id)
+"""

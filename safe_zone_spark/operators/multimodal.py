@@ -123,53 +123,192 @@ def decode_image(blob: bytes, *, fake: bool = False) -> np.ndarray:
     return _REAL_DECODER(blob)
 
 
-def media_metadata_oracle_sql(*, table: str = "documents", limit: int = 100) -> str:
+def fake_media(docs, limit: int, kind: str | None = None):
+    """(media_id long, blob binary): one deterministic fake blob per
+    ``doc_id < limit`` — the shared input of the multimodal driver queries.
+    ``kind=None`` cycles video (every 3rd id) and image; the dimensions and
+    the digest seed follow the same per-id recipe as ``fake_media_cte``."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"].tolist()
+            blobs = [
+                make_fake_media(
+                    kind or ("video" if i % 3 == 0 else "image"),
+                    16 + (i % 4) * 16, 16 + (i % 3) * 16, 1 + (i % 5) * 2, seed=i,
+                )
+                for i in ids
+            ]
+            yield pd.DataFrame({"media_id": ids, "blob": blobs})
+
+    ids = docs.filter(docs["doc_id"] < limit).select("doc_id")
+    return ids.mapInPandas(gen, "media_id long, blob binary")
+
+
+# --- DuckDB twins: rebuild each fake blob's spec and digest per id ----------
+
+
+def fake_media_cte(limit: int, kind: str | None = None) -> str:
+    """``media`` CTE (no leading WITH): the SQL side of ``fake_media`` —
+    per id its (kind, w, hh, fr) and ``dh``, the lowercase hex sha256 digest
+    that ``make_fake_media`` repeats as the blob body."""
+    kind_sql = (f"'{kind}'" if kind
+                else "CASE WHEN doc_id % 3 = 0 THEN 'video' ELSE 'image' END")
+    return f"""media AS (
+  SELECT *,
+         sha256(kind || ':' || w || ':' || hh || ':' || fr || ':' || media_id) AS dh
+  FROM (SELECT doc_id AS media_id, {kind_sql} AS kind,
+               16 + (doc_id % 4) * 16 AS w,
+               16 + (doc_id % 3) * 16 AS hh,
+               1 + (doc_id % 5) * 2 AS fr
+        FROM documents WHERE doc_id < {limit})
+)"""
+
+
+def _hex_sql(s: str, pos: str, ndigits: int = 2) -> str:
+    """SQL expr: the unsigned value of the ``ndigits`` lowercase hex digits
+    of ``s`` starting at 1-based character expr ``pos``."""
+    terms = [
+        f"(strpos('0123456789abcdef', substr({s}, CAST({pos} + {i} AS INT), 1)) - 1)"
+        f" * {16 ** (ndigits - 1 - i)}"
+        for i in range(ndigits)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+def _digest_byte_sql(offset: str) -> str:
+    """SQL expr: body byte at 0-based ``offset`` — the digest repeats, so
+    it is digest byte ``offset % 32``."""
+    return _hex_sql("dh", f"((({offset}) % 32) * 2 + 1)")
+
+
+def media_metadata_oracle_sql(limit: int) -> str:
     """DuckDB twin of (fake-media generation →) ``media_metadata``.
 
-    Builds a BLOB to the same SZMM spec from each doc_id — MAGIC | kind(1) |
+    Builds a BLOB to the same SZMM spec from each id — MAGIC | kind(1) |
     w,h,frames as big-endian u16 | body of w*h*3 bytes — then parses the
     header back out of ``hex(blob)`` with explicit base-16 arithmetic (DuckDB
     has no BLOB substring). The body is zeros: metadata reads only lengths,
     so content-free padding keeps the construction honest without repeating
     the sha256 chain.
     """
-
-    def hexval(pos: int, ndigits: int) -> str:
-        terms = [
-            f"(strpos('0123456789ABCDEF', substr(h, {pos + i}, 1)) - 1) * {16 ** (ndigits - 1 - i)}"
-            for i in range(ndigits)
-        ]
-        return "(" + " + ".join(terms) + ")"
-
     return f"""
-WITH src AS (
-  SELECT doc_id AS media_id,
-         CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 0 END AS kc,
-         16 + (doc_id % 4) * 16 AS w,
-         16 + (doc_id % 3) * 16 AS hh,
-         1 + (doc_id % 5) * 2 AS fr
-  FROM {table} WHERE doc_id < {limit}
-),
+WITH {fake_media_cte(limit)},
 blobs AS (
   SELECT media_id,
-    from_hex('535A4D4D' || lpad(hex(kc), 2, '0') || lpad(hex(w), 4, '0')
-             || lpad(hex(hh), 4, '0') || lpad(hex(fr), 4, '0')
+    from_hex('535A4D4D'
+             || lpad(hex(CASE kind WHEN 'image' THEN 0 WHEN 'audio' THEN 1 ELSE 2 END), 2, '0')
+             || lpad(hex(w), 4, '0') || lpad(hex(hh), 4, '0') || lpad(hex(fr), 4, '0')
              || repeat('00', w * hh * 3)) AS blob
-  FROM src
+  FROM media
 ),
 parsed AS (
-  SELECT media_id, hex(blob) AS h, octet_length(blob) AS n_bytes FROM blobs
+  SELECT media_id, lower(hex(blob)) AS h, octet_length(blob) AS n_bytes FROM blobs
 )
 SELECT media_id,
-  CASE WHEN substr(h, 1, 8) <> '535A4D4D' THEN NULL
-       WHEN {hexval(9, 2)} = 0 THEN 'image'
-       WHEN {hexval(9, 2)} = 1 THEN 'audio'
-       WHEN {hexval(9, 2)} = 2 THEN 'video' END AS kind,
-  CAST({hexval(11, 4)} AS INT) AS width,
-  CAST({hexval(15, 4)} AS INT) AS height,
-  CAST({hexval(19, 4)} AS INT) AS frames,
+  CASE WHEN substr(h, 1, 8) <> '535a4d4d' THEN NULL
+       WHEN {_hex_sql("h", "9")} = 0 THEN 'image'
+       WHEN {_hex_sql("h", "9")} = 1 THEN 'audio'
+       WHEN {_hex_sql("h", "9")} = 2 THEN 'video' END AS kind,
+  CAST({_hex_sql("h", "11", 4)} AS INT) AS width,
+  CAST({_hex_sql("h", "15", 4)} AS INT) AS height,
+  CAST({_hex_sql("h", "19", 4)} AS INT) AS frames,
   n_bytes
 FROM parsed
+"""
+
+
+def frame_sample_oracle_sql(limit: int, every_k: int) -> str:
+    """DuckDB twin of ``frame_sample``: frame offsets are header arithmetic."""
+    return f"""
+WITH {fake_media_cte(limit)}
+SELECT media_id,
+  CAST(i AS INT) AS frame_idx,
+  CAST(11 + i * (w * hh * 3) AS BIGINT) AS frame_offset_bytes
+FROM (SELECT media_id, w, hh, unnest(range(0, fr, {every_k})) AS i
+      FROM media WHERE kind = 'video')
+"""
+
+
+def audio_features_oracle_sql(limit: int) -> str:
+    """DuckDB twin of ``audio_features`` over ``fake_media(kind='audio')``:
+    every sample is a digest byte − 128."""
+    return f"""
+WITH {fake_media_cte(limit, "audio")},
+vals AS (
+  SELECT media_id, n, j, {_digest_byte_sql("j")} - 128 AS s
+  FROM (SELECT media_id, w * hh * 3 AS n, dh, unnest(range(0, w * hh * 3)) AS j
+        FROM media)
+),
+seq AS (
+  SELECT *, lead(s) OVER (PARTITION BY media_id ORDER BY j) AS s2 FROM vals
+)
+SELECT media_id,
+  CAST(any_value(n) AS BIGINT) AS n_samples,
+  round(sqrt(avg(CAST(s AS DOUBLE) * s)), 4) AS rms,
+  CAST(count(*) FILTER (s2 IS NOT NULL AND (s < 0) <> (s2 < 0)) AS BIGINT)
+    AS zero_crossings
+FROM seq GROUP BY media_id
+"""
+
+
+def image_resize_oracle_sql(limit: int, out_w: int, out_h: int) -> str:
+    """DuckDB twin of ``image_resize`` emitted as lowercase hex: the
+    nearest-neighbor gather is ys/xs index arithmetic over the digest, so
+    the whole re-encoded blob is rebuilt byte for byte."""
+    # output byte o: row o // (3 * out_w), column (o // 3) % out_w, channel o % 3
+    src = (f"((((o // {3 * out_w}) * hh // {out_h}) * w"
+           f" + (((o // 3) % {out_w}) * w // {out_w})) * 3 + o % 3)")
+    header = MAGIC.hex() + f"00{out_w:04x}{out_h:04x}0001"
+    return f"""
+WITH {fake_media_cte(limit)},
+body AS (
+  SELECT media_id,
+    string_agg(substr(dh, CAST(({src} % 32) * 2 + 1 AS INT), 2), '' ORDER BY o)
+      AS hex_body
+  FROM (SELECT media_id, w, hh, dh, unnest(range(0, {3 * out_w * out_h})) AS o
+        FROM media)
+  GROUP BY media_id
+)
+SELECT media_id, '{header}' || hex_body AS out_hex FROM body
+"""
+
+
+def image_features_oracle_sql(limit: int) -> str:
+    """DuckDB twin of ``image_features`` (channel means + ahash): channel
+    means relationally, and the ahash bits via the integer-exact
+    64*gray3_i > sum(gray3) rule (no float rounding in the threshold)."""
+    # sampled pixel index for ahash cell i: r=i//8, c=i%8
+    p_i = "(((i // 8) * hh // 8) * w + ((i % 8) * w // 8))"
+    g3 = " + ".join(_digest_byte_sql(f"3 * {p_i} + {c}") for c in range(3))
+    bit = "CASE WHEN 64 * gs[4 * j + k + 1] > total THEN 1 ELSE 0 END"
+    return f"""
+WITH {fake_media_cte(limit)},
+chan AS (
+  SELECT media_id,
+    round(avg({_digest_byte_sql("3 * p")}), 4) AS r_mean,
+    round(avg({_digest_byte_sql("3 * p + 1")}), 4) AS g_mean,
+    round(avg({_digest_byte_sql("3 * p + 2")}), 4) AS b_mean
+  FROM (SELECT media_id, dh, unnest(range(0, w * hh)) AS p FROM media)
+  GROUP BY media_id
+),
+grays AS (
+  SELECT media_id,
+         list_transform(range(0, 64), i -> {g3}) AS gs
+  FROM media
+),
+hashes AS (
+  SELECT media_id,
+    string_agg(substr('0123456789abcdef', 1 + (
+      {bit.replace("k", "0")} * 8 + {bit.replace("k", "1")} * 4
+      + {bit.replace("k", "2")} * 2 + {bit.replace("k", "3")}), 1),
+      '' ORDER BY j) AS ahash
+  FROM (SELECT media_id, gs, list_sum(gs) AS total, unnest(range(0, 16)) AS j
+        FROM grays)
+  GROUP BY media_id
+)
+SELECT c.media_id, c.r_mean, c.g_mean, c.b_mean, h.ahash
+FROM chan c JOIN hashes h USING (media_id)
 """
 
 

@@ -11,8 +11,8 @@ skew a Common-Crawl crawl produces — then times the dedup/ANN queries
 against it (warm-passed at sf0.01 first, min of BENCH_REPS runs).
 
 Results go to BENCH/sf1.json and are spliced into BENCH/BASELINE.md as an
-idempotent '## sf1' section (marker-delimited, survives scaling_bench
-rewrites when re-run after it).
+idempotent '## sf1' section (marker-delimited, so re-runs replace only this
+section of the ledger).
 
 Usage: python scripts/sf1_bench.py [replicas]
 """

@@ -355,3 +355,37 @@ def test_batched_scoring_is_bit_identical_to_per_doc_forms():
         s = _WEIGHTS[:, u] @ c
         ref_q.append((int(s[ih]), int(s[il])))
     assert quality_scores(texts) == ref_q
+
+
+def test_oracle_sql_reads_the_persisted_model_tables():
+    """The DuckDB twins read the tables the models persisted at import; they
+    must not rewrite them. A second writer once dropped quality_nb's
+    gate_threshold, forcing the next import to recalibrate."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from safe_zone_spark.functions import model_store
+
+    models = Path(model_store._MODELS_DIR)
+    (models / "MODEL_KEY").unlink(missing_ok=True)
+    sqls = {**entry.oracle_sql(), **entry.variant_oracle_sql()}
+    assert str(models.resolve() / "quality_nb.parquet") in sqls["quality_model"]
+    meta = pq.read_schema(models / "quality_nb.parquet").metadata
+    assert {b"gate_threshold", b"train_key"} <= set(meta)
+    assert not (models / "MODEL_KEY").exists()
+
+
+def test_model_table_path_rejects_missing_and_stale_tables(tmp_path, monkeypatch):
+    import pytest
+
+    from safe_zone_spark.functions import model_store
+
+    monkeypatch.setattr(model_store, "_MODELS_DIR", str(tmp_path))
+    with pytest.raises(FileNotFoundError):
+        model_store.model_table_path("c.parquet", "k1")
+    write_centroid_parquet(str(tmp_path / "c.parquet"), train_key="k1")
+    assert model_store.model_table_path("c.parquet", "k1") == str(tmp_path / "c.parquet")
+    with pytest.raises(ValueError, match="train_key"):
+        model_store.model_table_path("c.parquet", "k2")

@@ -97,8 +97,7 @@ def test_quantized_weights_are_integer():
 def test_fused_extra_scorer(spark):
     """quality_logit_series rides extract_and_scan's extra_scorers — the
     same single-Arrow-crossing slot langid/perplexity use in the flagship
-    pipeline (entry() gates final_keep on it under
-    SZS_QUALITY_MODEL_GATE=1)."""
+    pipeline (entry() emits it as ``qmodel_ok``)."""
     from pyspark.sql import functions as F
 
     from safe_zone_spark.operators.scan import extract_and_scan
