@@ -661,8 +661,9 @@ def q_dedup_incremental(spark, sf_dir):
     """Incremental-crawl dedup: anti-join the corpus against the previous
     crawl's content fingerprints (simulated here as every 7th doc's md5 —
     deterministic, so the oracle recomputes it). At 10^12 docs both sides
-    shuffle on the content hash; the seen-set never collects. The batch
-    twin of the manifests' resume anti-join (plans/pipeline.py)."""
+    shuffle on the content hash; the seen-set never collects. The
+    content-hash twin of the manifests' unit-level resume
+    (plans/pipeline.py)."""
     docs = _docs(spark, sf_dir).select("doc_id", F.md5("text").alias("fp"))
     seen = docs.filter(F.col("doc_id") % 7 == 0).select("fp").distinct()
     return (

@@ -14,12 +14,13 @@ Design for 100 TB:
 * **Skew defusal**: heavy hosts (a handful of domains can be 10%+ of a
   crawl) share a url-hash, but hashing the full url (not the host) spreads
   them; the salt decorrelates from any downstream hash-partitioning.
-* **Resume** = broadcast anti-join of the input against the manifest's
-  completed units — O(completed units) driver state. It is not free:
-  every call re-reads every input row (with the columns the transform
-  needs), assigns its unit and anti-joins before anything is skipped, so
-  finished work is not transformed or written again but its input is
-  still scanned; a resume with nothing pending costs a full input scan.
+* **Resume**: the driver collects the pending units (at most
+  ``num_units``) from a ``key_col``-only read of the input less the units
+  the manifest holds for the run, so a resume with nothing pending reads
+  one input column and returns. With work pending every input row is read
+  again (with the columns the transform needs) and the finished units'
+  rows are dropped before the transform: a unit is a hash of the key, so
+  no scan can prune by it.
 * **Layout**: rows are rebalanced by unit before the commit (AQE's
   ``RebalancePartitions``), so each unit is written by one task rather than
   by every task of the transform: files per unit are bounded by
@@ -27,16 +28,21 @@ Design for 100 TB:
   split into several files), not multiplied by the task count. Without AQE
   Spark plans a plain hash exchange on ``unit``, so one task writes each
   unit.
-* **Atomicity**: outputs land under ``.../unit=<k>/`` via Spark's committer;
-  the manifest row for a unit is appended only after the output job
-  commits, so a crash between the two re-processes (idempotently
-  overwrites) that unit rather than losing it.
+* **Atomicity**: outputs land under ``.../unit=<k>/`` via Spark's committer
+  (dynamic partition overwrite, so a unit's rewrite replaces its own
+  files and nothing else). The manifest rows are aggregated from a
+  read-back of the committed units and appended only after the output job
+  commits, so they audit the files, and a crash between the two
+  re-processes (idempotently overwrites) those units rather than losing
+  them. The read-back filters on the ``unit`` partition column, so it
+  reads only the written units' files, but planning it lists every
+  partition directory under ``output_path``.
 """
 
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 UNIT_COL = "unit"
@@ -92,45 +98,32 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
         raise
 
 
-def completed_units(spark: SparkSession, manifest_path: str, run_id: str) -> DataFrame | None:
-    """Units already committed for this run, or None when the manifest holds
-    no rows yet (:func:`read_manifest`)."""
-    m = read_manifest(spark, manifest_path)
-    if m is None:
-        return None
-    return m.filter(F.col("run_id") == run_id).select(UNIT_COL).distinct()
-
-
-def resume_filter(df_with_unit: DataFrame, manifest_path: str, run_id: str) -> DataFrame:
-    """Drop rows whose unit is already in the manifest (broadcast anti-join).
-    Without manifest rows the input is returned as is, with no join and no
-    relation to build for the empty unit list."""
-    done = completed_units(df_with_unit.sparkSession, manifest_path, run_id)
-    if done is None:
-        return df_with_unit
-    return df_with_unit.join(F.broadcast(done), UNIT_COL, "left_anti")
+def manifest_aggs(key_col: str, kept_col: str | None) -> list[Column]:
+    """The lineage columns of one manifest row, aggregated over its rows:
+    ``n_docs``, an order-independent ``input_fingerprint`` (bit_xor of key
+    hashes) that lets an auditor verify the row set key-for-key, and
+    ``n_kept`` (NULL without a kept column). The batch and streaming
+    manifests both build their rows from it."""
+    n_kept = F.lit(None) if kept_col is None else F.sum(F.col(kept_col).cast("long"))
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        F.bit_xor(F.xxhash64(F.col(key_col))).alias("input_fingerprint"),
+        n_kept.cast("long").alias("n_kept"),
+    ]
 
 
 def write_manifest(out_df_with_unit: DataFrame, manifest_path: str, run_id: str,
                    *, key_col: str = "url", kept_col: str | None = "keep") -> None:
-    """Append one lineage row per work unit: row count, kept count, and an
-    order-independent input fingerprint (bit_xor of url hashes) that lets an
-    auditor verify the unit's input set byte-for-byte."""
-    aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.bit_xor(F.xxhash64(F.col(key_col))).alias("input_fingerprint"),
-    ]
-    if kept_col is not None and kept_col in out_df_with_unit.columns:
-        aggs.append(F.sum(F.col(kept_col).cast("long")).alias("n_kept"))
-    else:
-        aggs.append(F.lit(None).cast("long").alias("n_kept"))
-    manifest = (
+    """Append one lineage row per work unit (:func:`manifest_aggs`)."""
+    if kept_col not in out_df_with_unit.columns:
+        kept_col = None
+    (
         out_df_with_unit.groupBy(UNIT_COL)
-        .agg(*aggs)
+        .agg(*manifest_aggs(key_col, kept_col))
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())
+        .write.mode("append").parquet(manifest_path)
     )
-    manifest.write.mode("append").parquet(manifest_path)
 
 
 def run_with_manifest(
@@ -145,44 +138,45 @@ def run_with_manifest(
     kept_col: str | None = "keep",
     max_units: int | None = None,
 ) -> int:
-    """Checkpointed execution: assign units → skip completed → transform →
-    commit output (partitioned by unit) → append manifest. Returns the
-    number of units processed this invocation. ``max_units`` caps work per
-    call (used by tests to simulate a mid-run crash).
+    """Checkpointed execution: pick the pending units → transform them →
+    commit output (partitioned by unit) → append their manifest rows from a
+    read-back of the committed units (``unit``, ``key_col`` and, when the
+    output has it, ``kept_col``). Returns the number of units processed
+    this invocation. ``max_units`` caps work per call to the lowest pending
+    units (used by tests to simulate a mid-run crash). With no unit
+    pending it returns 0 before ``transform`` is called or any input column
+    but ``key_col`` is read.
 
-    The transform runs once (its output is persisted); the commit reads the
-    cache through a rebalance on ``unit``, so each unit is written by one
-    task and its file count is bounded by the advisory partition size
-    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) rather than by
-    the number of transform tasks. The rebalance needs AQE; without it the
-    hint plans a plain hash exchange on ``unit`` and one task writes each
-    unit."""
+    The commit rebalances the output on ``unit``, so each unit is written
+    by one task and its file count is bounded by the advisory partition
+    size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) rather than
+    by the number of transform tasks. The rebalance needs AQE; without it
+    the hint plans a plain hash exchange on ``unit`` and one task writes
+    each unit."""
     spark = df.sparkSession
-    staged = assign_units(df, num_units, key_col=key_col)
-    pending = resume_filter(staged, manifest_path, run_id)
-    if max_units is not None:
-        units = [
-            r[0]
-            for r in pending.select(UNIT_COL).distinct().orderBy(UNIT_COL).limit(max_units).collect()
-        ]
-        if not units:
-            return 0
-        pending = pending.filter(F.col(UNIT_COL).isin(units))
-    out = transform(pending)
+    manifest = read_manifest(spark, manifest_path)
+    done = set() if manifest is None else {
+        r[0] for r in
+        manifest.filter(F.col("run_id") == run_id).select(UNIT_COL).distinct().collect()
+    }
+    present = assign_units(df.select(key_col), num_units, key_col=key_col).select(UNIT_COL)
+    units = sorted({r[0] for r in present.distinct().collect()} - done)[:max_units]
+    if not units:
+        return 0
+    out = transform(
+        assign_units(df, num_units, key_col=key_col).filter(F.col(UNIT_COL).isin(units))
+    )
     if UNIT_COL not in out.columns:
         raise ValueError("transform must preserve the unit column")
-    out.persist()
-    try:
-        n_units = out.select(UNIT_COL).distinct().count()
-        if n_units == 0:
-            return 0
-        (
-            out.hint("rebalance", UNIT_COL).write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(UNIT_COL)
-            .parquet(output_path)
-        )
-        write_manifest(out, manifest_path, run_id, key_col=key_col, kept_col=kept_col)
-    finally:
-        out.unpersist()
-    return n_units
+    (
+        out.hint("rebalance", UNIT_COL).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(UNIT_COL)
+        .parquet(output_path)
+    )
+    audited = [UNIT_COL, key_col, *[c for c in [kept_col] if c in out.columns]]
+    # the output's schema is known, so the read-back runs no inference job
+    committed = spark.read.schema(out.select(*audited).schema).parquet(output_path)
+    write_manifest(committed.filter(F.col(UNIT_COL).isin(units)), manifest_path, run_id,
+                   key_col=key_col, kept_col=kept_col)
+    return len(units)

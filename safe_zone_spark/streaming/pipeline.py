@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quality import gopher_quality_columns
 from ..operators.scan import extract_and_scan
-from ..plans.pipeline import read_manifest
+from ..plans.pipeline import manifest_aggs, read_manifest
 from ..rules import RuleSet, default_rules
 
 
@@ -161,14 +161,13 @@ def run_pipeline(
                 .parquet(events_path)
             )
             (
-                batch_df.agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum(F.col("final_keep").cast("long")).alias("n_kept"),
-                    F.bit_xor(F.xxhash64("url")).alias("input_fingerprint"),
+                batch_df.agg(*manifest_aggs("url", "final_keep"))
+                .select(
+                    "n_docs", "n_kept", "input_fingerprint",
+                    F.lit(run_id).alias("run_id"),
+                    F.lit(batch_id).alias("batch_id"),
+                    F.current_timestamp().alias("committed_at"),
                 )
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("batch_id", F.lit(batch_id))
-                .withColumn("committed_at", F.current_timestamp())
                 .write.mode("append")
                 .parquet(manifest_path)
             )

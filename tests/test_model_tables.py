@@ -277,7 +277,7 @@ def test_lookup_table_equals_sparse_backoff_on_every_key(tmp_path):
 
 def test_batched_scoring_is_bit_identical_to_per_doc_forms():
     """The batched scorers (langid._batch_trigram_scores gather/reduceat,
-    perplexity_batch's one-searchsorted-per-batch) replaced per-doc numpy
+    perplexity_batch's direct-mapped table lookup) replaced per-doc numpy
     loops for throughput (~3x on the ~200-byte bench corpus). The rewrite
     is only legal because it is BIT-identical: int64 sums are
     order-exact, the masked concatenated trigram stream equals the

@@ -8,7 +8,6 @@ import pytest
 from safe_zone_spark.plans.pipeline import (
     assign_units,
     ensure_parallelism,
-    resume_filter,
     run_with_manifest,
 )
 from safe_zone_spark.sources.corpus import generate_corpus
@@ -37,49 +36,81 @@ def test_assign_units_deterministic_across_partitionings(spark, corpus):
     assert a.join(b, "url").filter(a["unit"] != b["unit"]).count() == 0
 
 
-def test_resume_skips_completed_and_completes(spark, corpus, tmp_path):
-    out_path = str(tmp_path / "out")
-    man_path = str(tmp_path / "manifest")
+def _keep_nonempty(df):
+    return df.withColumn("keep", F.length("text") > 0)
 
-    def transform(df):
-        return df.withColumn("keep", F.length("text") > 0)
 
-    # simulate a crash after 3 of 8 units
-    n1 = run_with_manifest(
-        corpus, transform, output_path=out_path, manifest_path=man_path,
-        run_id="r1", num_units=8, max_units=3,
-    )
-    assert n1 == 3
-    # resume: the rest
-    n2 = run_with_manifest(
-        corpus, transform, output_path=out_path, manifest_path=man_path,
-        run_id="r1", num_units=8,
-    )
-    assert n2 == 5
-    # idempotent: nothing left
-    n3 = run_with_manifest(
-        corpus, transform, output_path=out_path, manifest_path=man_path,
-        run_id="r1", num_units=8,
-    )
-    assert n3 == 0
-
-    # resumed output == one-shot output (same rows, no dupes)
+def _assert_one_committed_run(spark, corpus, out_path, man_path):
+    """The output holds every input url once, and the manifest one row per
+    unit whose fingerprint and count match a recomputation from the input."""
     final = spark.read.parquet(out_path)
     assert final.count() == 300
     assert final.select("url").distinct().count() == 300
 
-    # manifest lineage: fingerprints per unit match a recomputation
     man = spark.read.parquet(man_path)
-    assert man.count() == 8  # one row per unit across the two invocations
+    assert man.count() == 8
+    assert man.select("unit").distinct().count() == 8
     recomputed = (
         assign_units(corpus, 8)
         .groupBy("unit")
         .agg(F.bit_xor(F.xxhash64("url")).alias("fp"), F.count(F.lit(1)).alias("n"))
     )
     joined = man.join(recomputed, "unit")
+    assert joined.count() == 8
     assert joined.filter(
         (F.col("input_fingerprint") != F.col("fp")) | (F.col("n_docs") != F.col("n"))
     ).count() == 0
+
+
+def test_resume_skips_completed_and_completes(spark, corpus, tmp_path):
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    kw = dict(output_path=out_path, manifest_path=man_path, run_id="r1", num_units=8)
+
+    # simulate a crash after 3 of 8 units
+    assert run_with_manifest(corpus, _keep_nonempty, max_units=3, **kw) == 3
+    # resume: the rest
+    assert run_with_manifest(corpus, _keep_nonempty, **kw) == 5
+    # idempotent: nothing left
+    assert run_with_manifest(corpus, _keep_nonempty, **kw) == 0
+
+    # resumed output == one-shot output (same rows, no dupes), and the
+    # manifest lineage covers the two invocations with one row per unit
+    _assert_one_committed_run(spark, corpus, out_path, man_path)
+
+
+def test_crash_between_commit_and_manifest_recommits_the_units(
+        spark, corpus, tmp_path, monkeypatch):
+    """A crash after the output commit but before the manifest append leaves
+    those units pending: the next call overwrites their output partitions
+    and appends their manifest rows once."""
+    from safe_zone_spark.plans import pipeline
+
+    out_path = str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    kw = dict(output_path=out_path, manifest_path=man_path, run_id="r1", num_units=8)
+    assert run_with_manifest(corpus, _keep_nonempty, max_units=3, **kw) == 3
+
+    real = pipeline.write_manifest
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("crash after the output commit")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_manifest", crash_once)
+    with pytest.raises(RuntimeError, match="crash after the output commit"):
+        run_with_manifest(corpus, _keep_nonempty, **kw)
+    # the crashed call committed every row of the five units
+    assert spark.read.parquet(out_path).count() == 300
+    assert spark.read.parquet(man_path).count() == 3
+
+    assert run_with_manifest(corpus, _keep_nonempty, **kw) == 5
+    assert run_with_manifest(corpus, _keep_nonempty, **kw) == 0
+    assert len(calls) == 2
+    _assert_one_committed_run(spark, corpus, out_path, man_path)
 
 
 def _data_files_per_dir(root, prefix):
@@ -168,24 +199,30 @@ def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus, tmp_path):
         spark.conf.unset("spark.sql.files.minPartitionNum")
 
 
-def test_resume_filter_empty_manifest_passthrough(spark, corpus, tmp_path):
-    staged = assign_units(corpus, 4)
-    pending = resume_filter(staged, str(tmp_path / "nope"), "r9")
-    assert pending.count() == corpus.count()
+def test_resume_without_manifest_rows_runs_every_unit(spark, corpus, tmp_path):
     # a crash in the first manifest append leaves a directory with no data
     (tmp_path / "empty").mkdir()
-    pending = resume_filter(staged, str(tmp_path / "empty"), "r9")
-    assert pending.count() == corpus.count()
+    for name in ("nope", "empty"):
+        out_path = str(tmp_path / f"out_{name}")
+        assert run_with_manifest(
+            corpus, _keep_all, output_path=out_path,
+            manifest_path=str(tmp_path / name), run_id="r9", num_units=4,
+        ) == 4
+        assert spark.read.parquet(out_path).count() == corpus.count()
 
 
-def test_resume_filter_raises_on_unreadable_manifest(spark, corpus, tmp_path):
+def test_resume_raises_on_unreadable_manifest(spark, corpus, tmp_path):
     """A manifest that exists but cannot be read must not pass for "nothing
     completed": that would re-run every unit and duplicate manifest rows."""
     manifest = tmp_path / "m"
     manifest.mkdir()
     (manifest / "part-00000.parquet").write_bytes(b"PAR1 not a parquet footer")
     with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
-        resume_filter(assign_units(corpus, 4), str(manifest), "r9")
+        run_with_manifest(
+            corpus, _keep_all, output_path=str(tmp_path / "out"),
+            manifest_path=str(manifest), run_id="r9", num_units=4,
+        )
+    assert not (tmp_path / "out").exists()
 
 
 def test_rule_tables_roundtrip_and_hot_reload(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Physical-plan shape assertions: pushdown, pruning, broadcast, codegen.
+"""Physical-plan shape assertions: pushdown, pruning, codegen, resume reads.
 
 These pin the scale-critical plan properties: a regression that silently
 drops predicate pushdown or widens a scan would pass row-level tests but
@@ -12,7 +12,7 @@ import pytest
 
 from safe_zone_spark.functions.langid import langid_ngram_udf
 from safe_zone_spark.functions.quality import gopher_quality_columns
-from safe_zone_spark.plans.pipeline import assign_units, resume_filter
+from safe_zone_spark.plans.pipeline import run_with_manifest
 from safe_zone_spark.sources.corpus import generate_corpus
 
 SF = "/root/testdata/sf0.01"
@@ -59,20 +59,41 @@ def test_filters_pushed_below_scan_not_udf(spark):
     assert "PushedFilters: [IsNotNull(n_chars), GreaterThan(n_chars,50)" in plan
 
 
-def test_resume_filter_uses_broadcast_join(spark, tmp_path):
-    corpus = generate_corpus(spark, 50, seed=3)
-    staged = assign_units(corpus, 8)
-    # no manifest yet → passthrough (no join at all)
-    pending = resume_filter(staged, str(tmp_path / "m"), "r")
-    plan = plan_of(pending)
-    assert "Join" not in plan and "ExistingRDD" not in plan
-    # write a manifest and check the anti-join broadcasts the unit list
-    staged.limit(10).groupBy("unit").count().select(
-        F.lit("r").alias("run_id"), "unit"
-    ).write.parquet(str(tmp_path / "m"))
-    pending = resume_filter(staged, str(tmp_path / "m"), "r")
-    plan = plan_of(pending)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+def _sql_executions(spark) -> list:
+    """The session's SQL executions as its status store has recorded them,
+    once the listener bus has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    executions = []
+    while it.hasNext():
+        executions.append(it.next())
+    return executions
+
+
+def test_zero_pending_resume_reads_only_the_key_column(spark, tmp_path):
+    """A resume with every unit committed returns 0 without building the
+    transform, and its only read of the input is the url column."""
+    src = str(tmp_path / "src")
+    generate_corpus(spark, 50, seed=3).write.parquet(src)
+    kw = dict(output_path=str(tmp_path / "out"), manifest_path=str(tmp_path / "m"),
+              run_id="r", num_units=8)
+    assert run_with_manifest(
+        spark.read.parquet(src), lambda df: df.withColumn("keep", F.lit(True)), **kw
+    ) == 8
+
+    def must_not_run(df):
+        raise AssertionError("transform called with nothing pending")
+
+    marker = max(e.executionId() for e in _sql_executions(spark))
+    assert run_with_manifest(spark.read.parquet(src), must_not_run, **kw) == 0
+    input_scans = [
+        block for e in _sql_executions(spark) if e.executionId() > marker
+        for block in e.physicalPlanDescription().split("\n\n")
+        if "Scan parquet" in block and src in block
+    ]
+    assert input_scans
+    for block in input_scans:
+        assert "ReadSchema: struct<url:string>" in block, block
 
 
 def test_partition_pruning_on_date_partitioned_output(spark, tmp_path):

@@ -59,6 +59,16 @@ def test_stream_pipeline_matches_batch(spark, staged, tmp_path):
     assert len(rows) == 2  # two files → two batches
     assert sum(r["n_docs"] for r in rows) == 200
     assert {r["batch_id"] for r in rows} == {0, 1}
+    # each batch's lineage recomputes from its source file's urls and final_keep
+    full = transform(spark.read.parquet(src), RULES)
+    recomputed = {
+        tuple(full.filter(in_file).agg(
+            F.count(F.lit(1)), F.sum(F.col("final_keep").cast("long")),
+            F.bit_xor(F.xxhash64("url")),
+        ).first())
+        for in_file in (F.col("url") < "https://i", F.col("url") >= "https://i")
+    }
+    assert {(r["n_docs"], r["n_kept"], r["input_fingerprint"]) for r in rows} == recomputed
 
     # restart with same checkpoint: nothing new → no extra output
     run_pipeline(
