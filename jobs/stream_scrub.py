@@ -53,7 +53,7 @@ def main() -> None:
     from safe_zone_spark.plans.pipeline import read_manifest
     from safe_zone_spark.rules import default_rules
     from safe_zone_spark.sources.corpus import corpus_schema
-    from safe_zone_spark.streaming.pipeline import run_pipeline
+    from safe_zone_spark.streaming.pipeline import STREAM_MANIFEST_SCHEMA, run_pipeline
 
     rules = default_rules(
         blocklist=frozenset(t for t in args.blocklist.split(",") if t)
@@ -74,7 +74,7 @@ def main() -> None:
     else:
         import json
 
-        manifests = read_manifest(spark, f"{args.output}/manifests")
+        manifests = read_manifest(spark, f"{args.output}/manifests", STREAM_MANIFEST_SCHEMA)
         n_batches = 0 if manifests is None else manifests.count()
         print(json.dumps({"drained": True, "total_manifest_rows": n_batches}))
     spark.stop()

@@ -4,22 +4,38 @@ The reference processes one HTTP request at a time
 (/root/reference/internal/guardrails/guardrails.go:60-377); here a whole
 Arrow batch of documents flows through ``mapInPandas`` at once, and each
 needle — the blocklist words (sorted, as escaped regexes) then the active
-patterns in table order — follows one rule, domain × mode, both read from
-Python's own parse of the needle's regex (``_plan``):
+patterns in table order — follows one rule, domain × window × mode, all
+read from Python's own parse of the needle's regex (``_plan``):
 
 * **domain** — the docs holding every *factor* of the regex, a set of
   byte strings one of which each match must contain (a required byte
   class, a run of literals, or the union over an alternation's branches);
   factors only shrink the domain, they never add or drop a match;
-* **mode** — a blob-safe needle runs ONE finditer per batch over its
-  domain's NUL-joined sub-blob and routes matches back to docs with one
-  vectorized ``np.searchsorted`` over the doc starts; a needle that could
-  match the NUL separator or anchor to text edges (``^``, ``$``, ``\\B``,
-  ``.``, negated classes …) runs finditer doc by doc over its domain.
+* **window** — inside the domain's sub-blob, the maximal runs of the
+  needle's *alphabet* (every byte a consuming node can match, both cases
+  only in a ``(?i)`` scope) at least its minimum width long and holding a
+  byte of its rarest one-byte factor. Runs come from a ``bytes.translate``
+  mark and C-level ``find``: from each anchor byte when anchors × width <
+  alphabet bytes in the batch, else from ``find(b"\\x01" * width)``. A
+  needle with a lookaround or a minimum width of 0 has one window, its
+  whole domain;
+* **mode** — a blob-safe needle runs finditer per window of its domain's
+  NUL-joined sub-blob and routes matches back to docs with one vectorized
+  ``np.searchsorted`` over the doc starts; a needle that could match the
+  NUL separator or anchor to text edges (``^``, ``$``, ``\\B``, ``.``,
+  negated classes …) runs finditer doc by doc over its domain.
 
 The blob mode is semantics-preserving because a blob-safe pattern cannot
 match a NUL byte, so no match crosses a document boundary, and ``\\b``
-sees the separator exactly as a document edge. The reference scans its 20
+sees the separator exactly as a document edge. Windows keep that: a match
+holds only alphabet bytes, so it lies inside one run; ``finditer(sub, s,
+e + 1)`` lets ``\\b`` see the real bytes on both sides of the run (SRE
+reads ``sub[s - 1]`` past ``pos`` but treats ``endpos`` as the end of the
+text), and ``sub[e]`` is outside the alphabet, so no match holds it.
+On perfbench's ``commit_pii_long`` job path (long PII-dense docs, 4-core
+VM, 36 interleaved 5-s pairs) windows raised ``docs_per_cpu_s`` from a
+median 187 to 227 (+21%); the change won 32 of the 36 pairs, so by the
+nine-in-ten rule the gain is not established. The reference scans its 20
 patterns serially per request (guardrails.go:171) — the blob scan is the
 genuine improvement Spark's batching buys, with identical results.
 
@@ -46,7 +62,7 @@ from dataclasses import replace
 from itertools import repeat
 from re import _constants as C
 from re import _parser
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -123,90 +139,159 @@ _CATEGORY = {C.CATEGORY_DIGIT: _DIGIT, C.CATEGORY_SPACE: _SPACE, C.CATEGORY_WORD
              C.CATEGORY_NOT_WORD: _ALL - _WORD}
 
 
-def _byte_factor(op, av) -> frozenset[bytes] | None:
-    """The bytes a one-byte node can match, ASCII-case-folded (all a bytes
-    regex's IGNORECASE folds), or ``None`` for any other node."""
+def _node_bytes(op, av) -> frozenset[int] | None:
+    """The bytes a one-byte node can match, case-sensitively, or ``None``
+    for any other node."""
     if op is C.LITERAL:
-        got = {av}
-    elif op is C.NOT_LITERAL:
-        got = _ALL - {av}
-    elif op is C.ANY:
-        got = _ALL
-    elif op is C.IN:
-        got = set()
-        for iop, iav in av:
-            if iop is C.LITERAL:
-                got.add(iav)
-            elif iop is C.RANGE:
-                got.update(range(iav[0], iav[1] + 1))
-            elif iop is C.CATEGORY and iav in _CATEGORY:
-                got |= _CATEGORY[iav]
-            elif iop is not C.NEGATE:  # unknown item: any byte
-                return _byte_factor(C.ANY, None)
-        if av and av[0][0] is C.NEGATE:
-            got = _ALL - got
-    else:
+        return frozenset((av,))
+    if op is C.NOT_LITERAL:
+        return _ALL - {av}
+    if op is C.ANY:
+        return _ALL
+    if op is not C.IN:
         return None
-    return frozenset(bytes((b,)) for b in {*got, *(b ^ 32 for b in got if 97 <= b | 32 <= 122)})
+    got = set()
+    for iop, iav in av:
+        if iop is C.LITERAL:
+            got.add(iav)
+        elif iop is C.RANGE:
+            got.update(range(iav[0], iav[1] + 1))
+        elif iop is C.CATEGORY and iav in _CATEGORY:
+            got |= _CATEGORY[iav]
+        elif iop is not C.NEGATE:  # unknown item: any byte
+            return _ALL
+    return _ALL - got if av and av[0][0] is C.NEGATE else frozenset(got)
+
+
+def _fold(got: frozenset[int]) -> frozenset[int]:
+    """``got`` with the other case of each ASCII letter: all that a bytes
+    regex's IGNORECASE folds."""
+    return got | {b ^ 32 for b in got if 97 <= b | 32 <= 122}
+
+
+class Plan(NamedTuple):
+    """How one needle is scanned, read from its regex's bytes parse."""
+
+    safe: bool  # no node can match byte 0 and no anchor but \b: blob mode
+    icase: bool
+    factors: tuple[frozenset[bytes], ...]  # every match holds a string of each
+    # every byte a match can hold (both cases only in a (?i) scope), or None:
+    # the needle scans its whole domain (not blob-safe, a lookaround, width 0)
+    alphabet: frozenset[int] | None
+    width: int  # the shortest match's length
 
 
 @functools.cache
-def _plan(source: str) -> tuple[bool, bool, tuple[frozenset[bytes], ...]]:
-    """``(blob_safe, icase, factors)`` from the regex's bytes parse. Blob-safe:
+def _plan(source: str) -> Plan:
+    """The needle's :class:`Plan` from the regex's bytes parse. Blob-safe:
     no node can match byte 0 and no anchor but ``\\b``. Every match holds
-    a string of each factor: a required byte class; a run of 2+ required
-    literals (lowercased under ``(?i)``); one factor per alternation branch,
-    unioned. Min-0 repeats and lookarounds add none; an unknown opcode adds
-    none and is unsafe: a plan may widen a scan, never drop a match."""
+    a string of each factor: a required byte class (ASCII-folded); a run of
+    2+ required literals (lowercased under ``(?i)``); one factor per
+    alternation branch, unioned. Min-0 repeats and lookarounds add none; an
+    unknown opcode adds none and is unsafe. The alphabet is the union of
+    every consuming node's bytes, folded only inside an IGNORECASE scope. A
+    plan may widen a scan, never drop a match."""
     tree = _parser.parse(source.encode("utf-8"))
     icase = bool(tree.state.flags & C.SRE_FLAG_IGNORECASE)
     if tree.state.flags & C.SRE_FLAG_LOCALE:  # locale classes and folding
-        return False, icase, ()
-    safe = True
+        return Plan(False, icase, (), None, 0)
+    safe, lookaround, alphabet = True, False, set()
 
-    def walk(seq, runs: bool) -> list[frozenset[bytes]]:
-        # runs=False in a case-sensitive regex's (?i:…) group (raw-blob find)
-        nonlocal safe
+    def walk(seq, runs: bool, fold: bool) -> list[frozenset[bytes]]:
+        # runs=False in a case-sensitive regex's (?i:…) group (raw-blob find);
+        # fold: inside an IGNORECASE scope
+        nonlocal safe, lookaround
         out: list[frozenset[bytes]] = []
         run = bytearray()
         for op, av in [*seq, (None, None)]:
+            got = _node_bytes(op, av)
+            if got is not None:
+                folded = _fold(got)
+                alphabet.update(folded if fold else got)
+                safe &= 0 not in folded
             if op is C.LITERAL and runs:
                 run.append(av)
-                safe &= av != 0
                 continue
             if run:
-                out.append(_byte_factor(C.LITERAL, run[0]) if len(run) == 1 else
-                           frozenset((bytes(run).lower() if icase else bytes(run),)))
+                out.append(frozenset(bytes((b,)) for b in _fold({run[0]})) if len(run) == 1
+                           else frozenset((bytes(run).lower() if icase else bytes(run),)))
             run.clear()
-            factor = _byte_factor(op, av)
-            if factor is not None:
-                safe &= b"\x00" not in factor
-                out.append(factor)
+            if got is not None:
+                out.append(frozenset(bytes((b,)) for b in folded))
             elif op is C.SUBPATTERN and not av[1] & C.SRE_FLAG_LOCALE:
-                out += walk(av[3], runs and (icase or not av[1] & C.SRE_FLAG_IGNORECASE))
+                add, drop = av[1] & C.SRE_FLAG_IGNORECASE, av[2] & C.SRE_FLAG_IGNORECASE
+                out += walk(av[3], runs and (icase or not add), (fold or add) and not drop)
             elif op is C.BRANCH:
-                branches = [walk(b, runs) for b in av[1]]
+                branches = [walk(b, runs, fold) for b in av[1]]
                 if all(branches):
                     out.append(frozenset().union(
                         *(min(b, key=lambda f: (-min(map(len, f)), len(f))) for b in branches)))
             elif op in (C.MAX_REPEAT, C.MIN_REPEAT, C.POSSESSIVE_REPEAT):
-                inner = walk(av[2], runs)
+                inner = walk(av[2], runs, fold)
                 out += inner if av[0] else []
             elif op is C.ATOMIC_GROUP:
-                out += walk(av, runs)
+                out += walk(av, runs, fold)
             elif op is C.ASSERT or op is C.ASSERT_NOT:
-                walk(av[1], runs)
+                lookaround = True  # it reads bytes outside the match
+                walk(av[1], runs, fold)
             elif op is C.AT:
                 safe &= av is C.AT_BOUNDARY  # \B matches an empty doc's NUL
             elif op is not None:
                 safe = False
         return out
 
-    factors = walk(tree, True)
+    factors = walk(tree, True, icase)
     # drop a factor that holds all of another's strings (it admits every doc
     # the other does); one-byte factors first, as they only read the table
     factors = [f for f in dict.fromkeys(factors) if not any(g < f for g in factors)]
-    return safe, icase, tuple(sorted(factors, key=lambda f: max(map(len, f)) > 1))
+    width = tree.getwidth()[0]
+    windowed = safe and not lookaround and width > 0
+    return Plan(safe, icase, tuple(sorted(factors, key=lambda f: max(map(len, f)) > 1)),
+                frozenset(alphabet) if windowed else None, width)
+
+
+@functools.cache
+def _marker(alphabet: frozenset[int]) -> bytes:
+    """A ``bytes.translate`` table: bytes of ``alphabet`` → 1, the rest → 0."""
+    return bytes(b in alphabet for b in range(256))
+
+
+def _windows(sub: bytes, plan: Plan, counts: np.ndarray) -> Iterator[tuple[int, int]]:
+    """``(s, e)`` of each maximal run ``sub[s:e]`` of the plan's alphabet
+    bytes, at least its width long, that holds an anchor, in order. The
+    anchors are the bytes of its rarest (by the batch's byte ``counts``)
+    one-byte factor inside the alphabet, or the alphabet when it has none:
+    every match holds one. Runs are reached from the anchors when anchors ×
+    width < alphabet bytes in the batch; otherwise the runs ``width`` long
+    are found first, then checked for an anchor. ``sub[e]`` (if any) is
+    outside the alphabet. The marks (translated copies of ``sub``) are
+    dropped with the generator."""
+    alphabet, width, n = plan.alphabet, plan.width, len(sub)
+    anchors = min((alphabet & {s[0] for s in f} for f in plan.factors
+                   if all(len(s) == 1 for s in f)),
+                  key=lambda a: counts[list(a)].sum(), default=alphabet)
+    mark = sub.translate(_marker(alphabet))
+    if len(anchors) == 1:
+        hay, needle = sub, bytes(anchors)
+    else:
+        hay, needle = (mark if anchors == alphabet else sub.translate(_marker(anchors))), b"\x01"
+    if counts[list(anchors)].sum() * width < counts[list(alphabet)].sum():
+        at = hay.find(needle)
+        while at != -1:
+            s, e = mark.rfind(b"\x00", 0, at) + 1, mark.find(b"\x00", at)
+            e = n if e == -1 else e
+            if e - s >= width:
+                yield s, e
+            at = hay.find(needle, e)
+    else:
+        run = b"\x01" * width
+        s = mark.find(run)
+        while s != -1:
+            e = mark.find(b"\x00", s + width)
+            e = n if e == -1 else e
+            if hay.find(needle, s, e) != -1:
+                yield s, e
+            s = mark.find(run, e)
 
 
 def _factor_docs(factor, table: np.ndarray, hay: bytes, starts: np.ndarray) -> np.ndarray:
@@ -236,24 +321,28 @@ def _needles(rules: RuleSet) -> list[tuple]:
 def _scan_blob(encoded: list[bytes], blob: bytes, starts: np.ndarray,
                rules: RuleSet) -> list[list[Detection]]:
     """Per-doc candidates for one batch (``blob, starts`` = ``_join(encoded)``),
-    each needle by domain × mode. A factor's doc mask and a domain's sub-blob
-    are built once per batch; the all-docs domain is the batch blob. Offsets
-    are byte offsets into each doc's UTF-8 encoding."""
+    each needle by domain × window × mode. A factor's doc mask and a
+    domain's sub-blob are built once per batch; the all-docs domain is the
+    batch blob. Offsets are byte offsets into each doc's UTF-8 encoding."""
     n_docs = len(encoded)
     per_doc: list[list[Detection]] = [[] for _ in range(n_docs)]
+    codes = np.frombuffer(blob, dtype=np.uint8)
     # doc × 256 byte presence (a doc's row also marks the NUL after it)
     table = np.zeros((n_docs, 256), dtype=bool)
     table[np.repeat(np.arange(n_docs, dtype=np.int32), np.diff(starts, append=len(blob) + 1))[:-1],
-          np.frombuffer(blob, dtype=np.uint8)] = True
+          codes] = True
+    # byte counts pick each needle's anchors; chunks bound bincount's copy
+    counts = sum((np.bincount(codes[k:k + (1 << 20)], minlength=256)
+                  for k in range(0, len(codes), 1 << 20)), np.zeros(256, dtype=np.int64))
     hays = {False: blob, True: blob.lower()}
     masks, domains = {}, {}
     for name, source, compiled, placeholder, score, allow in _needles(rules):
-        safe, icase, factors = _plan(source)
+        plan = _plan(source)
         admit = np.ones(n_docs, dtype=bool)
-        for factor in factors:
-            if (icase, factor) not in masks:
-                masks[icase, factor] = _factor_docs(factor, table, hays[icase], starts)
-            admit &= masks[icase, factor]
+        for factor in plan.factors:
+            if (plan.icase, factor) not in masks:
+                masks[plan.icase, factor] = _factor_docs(factor, table, hays[plan.icase], starts)
+            admit &= masks[plan.icase, factor]
         if admit.all():
             docs, sub, sub_starts = range(n_docs), blob, starts
         else:
@@ -264,15 +353,19 @@ def _scan_blob(encoded: list[bytes], blob: bytes, starts: np.ndarray,
             docs, sub, sub_starts = domains[key]
         if not docs:
             continue
-        if safe:
-            spans = [m.span() for m in compiled.finditer(sub)]
+        if not plan.safe:
+            hits = ((i, encoded[i], 0, m.span())
+                    for i in docs for m in compiled.finditer(encoded[i]))
+        else:
+            if plan.alphabet is None:
+                spans = [m.span() for m in compiled.finditer(sub)]
+            else:  # endpos e + 1 lets \b see sub[e], which no match can hold
+                spans = [m.span() for s, e in _windows(sub, plan, counts)
+                         for m in compiled.finditer(sub, s, e + 1)]
             local = np.searchsorted(sub_starts, [s for s, _ in spans], side="right") - 1
             # plain ints: per-match numpy scalar indexing is measurably slower
             hits = zip([docs[j] for j in local.tolist()], repeat(sub),
                        sub_starts[local].tolist(), spans)
-        else:
-            hits = ((i, encoded[i], 0, m.span())
-                    for i in docs for m in compiled.finditer(encoded[i]))
         for i, data, base, (s, e) in hits:
             value = data[s:e].decode("utf-8", "surrogateescape")
             if value in allow:

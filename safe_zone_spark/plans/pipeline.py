@@ -84,18 +84,42 @@ def assign_units(df: DataFrame, num_units: int, *, key_col: str = "url",
     )
 
 
-def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
-    """The manifest table, or None when it holds no rows yet: its path does
-    not exist, or it is a directory without data files (a crash during the
-    first manifest append leaves one). A manifest that exists but cannot be
-    read raises, since treating it as empty would re-run committed work and
-    append duplicate manifest rows."""
+# The batch manifest's columns, in write order (write_manifest).
+MANIFEST_SCHEMA = ("unit int, n_docs bigint, input_fingerprint bigint, n_kept bigint, "
+                   "run_id string, committed_at timestamp")
+
+
+def read_manifest(spark: SparkSession, manifest_path: str,
+                  schema: str = MANIFEST_SCHEMA) -> DataFrame | None:
+    """The manifest table read with its known ``schema`` (no schema-inference
+    job), or None when its path does not exist. A directory without data
+    files (a crash during the first manifest append leaves one) reads as no
+    rows. One data file's footer is read on the driver, as inference would
+    read it, so a manifest that exists but cannot be read raises
+    (``CANNOT_READ_FILE_FOOTER``): treating it as empty would re-run
+    committed work and append duplicate manifest rows.
+
+    The footer read calls JVM internals, not public API: Spark 4.1's
+    ``ParquetFileFormat$.MODULE$.readParquetFootersInParallel`` and Scala
+    2.13's ``scala.jdk.javaapi.CollectionConverters``.
+    ``test_manifest_footer_check_entry_points_exist`` names either one when
+    an upgrade removes it."""
     try:
-        return spark.read.parquet(manifest_path)
+        manifest = spark.read.schema(schema).parquet(manifest_path)
     except AnalysisException as e:
-        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
+    files = manifest.inputFiles()
+    if files:
+        jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(files[0]))
+        status = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
+            [path.getFileSystem(conf).getFileStatus(path)]).toList()
+        parquet = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
+                          "ParquetFileFormat$")
+        getattr(parquet, "MODULE$").readParquetFootersInParallel(conf, status, False)
+    return manifest
 
 
 def manifest_aggs(key_col: str, kept_col: str | None) -> list[Column]:
@@ -114,14 +138,19 @@ def manifest_aggs(key_col: str, kept_col: str | None) -> list[Column]:
 
 def write_manifest(out_df_with_unit: DataFrame, manifest_path: str, run_id: str,
                    *, key_col: str = "url", kept_col: str | None = "keep") -> None:
-    """Append one lineage row per work unit (:func:`manifest_aggs`)."""
+    """Append one lineage row per work unit (:func:`manifest_aggs`), stamped
+    ``committed_at`` with the append's wall time."""
     if kept_col not in out_df_with_unit.columns:
         kept_col = None
+    # the time as data: a current_timestamp() column folds to a literal that
+    # the generated code inlines, so every append would compile new classes
+    stamp = out_df_with_unit.sparkSession.sql(
+        "SELECT * FROM VALUES (current_timestamp()) AS t(committed_at)")
     (
         out_df_with_unit.groupBy(UNIT_COL)
         .agg(*manifest_aggs(key_col, kept_col))
         .withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_at", F.current_timestamp())
+        .crossJoin(stamp)
         .write.mode("append").parquet(manifest_path)
     )
 

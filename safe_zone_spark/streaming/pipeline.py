@@ -39,6 +39,10 @@ from ..operators.scan import extract_and_scan
 from ..plans.pipeline import manifest_aggs, read_manifest
 from ..rules import RuleSet, default_rules
 
+# The streaming manifest's columns, in write order (one row per micro-batch).
+STREAM_MANIFEST_SCHEMA = ("n_docs bigint, n_kept bigint, input_fingerprint bigint, "
+                          "run_id string, batch_id int, committed_at timestamp")
+
 
 def build_stream(spark: SparkSession, source_dir: str, *, schema,
                  max_files_per_trigger: int | None = None) -> DataFrame:
@@ -91,7 +95,7 @@ def run_pipeline(
 
     def committed(batch_id: int) -> bool:
         """True iff this batch id already has its manifest commit marker."""
-        manifests = read_manifest(spark, manifest_path)
+        manifests = read_manifest(spark, manifest_path, STREAM_MANIFEST_SCHEMA)
         return manifests is not None and bool(
             manifests.filter(
                 (F.col("run_id") == run_id) & (F.col("batch_id") == batch_id)

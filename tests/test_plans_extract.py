@@ -8,7 +8,9 @@ import pytest
 from safe_zone_spark.plans.pipeline import (
     assign_units,
     ensure_parallelism,
+    read_manifest,
     run_with_manifest,
+    write_manifest,
 )
 from safe_zone_spark.sources.corpus import generate_corpus
 from safe_zone_spark.sources.extract import extract_text
@@ -209,6 +211,48 @@ def test_resume_without_manifest_rows_runs_every_unit(spark, corpus, tmp_path):
             manifest_path=str(tmp_path / name), run_id="r9", num_units=4,
         ) == 4
         assert spark.read.parquet(out_path).count() == corpus.count()
+
+
+def test_warm_manifest_appends_compile_no_classes(spark, corpus, tmp_path):
+    """Appends after the first reuse their generated code: ``committed_at``
+    (each append's own wall time) is data, not a literal in the code. The
+    written manifest has the schema ``read_manifest`` reads it with, so the
+    read runs no Spark job."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    units = assign_units(corpus.withColumn("keep", F.lit(True)), 8)
+    man_path = str(tmp_path / "manifest")
+    write_manifest(units, man_path, "r1")
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    write_manifest(units, man_path, "r1")
+    write_manifest(units, man_path, "r1")
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
+
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(None), default=-1)
+    man = read_manifest(spark, man_path)
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == last_job
+    inferred = spark.read.parquet(man_path).schema
+    assert [(f.name, f.dataType) for f in man.schema] == [(f.name, f.dataType) for f in inferred]
+    assert man.count() == 24
+    assert man.select("committed_at").distinct().count() == 3
+
+
+def test_manifest_footer_check_entry_points_exist(spark):
+    """``read_manifest``'s footer check calls two JVM internals (Spark 4.1,
+    Scala 2.13); a Spark or Scala upgrade that removes one fails here by
+    name, not deep inside every resume."""
+    from py4j.protocol import Py4JJavaError
+
+    for cls, method in [
+        ("org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$",
+         "readParquetFootersInParallel"),
+        ("scala.jdk.javaapi.CollectionConverters", "asScala"),
+    ]:
+        try:
+            names = {m.getName() for m in spark._jvm.java.lang.Class.forName(cls).getMethods()}
+        except Py4JJavaError:
+            pytest.fail(f"{cls} is gone; read_manifest's footer check needs it")
+        assert method in names, f"{cls}.{method} is gone; read_manifest's footer check needs it"
 
 
 def test_resume_raises_on_unreadable_manifest(spark, corpus, tmp_path):

@@ -186,9 +186,13 @@ def test_batched_scorers_equal_per_doc_forms(texts):
 
 # Custom-pattern fuzz for the scan plan (``scan._plan``): generated regexes
 # mix literals (ASCII, non-ASCII, NUL), classes and negated classes, ``.``,
-# anchors, \d \w \s and their complements, alternations, quantifiers and
-# (?i); the blob scan with its derived gates must answer exactly like the
-# per-doc oracle, which scans every doc ungated.
+# anchors, \d \w \s and their complements, alternations, greedy, lazy and
+# possessive quantifiers, group repeats, lookarounds and (?i) (global or
+# scoped, and (?-i:…) inside it); the blob scan with its derived gates and
+# windows must answer exactly like the per-doc oracle, which scans every
+# doc ungated. CPython 3.11's possessive repeat of a group holding a
+# capture can raise SystemError, so possessive quantifiers repeat
+# capture-free atoms.
 _regex_atom = st.one_of(
     st.sampled_from(list("abzAZ09@.-_ ")).map(re.escape),
     st.sampled_from(["é", "ß", "中", "\\x00", "\\t"]),
@@ -201,32 +205,72 @@ _regex_atom = st.one_of(
                  min_size=1, max_size=3),
     ),
 )
-_regex = st.tuples(
-    st.booleans(),
-    st.recursive(_regex_atom, lambda inner: st.one_of(
-        st.lists(inner, min_size=2, max_size=4).map("".join),
-        st.lists(inner, min_size=2, max_size=3).map(lambda b: "(?:" + "|".join(b) + ")"),
-        st.tuples(inner, st.sampled_from(["?", "*", "+", "{2}", "{1,3}", "{0,2}"]))
-          .map(lambda t: "(" + t[0] + ")" + t[1]),
-    ), max_leaves=8),
-).map(lambda t: "(?i)" * t[0] + t[1])
+_group_reps = st.sampled_from(["?", "*", "+", "{2}", "{1,3}", "{0,2}"])
+
+
+def _regexes(leaves, group_repeat):
+    """Generated regexes over ``leaves`` whose composite groups repeat as
+    ``group_repeat`` writes them, given the group's source and a quantifier."""
+    return st.tuples(
+        st.booleans(),
+        st.recursive(
+            leaves,
+            lambda inner: st.one_of(
+                st.lists(inner, min_size=2, max_size=4).map("".join),
+                st.lists(inner, min_size=2, max_size=3).map(lambda b: "(?:" + "|".join(b) + ")"),
+                st.tuples(inner, _group_reps).map(lambda t: group_repeat(*t)),
+                st.tuples(st.sampled_from(["(?i:", "(?-i:", "(?=", "(?!"]), inner)
+                  .map(lambda t: t[0] + t[1] + ")"),
+                # a lookbehind needs a fixed width: one atom
+                st.tuples(st.sampled_from(["(?<=", "(?<!"]), _regex_atom)
+                  .map(lambda t: t[0] + t[1] + ")"),
+            ), max_leaves=8),
+    ).map(lambda t: "(?i)" * t[0] + t[1])
+
+
+# backtracking group repeats over plain atoms, so a match such as (a|ab)*
+# can end by backtracking onto a \b at a window's edge
+_regex = _regexes(_regex_atom, lambda src, rep: "(" + src + ")" + rep)
+# atomic group repeats over atoms that may carry greedy, lazy or
+# possessive quantifiers: a backtracking repeat over a group (nested
+# repeats, or an alternation of overlapping classes) can take exponential
+# time on the long runs of ``_run_doc``
+_atomic_regex = _regexes(
+    _regex_atom
+    | st.tuples(_regex_atom, st.sampled_from(["?", "*", "+", "{2}", "{1,3}", "{0,2}", "*?"]))
+      .map(lambda t: "(" + t[0] + ")" + t[1])
+    | st.tuples(_regex_atom, st.sampled_from(["?+", "*+", "++", "{2,4}+"]))
+      .map(lambda t: "(?:" + t[0] + ")" + t[1]),
+    lambda src, rep: "(?>(" + src + ")" + rep + ")",
+)
 _regex_doc = st.lists(
     st.one_of(st.sampled_from(PII_FRAGMENTS),
               st.text(alphabet="abzAZ09@.-_ \t\néß中\x00", max_size=10)),
     max_size=6,
 ).map(" ".join)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(_regex, min_size=1, max_size=3),
-    st.sets(st.text(alphabet="ab-\x00Z", min_size=1, max_size=3), max_size=3),
-    st.lists(_regex_doc, min_size=2, max_size=6),
+# runs of one alphabet at and beyond the patterns' widths (10-16 digits,
+# 40 key bytes), glued to word and non-word bytes so \b falls on a
+# window's edges
+_edge = st.sampled_from(["", "a", "_", "Z", "9", "-", " ", "é", "\x00"])
+_run = st.builds(
+    lambda pre, body, post: pre + body + post,
+    _edge,
+    st.one_of(st.text(alphabet="0123456789", min_size=8, max_size=17),
+              st.text(alphabet="0123456789abcdefABCDEF/+", min_size=36, max_size=44),
+              st.text(alphabet="abzAZ09@.-_", min_size=3, max_size=24)),
+    _edge,
 )
-def test_derived_gate_never_drops_a_match(sources, blocklist, texts):
-    """A derived gate never drops a match: ``detect_batch`` ≡ ``oracle.detect``
-    per doc, in detections and scrubbed text, for generated custom patterns
-    beside every seed pattern, with a blocklist."""
+_run_doc = st.tuples(
+    st.sampled_from([" ", ""]),
+    st.lists(st.one_of(st.sampled_from(PII_FRAGMENTS),
+                       st.text(alphabet="abzAZ09@.-_ \t\néß中\x00", max_size=10),
+                       _run),
+             max_size=6),
+).map(lambda t: t[0].join(t[1]))
+_blocklist = st.sets(st.text(alphabet="ab-\x00Z", min_size=1, max_size=3), max_size=3)
+
+
+def _assert_scan_equals_oracle(sources, blocklist, texts):
     from safe_zone_spark.rules import Pattern, RuleSet
 
     for src in sources:
@@ -245,3 +289,29 @@ def test_derived_gate_never_drops_a_match(sources, blocklist, texts):
         got = [(d["type"], d["start"], d["end"], d["value"]) for d in res["detections"][i]]
         assert got == [(d.type, d.start, d.end, d.value) for d in o.detections], (sources, t)
         assert res["scrubbed_text"][i] == o.redacted_text
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(_regex, min_size=1, max_size=3),
+    _blocklist,
+    st.lists(_regex_doc, min_size=2, max_size=6),
+)
+def test_derived_gate_never_drops_a_match(sources, blocklist, texts):
+    """A derived gate or window never drops a match: ``detect_batch`` ≡
+    ``oracle.detect`` per doc, in detections and scrubbed text, for
+    generated custom patterns (backtracking group repeats included) beside
+    every seed pattern, with a blocklist, on short space-joined docs."""
+    _assert_scan_equals_oracle(sources, blocklist, texts)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(_atomic_regex, min_size=1, max_size=3),
+    _blocklist,
+    st.lists(_run_doc, min_size=2, max_size=6),
+)
+def test_window_edges_never_drop_a_match(sources, blocklist, texts):
+    """As above on docs with long single-alphabet runs glued to word and
+    non-word bytes, so windows start and end next to a ``\\b``."""
+    _assert_scan_equals_oracle(sources, blocklist, texts)

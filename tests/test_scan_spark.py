@@ -232,14 +232,15 @@ def test_blob_unsafe_patterns_fall_back_to_per_doc():
 
 def test_seed_plans_are_pinned():
     """The plans read from ``re._parser`` for the seed patterns: a change in
-    that private parser must fail here, not silently scan every doc."""
+    that private parser must fail here, not silently scan every doc or
+    every window."""
     from safe_zone_spark.operators.scan import _plan
     from safe_zone_spark.rules import SEED_PATTERNS
 
     plans = {p.name: _plan(p.regex) for p in SEED_PATTERNS}
     assert len(plans) == 20
-    assert all(safe for safe, _, _ in plans.values())
-    assert all(factors for n, (_, _, factors) in plans.items() if n != "AWS_SECRET_KEY")
+    assert all(plan.safe for plan in plans.values())
+    assert all(plan.factors for n, plan in plans.items() if n != "AWS_SECRET_KEY")
     assert frozenset({b"-"}) in plans["UUID_PII"][2]
     assert frozenset({b":", b"-"}) in plans["MAC_ADDRESS"][2]
     assert frozenset({b"@"}) in plans["EMAIL"][2]
@@ -247,6 +248,46 @@ def test_seed_plans_are_pinned():
     for name in ("TCKN", "PHONE_TR", "PHONE_INT", "CREDIT_CARD", "IBAN_TR", "DATE",
                  "TURKISH_PLATE", "VKN", "MERSIS", "US_SSN", "UK_NINO"):
         assert any(f <= digits for f in plans[name][2]), name
+
+    # alphabets (both cases only under (?i)) and minimum widths
+    ws, dig = b" \t\n\r\f\v", b"0123456789"
+    up, low = bytes(range(65, 91)), bytes(range(97, 123))
+    hexd = dig + b"ABCDEFabcdef"
+    inj, dan = b"ignore previous instructions forget all prior", b"dan mode do anything now"
+    want = {
+        "EMAIL": (dig + up + low + b"._%+-@", 6),
+        "TCKN": (dig, 11),
+        "PHONE_TR": (dig + ws + b"+-", 10),
+        "PHONE_INT": (dig + b" +", 8),
+        "CREDIT_CARD": (dig + b" -", 13),
+        "IBAN_TR": (dig + ws + b"TR", 26),
+        "DATE": (dig + b"./-", 10),
+        "TURKISH_PLATE": (dig + ws + up, 5),
+        "VKN": (dig, 10),
+        "MERSIS": (dig, 16),
+        "US_SSN": (dig + b"-", 11),
+        "UK_NINO": (dig + b"ABCDEGHJKLMNOPRSTWXYZ", 9),
+        "UUID_PII": (hexd + b"-", 36),
+        "MAC_ADDRESS": (hexd + b":-", 17),
+        "AWS_ACCESS_KEY": (dig + up, 20),
+        "AWS_SECRET_KEY": (dig + up + low + b"/+", 40),
+        "PRIVATE_KEY_HEADER": (b"-BEGIN RSADPCPRIVATEKY", 30),
+        "GENERIC_API_KEY": (dig + up + low + ws + b"_-:=", 23),
+        "PROMPT_INJECTION_SIMPLE": (inj + inj.upper(), 28),
+        "JAILBREAK_DAN": (dan + dan.upper(), 8),
+    }
+    assert {n: (plan.alphabet, plan.width) for n, plan in plans.items()} == {
+        n: (frozenset(alphabet), width) for n, (alphabet, width) in want.items()}
+
+    # scoped case folding; a lookaround, a group reference or width 0 scans
+    # the whole domain (no alphabet)
+    assert _plan(r"(?i:ab)c").alphabet == frozenset(b"abABc")
+    assert _plan(r"(?i)a(?-i:b)").alphabet == frozenset(b"aAb")
+    assert _plan(r"\d+(?=x)").alphabet is None
+    assert _plan(r"(?<!a)\d+").alphabet is None
+    assert _plan(r"(a)\1").alphabet is None
+    assert _plan(r"\d*").alphabet is None
+    assert _plan(r"(?>\d+)a|b++").alphabet == frozenset(b"0123456789ab")
 
 
 def test_checksums_reject_unicode_digits():

@@ -7,22 +7,23 @@ import pytest
 
 from safe_zone_spark.rules import default_rules
 from safe_zone_spark.sources.corpus import corpus_schema, generate_corpus
-from safe_zone_spark.streaming.pipeline import run_pipeline, transform
+from safe_zone_spark.streaming.pipeline import STREAM_MANIFEST_SCHEMA, run_pipeline, transform
 
 RULES = default_rules(blocklist=frozenset({"PROJECT-X"}))
+
+
+def in_first_file():
+    """The staged source's first file: about half the urls, by hash."""
+    return F.pmod(F.xxhash64("url"), F.lit(2)) == 0
 
 
 @pytest.fixture(scope="module")
 def staged(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("stream_src")
     corpus = generate_corpus(spark, 200, seed=11)
-    # two source files → two micro-batches with maxFilesPerTrigger=1
-    corpus.filter(F.col("url") < "https://i").coalesce(1).write.mode("overwrite").parquet(
-        str(tmp / "src")
-    )
-    corpus.filter(F.col("url") >= "https://i").coalesce(1).write.mode("append").parquet(
-        str(tmp / "src")
-    )
+    # two non-empty source files → two micro-batches with maxFilesPerTrigger=1
+    corpus.filter(in_first_file()).coalesce(1).write.mode("overwrite").parquet(str(tmp / "src"))
+    corpus.filter(~in_first_file()).coalesce(1).write.mode("append").parquet(str(tmp / "src"))
     return str(tmp / "src"), corpus
 
 
@@ -56,7 +57,10 @@ def test_stream_pipeline_matches_batch(spark, staged, tmp_path):
     # manifests: one row per micro-batch, fingerprints partition the input
     man = spark.read.parquet(f"{out}/manifests")
     rows = man.collect()
+    known = spark.createDataFrame([], STREAM_MANIFEST_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in man.schema] == [(f.name, f.dataType) for f in known]
     assert len(rows) == 2  # two files → two batches
+    assert all(r["n_docs"] > 0 for r in rows)
     assert sum(r["n_docs"] for r in rows) == 200
     assert {r["batch_id"] for r in rows} == {0, 1}
     # each batch's lineage recomputes from its source file's urls and final_keep
@@ -66,7 +70,7 @@ def test_stream_pipeline_matches_batch(spark, staged, tmp_path):
             F.count(F.lit(1)), F.sum(F.col("final_keep").cast("long")),
             F.bit_xor(F.xxhash64("url")),
         ).first())
-        for in_file in (F.col("url") < "https://i", F.col("url") >= "https://i")
+        for in_file in (in_first_file(), ~in_first_file())
     }
     assert {(r["n_docs"], r["n_kept"], r["input_fingerprint"]) for r in rows} == recomputed
 
@@ -87,6 +91,7 @@ def test_stream_pipeline_matches_batch(spark, staged, tmp_path):
     )
     man2 = spark.read.parquet(f"{out}/manifests").collect()
     assert len(man2) == 3
+    assert all(r["n_docs"] > 0 for r in man2)
     assert sum(r["n_docs"] for r in man2) == 240
 
 
