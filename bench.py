@@ -29,32 +29,6 @@ CORPUS_PATH = os.environ.get(
 )
 
 
-def driver_memory() -> str:
-    """24g, or half the host's physical memory when that is less."""
-    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
-    return f"{min(24 << 10, half_mib)}m"
-
-
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"szs-bench-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("BENCH_ARROW_BATCH", "10000"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", driver_memory())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def ensure_corpus(spark) -> str:
     """Generate the synthetic corpus once (distributed, deterministic).
 
@@ -76,27 +50,18 @@ def force(df) -> int:
     return 0
 
 
-def run_pipeline(spark, corpus_path: str) -> float:
-    """Flagship e2e — the full north-star stage list in ONE python stage:
-    extract → detect/scrub → langid → perplexity all fused into a single
-    Arrow crossing (extra_scorers), then Gopher quality exprs (JVM) →
-    final keep. The second ArrowEvalPython stage the r2 pipeline paid for
-    langid+ppl re-serialized every text both ways and added a stage
-    barrier — fixed overhead that taxed the wide config's scaling."""
-    from pyspark.sql import functions as F
-
+def fused_scan(raw):
+    """extract → detect/scrub → langid → perplexity fused into ONE Arrow
+    crossing (extra_scorers). The second ArrowEvalPython stage the r2
+    pipeline paid for langid+ppl re-serialized every text both ways and
+    added a stage barrier — fixed overhead that taxed the wide config's
+    scaling."""
     from safe_zone_spark.functions.langid import classify_series
-    from safe_zone_spark.functions.perplexity import DEFAULT_PPL_MAX, perplexity_series
-    from safe_zone_spark.functions.quality import gopher_quality_columns
+    from safe_zone_spark.functions.perplexity import perplexity_series
     from safe_zone_spark.operators.scan import extract_and_scan
-    from safe_zone_spark.plans.pipeline import ensure_parallelism
     from safe_zone_spark.rules import default_rules
 
-    raw = spark.read.parquet(corpus_path).select("url", "warc_ts", "html")
-    # narrow end-to-end when the input already feeds every core; pay the
-    # salted shuffle only if splits are too few (SURVEY §3.1)
-    raw = ensure_parallelism(raw, CPUS * 2)
-    out = extract_and_scan(
+    return extract_and_scan(
         raw, default_rules(), keep_cols=("url",),
         fields=("keep", "scrubbed_text", "overall_confidence"),
         extra_scorers={
@@ -104,6 +69,21 @@ def run_pipeline(spark, corpus_path: str) -> float:
             "ppl": ("double", perplexity_series),
         },
     )
+
+
+def run_pipeline(spark, corpus_path: str) -> float:
+    """Flagship e2e — the full north-star stage list in ONE python stage
+    (:func:`fused_scan`), then Gopher quality exprs (JVM) → final keep."""
+    from pyspark.sql import functions as F
+
+    from safe_zone_spark.functions.perplexity import DEFAULT_PPL_MAX
+    from safe_zone_spark.functions.quality import gopher_quality_columns
+    from safe_zone_spark.plans.pipeline import ensure_parallelism
+
+    raw = spark.read.parquet(corpus_path).select("url", "warc_ts", "html")
+    # narrow end-to-end when the input already feeds every core; pay the
+    # salted shuffle only if splits are too few (SURVEY §3.1)
+    out = fused_scan(ensure_parallelism(raw, CPUS * 2))
     q = gopher_quality_columns("text")
     final = out.select(
         "url",
@@ -123,7 +103,9 @@ def main() -> None:
     # of 2 reps where 4 manual warm reps read 1.8-2.2 s
     reps = int(os.environ.get("BENCH_REPS", "3"))
 
-    spark = build_spark(CPUS)
+    from safe_zone_spark.session import session_builder
+
+    spark = session_builder(f"szs-bench-{CPUS}", cores=CPUS).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     corpus_path = ensure_corpus(spark)
@@ -158,26 +140,9 @@ def main() -> None:
         per-worker model build inside the timed window). Must read the
         html-bearing bench corpus — extract_and_scan starts from raw
         html, which the sf documents table doesn't carry."""
-        from pyspark.sql import functions as F  # noqa: F401
-
-        from safe_zone_spark.functions.langid import classify_series
-        from safe_zone_spark.functions.perplexity import perplexity_series
-        from safe_zone_spark.operators.scan import extract_and_scan
-        from safe_zone_spark.rules import default_rules
-
-        fused_small = (
+        force(fused_scan(
             spark.read.parquet(html_corpus).limit(CPUS * 64).repartition(CPUS)
-        )
-        force(
-            extract_and_scan(
-                fused_small, default_rules(), keep_cols=("url",),
-                fields=("keep", "scrubbed_text", "overall_confidence"),
-                extra_scorers={
-                    "lang_pred": ("string", classify_series),
-                    "ppl": ("double", perplexity_series),
-                },
-            )
-        )
+        ))
 
     warm(f"{SF_DIR}/documents.parquet")
     warm_fused(corpus_path)

@@ -8,8 +8,9 @@ Usage:
   python bench_extra.py [--sf DIR] [--reps N] [--plans TAG:SUFFIX] q1 q2 ...
   python bench_extra.py --sf /tmp/szs_sf1.0 --reps 2 dedup_embedding
 
-Same session config as bench.py (local[$SPARK_GRAFT_CPUS], AQE on, Arrow
-on) so the numbers are comparable to the frozen harness.
+Same session as bench.py: the package recipe
+(``safe_zone_spark.session``) at local[$SPARK_GRAFT_CPUS], so the numbers
+are comparable to the frozen harness.
 """
 
 from __future__ import annotations
@@ -32,11 +33,12 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    from bench import CPUS, build_spark
+    from bench import CPUS
 
     import __spark_entry__ as entry_mod
+    from safe_zone_spark.session import session_builder
 
-    spark = build_spark(CPUS)
+    spark = session_builder(f"szs-bench-{CPUS}", cores=CPUS).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
     try:

@@ -35,17 +35,11 @@ def main() -> None:
     p.add_argument("--blocklist", default="", help="comma-separated blocked terms")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName(f"safe-zone-scrub-{args.run_id}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .getOrCreate()
-    )
+    from safe_zone_spark.session import session_builder
+
+    spark = session_builder(f"safe-zone-scrub-{args.run_id}").getOrCreate()
 
     from safe_zone_spark.functions.quality import gopher_quality_columns
     from safe_zone_spark.operators.scan import extract_and_scan, scan

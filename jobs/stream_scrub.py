@@ -40,15 +40,9 @@ def main() -> None:
                    help="keep streaming instead of one availableNow drain")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
+    from safe_zone_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.appName(f"safe-zone-stream-{args.run_id}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .getOrCreate()
-    )
+    spark = session_builder(f"safe-zone-stream-{args.run_id}").getOrCreate()
 
     from safe_zone_spark.plans.pipeline import read_manifest
     from safe_zone_spark.rules import default_rules

@@ -4,6 +4,5 @@ from .langid import langid_marker_columns, langid_ngram_udf  # noqa: F401
 from .perplexity import perplexity_udf  # noqa: F401
 from .text_analysis import (  # noqa: F401
     fingerprint_md5_expr,
-    rolling_fingerprint_udf,
     token_count_exprs,
 )

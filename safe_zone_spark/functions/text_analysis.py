@@ -32,38 +32,6 @@ def fingerprint_md5_expr(text: Column | str = "text") -> Column:
     return F.md5(F.lower(F.regexp_replace(t, "[ \\t\\n\\r\\f\\x0B]+", " ")))
 
 
-_MOD = (1 << 61) - 1
-_BASE = 256  # byte base → the whole document is one big-endian integer
-
-
-def rolling_hash(text: str) -> int:
-    """Polynomial rolling hash over UTF-8 bytes mod 2^61-1.
-
-    With base 256 the polynomial IS the document's big-endian integer value,
-    so the hash is ``int.from_bytes(data) % MOD`` — one CPython big-int op
-    (C speed, no per-byte Python), not an interpreted Horner loop.
-
-    A nonzero sentinel byte is prepended so leading NULs stay significant
-    ('\\x00a' must not collide with 'a', nor '\\x00' with '')."""
-    data = text.encode("utf-8")
-    if not data:
-        return 0
-    return int.from_bytes(b"\x01" + data, "big") % _MOD
-
-
-def rolling_fingerprint_udf():
-    @F.pandas_udf("long")
-    def _udf(texts: pd.Series) -> pd.Series:
-        out = np.fromiter(
-            (rolling_hash(t) for t in texts.fillna("")),
-            dtype=np.int64,
-            count=len(texts),
-        )
-        return pd.Series(out, index=texts.index)
-
-    return _udf
-
-
 # ---------------------------------------------------------------------------
 # Polynomial k-gram hashing (the Rabin-style rolling-hash family).
 #

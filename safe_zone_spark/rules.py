@@ -24,6 +24,8 @@ from __future__ import annotations
 import functools
 import re
 from dataclasses import dataclass, field
+from re import _constants as C
+from re import _parser
 
 
 @dataclass(frozen=True)
@@ -171,14 +173,40 @@ def default_rules(**overrides) -> RuleSet:
 # Mirrors guardrails.go:19-32 getCachedRegex.
 # ---------------------------------------------------------------------------
 
+def _captures_under_possessive(seq, inside: bool = False) -> bool:
+    """Whether a capturing group sits inside a possessive repeat's body."""
+    for op, av in seq:
+        if inside and op is C.SUBPATTERN and av[0] is not None:
+            return True
+        nested = inside or op is C.POSSESSIVE_REPEAT
+        stack = [av]
+        while stack:
+            x = stack.pop()
+            if isinstance(x, _parser.SubPattern):
+                if _captures_under_possessive(x, nested):
+                    return True
+            elif isinstance(x, (tuple, list)):
+                stack += x
+    return False
+
+
 @functools.cache
 def compile_bytes_regex(source: str) -> re.Pattern[bytes]:
     """Compile a pattern for byte-offset scanning over UTF-8 text.
 
     Bytes patterns give ASCII-only ``\\b``/``\\d``/``\\w`` and byte offsets —
     both matching Go's RE2 behavior on the seed patterns.
+
+    A possessive repeat whose body holds a capturing group raises
+    ``re.error``: CPython 3.11's matcher can raise ``SystemError`` ("The
+    span of capturing group is wrong") on such a pattern mid-scan, e.g.
+    ``(?:(\\s){2}|\\d)++`` on ordinary text. RE2 has no possessive
+    repeats, so the reference cannot compile these either.
     """
-    return re.compile(source.encode("utf-8"))
+    data = source.encode("utf-8")
+    if _captures_under_possessive(_parser.parse(data)):
+        raise re.error("possessive repeat over a capturing group", source)
+    return re.compile(data)
 
 
 def compile_patterns(rules: RuleSet) -> list[tuple[Pattern, re.Pattern[bytes]]]:

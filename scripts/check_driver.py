@@ -8,6 +8,7 @@ Usage: python scripts/check_driver.py [sf_dir]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from pathlib import Path
@@ -38,16 +39,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
+    from safe_zone_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("driver_sim")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session_builder("driver_sim", cores=len(os.sched_getaffinity(0))).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

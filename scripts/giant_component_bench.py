@@ -100,21 +100,12 @@ def build_replica_corpus(spark, families: int, replicas: int):
 
 def main() -> int:
     total_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from safe_zone_spark.operators.dedup import fuzzy_dedup_docs
+    from safe_zone_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("szs-giant-component")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session_builder("szs-giant-component", cores=len(os.sched_getaffinity(0))).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(df, algorithm, *, max_iter, label=""):

@@ -39,7 +39,6 @@ def main() -> int:
     warehouse = sys.argv[1] if len(sys.argv) > 1 else tempfile.mkdtemp(
         prefix="iceberg_smoke_wh_"
     )
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from safe_zone_spark.sinks.iceberg import (
@@ -50,8 +49,9 @@ def main() -> int:
         merge_rules_iceberg,
         write_days_partitioned,
     )
+    from safe_zone_spark.session import session_builder
 
-    builder = SparkSession.builder.master("local[4]").appName("iceberg-smoke")
+    builder = session_builder("iceberg-smoke", cores=4)
     spark = configure_local_catalog(builder, warehouse=warehouse).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

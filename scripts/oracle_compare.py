@@ -63,19 +63,12 @@ def main() -> int:
     import os
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
+    from safe_zone_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-compare")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = session_builder("oracle-compare", cores=len(os.sched_getaffinity(0))).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

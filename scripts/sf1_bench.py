@@ -112,21 +112,11 @@ def splice_baseline_md(section: str) -> None:
 def main() -> int:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     reps_per_q = int(os.environ.get("BENCH_REPS", "2"))
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
+    from safe_zone_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("szs-sf1-bench")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    cores = len(os.sched_getaffinity(0))
+    spark = session_builder("szs-sf1-bench", cores=cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     corpus = build_corpus(spark, replicas)
     # fingerprint + ann_lsh_multiprobe live in the demoted variant registry
@@ -172,7 +162,7 @@ def main() -> int:
 ({result['docs']:,} docs, {result['vectors']:,} vectors) with per-replica
 variation, so every original row heads a near-duplicate family — LSH
 buckets and shingle joins get the hot-cluster skew a real crawl has.
-local[32], shuffle partitions 64, AQE skew-join on; min of {reps_per_q}
+local[{cores}], {cores} shuffle partitions, AQE on; min of {reps_per_q}
 warm reps:
 
 | query | sec | output rows |

@@ -8,19 +8,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from safe_zone_spark.session import session_builder
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("safe_zone_spark_tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    s = session_builder("safe_zone_spark_tests", cores=4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -4,7 +4,9 @@ used somewhere in the repo's Python files.
 A name counts as used when it appears outside its own definition as a
 variable (``ast.Name``), an attribute (``ast.Attribute.attr``) or an import
 alias. Names reached only through strings (``getattr``, SQL, docs) do not
-count, so such a helper needs a real reference or has to go.
+count, so such a helper needs a real reference or has to go. A package
+``__init__.py`` re-export is not a use either: it only names the function
+again, so a re-exported helper still needs a caller.
 """
 
 from __future__ import annotations
@@ -23,13 +25,13 @@ def _python_files() -> list[Path]:
     )
 
 
-def _used_names(tree: ast.AST):
+def _used_names(tree: ast.AST, aliases: bool):
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             yield node.id, node.lineno
         elif isinstance(node, ast.Attribute):
             yield node.attr, node.lineno
-        elif isinstance(node, ast.alias):
+        elif isinstance(node, ast.alias) and aliases:
             yield node.name.rpartition(".")[2], node.lineno
 
 
@@ -38,9 +40,10 @@ def unreferenced_definitions() -> list[str]:
     defs: list[tuple[Path, ast.stmt]] = []
     for path in _python_files():
         tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
-        for name, line in _used_names(tree):
+        in_package = path.is_relative_to(PACKAGE)
+        for name, line in _used_names(tree, not (in_package and path.name == "__init__.py")):
             uses.setdefault(name, []).append((path, line))
-        if path.is_relative_to(PACKAGE):
+        if in_package:
             defs += [
                 (path, node) for node in tree.body
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))

@@ -230,6 +230,29 @@ def test_blob_unsafe_patterns_fall_back_to_per_doc():
     assert [len(d) for d in res["detections"]] == [3, 1, 3, 3, 0]
 
 
+def test_possessive_repeat_over_a_capture_is_skipped_like_a_bad_regex():
+    """CPython 3.11 raises SystemError matching ``(?:(\\s){2}|\\d)++`` on this
+    doc; the rule is rejected at compile time, so the scan and the oracle
+    both skip it and still report every other rule's detections."""
+    import re
+
+    from safe_zone_spark.rules import Pattern, RuleSet, compile_bytes_regex
+
+    bad = r"(?:(\s){2}|\d)++"
+    with pytest.raises(re.error):
+        compile_bytes_regex(bad)
+    seed = default_rules()
+    rules = RuleSet(patterns=(Pattern("POSSESSIVE", bad),) + seed.patterns)
+    texts = ["the quick  brown fox 123  456", "ssn 123-45-6789 mail a@b.co  9"]
+    res = detect_batch(pd.Series(texts), rules, mode="MASK")
+    for i, text in enumerate(texts):
+        want = [(d.type, d.start, d.end, d.value) for d in detect(text, seed, mode="MASK").detections]
+        got = [(d["type"], d["start"], d["end"], d["value"]) for d in res["detections"][i]]
+        assert got == want, text
+        assert [(d.type, d.start, d.end, d.value) for d in detect(text, rules, mode="MASK").detections] == want
+    assert [d["type"] for d in res["detections"][1]] == ["US_SSN", "EMAIL"]
+
+
 def test_seed_plans_are_pinned():
     """The plans read from ``re._parser`` for the seed patterns: a change in
     that private parser must fail here, not silently scan every doc or
