@@ -11,11 +11,16 @@ Run on a cluster (BASELINE.json north_rule):
         --manifest s3://bucket/clean/manifests \\
         --run-id 2026-08-16 --units 4096
 
-Pipeline: read (url, warc_ts, html) → ensure_parallelism (salted
-repartition only if input splits can't feed the cluster) → html→text
-extract → Gopher quality exprs → detect/scrub → keep/drop → commit output
-partitioned by work unit + append lineage manifests. Re-running the same
-command after a failure resumes: completed units are anti-joined away.
+Pipeline: read (url, warc_ts, html) → pick the pending work units (a
+url-only read less the units the manifest holds) → html→text extract +
+detect/scrub in one Arrow crossing → Gopher quality exprs → keep/drop →
+commit output partitioned by work unit → append lineage manifests. The
+commit rebalances rows by unit: before the crossing when the input has
+fewer than two splits per core (that shuffle then also spreads the
+crossing over the cores), after the transform otherwise (see
+plans/pipeline.py). Re-running the same command after a failure resumes:
+the units the manifest holds for the run id are left out before any html
+is read.
 """
 
 from __future__ import annotations
@@ -43,16 +48,14 @@ def main() -> None:
 
     from safe_zone_spark.functions.quality import gopher_quality_columns
     from safe_zone_spark.operators.scan import extract_and_scan, scan
-    from safe_zone_spark.plans.pipeline import ensure_parallelism, run_with_manifest
+    from safe_zone_spark.plans.pipeline import run_with_manifest
     from safe_zone_spark.rules import default_rules
 
     rules = default_rules(
         blocklist=frozenset(t for t in args.blocklist.split(",") if t)
     )
-    width = spark.sparkContext.defaultParallelism * 2
 
     def transform(df):
-        df = ensure_parallelism(df, width)
         if "html" in df.columns:
             out = extract_and_scan(
                 df, rules, keep_cols=("unit", "url", "warc_ts"),

@@ -20,7 +20,7 @@ Layout:
                  replacements: toxicity lexicon, TCKN checksum, Luhn)
     streaming/   prefix-consistent incremental scrubber (stream-sync mode)
     multimodal/  opaque binary columns + stubbed decode plumbing
-    _worker      once-per-Python-worker set-up (zip finder sealing)
+    _worker      once-per-Python-worker set-up (zip finder sealing, heap freeze)
 """
 
 __version__ = "0.1.0"

@@ -10,6 +10,14 @@ jar and zips do not change while a worker lives (``addPyFile`` ships a path
 only once; later additions of it are ignored), so a worker can keep the
 directories it has read.
 
+After every task pyspark's daemon runs ``gc.collect()`` in the worker (with
+worker reuse on). A full collection walks every tracked object: with pandas
+and pyarrow imported that is ~73k objects and ~25 ms of CPU per task on a
+4-core x86 VM, nearly all of it import-time state that lives as long as the
+worker. Collecting once and then freezing it (``gc.freeze()``) takes that
+state out of the collector's reach, so the per-task collections walk only
+what later tasks allocate.
+
 :func:`seal_in_spark_task` is called from the package ``__init__``, so it
 runs when a task first unpickles a function that references the package. On
 the driver, and in any process where no Spark task is running, it does
@@ -18,6 +26,7 @@ nothing.
 
 from __future__ import annotations
 
+import gc
 import sys
 import zipimport
 
@@ -45,10 +54,22 @@ def seal_archive_finders() -> None:
     ]
 
 
+def freeze_import_heap() -> None:
+    """Load pandas and pyarrow (every crossing of this package needs them),
+    collect once, and freeze what survives, so later collections skip it."""
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+    gc.collect()
+    gc.freeze()
+
+
 def seal_in_spark_task() -> None:
-    """Seal the archive finders when called inside a Spark Python task."""
+    """Seal the archive finders and freeze the import heap when called
+    inside a Spark Python task."""
     # a worker imports pyspark.taskcontext before any task; the driver may
     # not have it loaded, and importing the package must not load pyspark
     taskcontext = sys.modules.get("pyspark.taskcontext")
     if taskcontext is not None and taskcontext.TaskContext.get() is not None:
         seal_archive_finders()
+        freeze_import_heap()

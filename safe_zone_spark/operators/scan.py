@@ -45,7 +45,10 @@ scrub rebuild) reuse the oracle's functions directly — those are cheap
 
 Scale notes (100 TB / 1000 executors):
 * narrow stage — no shuffle; parallelism = input partitions. Callers defuse
-  host skew with ``salted_repartition`` (plans/pipeline.py) *before* this op.
+  host skew *before* this op: ``ensure_parallelism`` salts a scan with too
+  few splits; the batch commit (``run_with_manifest``) rebalances such a
+  scan by work unit instead, the shuffle that also lays out its
+  unit-partitioned write (plans/pipeline.py).
 * rules ride a Spark broadcast (collected once on the driver, like the
   reference's Redis cache, cache/redis.go:40-58); regexes compile once per
   executor process via the module-level cache (rules.py), mirroring the

@@ -21,13 +21,20 @@ Design for 100 TB:
   again (with the columns the transform needs) and the finished units'
   rows are dropped before the transform: a unit is a hash of the key, so
   no scan can prune by it.
-* **Layout**: rows are rebalanced by unit before the commit (AQE's
-  ``RebalancePartitions``), so each unit is written by one task rather than
-  by every task of the transform: files per unit are bounded by
+* **Layout**: rows are rebalanced by unit (AQE's ``RebalancePartitions``)
+  so each unit is written by one task rather than by every task of the
+  transform: files per unit are bounded by
   ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (a larger unit is
-  split into several files), not multiplied by the task count. Without AQE
-  Spark plans a plain hash exchange on ``unit``, so one task writes each
-  unit.
+  split into several files), not multiplied by the task count. Where the
+  rebalance runs depends on the input's split count. A scan with at least
+  two splits per core stays narrow through the transform, and its output is
+  rebalanced before the write. A narrower scan would need a shuffle before
+  the Arrow crossing anyway (``ensure_parallelism`` salts it), so the
+  rebalance moves to the input: that one exchange feeds the crossing, and
+  because the transform's stages are narrow (``mapInPandas`` keeps its
+  child's partitioning) it also lays out the write. There the advisory
+  size is measured on input bytes. Without AQE Spark plans a plain hash
+  exchange on ``unit``, so one task writes each unit.
 * **Atomicity**: outputs land under ``.../unit=<k>/`` via Spark's committer
   (dynamic partition overwrite, so a unit's rewrite replaces its own
   files and nothing else). The manifest rows are aggregated from a
@@ -55,6 +62,26 @@ def salted_repartition(df: DataFrame, num_partitions: int, *, key_col: str = "ur
     return df.repartition(num_partitions, F.xxhash64(F.col(key_col), F.lit(salt)))
 
 
+def _planned_width(df: DataFrame) -> int | None:
+    """The number of partitions ``df`` will run as. From the root of the
+    optimized plan, with no Spark job: None for a rebalance or a
+    repartition by columns alone, whose width AQE sets once the shuffle has
+    run, and the count a repartition or a coalesce sets. For any other root
+    Spark's own count (``df.rdd.getNumPartitions()``), which follows every
+    split setting (``spark.sql.files.*`` partition bytes and counts,
+    ``leafNodeDefaultParallelism`` …) and plans a scan without a job; under
+    AQE it runs the map stage of a shuffle below the root (an aggregate, a
+    join) as a job, which the consumer then runs again."""
+    root = df._jdf.queryExecution().optimizedPlan()
+    name = root.nodeName()
+    if name == "RebalancePartitions" or (
+            name == "RepartitionByExpression" and root.optNumPartitions().isEmpty()):
+        return None
+    if name in ("Repartition", "RepartitionByExpression"):
+        return root.numPartitions()
+    return df.rdd.getNumPartitions()
+
+
 def ensure_parallelism(df: DataFrame, min_partitions: int, *, key_col: str = "url",
                        salt: int = 42) -> DataFrame:
     """Salted-repartition ONLY when the input can't feed every core.
@@ -66,12 +93,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int, *, key_col: str = "ur
     pay one shuffle to unlock full width. This keeps the flagship pipeline
     narrow end-to-end in the common case (SURVEY §3.1).
 
-    The partition count is Spark's own (``df.rdd.getNumPartitions()``), so
-    the decision follows every split setting (``spark.sql.files.*``
-    partition bytes and counts, ``leafNodeDefaultParallelism`` …) and any
-    repartitioning node above the scan. Over a file scan this plans the
-    scan without running a job."""
-    if df.rdd.getNumPartitions() >= min_partitions:
+    The width is :func:`_planned_width`'s. A rebalanced input (as
+    ``run_with_manifest`` hands its transform when the scan is narrow) is
+    returned as is without running a job: its producer chose its layout."""
+    width = _planned_width(df)
+    if width is None or width >= min_partitions:
         return df
     return salted_repartition(df, min_partitions, key_col=key_col, salt=salt)
 
@@ -136,21 +162,31 @@ def manifest_aggs(key_col: str, kept_col: str | None) -> list[Column]:
     ]
 
 
+def commit_stamp(spark: SparkSession, **ints: int) -> DataFrame:
+    """A one-row table to crossJoin into a manifest append: the int columns
+    ``ints`` (e.g. a streaming ``batch_id``), then ``committed_at``, the
+    append's wall time. The values are data: as ``F.lit`` or
+    ``current_timestamp()`` columns they fold to literals that the generated
+    code inlines, so every append would compile new classes. The table is
+    hinted ``shuffle_replicate_nl`` (a cartesian product), since
+    broadcasting it would run one more Spark job per append."""
+    names = [*ints, "committed_at"]
+    values = [f"CAST(:{name} AS INT)" for name in ints] + ["current_timestamp()"]
+    return spark.sql(f"SELECT * FROM VALUES ({', '.join(values)}) AS t({', '.join(names)})",
+                     args=ints).hint("shuffle_replicate_nl")
+
+
 def write_manifest(out_df_with_unit: DataFrame, manifest_path: str, run_id: str,
                    *, key_col: str = "url", kept_col: str | None = "keep") -> None:
     """Append one lineage row per work unit (:func:`manifest_aggs`), stamped
     ``committed_at`` with the append's wall time."""
     if kept_col not in out_df_with_unit.columns:
         kept_col = None
-    # the time as data: a current_timestamp() column folds to a literal that
-    # the generated code inlines, so every append would compile new classes
-    stamp = out_df_with_unit.sparkSession.sql(
-        "SELECT * FROM VALUES (current_timestamp()) AS t(committed_at)")
     (
         out_df_with_unit.groupBy(UNIT_COL)
         .agg(*manifest_aggs(key_col, kept_col))
         .withColumn("run_id", F.lit(run_id))
-        .crossJoin(stamp)
+        .crossJoin(commit_stamp(out_df_with_unit.sparkSession))
         .write.mode("append").parquet(manifest_path)
     )
 
@@ -176,12 +212,18 @@ def run_with_manifest(
     pending it returns 0 before ``transform`` is called or any input column
     but ``key_col`` is read.
 
-    The commit rebalances the output on ``unit``, so each unit is written
-    by one task and its file count is bounded by the advisory partition
-    size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) rather than
-    by the number of transform tasks. The rebalance needs AQE; without it
-    the hint plans a plain hash exchange on ``unit`` and one task writes
-    each unit."""
+    The commit rebalances rows on ``unit``, so each unit is written by one
+    task and its file count is bounded by the advisory partition size
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) rather than by
+    the number of transform tasks. When the pending rows' scan has fewer
+    than two splits per core, ``transform`` receives them already
+    rebalanced, so the crossing is fed and the write laid out by that one
+    shuffle (the advisory size then applies to input bytes); this holds
+    while ``transform`` keeps rows in their partitions (column
+    expressions, ``mapInPandas``). Otherwise ``transform`` receives the
+    narrow scan and its output is rebalanced. The rebalance needs AQE;
+    without it the hint plans a plain hash exchange on ``unit`` and one
+    task writes each unit."""
     spark = df.sparkSession
     manifest = read_manifest(spark, manifest_path)
     done = set() if manifest is None else {
@@ -192,13 +234,16 @@ def run_with_manifest(
     units = sorted({r[0] for r in present.distinct().collect()} - done)[:max_units]
     if not units:
         return 0
-    out = transform(
-        assign_units(df, num_units, key_col=key_col).filter(F.col(UNIT_COL).isin(units))
-    )
+    pending = assign_units(df, num_units, key_col=key_col).filter(F.col(UNIT_COL).isin(units))
+    # with fewer than two splits per core the crossing needs a shuffle anyway
+    width = _planned_width(pending)
+    narrow = width is not None and width < 2 * spark.sparkContext.defaultParallelism
+    out = transform(pending.hint("rebalance", UNIT_COL) if narrow else pending)
     if UNIT_COL not in out.columns:
         raise ValueError("transform must preserve the unit column")
     (
-        out.hint("rebalance", UNIT_COL).write.mode("overwrite")
+        (out if narrow else out.hint("rebalance", UNIT_COL))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(UNIT_COL)
         .parquet(output_path)

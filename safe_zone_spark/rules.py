@@ -191,6 +191,16 @@ def _captures_under_possessive(seq, inside: bool = False) -> bool:
 
 
 @functools.cache
+def _compiled_or_error(source: str) -> re.Pattern[bytes] | re.error:
+    data = source.encode("utf-8")
+    try:
+        if _captures_under_possessive(_parser.parse(data)):
+            raise re.error("possessive repeat over a capturing group", source)
+        return re.compile(data)
+    except re.error as e:
+        return e.with_traceback(None)
+
+
 def compile_bytes_regex(source: str) -> re.Pattern[bytes]:
     """Compile a pattern for byte-offset scanning over UTF-8 text.
 
@@ -202,11 +212,14 @@ def compile_bytes_regex(source: str) -> re.Pattern[bytes]:
     span of capturing group is wrong") on such a pattern mid-scan, e.g.
     ``(?:(\\s){2}|\\d)++`` on ordinary text. RE2 has no possessive
     repeats, so the reference cannot compile these either.
+
+    Rejections are cached with the compiled patterns, so a bad rule is
+    parsed once per process, not on every ``compile_patterns`` call.
     """
-    data = source.encode("utf-8")
-    if _captures_under_possessive(_parser.parse(data)):
-        raise re.error("possessive repeat over a capturing group", source)
-    return re.compile(data)
+    compiled = _compiled_or_error(source)
+    if isinstance(compiled, re.error):
+        raise compiled.with_traceback(None)
+    return compiled
 
 
 def compile_patterns(rules: RuleSet) -> list[tuple[Pattern, re.Pattern[bytes]]]:

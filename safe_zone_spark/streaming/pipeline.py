@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quality import gopher_quality_columns
 from ..operators.scan import extract_and_scan
-from ..plans.pipeline import manifest_aggs, read_manifest
+from ..plans.pipeline import commit_stamp, manifest_aggs, read_manifest
 from ..rules import RuleSet, default_rules
 
 # The streaming manifest's columns, in write order (one row per micro-batch).
@@ -62,6 +62,21 @@ def transform(docs: DataFrame, rules: RuleSet | None = None) -> DataFrame:
     return out.withColumn(
         "final_keep", F.col("keep") & q["quality_keep"]
     ).withColumn("warc_date", F.to_date("warc_ts"))
+
+
+def append_batch_manifest(batch_df: DataFrame, manifest_path: str, run_id: str,
+                          batch_id: int) -> None:
+    """Append a micro-batch's manifest row (:func:`manifest_aggs` over
+    ``url`` and ``final_keep``), its commit marker, stamped with
+    ``batch_id`` and ``committed_at`` by :func:`commit_stamp`."""
+    (
+        batch_df.agg(*manifest_aggs("url", "final_keep"))
+        .withColumn("run_id", F.lit(run_id))
+        .crossJoin(commit_stamp(batch_df.sparkSession, batch_id=batch_id))
+        .select("n_docs", "n_kept", "input_fingerprint", "run_id", "batch_id", "committed_at")
+        .write.mode("append")
+        .parquet(manifest_path)
+    )
 
 
 def run_pipeline(
@@ -164,17 +179,7 @@ def run_pipeline(
                 .partitionBy("run_id", "batch_id")
                 .parquet(events_path)
             )
-            (
-                batch_df.agg(*manifest_aggs("url", "final_keep"))
-                .select(
-                    "n_docs", "n_kept", "input_fingerprint",
-                    F.lit(run_id).alias("run_id"),
-                    F.lit(batch_id).alias("batch_id"),
-                    F.current_timestamp().alias("committed_at"),
-                )
-                .write.mode("append")
-                .parquet(manifest_path)
-            )
+            append_batch_manifest(batch_df, manifest_path, run_id, batch_id)
         finally:
             batch_df.unpersist()
 

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import contextlib
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -154,6 +157,101 @@ def test_commit_writes_one_file_per_unit(spark, multi_split_corpus, tmp_path):
     assert spark.read.parquet(out_path).count() == 300
 
 
+@contextlib.contextmanager
+def _job_group(spark, group):
+    """Yields a list that holds, after the block, the ids of the Spark jobs
+    the block started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    jobs = []
+    try:
+        yield jobs
+    finally:
+        jobs += sc.statusTracker().getJobIdsForGroup(group)
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def _executions(spark):
+    """The SQL executions of the session's status store."""
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _final_write_plan(spark, marker, path):
+    """The executed plan of the write to ``path`` among the SQL executions
+    after id ``marker``: its node tree (AQE's final plan) and its node
+    details."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [text for e in _executions(spark) if e.executionId() > marker
+             for text in [e.physicalPlanDescription() or ""]
+             if f"InsertIntoHadoopFsRelationCommand\nInput: []\nArguments: file:{path}, "
+             in text]
+    assert len(plans) == 1
+    tree, details = plans[0].split("\n\n\n", 1)
+    return tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0], details
+
+
+@pytest.mark.parametrize("min_splits", [None, 8], ids=["narrow_scan", "wide_scan"])
+def test_commit_shuffles_once_by_unit(spark, multi_split_corpus, tmp_path, min_splits):
+    """With a transform shaped like the batch job's (perfbench's copy of it
+    calls ``ensure_parallelism`` first), the commit runs one shuffle, a
+    rebalance on ``unit``, and each unit dir holds one file. A scan with
+    fewer than two splits per core is rebalanced below the Arrow crossing,
+    so the transform does not salt it; a wider scan stays narrow through
+    the crossing and its output is rebalanced."""
+    from safe_zone_spark.operators.scan import extract_and_scan
+    from safe_zone_spark.rules import default_rules
+
+    rules = default_rules()
+    width = spark.sparkContext.defaultParallelism * 2
+
+    def transform(df):
+        df = ensure_parallelism(df, width)
+        out = extract_and_scan(df, rules, keep_cols=("unit", "url", "warc_ts"),
+                               fields=("keep", "scrubbed_text"))
+        return out.withColumn("warc_date", F.to_date("warc_ts")).select(
+            "unit", "url", "warc_date", "keep", "scrubbed_text")
+
+    out_path = str(tmp_path / "out")
+    marker = max((e.executionId() for e in _executions(spark)), default=-1)
+    if min_splits:
+        spark.conf.set("spark.sql.files.minPartitionNum", str(min_splits))
+    try:
+        splits = spark.read.parquet(*multi_split_corpus.inputFiles()).rdd.getNumPartitions()
+        with _job_group(spark, f"commit-{min_splits}") as jobs:
+            n = run_with_manifest(
+                multi_split_corpus, transform, output_path=out_path,
+                manifest_path=str(tmp_path / "manifest"), run_id="r1", num_units=8,
+            )
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    assert n == 8
+    assert (splits < width) == (min_splits is None)
+    # the pending-unit collect, the write and the manifest append run a
+    # shuffle map job and a result job each; a job that counts a shuffled
+    # input's partitions, or a broadcast of the manifest's stamp row, would
+    # add one
+    assert len(jobs) == 6
+
+    tree, details = _final_write_plan(spark, marker, out_path)
+    nodes = [line.strip(" +-*:") for line in tree.splitlines() if line.strip()]
+    exchanges = [i for i, node in enumerate(nodes) if node.startswith("Exchange")]
+    crossing = [i for i, node in enumerate(nodes) if node.startswith("MapInPandas")]
+    assert len(exchanges) == 1 and len(crossing) == 1
+    # the tree lists a node above its input
+    assert (crossing[0] < exchanges[0]) == (min_splits is None)
+    node_id = re.fullmatch(r"Exchange \((\d+)\)", nodes[exchanges[0]]).group(1)
+    arguments = re.search(rf"\n\({node_id}\) Exchange\n.*?Arguments: ([^\n]*)", details, re.S)
+    assert arguments.group(1).startswith("hashpartitioning(unit#")
+    assert "REBALANCE_PARTITIONS_BY_COL" in arguments.group(1)
+    assert "REPARTITION_BY_NUM" not in details
+    assert _data_files_per_dir(out_path, "unit") == {f"unit={k}": 1 for k in range(8)}
+    assert spark.read.parquet(out_path).count() == 300
+
+
 def test_commit_splits_units_past_the_advisory_size(spark, multi_split_corpus, tmp_path):
     """Files per unit are bounded by size: under a small advisory partition
     size a unit is written as several files, and no row is lost or doubled."""
@@ -199,6 +297,33 @@ def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus, tmp_path):
         assert ensure_parallelism(files, 8) is files
     finally:
         spark.conf.unset("spark.sql.files.minPartitionNum")
+
+
+def test_ensure_parallelism_runs_no_job(spark, multi_split_corpus):
+    """A rebalanced or repartitioned input is decided from its plan, and a
+    scan from its splits, without running a Spark job: counting a shuffled
+    input's partitions through ``df.rdd`` would run its shuffle map stage,
+    which the consumer then runs again. A repartition or coalesce to fewer
+    partitions than asked for is still salted."""
+    kept = [
+        multi_split_corpus.hint("rebalance", "url"),
+        multi_split_corpus.repartition("url"),
+        multi_split_corpus.repartition(8, "url"),
+        multi_split_corpus.repartition(8),
+    ]
+    narrow = [
+        multi_split_corpus,
+        multi_split_corpus.repartition(2, "url"),
+        multi_split_corpus.coalesce(1),
+    ]
+    with _job_group(spark, "ensure_parallelism") as jobs:
+        kept_out = [ensure_parallelism(df, 8) for df in kept]
+        narrow_out = [ensure_parallelism(df, 64 if df is multi_split_corpus else 8)
+                      for df in narrow]
+    assert jobs == []
+    assert all(out is df for out, df in zip(kept_out, kept))
+    for out in narrow_out:
+        assert "REPARTITION_BY_NUM" in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_resume_without_manifest_rows_runs_every_unit(spark, corpus, tmp_path):

@@ -253,6 +253,33 @@ def test_possessive_repeat_over_a_capture_is_skipped_like_a_bad_regex():
     assert [d["type"] for d in res["detections"][1]] == ["US_SSN", "EMAIL"]
 
 
+def test_rejected_rules_are_parsed_once():
+    """A rule that fails to compile, or is rejected as a possessive repeat
+    over a capture, is parsed on the first ``compile_patterns`` call only:
+    the scan compiles once per batch and the oracle once per doc."""
+    from re import _parser
+
+    from safe_zone_spark.rules import Pattern, RuleSet, compile_patterns
+
+    bad = {r"(unbalanced parse-once probe", r"(?:(\s){2}|parse-once probe)++"}
+    seed = default_rules()
+    rules = RuleSet(patterns=tuple(Pattern(f"BAD{i}", b) for i, b in enumerate(sorted(bad)))
+                    + seed.patterns)
+    real_parse = _parser.parse
+    parsed = []
+
+    def counting_parse(source, *args, **kwargs):
+        parsed.append(source)
+        return real_parse(source, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(_parser, "parse", counting_parse)
+        for _ in range(2):
+            compiled = compile_patterns(rules)
+            assert [p.name for p, _ in compiled] == [p.name for p in seed.patterns]
+    assert sorted(s for s in parsed if s.decode() in bad) == sorted(b.encode() for b in bad)
+
+
 def test_seed_plans_are_pinned():
     """The plans read from ``re._parser`` for the seed patterns: a change in
     that private parser must fail here, not silently scan every doc or

@@ -7,7 +7,13 @@ import pytest
 
 from safe_zone_spark.rules import default_rules
 from safe_zone_spark.sources.corpus import corpus_schema, generate_corpus
-from safe_zone_spark.streaming.pipeline import STREAM_MANIFEST_SCHEMA, run_pipeline, transform
+from safe_zone_spark.plans.pipeline import read_manifest
+from safe_zone_spark.streaming.pipeline import (
+    STREAM_MANIFEST_SCHEMA,
+    append_batch_manifest,
+    run_pipeline,
+    transform,
+)
 
 RULES = default_rules(blocklist=frozenset({"PROJECT-X"}))
 
@@ -93,6 +99,35 @@ def test_stream_pipeline_matches_batch(spark, staged, tmp_path):
     assert len(man2) == 3
     assert all(r["n_docs"] > 0 for r in man2)
     assert sum(r["n_docs"] for r in man2) == 240
+
+
+def test_warm_batch_manifest_appends_compile_no_classes(spark, tmp_path):
+    """Micro-batch appends after the first reuse their generated code:
+    ``batch_id`` and ``committed_at`` are data, not literals in the code.
+    The written manifest has the schema ``read_manifest`` reads it with, so
+    the read runs no Spark job."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    batch = spark.range(50).selectExpr(
+        "concat('u', id) AS url", "id % 2 = 0 AS final_keep").persist()
+    batch.count()
+    man_path = str(tmp_path / "manifests")
+    append_batch_manifest(batch, man_path, "r1", 0)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    append_batch_manifest(batch, man_path, "r1", 1)
+    append_batch_manifest(batch, man_path, "r1", 2)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
+    batch.unpersist()
+
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(None), default=-1)
+    man = read_manifest(spark, man_path, STREAM_MANIFEST_SCHEMA)
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == last_job
+    inferred = spark.read.parquet(man_path).schema
+    assert [(f.name, f.dataType) for f in man.schema] == [(f.name, f.dataType) for f in inferred]
+    rows = man.collect()
+    assert sorted(r["batch_id"] for r in rows) == [0, 1, 2]
+    assert {(r["n_docs"], r["n_kept"], r["run_id"]) for r in rows} == {(50, 25, "r1")}
+    assert len({r["committed_at"] for r in rows}) == 3
 
 
 def test_output_partitioned_by_warc_date(spark, staged, tmp_path):

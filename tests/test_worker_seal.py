@@ -1,6 +1,8 @@
-"""Sealed zip finders: ``importlib.invalidate_caches()`` must not re-read an
-archive's directory, and imports from the archive must keep working."""
+"""Once-per-worker set-up. Sealed zip finders: ``importlib.invalidate_caches()``
+must not re-read an archive's directory, and imports from the archive must
+keep working. The import heap is frozen inside a Spark task only."""
 
+import gc
 import importlib
 import sys
 import zipfile
@@ -59,3 +61,17 @@ def test_seal_is_a_no_op_outside_a_spark_task(monkeypatch):
     before = list(sys.path_hooks)
     seal_in_spark_task()
     assert sys.path_hooks == before
+
+
+def test_import_heap_is_frozen_in_a_task_and_not_on_the_driver(spark):
+    """The package import inside a task freezes the heap, so the daemon's
+    per-task ``gc.collect()`` skips it; the driver's heap is left alone."""
+
+    def freeze_count(_):
+        import safe_zone_spark  # noqa: F401  (a worker's first import freezes)
+
+        yield gc.get_freeze_count()
+
+    counts = spark.sparkContext.parallelize(range(2), 2).mapPartitions(freeze_count).collect()
+    assert len(counts) == 2 and min(counts) > 0
+    assert gc.get_freeze_count() == 0
