@@ -1321,22 +1321,14 @@ def oracle_sql() -> dict[str, str]:
     )
 
     ai_score = ai_confidence_sql_fragment("value")
-    cpath = model_table_path(langid._MODEL_FILE, langid._train_key())
-    ppl_key = perplexity._train_key()
+    (cpath,) = model_table_path(langid.SPEC)
     return {
         "langid_ngram": langid_ngram_oracle_sql(cpath),
         "langid_scores": langid_scores_oracle_sql(cpath),
-        "tokenize": bpe.bpe_token_count_sql(
-            model_table_path(bpe._MODEL_FILE, bpe._train_key())
-        ),
-        "quality_model": qm.quality_model_oracle_sql(
-            model_table_path(qm._MODEL_FILE, qm._train_key())
-        ),
+        "tokenize": bpe.bpe_token_count_sql(*model_table_path(bpe.SPEC)),
+        "quality_model": qm.quality_model_oracle_sql(*model_table_path(qm.SPEC)),
         "quality_repetition": repetition_oracle_sql(),
-        "perplexity": perplexity_oracle_sql(
-            model_table_path(perplexity._TRI_FILE, ppl_key),
-            model_table_path(perplexity._CTX_FILE, ppl_key),
-        ),
+        "perplexity": perplexity_oracle_sql(*model_table_path(perplexity.SPEC)),
         "media_metadata": mm.media_metadata_oracle_sql(100),
         "audio_features": mm.audio_features_oracle_sql(60),
         "frame_sample": mm.frame_sample_oracle_sql(100, every_k=2),
@@ -1511,11 +1503,9 @@ def variant_oracle_sql() -> dict[str, str]:
     from safe_zone_spark.functions.model_store import model_table_path
     from safe_zone_spark.operators.model_eval import quality_model_eval_sql
 
-    cpath = model_table_path(langid._MODEL_FILE, langid._train_key())
+    (cpath,) = model_table_path(langid.SPEC)
     return {
-        "model_eval": quality_model_eval_sql(
-            model_table_path(qm._MODEL_FILE, qm._train_key())
-        ),
+        "model_eval": quality_model_eval_sql(*model_table_path(qm.SPEC)),
         "scrub_email": (
             f"{AUG_CTE} SELECT doc_id, "
             f"regexp_replace(text, '{EMAIL_RE}', '[EMAIL]', 'g') AS scrubbed FROM aug"

@@ -3,8 +3,8 @@
 Real mixing/packing budgets are subword-token budgets, not whitespace-word
 budgets (CJK text is ~1 whitespace token per paragraph). This module trains
 a small character-level BPE vocabulary deterministically from the embedded
-multilingual word stocks (the same load-don't-train parquet bootstrap as
-functions/langid.py), scores documents in an Arrow-batched series fn, and
+multilingual word stocks (persisted as a model table and loaded through
+functions/model_store.py), scores documents in an Arrow-batched series fn, and
 carries an exact DuckDB twin: the merge table is data, and inference is a
 recursive CTE applying the same merge rule.
 
@@ -34,6 +34,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
+
+from .model_store import ModelSpec, load_or_train, write_tables
 
 # \x1f (unit separator) encodes token boundaries in the string form, so it
 # must never appear inside a word: the word-split class includes it on BOTH
@@ -111,78 +113,50 @@ def _default_training_words() -> "dict[str, int]":
     return freq
 
 
-# --- model persistence (load-don't-train, langid.py pattern) ------------------
+# --- model table (load-don't-train: functions/model_store.py) ----------------
 
 
-def _train_key() -> str:
-    import hashlib
-    import inspect
-
-    from . import langid_data
-
-    h = hashlib.md5(inspect.getsource(langid_data).encode())
-    for fn in (train_bpe_merges, _default_training_words, _merge_once,
-               _split_words):
-        h.update(inspect.getsource(fn).encode())
-    h.update(f"|bpe|{BPE_NUM_MERGES}|{MAX_WORD_LEN}|n=60|seed=7".encode())
-    return h.hexdigest()
-
-
-_MODEL_FILE = "bpe_merges.parquet"
-
-
-def write_bpe_parquet(path: str, merges=None, *, train_key: str | None = None) -> str:
-    """Persist the merge table as (rank, a, b) rows — the model table the
-    DuckDB twin reads and the swap point for an externally trained
-    tokenizer (any ranked merge list drives the identical scoring)."""
+def _merges_table(merges):
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    if merges is None:
-        merges = _MERGES
-        if train_key is None:
-            train_key = _train_key()
-    t = pa.table(
+    return pa.table(
         {
             "rank": pa.array(range(len(merges)), pa.int64()),
             "a": pa.array([a for a, _ in merges], pa.string()),
             "b": pa.array([b for _, b in merges], pa.string()),
         }
     )
-    if train_key is not None:
-        t = t.replace_schema_metadata({b"train_key": train_key.encode()})
-    pq.write_table(t, path)
+
+
+def _merges_from_table(t) -> "list[tuple[str, str]]":
+    return list(zip(t.column("a").to_pylist(), t.column("b").to_pylist()))
+
+
+def write_bpe_parquet(path: str, merges=None, *, train_key: str | None = None) -> str:
+    """Persist the merge table as (rank, a, b) rows — the model table the
+    DuckDB twin reads and the swap point for an externally trained
+    tokenizer (any ranked merge list drives the identical scoring).
+    ``merges`` defaults to the embedded model."""
+    write_tables([_merges_table(_MERGES if merges is None else merges)], [path],
+                 train_key)
     return path
 
 
 def load_bpe_parquet(path: str) -> "list[tuple[str, str]]":
     import pyarrow.parquet as pq
 
-    t = pq.read_table(path)
-    return list(zip(t.column("a").to_pylist(), t.column("b").to_pylist()))
+    return _merges_from_table(pq.read_table(path))
 
 
-def _load_embedded_model():
-    from .model_store import read_model_table
-
-    t = read_model_table(_MODEL_FILE, _train_key())
-    if t is None:
-        return None
-    try:
-        return list(zip(t.column("a").to_pylist(), t.column("b").to_pylist()))
-    except Exception:
-        return None
-
-
-_loaded = _load_embedded_model()
-if _loaded is not None:
-    _MERGES: list[tuple[str, str]] = _loaded
-else:
-    _MERGES = train_bpe_merges(_default_training_words())
-    from .model_store import persist_model_files
-
-    persist_model_files([_MODEL_FILE], lambda p: write_bpe_parquet(p))
-
+SPEC = ModelSpec(
+    files=("bpe_merges.parquet",),
+    key_sources=(train_bpe_merges, _default_training_words, _merge_once, _split_words),
+    key_extra=f"|bpe|{BPE_NUM_MERGES}|{MAX_WORD_LEN}|n=60|seed=7".encode(),
+    train=lambda: train_bpe_merges(_default_training_words()),
+    encode=lambda merges: [_merges_table(merges)],
+    decode=lambda tables: _merges_from_table(*tables),
+)
+_MERGES: list[tuple[str, str]] = load_or_train(SPEC)
 _RANKS: dict[tuple[str, str], int] = {p: r for r, p in enumerate(_MERGES)}
 
 

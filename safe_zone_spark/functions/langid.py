@@ -24,7 +24,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..sources.corpus import LANGS
-from .model_store import persist_model_files, read_model_table
+from .model_store import ModelSpec, load_or_train, write_tables
 
 # --- 1. marker-based (SQL-twinned) -----------------------------------------
 
@@ -320,23 +320,10 @@ def langid_ngram_udf(model=None):
 # --- DuckDB twin: model-as-data + relational scoring -------------------------
 
 
-def write_centroid_parquet(path: str, model=None, *, train_key: str | None = None,
-                           extra_meta: "dict[bytes, bytes] | None" = None) -> str:
-    """Persist the quantized model as (lang, bucket, weight≠0) rows — the
-    "model table" a production pipeline would keep next to the corpus (and
-    the swap point for a real fastText export). ``model`` defaults to the
-    embedded micro-model. ``train_key`` (schema metadata) lets the
-    import-time loader reject a table whose training code has since
-    changed; defaults to the embedded model's key when writing it.
-    ``extra_meta`` rides the same schema metadata (e.g. the quality
-    model's calibrated gate threshold)."""
+def _centroid_table(model):
+    """(int64 centroids, langs) → the sparse (lang, bucket, weight≠0) table."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    if model is None:
-        model = (_CENTROIDS_INT, _CENTROID_LANGS)
-        if train_key is None:
-            train_key = _train_key()
     cent, model_langs = model
     langs, buckets, weights = [], [], []
     for li, lang in enumerate(model_langs):
@@ -344,58 +331,41 @@ def write_centroid_parquet(path: str, model=None, *, train_key: str | None = Non
         langs.extend([lang] * len(nz))
         buckets.extend(int(b) for b in nz)
         weights.extend(int(w) for w in cent[li, nz])
-    t = pa.table(
+    return pa.table(
         {
             "lang": pa.array(langs, pa.string()),
             "bucket": pa.array(buckets, pa.int64()),
             "weight": pa.array(weights, pa.int64()),
         }
     )
-    meta: dict[bytes, bytes] = dict(extra_meta or {})
-    if train_key is not None:
-        meta[b"train_key"] = train_key.encode()
-    if meta:
-        t = t.replace_schema_metadata(meta)
-    pq.write_table(t, path)
+
+
+def write_centroid_parquet(path: str, model=None, *, train_key: str | None = None,
+                           extra_meta: "dict[bytes, bytes] | None" = None) -> str:
+    """Persist the quantized model as (lang, bucket, weight≠0) rows — the
+    "model table" a production pipeline would keep next to the corpus (and
+    the swap point for a real fastText export). ``model`` defaults to the
+    embedded model; ``train_key`` and ``extra_meta`` ride the schema
+    metadata."""
+    t = _centroid_table((_CENTROIDS_INT, _CENTROID_LANGS) if model is None else model)
+    write_tables([t.replace_schema_metadata(extra_meta)], [path], train_key)
     return path
 
 
-# --- import-time model bootstrap: LOAD the persisted sparse table, train
-# only when absent/stale (VERDICT r3 #3 — executors must not re-derive the
-# model on every worker import; at 1000 executors that is pure cluster-
-# startup waste). The parquet is ~42 KB and loads in milliseconds; the
-# train_key (hash of the training-data module source + every training
-# constant) makes a stale table impossible to load silently. -----------------
-
-
-def _train_key() -> str:
-    """Content key of everything the embedded training depends on: the
-    training-data module source, every training constant, AND the source of
-    the training/featurization functions themselves — editing
-    train_nb_weights or the trigram hash must invalidate the cached table,
-    not silently load it."""
-    import hashlib
-    import inspect
-
-    from . import langid_data
-
-    h = hashlib.md5(inspect.getsource(langid_data).encode())
-    for fn in (train_nb_weights, _trigram_indices, _default_training_corpus):
-        h.update(inspect.getsource(fn).encode())
-    h.update(f"|nb|{_NB_SCALE}|{_DIM}|{_QUANT}|n=60|seed=7".encode())
-    return h.hexdigest()
-
-
-_MODEL_FILE = "langid_centroids.parquet"
-
-
-_t = read_model_table(_MODEL_FILE, _train_key())
-if _t is not None:
-    _CENTROIDS_INT, _CENTROID_LANGS = _model_from_table(_t)
-else:
-    _CENTROIDS_INT, _CENTROID_LANGS = train_nb_weights(_default_training_corpus())
-    persist_model_files([_MODEL_FILE], lambda p: write_centroid_parquet(p))
-del _t
+# The embedded model LOADS from its persisted table and trains only when
+# the table is absent or stale (functions/model_store.py): executors must
+# not re-derive the model on every worker import. The key covers the
+# training data, the training/featurization functions and every constant,
+# so editing train_nb_weights or the trigram hash invalidates the table.
+SPEC = ModelSpec(
+    files=("langid_centroids.parquet",),
+    key_sources=(train_nb_weights, _trigram_indices, _default_training_corpus),
+    key_extra=f"|nb|{_NB_SCALE}|{_DIM}|{_QUANT}|n=60|seed=7".encode(),
+    train=lambda: train_nb_weights(_default_training_corpus()),
+    encode=lambda model: [_centroid_table(model)],
+    decode=lambda tables: _model_from_table(*tables),
+)
+_CENTROIDS_INT, _CENTROID_LANGS = load_or_train(SPEC)
 
 
 def _scoring_ctes(centroid_path: str, table: str) -> str:

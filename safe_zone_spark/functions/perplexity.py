@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from .model_store import ModelSpec, load_or_train, write_tables
+
 
 class TrigramLM(NamedTuple):
     """Backoff LM: the sparse packed keys + log-probs, and the dense lookup
@@ -79,8 +81,8 @@ def train_trigram_lm(texts) -> TrigramLM:
 
 
 def _build_lm(tri_keys, tri_logp, ctx_keys, ctx_logp) -> TrigramLM:
-    """The one constructor of every ``TrigramLM`` (training, parquet load,
-    embedded load): checks the keys, then builds the lookup table.
+    """The one constructor of every ``TrigramLM`` (training and every
+    table load): checks the keys, then builds the lookup table.
 
     Raises ``ValueError`` for a trigram key outside [0, 2^24), a context
     key outside [0, 2^16) or a duplicated key in either table — a loaded
@@ -210,96 +212,56 @@ def perplexity_udf(lm: TrigramLM | None = None):
 # --- DuckDB twin: model-as-data + relational scoring -------------------------
 
 
+def _lm_tables(lm: TrigramLM) -> list:
+    """The LM as two sparse (key, logp) tables: trigrams, then contexts."""
+    import pyarrow as pa
+
+    return [pa.table({"key": pa.array(keys, pa.int64()),
+                      "logp": pa.array(logp, pa.float64())})
+            for keys, logp in ((lm.tri_keys, lm.tri_logp), (lm.ctx_keys, lm.ctx_logp))]
+
+
+def _lm_from_tables(tables) -> TrigramLM:
+    """Inverse of ``_lm_tables``; raises ``ValueError`` for out-of-range or
+    duplicated keys (``_build_lm``). The lookup table does not need the
+    keys sorted."""
+    tri, ctx = ((np.asarray(t.column("key").to_numpy(), dtype=np.int64),
+                 np.asarray(t.column("logp").to_numpy(), dtype=np.float64))
+                for t in tables)
+    return _build_lm(*tri, *ctx)
+
+
 def write_trigram_parquet(tri_path: str, ctx_path: str,
                           lm: TrigramLM | None = None, *,
                           train_key: str | None = None) -> tuple[str, str]:
     """Persist the LM as two sparse (key, logp) tables — the model tables a
     production pipeline keeps next to the corpus (swap point for a real
-    KenLM export). ``lm`` defaults to the embedded seed model.
-    ``train_key`` (schema metadata on BOTH files) lets the import-time
-    loader reject stale tables; defaults to the embedded model's key when
-    writing it."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if lm is None:
-        lm = _LM
-        if train_key is None:
-            train_key = _train_key()
-    meta = {b"train_key": train_key.encode()} if train_key is not None else None
-    tri = pa.table({"key": pa.array(lm.tri_keys, pa.int64()),
-                    "logp": pa.array(lm.tri_logp, pa.float64())})
-    ctx = pa.table({"key": pa.array(lm.ctx_keys, pa.int64()),
-                    "logp": pa.array(lm.ctx_logp, pa.float64())})
-    if meta:
-        tri = tri.replace_schema_metadata(meta)
-        ctx = ctx.replace_schema_metadata(meta)
-    pq.write_table(tri, tri_path)
-    pq.write_table(ctx, ctx_path)
+    KenLM export). ``lm`` defaults to the embedded seed model;
+    ``train_key`` rides both files' schema metadata."""
+    write_tables(_lm_tables(_LM if lm is None else lm), [tri_path, ctx_path], train_key)
     return tri_path, ctx_path
-
-
-def _kv(t) -> tuple[np.ndarray, np.ndarray]:
-    """(key, logp) arrow table → aligned arrays in the table's row order
-    (the lookup table does not need sorted keys)."""
-    return (np.asarray(t.column("key").to_numpy(), dtype=np.int64),
-            np.asarray(t.column("logp").to_numpy(), dtype=np.float64))
 
 
 def load_trigram_parquet(tri_path: str, ctx_path: str) -> TrigramLM:
     """Inverse of ``write_trigram_parquet`` — load (trained here or adapted
-    from a real KenLM export) for engine-side scoring. Raises
-    ``ValueError`` for out-of-range or duplicated keys (``_build_lm``)."""
+    from a real KenLM export) for engine-side scoring."""
     import pyarrow.parquet as pq
 
-    return _build_lm(*_kv(pq.read_table(tri_path)), *_kv(pq.read_table(ctx_path)))
+    return _lm_from_tables([pq.read_table(tri_path), pq.read_table(ctx_path)])
 
 
-# --- import-time model bootstrap: load the persisted sparse tables, train
-# only when absent/stale — same contract as functions/langid.py (VERDICT r3
-# #3). train_key covers the training-data module source + every constant. --
-
-
-def _train_key() -> str:
-    """Covers the training data module, the training/seed-corpus function
-    sources, and every constant — editing the smoothing or the corpus
-    recipe must invalidate the cached tables (see langid._train_key)."""
-    import hashlib
-    import inspect
-
-    from . import langid_data
-
-    h = hashlib.md5(inspect.getsource(langid_data).encode())
-    for fn in (train_trigram_lm, _seed_corpus):
-        h.update(inspect.getsource(fn).encode())
-    h.update(b"|lm|trigram-addone-backoff|n=400|seed=31|mw=8|xw=28")
-    return h.hexdigest()
-
-
-_TRI_FILE = "trigram_logp.parquet"
-_CTX_FILE = "trigram_ctx_logp.parquet"
-
-
-def _load_embedded_lm() -> TrigramLM | None:
-    from .model_store import read_model_table
-
-    key = _train_key()
-    tabs = [read_model_table(f, key) for f in (_TRI_FILE, _CTX_FILE)]
-    if any(t is None for t in tabs):
-        return None
-    try:
-        return _build_lm(*_kv(tabs[0]), *_kv(tabs[1]))
-    except Exception:
-        return None
-
-
-_LM = _load_embedded_lm()
-if _LM is None:
-    _LM = train_trigram_lm(_seed_corpus())
-    from .model_store import persist_model_files
-
-    persist_model_files([_TRI_FILE, _CTX_FILE],
-                        lambda t1, t2: write_trigram_parquet(t1, t2))
+# The embedded LM loads from its persisted tables and trains only when they
+# are absent or stale (functions/model_store.py). Editing the smoothing or
+# the corpus recipe changes the key and so invalidates the tables.
+SPEC = ModelSpec(
+    files=("trigram_logp.parquet", "trigram_ctx_logp.parquet"),
+    key_sources=(train_trigram_lm, _seed_corpus),
+    key_extra=b"|lm|trigram-addone-backoff|n=400|seed=31|mw=8|xw=28",
+    train=lambda: train_trigram_lm(_seed_corpus()),
+    encode=_lm_tables,
+    decode=_lm_from_tables,
+)
+_LM = load_or_train(SPEC)
 
 
 def perplexity_oracle_sql(tri_path: str, ctx_path: str, *,

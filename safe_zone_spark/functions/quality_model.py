@@ -12,9 +12,9 @@ both engines agree exactly — as a two-class discriminator:
          the Gopher/C4 heuristics target, here learned instead)
 
 Scoring emits INTEGER class scores and their difference (the quality
-logit); `quality_pred` = logit >= GATE_THRESHOLD, a constant calibrated
-at import as the midpoint of the training corpus's separation gap
-(max negative-class logit, min positive-class logit). The raw argmax
+logit); `quality_pred` = logit >= GATE_THRESHOLD, the error-minimizing
+split of the training corpus's logits, calibrated when the model trains
+and persisted with it (`_calibrate_gate`). The raw argmax
 (threshold 0) mis-gates multilingual models: growing the 'hi' class from
 12 to 16 languages diluted per-trigram mass enough that 12% of genuine
 sf0.01 English docs scored slightly negative while junk stayed below
@@ -39,12 +39,19 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from .langid import (
+    _DIM,
+    _NB_SCALE,
+    _QUANT,
     _batch_trigram_scores,
+    _centroid_table,
+    _default_training_corpus,
+    _model_from_table,
     _scoring_ctes,
     _trigram_indices,
     train_nb_weights,
     write_centroid_parquet,
 )
+from .model_store import ModelSpec, load_or_train
 
 HI, LO = "hi", "lo"
 
@@ -101,55 +108,6 @@ def train_quality_model(labeled=None):
     return train_nb_weights(labeled)
 
 
-# --- load-don't-train bootstrap (langid.py pattern) ---------------------------
-
-
-def _train_key() -> str:
-    import hashlib
-    import inspect
-
-    from . import langid as _lid
-    from . import langid_data
-
-    h = hashlib.md5(inspect.getsource(langid_data).encode())
-    # _calibrate_gate is keyed too: the persisted gate_threshold rides the
-    # same metadata, so a calibration-algorithm change must invalidate the
-    # stored table or it would keep serving the stale gate
-    for fn in (train_quality_model, _positive_training_corpus,
-               _negative_training_corpus, train_nb_weights,
-               _trigram_indices, _lid._default_training_corpus,
-               _calibrate_gate):
-        h.update(inspect.getsource(fn).encode())
-    h.update("|".join(_NAV_WORDS + _LOREM + _MARKUP).encode())
-    h.update(f"|qnb|{_lid._NB_SCALE}|{_lid._DIM}|{_lid._QUANT}|n=40|seed=11".encode())
-    return h.hexdigest()
-
-
-_MODEL_FILE = "quality_nb.parquet"
-
-
-def _load_embedded_model():
-    """Returns (weights, classes, gate_or_None) from the persisted table,
-    or None when absent/stale. The calibrated gate rides the same schema
-    metadata as train_key, so loading the model never re-runs calibration
-    (the load-don't-train rationale applies to the constant too: it is
-    fully determined by the persisted weights)."""
-    from .langid import _model_from_table
-    from .model_store import read_model_table
-
-    t = read_model_table(_MODEL_FILE, _train_key())
-    if t is None:
-        return None
-    try:
-        meta = t.schema.metadata or {}
-        gate_raw = meta.get(b"gate_threshold")
-        gate = int(gate_raw.decode()) if gate_raw is not None else None
-        w, classes = _model_from_table(t)
-        return w, classes, gate
-    except Exception:
-        return None
-
-
 def _calibrate_gate(model=None) -> int:
     """The error-minimizing split of the training corpus's logits — the
     driverless analog of operators.model_eval.select_gate_threshold (ties
@@ -173,35 +131,10 @@ def _calibrate_gate(model=None) -> int:
     return int(cand[np.argmin(errors)])  # argmin takes the FIRST (lowest) t
 
 
-_loaded = _load_embedded_model()
-if _loaded is not None:
-    _WEIGHTS, _CLASSES, _LOADED_GATE = _loaded
-else:
-    _WEIGHTS, _CLASSES = train_quality_model()
-    _LOADED_GATE = None  # calibrated + persisted below, once
-    # quality_scores (needed for calibration) exists
-
-assert _CLASSES == (HI, LO), _CLASSES  # alphabetical: hi < lo
-
-
-def _persist_model(gate: int) -> None:
-    """Write weights + calibrated gate next to the package."""
-    from .model_store import persist_model_files
-
-    persist_model_files(
-        [_MODEL_FILE],
-        lambda p: write_centroid_parquet(
-            p, model=(_WEIGHTS, _CLASSES), train_key=_train_key(),
-            extra_meta={b"gate_threshold": str(gate).encode()},
-        ),
-    )
-
-
 def write_quality_parquet(path: str, model=None) -> str:
-    if model is None:
-        model = (_WEIGHTS, _CLASSES)
-        return write_centroid_parquet(path, model=model, train_key=_train_key())
-    return write_centroid_parquet(path, model=model)
+    """Persist a (weights, classes) model, by default the embedded one."""
+    return write_centroid_parquet(
+        path, model=(_WEIGHTS, _CLASSES) if model is None else model)
 
 
 # --- inference ----------------------------------------------------------------
@@ -231,18 +164,43 @@ def quality_scores(texts, model=None) -> "list[tuple[int, int]]":
     return out
 
 
-# −6,630,192 at the 16-language model (0 sf0.01 false-drops, 0 junk
-# passes) — loaded from the model parquet's metadata when present (the
-# constant is fully determined by the persisted weights, so re-running
-# the ~100 ms calibration per worker import would be exactly the
-# per-process waste the load-don't-train bootstrap removes), calibrated
-# + persisted alongside the weights otherwise (fresh train, or a
-# pre-gate-metadata table)
-if _LOADED_GATE is not None:
-    GATE_THRESHOLD: int = _LOADED_GATE
-else:
-    GATE_THRESHOLD = _calibrate_gate()
-    _persist_model(GATE_THRESHOLD)
+def _train():
+    model = train_quality_model()
+    return (*model, _calibrate_gate(model))
+
+
+def _quality_tables(model) -> list:
+    """(weights, classes, gate) → the centroid table, gate in its metadata."""
+    weights, classes, gate = model
+    t = _centroid_table((weights, classes))
+    return [t.replace_schema_metadata({b"gate_threshold": str(gate).encode()})]
+
+
+def _quality_from_tables(tables):
+    (t,) = tables
+    weights, classes = _model_from_table(t)
+    if classes != (HI, LO):  # alphabetical: hi < lo
+        raise ValueError(f"quality classes {classes}, expected {(HI, LO)}")
+    return weights, classes, int(t.schema.metadata[b"gate_threshold"])
+
+
+# The model loads with its calibrated gate (−6,630,192 at the 16-language
+# model: 0 sf0.01 false-drops, 0 junk passes) from the persisted table and
+# trains + calibrates only when the table is absent or stale
+# (functions/model_store.py). _calibrate_gate is keyed too: a calibration
+# change must invalidate the stored gate.
+SPEC = ModelSpec(
+    files=("quality_nb.parquet",),
+    key_sources=(train_quality_model, _positive_training_corpus,
+                 _negative_training_corpus, train_nb_weights, _trigram_indices,
+                 _default_training_corpus, _calibrate_gate),
+    key_extra="|".join(_NAV_WORDS + _LOREM + _MARKUP).encode()
+    + f"|qnb|{_NB_SCALE}|{_DIM}|{_QUANT}|n=40|seed=11".encode(),
+    train=_train,
+    encode=_quality_tables,
+    decode=_quality_from_tables,
+)
+_WEIGHTS, _CLASSES, GATE_THRESHOLD = load_or_train(SPEC)
 
 
 def quality_logit_series(texts: pd.Series) -> "list[int]":

@@ -98,11 +98,13 @@ def wrap_html(text: str, variant: int) -> bytes:
 def extract_text_from_html(html: bytes) -> str:
     """Deterministic extractor: recover the payload between the single
     ``<p>...</p>`` pair. Byte-identical inverse of :func:`wrap_html` —
-    the BASELINE per-row invariant. Returns "" for non-conforming HTML."""
+    the BASELINE per-row invariant. Returns "" for non-conforming HTML.
+    Invalid UTF-8 decodes to U+FFFD: the text must re-encode strictly for
+    the scan and cross into Arrow, or one bad page fails its whole batch."""
     if html is None:
         return ""
     m = _EXTRACT_RE.search(html)
-    return m.group(1).decode("utf-8", "surrogateescape") if m else ""
+    return m.group(1).decode("utf-8", "replace") if m else ""
 
 
 def _sentence(rng: random.Random, lang: str, n_words: int) -> str:

@@ -79,6 +79,70 @@ def append_batch_manifest(batch_df: DataFrame, manifest_path: str, run_id: str,
     )
 
 
+def write_batch_sinks(batch_df: DataFrame, out_dir: str, run_id: str, batch_id: int,
+                      *, kept_table: str | None = None) -> None:
+    """Write a micro-batch's kept documents and security events, each
+    partitioned by ``(run_id, batch_id)`` with dynamic partition overwrite
+    (kept docs also by ``warc_date``), so a replay clobbers only its own
+    partitions. ``batch_id`` is data from :func:`commit_stamp`, as in the
+    manifest append: a literal would make every micro-batch compile new
+    classes. ``kept_table`` names an Iceberg table that takes the kept
+    documents instead of ``out_dir/kept_docs``."""
+    stamp = commit_stamp(batch_df.sparkSession, batch_id=batch_id)
+    # run_id is part of the idempotence key: partitioning (and the
+    # Iceberg delete) scoped by batch_id ALONE would let a later run
+    # with a different run_id clobber this run's sink partitions while
+    # the manifest still claimed them committed
+    kept_df = (
+        batch_df.filter(F.col("final_keep"))
+        .crossJoin(stamp)
+        .select("url", "warc_ts", "warc_date", "scrubbed_text", "overall_confidence",
+                F.lit(run_id).alias("run_id"), "batch_id")
+    )
+    if kept_table is not None:
+        from ..sinks.iceberg import append_or_create, delete_batch_rows
+
+        # replay idempotence, row-level form: drop this (run, batch)'s
+        # rows before re-appending (plain append would duplicate them
+        # on a crash-between-sinks replay)
+        delete_batch_rows(batch_df.sparkSession, kept_table, run_id, batch_id)
+        append_or_create(kept_df, kept_table)
+    else:
+        import os
+
+        kept_path = f"{out_dir}/kept_docs"
+        if os.path.isdir(kept_path) and any(
+            e.startswith("batch_id=") for e in os.listdir(kept_path)
+        ):
+            raise RuntimeError(
+                f"{kept_path} holds the pre-run_id partition layout "
+                "(top-level batch_id=); mixing layouts corrupts partition "
+                "discovery — drain into a fresh out_dir or migrate the old one"
+            )
+        (
+            kept_df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("run_id", "batch_id", "warc_date")
+            .parquet(kept_path)
+        )
+    (
+        batch_df.select("url", F.explode("detections").alias("d"))
+        .crossJoin(stamp)
+        .select(
+            F.lit(run_id).alias("run_id"),
+            "batch_id",
+            "url",
+            F.col("d.type").alias("type"),
+            F.col("d.action").alias("action"),
+            F.col("d.confidence").alias("confidence"),
+        )
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("run_id", "batch_id")
+        .parquet(f"{out_dir}/security_events")
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     source_dir: str,
@@ -104,8 +168,6 @@ def run_pipeline(
     )
     result = transform(stream, rules)
 
-    kept_path = f"{out_dir}/kept_docs"
-    events_path = f"{out_dir}/security_events"
     manifest_path = f"{out_dir}/manifests"
 
     def committed(batch_id: int) -> bool:
@@ -117,68 +179,17 @@ def run_pipeline(
             ).head(1)
         )
 
-    from ..sinks.iceberg import append_or_create, delete_batch_rows, iceberg_available
+    from ..sinks.iceberg import iceberg_available
 
     use_iceberg = kept_table is not None and iceberg_available(spark)
-
-    def write_kept(kept_df: DataFrame, batch_id: int) -> None:
-        # run_id is part of the idempotence key: partitioning (and the
-        # Iceberg delete) scoped by batch_id ALONE would let a later run
-        # with a different run_id clobber this run's sink partitions while
-        # the manifest still claimed them committed
-        kept_df = kept_df.withColumn("run_id", F.lit(run_id)).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        if use_iceberg:
-            # replay idempotence, row-level form: drop this (run, batch)'s
-            # rows before re-appending (plain append would duplicate them
-            # on a crash-between-sinks replay)
-            delete_batch_rows(spark, kept_table, run_id, batch_id)
-            append_or_create(kept_df, kept_table)
-            return
-        import os
-
-        if os.path.isdir(kept_path) and any(
-            e.startswith("batch_id=") for e in os.listdir(kept_path)
-        ):
-            raise RuntimeError(
-                f"{kept_path} holds the pre-run_id partition layout "
-                "(top-level batch_id=); mixing layouts corrupts partition "
-                "discovery — drain into a fresh out_dir or migrate the old one"
-            )
-        (
-            kept_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "batch_id", "warc_date")
-            .parquet(kept_path)
-        )
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if committed(batch_id):
             return  # replayed, fully committed batch — exactly-once skip
         batch_df = batch_df.persist()
         try:
-            write_kept(
-                batch_df.filter(F.col("final_keep"))
-                .select("url", "warc_ts", "warc_date", "scrubbed_text",
-                        "overall_confidence"),
-                batch_id,
-            )
-            (
-                batch_df.select("url", F.explode("detections").alias("d"))
-                .select(
-                    F.lit(run_id).alias("run_id"),
-                    F.lit(batch_id).alias("batch_id"),
-                    "url",
-                    F.col("d.type").alias("type"),
-                    F.col("d.action").alias("action"),
-                    F.col("d.confidence").alias("confidence"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run_id", "batch_id")
-                .parquet(events_path)
-            )
+            write_batch_sinks(batch_df, out_dir, run_id, batch_id,
+                              kept_table=kept_table if use_iceberg else None)
             append_batch_manifest(batch_df, manifest_path, run_id, batch_id)
         finally:
             batch_df.unpersist()

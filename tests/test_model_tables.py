@@ -3,6 +3,8 @@ swap path into the same scoring machinery (no Spark needed)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 
 from safe_zone_spark.functions.langid import (
@@ -380,12 +382,14 @@ def test_oracle_sql_reads_the_persisted_model_tables():
 def test_model_table_path_rejects_missing_and_stale_tables(tmp_path, monkeypatch):
     import pytest
 
-    from safe_zone_spark.functions import model_store
+    from safe_zone_spark.functions import langid, model_store
 
-    monkeypatch.setattr(model_store, "_MODELS_DIR", str(tmp_path))
+    monkeypatch.setattr(model_store, "_MODELS_DIR", tmp_path)
+    (name,) = langid.SPEC.files
     with pytest.raises(FileNotFoundError):
-        model_store.model_table_path("c.parquet", "k1")
-    write_centroid_parquet(str(tmp_path / "c.parquet"), train_key="k1")
-    assert model_store.model_table_path("c.parquet", "k1") == str(tmp_path / "c.parquet")
+        model_store.model_table_path(langid.SPEC)
+    write_centroid_parquet(str(tmp_path / name), train_key=langid.SPEC.train_key)
+    assert model_store.model_table_path(langid.SPEC) == (os.path.realpath(tmp_path / name),)
+    write_centroid_parquet(str(tmp_path / name), train_key="k2")
     with pytest.raises(ValueError, match="train_key"):
-        model_store.model_table_path("c.parquet", "k2")
+        model_store.model_table_path(langid.SPEC)

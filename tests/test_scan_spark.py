@@ -128,6 +128,31 @@ def test_extract_and_scan_fused_matches_two_stage(spark, corpus_pdf):
         assert f[url]["breakdown"] == t[url]["breakdown"]
 
 
+def test_invalid_utf8_page_fails_only_itself(spark, corpus_pdf):
+    """A page that is not valid UTF-8 extracts with U+FFFD in place of the
+    bad bytes and scans like any page; its batch's other rows come out as
+    they would without it."""
+    from safe_zone_spark.operators.scan import extract_and_scan
+    from safe_zone_spark.sources.extract import extract_text
+
+    bad = b"<html><body><p>caf\xe9 mail a@b.com</p></body></html>"
+    assert extract_text_from_html(bad) == "caf� mail a@b.com"
+    pdf = corpus_pdf[["url", "html"]].head(50)
+    sdf = spark.createDataFrame(
+        pd.concat([pdf, pd.DataFrame({"url": ["bad"], "html": [bad]})]),
+        schema="url string, html binary",
+    ).coalesce(1)  # one Arrow batch holds every row
+    out = {r["url"]: r for r in extract_and_scan(sdf, RULES, keep_cols=("url",)).collect()}
+    assert out["bad"]["text"] == "caf� mail a@b.com"
+    assert out["bad"]["scrubbed_text"] == detect("caf� mail a@b.com", RULES).redacted_text
+    assert [d["type"] for d in out["bad"]["detections"]] == ["EMAIL"]
+    assert extract_text(sdf).filter("url = 'bad'").first()["text"] == "caf� mail a@b.com"
+    clean = {r["url"]: r for r in extract_and_scan(
+        spark.createDataFrame(pdf, schema="url string, html binary").coalesce(1),
+        RULES, keep_cols=("url",)).collect()}
+    assert {u: r for u, r in out.items() if u != "bad"} == clean
+
+
 def test_extract_and_scan_fused_extra_scorers_match_udfs(spark, corpus_pdf):
     """Fused langid/ppl extra_scorers (one Arrow crossing) must equal the
     standalone pandas-UDF composition bit-for-bit."""

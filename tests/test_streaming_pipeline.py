@@ -13,6 +13,7 @@ from safe_zone_spark.streaming.pipeline import (
     append_batch_manifest,
     run_pipeline,
     transform,
+    write_batch_sinks,
 )
 
 RULES = default_rules(blocklist=frozenset({"PROJECT-X"}))
@@ -128,6 +129,27 @@ def test_warm_batch_manifest_appends_compile_no_classes(spark, tmp_path):
     assert sorted(r["batch_id"] for r in rows) == [0, 1, 2]
     assert {(r["n_docs"], r["n_kept"], r["run_id"]) for r in rows} == {(50, 25, "r1")}
     assert len({r["committed_at"] for r in rows}) == 3
+
+
+def test_warm_batch_sink_writes_compile_no_classes(spark, tmp_path):
+    """Micro-batches after the first write their kept documents and
+    security events with the code the first one generated: ``batch_id`` is
+    data from ``commit_stamp``, not a literal in the code."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    batch = transform(generate_corpus(spark, 60, seed=3), RULES).persist()
+    batch.count()
+    out = str(tmp_path / "out")
+    write_batch_sinks(batch, out, "r1", 0)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    write_batch_sinks(batch, out, "r1", 1)
+    write_batch_sinks(batch, out, "r1", 2)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
+    n_kept = batch.filter("final_keep").count()
+    n_events = batch.select(F.sum(F.size("detections"))).first()[0]
+    batch.unpersist()
+    for sink, n in (("kept_docs", n_kept), ("security_events", n_events)):
+        rows = spark.read.parquet(f"{out}/{sink}").groupBy("run_id", "batch_id").count()
+        assert sorted(map(tuple, rows.collect())) == [("r1", b, n) for b in (0, 1, 2)], sink
 
 
 def test_output_partitioned_by_warc_date(spark, staged, tmp_path):
