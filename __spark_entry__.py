@@ -471,9 +471,10 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 def q_dedup_fuzzy_docs(spark, sf_dir):
     """Fuzzy-dedup cluster resolution: MinHash+LSH pairs (est_jaccard >=
-    0.5) → connected components (min-label propagation to fixpoint) → one
-    keeper per cluster. The actionable keep/drop surface the pair queries
-    feed; transitivity (A~B, B~C ⇒ one keeper for {A,B,C}) is pinned in
+    0.5) → connected components (the path ``connected_components`` picks
+    from the pair graph: driver union-find, min-label, or min-label→star)
+    → one keeper per cluster. The actionable keep/drop surface the pair
+    queries feed; transitivity (A~B, B~C ⇒ one keeper for {A,B,C}) is pinned in
     tests/test_dedup_clusters.py."""
     return fuzzy_dedup_docs(_docs(spark, sf_dir), threshold=0.5)
 

@@ -340,15 +340,13 @@ def _centroid_table(model):
     )
 
 
-def write_centroid_parquet(path: str, model=None, *, train_key: str | None = None,
-                           extra_meta: "dict[bytes, bytes] | None" = None) -> str:
+def write_centroid_parquet(path: str, model=None, *, train_key: str | None = None) -> str:
     """Persist the quantized model as (lang, bucket, weight≠0) rows — the
     "model table" a production pipeline would keep next to the corpus (and
     the swap point for a real fastText export). ``model`` defaults to the
-    embedded model; ``train_key`` and ``extra_meta`` ride the schema
-    metadata."""
+    embedded model; ``train_key`` rides the schema metadata."""
     t = _centroid_table((_CENTROIDS_INT, _CENTROID_LANGS) if model is None else model)
-    write_tables([t.replace_schema_metadata(extra_meta)], [path], train_key)
+    write_tables([t], [path], train_key)
     return path
 
 

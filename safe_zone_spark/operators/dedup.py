@@ -29,6 +29,7 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
@@ -88,6 +89,13 @@ def py_words(text: str) -> list[str]:
     return [w for w in _WS_RE.split((text or "").lower()) if w]
 
 
+def py_shingles(text: str, n: int) -> list[str]:
+    """Python twin of :func:`shingles_expr`: the distinct word n-grams of
+    ``text`` in first-occurrence order (array_distinct's order)."""
+    ws = py_words(text)
+    return list(dict.fromkeys(" ".join(ws[k:k + n]) for k in range(len(ws) - n + 1)))
+
+
 def shingle_explode_py(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     shingle_n: int = 3, with_size: bool = False,
@@ -99,21 +107,15 @@ def shingle_explode_py(
     the Catalyst form runs ConcatWs/StringSplit per gram in interpreted
     mode and needs minutes of C2 warm-up at 10^6-doc scale before its
     steady state, which a single-shot bench rep never reaches."""
-    import pandas as pd
-
     id_type = df.schema[id_col].dataType.simpleString()
 
     def run(batches):
         for pdf in batches:
             ids_out, ns_out, sh_out = [], [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                ws = py_words(t)
-                if len(ws) < shingle_n:
+                seen = py_shingles(t, shingle_n)
+                if not seen:
                     continue
-                seen = dict.fromkeys(
-                    " ".join(ws[k:k + shingle_n])
-                    for k in range(len(ws) - shingle_n + 1)
-                )
                 ids_out.extend([i] * len(seen))
                 if with_size:
                     ns_out.extend([len(seen)] * len(seen))
@@ -199,25 +201,19 @@ def minhash_signatures(
     # expression is pinned by tests/test_shingle_parity.py.
     import hashlib
 
-    import pandas as pd
-
     ab = np.array([_uh_params(k) for k in range(num_hashes)], dtype=np.int64)
     A = ab[:, 0][:, None]
     B = ab[:, 1][:, None]
     id_type = df.schema[id_col].dataType.simpleString()
-    n = shingle_n
 
     def run(batches):
         md5 = hashlib.md5
         for pdf in batches:
             ids_out, sigs_out = [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                ws = py_words(t)
-                if len(ws) < n:
+                grams = py_shingles(t, shingle_n)
+                if not grams:
                     continue  # no shingles → no signature row
-                grams = dict.fromkeys(
-                    " ".join(ws[k:k + n]) for k in range(len(ws) - n + 1)
-                )
                 h = np.fromiter(
                     (int(md5(g.encode()).hexdigest()[:8], 16) % _MINHASH_P
                      for g in grams),
@@ -331,11 +327,12 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_pairs_sql(
-    *, table: str = "documents", id_col: str = "doc_id",
-    num_hashes: int = 16, bands: int = 4, shingle_n: int = 3,
-) -> str:
-    """DuckDB twin of :func:`minhash_lsh_pairs`."""
+def _minhash_banded_sql(
+    *, table: str, id_col: str, num_hashes: int, bands: int, shingle_n: int,
+) -> tuple[str, str]:
+    """DuckDB twin of :func:`minhash_signatures` → :func:`banded_signatures`
+    as CTEs ending in ``banded`` (id, sigs, band, bhash), and the estimated
+    Jaccard of a pair's ``sa``/``sb`` signatures (:func:`_est_jaccard`)."""
     rows_per_band = num_hashes // bands
     sh_expr, w_expr = shingles_sql(shingle_n)
     sig_list = ", ".join(
@@ -350,8 +347,7 @@ def minhash_lsh_pairs_sql(
         "FROM sig"
         for b in range(bands)
     )
-    return f"""
-WITH base AS (SELECT {id_col}, {w_expr} AS w FROM {table}),
+    ctes = f"""base AS (SELECT {id_col}, {w_expr} AS w FROM {table}),
 shing AS (SELECT {id_col}, {sh_expr} AS sh FROM base),
 hashed AS (
   SELECT {id_col},
@@ -360,15 +356,28 @@ hashed AS (
 ),
 sigraw AS (SELECT {id_col}, {sig_list} FROM hashed),
 sig AS (SELECT {id_col}, [{", ".join(f"s{k}" for k in range(num_hashes))}] AS sigs FROM sigraw),
-banded AS ({band_rows}),
+banded AS ({band_rows})"""
+    est = f"len(list_filter(range(1, {num_hashes + 1}), i -> sa[i] = sb[i])) / {num_hashes}.0"
+    return ctes, est
+
+
+def minhash_lsh_pairs_sql(
+    *, table: str = "documents", id_col: str = "doc_id",
+    num_hashes: int = 16, bands: int = 4, shingle_n: int = 3,
+) -> str:
+    """DuckDB twin of :func:`minhash_lsh_pairs`."""
+    ctes, est = _minhash_banded_sql(
+        table=table, id_col=id_col, num_hashes=num_hashes, bands=bands,
+        shingle_n=shingle_n,
+    )
+    return f"""
+WITH {ctes},
 pairs AS (
   SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b, a.sigs AS sa, b.sigs AS sb
   FROM banded a JOIN banded b
     ON a.band = b.band AND a.bhash = b.bhash AND a.{id_col} < b.{id_col}
 )
-SELECT id_a, id_b,
-  round(len(list_filter(range(1, {num_hashes + 1}), i -> sa[i] = sb[i])) / {num_hashes}.0, 4)
-    AS est_jaccard
+SELECT id_a, id_b, round({est}, 4) AS est_jaccard
 FROM pairs
 """
 
@@ -437,47 +446,20 @@ def incremental_minhash_sql(
     """DuckDB twin of :func:`incremental_minhash_dedup` with prior/new
     crawls simulated as a predicate split of one table (prior =
     ``prior_pred``, new = its complement)."""
-    rows_per_band = num_hashes // bands
-    sh_expr, w_expr = shingles_sql(shingle_n)
-    sig_list = ", ".join(
-        "list_min(list_transform(hs, h -> "
-        f"(({_uh_params(k)[0]} * h) % {_MINHASH_P} + {_uh_params(k)[1]}) % {_MINHASH_P}"
-        f")) AS s{k}"
-        for k in range(num_hashes)
+    ctes, est = _minhash_banded_sql(
+        table=table, id_col=id_col, num_hashes=num_hashes, bands=bands,
+        shingle_n=shingle_n,
     )
-
-    def band_rows(src: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT {id_col}, sigs, {b} AS band, "
-            f"md5(concat_ws('|', {', '.join(f'sigs[{b * rows_per_band + j + 1}]' for j in range(rows_per_band))})) AS bhash "
-            f"FROM {src}"
-            for b in range(bands)
-        )
-
     return f"""
-WITH base AS (SELECT {id_col}, {w_expr} AS w FROM {table}),
-shing AS (SELECT {id_col}, {sh_expr} AS sh FROM base),
-hashed AS (
-  SELECT {id_col},
-         list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) % 2147483647) AS hs
-  FROM shing WHERE len(sh) > 0
-),
-sigraw AS (SELECT {id_col}, {sig_list} FROM hashed),
-sig AS (SELECT {id_col}, [{", ".join(f"s{k}" for k in range(num_hashes))}] AS sigs FROM sigraw),
-prior_sig AS (SELECT * FROM sig WHERE {prior_pred}),
-new_sig AS (SELECT * FROM sig WHERE NOT ({prior_pred})),
-banded_p AS ({band_rows("prior_sig")}),
-banded_n AS ({band_rows("new_sig")}),
+WITH {ctes},
+banded_p AS (SELECT * FROM banded WHERE {prior_pred}),
+banded_n AS (SELECT * FROM banded WHERE NOT ({prior_pred})),
 cand AS (
   SELECT DISTINCT n.{id_col} AS {id_col}, p.{id_col} AS prior_id,
          n.sigs AS sa, p.sigs AS sb
   FROM banded_n n JOIN banded_p p ON n.band = p.band AND n.bhash = p.bhash
 ),
-dups AS (
-  SELECT DISTINCT {id_col} FROM cand
-  WHERE len(list_filter(range(1, {num_hashes + 1}), i -> sa[i] = sb[i])) / {num_hashes}.0
-        >= {threshold}
-)
+dups AS (SELECT DISTINCT {id_col} FROM cand WHERE {est} >= {threshold})
 SELECT {id_col}, TRUE AS is_new FROM {table}
 WHERE NOT ({prior_pred}) AND {id_col} NOT IN (SELECT {id_col} FROM dups)
 """
@@ -490,38 +472,56 @@ WHERE NOT ({prior_pred}) AND {id_col} NOT IN (SELECT {id_col} FROM dups)
 # ---------------------------------------------------------------------------
 
 
+# Symmetric edge counts at or below this resolve on the driver: the collect
+# is bounded (a few MB) and the distributed loop pays ~1 s of scheduling
+# per round — a 256-edge sf0.1 graph spent 4.5 s on microseconds of work.
+_DRIVER_EDGES = 200_000
+# Min-label rounds before a graph escalates to large-star/small-star. On
+# local[4] a min-label round costs ~0.42 s and star resolves paths of
+# diameter 7-63 in 4-7 alternations (5-8 s). In the chain-length sweep
+# (CHANGES.md) min-label still wins at diameter 11 (12 rounds) and star
+# from diameter 15, so the budget stops at 12: a deeper graph pays at most
+# about twice its faster loop.
+_MINLABEL_ROUNDS = 12
+# Star needs ~log2(deepest component) alternations; exhausting this raises.
+_STAR_ROUNDS = 50
+
+_log = logging.getLogger(__name__)
+
+
 def connected_components(
     edges: DataFrame, *, src: str = "id_a", dst: str = "id_b",
-    max_iter: int = 25, driver_threshold: int = 200_000,
     stats: dict | None = None,
 ) -> DataFrame:
     """Deterministic connected components over an undirected pair graph:
-    repeated min-label propagation to a fixpoint (each node's label
-    converges to the MINIMUM id in its component).
+    (u, label) for every node of ``edges``, label = the MINIMUM id in its
+    component. The path follows the graph, all paths label-identical
+    (tests/test_dedup_clusters.py):
 
-    Scale shape: every iteration is ONE shuffle keyed by node id (a
-    groupBy-min over the adjacency join) and runs on the PAIR GRAPH only —
-    a small fraction of the corpus (docs with no near-dup candidate never
-    enter). Rounds needed = component diameter; near-dup clusters are
-    shallow (a dup family pairs densely), so 2-4 rounds in practice.
+    * at most ``_DRIVER_EDGES`` (measured) symmetric edges: collect them
+      and resolve with a driver-side union-find;
+    * more: min-label propagation to a fixpoint, ONE shuffle per round
+      keyed by node id (a groupBy-min over the adjacency join), on the
+      PAIR GRAPH only — docs with no near-dup candidate never enter.
+      Rounds needed = component diameter + 1; near-dup families pair
+      densely, so 2-4 in practice;
+    * not converged within ``_MINLABEL_ROUNDS`` (a deep component, e.g. a
+      boilerplate chain): the same edges go to
+      :func:`connected_components_star`, O(log d) alternations, and one
+      warning names both round counts.
+
     Convergence detection is EXACT: each round carries a ``changed`` flag
     (neighbor min beat the current label) through the checkpoint and sums
     it in one action on the just-materialized partitions — zero changed
-    rows is the fixpoint. No extra join, no signature-collision surface.
-    ``localCheckpoint`` truncates the iterative lineage
-    (an unbounded plan tree is the classic iterative-Spark failure).
-    Giant components (boilerplate chains) make min(label) a hot key —
-    see SCALE.md for the large-star/small-star escalation.
+    rows is the fixpoint. ``localCheckpoint`` truncates the iterative
+    lineage (an unbounded plan tree is the classic iterative-Spark
+    failure).
 
-    Small-graph fast path: when the (measured) symmetric edge count is at
-    most ``driver_threshold``, the edges are collected and resolved with a
-    driver-side union-find — the iterative loop pays ~1 s of scheduling
-    per round, a 256-edge sf0.1 graph was spending 4.5 s on what is
-    microseconds of actual work. The collect is BOUNDED by the threshold
-    (≈ a few MB), the distributed loop stays the 100 TB path, and both
-    paths are label-identical (pinned in tests). ``driver_threshold=0``
-    forces the distributed loop.
+    ``stats`` (optional dict) receives the decision: ``path``
+    (``driver-union-find``, ``minlabel`` or ``minlabel→star``),
+    ``sym_edges``, ``minlabel_rounds`` and ``star_rounds``.
     """
+    stats = {} if stats is None else stats
     # ONE pass over the (possibly expensive) edge lineage: a two-branch
     # union would recompute the upstream minhash per direction (measured:
     # the whole LSH chain ran twice, doubling the query)
@@ -539,12 +539,10 @@ def connected_components(
         .localCheckpoint()
     )
     n_edges = adj.count()
-    if stats is not None:  # observability for benches/tests, not control flow
-        stats["sym_edges"] = n_edges
-    if n_edges <= driver_threshold:
-        if stats is not None:
-            stats["path"] = "driver-union-find"
-            stats["rounds"] = 0
+    stats.update(sym_edges=n_edges, path="minlabel", minlabel_rounds=0, star_rounds=0)
+    nodes = adj.select("u").distinct()
+    if n_edges <= _DRIVER_EDGES:
+        stats["path"] = "driver-union-find"
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -562,7 +560,6 @@ def connected_components(
                     ra, rb = rb, ra
                 parent[rb] = ra
         data = [(n, find(n)) for n in parent] or []
-        nodes = adj.select("u").distinct()
         if not data:
             return nodes.withColumn("label", F.col("u"))
         # schema derived from the edge column type — ids may be strings
@@ -580,11 +577,9 @@ def connected_components(
             nodes.join(lab, "u", "left")
             .select("u", F.coalesce("label", F.col("u")).alias("label"))
         )
-    labels = adj.select("u").distinct().withColumn("label", F.col("u"))
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    labels = nodes.withColumn("label", F.col("u"))
+    for _ in range(_MINLABEL_ROUNDS):
+        stats["minlabel_rounds"] += 1
         nbr = (
             adj.join(labels, "u")
             .groupBy(F.col("v").alias("u"))
@@ -603,34 +598,28 @@ def connected_components(
             .localCheckpoint()
         )
         labels = stepped.select("u", "label")
-        n_changed = stepped.agg(F.sum("changed")).collect()[0][0] or 0
-        if n_changed == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats["path"] = "minlabel"
-        stats["rounds"] = rounds
-    if not converged:
-        # Silent non-convergence would ship corrupt keep/drop decisions
-        # (split clusters, multiple keepers) AND diverge from the oracle's
-        # full recursive closure — fail loudly instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_star — via fuzzy_dedup_docs("
-            "algorithm='star') — for O(log d) rounds"
-        )
+        if not stepped.agg(F.sum("changed")).collect()[0][0]:
+            return labels
+    # partial labels would split clusters: resolve the same edges with star
+    star: dict = {}
+    labels = connected_components_star(adj, src="u", dst="v", stats=star)
+    stats.update(path="minlabel→star", star_rounds=star["star_rounds"])
+    _log.warning(
+        "connected_components: min-label did not converge in %d rounds; "
+        "large-star/small-star resolved the graph in %d alternations",
+        stats["minlabel_rounds"], stats["star_rounds"],
+    )
     return labels
 
 
 def connected_components_star(
     edges: DataFrame, *, src: str = "id_a", dst: str = "id_b",
-    max_iter: int = 50, stats: dict | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — the giant-
-    component escalation documented in SCALE.md, implemented and proven
-    equivalent to :func:`connected_components` (tests/test_dedup_clusters).
+    et al., "Connected Components in MapReduce and Beyond") — the deep-
+    component escalation of :func:`connected_components`, label-identical
+    to it (tests/test_dedup_clusters).
 
     Why it exists: min-label propagation needs O(diameter) rounds and
     funnels a giant component's whole frontier through its min label every
@@ -648,26 +637,21 @@ def connected_components_star(
     Both preserve connectivity and only ever link toward smaller ids, so
     the fixpoint is the star graph centered at each component's minimum.
     Convergence detection: the (count, xxhash64-sum) signature of the edge
-    set is stable exactly at the fixpoint.
+    set is stable exactly at the fixpoint. Not converging within
+    ``_STAR_ROUNDS`` alternations raises ``RuntimeError``.
 
     Returns (u, label) for every node that appears in ``edges`` — same
-    contract as :func:`connected_components`.
+    contract as :func:`connected_components`. ``stats`` (optional dict)
+    receives ``path`` (``star``), ``sym_edges`` and ``star_rounds``.
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
+    uv = (
+        edges.select(F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v"))
         .distinct()
         .localCheckpoint()
     )
-    nodes = (
-        e.select(F.col("u").alias("n"))
-        .union(e.select(F.col("v").alias("n")))
-        .distinct()
-        .localCheckpoint()
-    )
+    # self-loop-only nodes keep their row, as in connected_components
+    nodes = uv.select(F.explode(F.array("u", "v")).alias("n")).distinct()
+    e = uv.filter(F.col("u") != F.col("v"))
 
     def _sig(rel: DataFrame) -> tuple:
         # decimal(38,0) sum: xxhash64 spans the full int64 range and a
@@ -709,29 +693,22 @@ def connected_components_star(
             .distinct()
         )
 
+    stats = {} if stats is None else stats
     prev = _sig(e)
-    if stats is not None:
-        # 2x the deduped undirected count = the symmetric-row metric the
-        # min-label loop records, so the two algorithms are comparable
-        stats["sym_edges"] = 2 * prev[0]
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    # 2x the deduped undirected count = the symmetric-row metric the
+    # min-label loop records, so the two loops are comparable
+    stats.update(path="star", sym_edges=2 * prev[0], star_rounds=0)
+    for _ in range(_STAR_ROUNDS):
+        stats["star_rounds"] += 1
         e = _small_star(_large_star(e)).localCheckpoint()
         cur = _sig(e)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    if stats is not None:
-        stats["path"] = "star"
-        stats["rounds"] = rounds
-    if not converged:
+    else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "alternations — raise max_iter (rounds needed ~ log2 of the "
-            "deepest component)"
+            f"connected_components_star did not converge in {_STAR_ROUNDS} "
+            "alternations (rounds needed ~ log2 of the deepest component)"
         )
     # fixpoint edges are (center=u, member=v) stars with u = component min
     member_labels = e.select(F.col("v").alias("u"), F.col("u").alias("label"))
@@ -747,8 +724,7 @@ def connected_components_star(
 def fuzzy_dedup_docs(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     threshold: float = 0.5, num_hashes: int = 16, bands: int = 4,
-    shingle_n: int = 3, max_iter: int = 25, algorithm: str = "minlabel",
-    pre_contract_exact: bool = False, driver_threshold: int = 200_000,
+    shingle_n: int = 3, pre_contract_exact: bool = False,
     cc_stats: dict | None = None,
 ) -> DataFrame:
     """End-to-end fuzzy dedup decision: MinHash+LSH candidate pairs
@@ -758,12 +734,9 @@ def fuzzy_dedup_docs(
     Output: (id_col, cluster_id, cluster_size, is_keeper) for EVERY input
     doc; singletons are their own cluster of size 1. Transitivity holds by
     construction: A~B and B~C place all three in one cluster with a single
-    keeper even if A and C never paired directly.
-
-    ``algorithm``: 'minlabel' (default — O(diameter) rounds, right for the
-    shallow components near-dup corpora produce) or 'star' (large-star/
-    small-star, O(log d) rounds with bounded fan-in — the giant-component
-    escalation; identical labels, proven in tests).
+    keeper even if A and C never paired directly. :func:`connected_components`
+    picks its own path from the pair graph; ``cc_stats`` (optional dict)
+    receives its report (path, rounds of each loop, sym_edges).
 
     ``pre_contract_exact``: run exact dedup FIRST and let only one
     representative per identical text (its min id) enter the pair graph —
@@ -773,22 +746,8 @@ def fuzzy_dedup_docs(
     (identical texts pair at est_jaccard 1.0 anyway); texts too short to
     shingle additionally get clustered WITH their exact copies (a strict
     improvement — the uncontracted path can't pair what it can't sign).
+    Without it every doc is its own representative.
     """
-    # ``driver_threshold`` forwards to the min-label loop (0 forces the
-    # distributed path — used by the giant-component bench); ``cc_stats``
-    # (optional dict) receives {path, rounds, sym_edges} from whichever CC
-    # ran, so rounds-vs-diameter is measurable without extra plumbing.
-    if algorithm == "star":
-        def cc(pairs_df, *, max_iter):
-            return connected_components_star(
-                pairs_df, max_iter=max_iter, stats=cc_stats
-            )
-    else:
-        def cc(pairs_df, *, max_iter):
-            return connected_components(
-                pairs_df, max_iter=max_iter,
-                driver_threshold=driver_threshold, stats=cc_stats,
-            )
     if pre_contract_exact:
         # NULL text is NOT an exact-dup family: md5(NULL) is NULL and
         # groupBy groups NULL keys, which would silently discard unrelated
@@ -800,35 +759,21 @@ def fuzzy_dedup_docs(
         fam = df.select(F.col(id_col), key.alias("_k"))
         reps = fam.groupBy("_k").agg(F.min(id_col).alias("_rep"))
         doc_rep = fam.join(reps, "_k").select(id_col, "_rep")
-        rep_docs = df.join(
-            reps.select(F.col("_rep").alias(id_col)), id_col
-        )
-        pairs = minhash_lsh_pairs(
-            rep_docs, id_col=id_col, text_col=text_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        ).filter(F.col("est_jaccard") >= threshold)
-        comp = cc(pairs, max_iter=max_iter)
-        # rep's component min IS the global min doc id of the expanded
-        # cluster: every family member's id >= its rep (= family min)
-        labeled = (
-            doc_rep.join(comp, F.col("_rep") == F.col("u"), "left")
-            .select(
-                id_col, F.coalesce("label", F.col("_rep")).alias("cluster_id")
-            )
-        )
+        rep_docs = df.join(reps.select(F.col("_rep").alias(id_col)), id_col)
     else:
-        pairs = minhash_lsh_pairs(
-            df, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-            bands=bands, shingle_n=shingle_n,
-        ).filter(F.col("est_jaccard") >= threshold)
-        comp = cc(pairs, max_iter=max_iter)
-        labeled = (
-            df.select(id_col)
-            .join(comp, F.col(id_col) == F.col("u"), "left")
-            .select(
-                id_col, F.coalesce("label", F.col(id_col)).alias("cluster_id")
-            )
-        )
+        doc_rep = df.select(id_col, F.col(id_col).alias("_rep"))
+        rep_docs = df
+    pairs = minhash_lsh_pairs(
+        rep_docs, id_col=id_col, text_col=text_col,
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+    ).filter(F.col("est_jaccard") >= threshold)
+    comp = connected_components(pairs, stats=cc_stats)
+    # rep's component min IS the global min doc id of the expanded
+    # cluster: every family member's id >= its rep (= family min)
+    labeled = (
+        doc_rep.join(comp, F.col("_rep") == F.col("u"), "left")
+        .select(id_col, F.coalesce("label", F.col("_rep")).alias("cluster_id"))
+    )
     # window count, not groupBy+join-back: the join's two branches would
     # each recompute `labeled` (scan + join) — one shuffle on cluster_id
     # either way, half the upstream work
@@ -1169,20 +1114,18 @@ WHERE inter / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= {threshold}
 def _simhash64(texts) -> list[str]:
     """64-bit SimHash per text: word tokens, md5-derived 64-bit word hash
     (first 16 hex chars), ±1 per bit weighted by term frequency, sign →
-    fingerprint, rendered as 16 lowercase hex chars. Word bit-vectors are
-    cached across the batch (web text repeats words heavily)."""
+    fingerprint, rendered as 16 lowercase hex chars. Words are
+    :func:`py_words` tokens (ASCII whitespace, like Spark's and DuckDB's
+    split). Word bit-vectors are cached across the batch (web text repeats
+    words heavily)."""
     import hashlib
-    import re
     from collections import Counter
 
-    # ASCII whitespace only — matches Java regex \s (Spark split) and RE2 \s
-    # (DuckDB oracle); Python's default \s is Unicode-aware and would diverge.
-    ws = re.compile(r"[ \t\n\r\f\v]+")
     cache: dict[str, np.ndarray] = {}
     out = []
     shifts = np.arange(64, dtype=np.uint64)
     for t in texts:
-        words = [w for w in ws.split((t or "").lower()) if w]
+        words = py_words(t)
         if not words:
             out.append(format(0, "016x"))
             continue
@@ -1556,29 +1499,20 @@ def decontaminate(
     Arrow crossing — no shingle explode, no join, no shuffle at all (the
     old relational form ran the interpreted gram expression over the
     whole corpus and measured 7.7 s at sf1.0 vs ~1.5 s for this shape).
-    Both sides tokenize with py_words — parity with the JVM expression is
+    Both sides shingle with py_shingles — parity with the JVM expression is
     pinned by tests/test_shingle_parity.py.
     """
-    import pandas as pd
-
-    n = shingle_n
-    bench_texts = [r[0] for r in benchmark.select(text_col).collect()]
-    bench_set = set()
-    for t in bench_texts:
-        ws = py_words(t)
-        for k in range(len(ws) - n + 1):
-            bench_set.add(" ".join(ws[k:k + n]))
-    bset = df.sparkSession.sparkContext.broadcast(frozenset(bench_set))
+    bench_set = frozenset(
+        g for r in benchmark.select(text_col).collect()
+        for g in py_shingles(r[0], shingle_n)
+    )
+    bset = df.sparkSession.sparkContext.broadcast(bench_set)
     id_type = df.schema[id_col].dataType.simpleString()
 
     def run(batches):
         bs = bset.value
         for pdf in batches:
-            hits = []
-            for t in pdf[text_col]:
-                ws = py_words(t)
-                grams = {" ".join(ws[k:k + n]) for k in range(len(ws) - n + 1)}
-                hits.append(sum(1 for g in grams if g in bs))
+            hits = [sum(g in bs for g in py_shingles(t, shingle_n)) for t in pdf[text_col]]
             yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "contam_hits": hits})
 
     out = df.select(id_col, text_col).mapInPandas(

@@ -12,11 +12,16 @@ exactly this at crawl scale).
 Measured claims this script produces (→ BENCH/giant_component.json + a
 marker-spliced section in BENCH/BASELINE.md):
 
-1. min-label rounds grow LINEARLY with chain length (rounds ≈ diameter) —
-   run at small L only; the fit makes the large-L cost obvious.
-2. star rounds grow ~LOGARITHMICALLY (Kiveris et al. large-star/small-star)
-   — run up to a 16k-doc chain, where min-label would need ~16k shuffles.
-3. Labels agree between the two algorithms wherever both run.
+1. The automatic path (``fuzzy_dedup_docs`` → ``connected_components``)
+   resolves every chain and reports which path it took: the driver
+   union-find on small pair graphs, min-label, or min-label→star once a
+   chain is deeper than the min-label round budget.
+2. Each distributed loop, run directly on the same pair graph: min-label
+   rounds grow LINEARLY with chain length (rounds ≈ diameter) — run at
+   small L only; star rounds grow ~LOGARITHMICALLY (Kiveris et al.
+   large-star/small-star) — run up to a 16k-doc chain, where min-label
+   would need ~1,600 shuffles.
+3. Labels agree between every path that ran on a chain.
 4. pre_contract_exact on a 10x verbatim-replica corpus shrinks the pair
    graph ~replica² fold (only one representative per family enters LSH).
 
@@ -98,86 +103,95 @@ def build_replica_corpus(spark, families: int, replicas: int):
     )
 
 
+def minlabel_only(pairs, stats):
+    """The min-label loop alone: past the driver union-find, no round
+    budget (the two module constants the automatic path reads)."""
+    from safe_zone_spark.operators import dedup
+
+    saved = dedup._DRIVER_EDGES, dedup._MINLABEL_ROUNDS
+    dedup._DRIVER_EDGES, dedup._MINLABEL_ROUNDS = -1, 1 << 30
+    try:
+        return dedup.connected_components(pairs, stats=stats)
+    finally:
+        dedup._DRIVER_EDGES, dedup._MINLABEL_ROUNDS = saved
+
+
 def main() -> int:
     total_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     from pyspark.sql import functions as F
 
-    from safe_zone_spark.operators.dedup import fuzzy_dedup_docs
+    from safe_zone_spark.operators.dedup import (
+        connected_components_star,
+        fuzzy_dedup_docs,
+        minhash_lsh_pairs,
+    )
     from safe_zone_spark.session import session_builder
 
     spark = session_builder("szs-giant-component", cores=len(os.sched_getaffinity(0))).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    lsh = dict(num_hashes=32, bands=16)  # 2-row bands: chain-integrity, see module doc
 
-    def run(df, algorithm, *, max_iter, label=""):
-        stats: dict = {}
-        t0 = time.time()
-        out = fuzzy_dedup_docs(
-            df, algorithm=algorithm, max_iter=max_iter,
-            num_hashes=32, bands=16,  # 2-row bands: chain-integrity, see module doc
-            driver_threshold=0, cc_stats=stats,  # force the distributed loop
-        ).localCheckpoint()  # one compute; label comparisons reuse it
-        agg = out.agg(
-            F.max("cluster_size").alias("giant"),
-            F.countDistinct("cluster_id").alias("n_clusters"),
+    def report(label, stats, t0, labels):
+        """One run's row; ``labels`` (doc_id, cluster_id) is checkpointed so
+        the aggregate and the label comparison reuse one compute."""
+        agg = labels.groupBy("cluster_id").count().agg(
+            F.max("count").alias("giant"), F.count(F.lit(1)).alias("n_clusters"),
         ).collect()[0]
-        wall = time.time() - t0
         row = {
-            "algorithm": algorithm, "label": label,
-            "wall_sec": round(wall, 2), "rounds": stats.get("rounds"),
+            "path": stats["path"], "label": label, "wall_sec": round(time.time() - t0, 2),
+            "minlabel_rounds": stats.get("minlabel_rounds", 0),
+            "star_rounds": stats.get("star_rounds", 0),
             "sym_edges": stats.get("sym_edges"),
             "giant_component": int(agg["giant"]),
             "n_clusters": int(agg["n_clusters"]),
         }
         print(json.dumps(row))
-        return row, out
+        return row
+
+    def auto(df, label, **kw):
+        stats: dict = {}
+        t0 = time.time()
+        out = fuzzy_dedup_docs(df, **lsh, cc_stats=stats, **kw).localCheckpoint()
+        return report(label, stats, t0, out.select("doc_id", "cluster_id")), out
+
+    def loop(pairs, label, cc):
+        """One CC loop directly on the checkpointed pair graph (wall = CC only)."""
+        stats: dict = {}
+        t0 = time.time()
+        lab = cc(pairs, stats=stats).select(
+            F.col("u").alias("doc_id"), F.col("label").alias("cluster_id")
+        ).localCheckpoint()
+        return report(label, stats, t0, lab), lab
 
     results = {"total_docs": total_docs, "window": W, "stride": S, "runs": []}
 
-    # --- rounds vs diameter: min-label at small L, star up to 16k ---------
+    # --- automatic path per chain; each loop directly: min-label at small
+    # L, star up to 16k --------------------------------------------------
     minlabel_L = (64, 128, 256)
-    star_L = (64, 256, 1024, 4096, 16000)
-    for L in sorted(set(minlabel_L) | set(star_L)):
+    for L in (64, 128, 256, 1024, 4096, 16000):
         if L > total_docs:  # smoke runs: skip chains longer than the corpus
             continue
+        label = f"chain_{L}"
         df = build_chain_corpus(spark, L, total_docs).localCheckpoint()
-        labels = {}
-        if L in star_L:
-            row, out = run(df, "star", max_iter=60, label=f"chain_{L}")
+        row, out = auto(df, label)
+        results["runs"].append(row)
+        pairs = minhash_lsh_pairs(df, **lsh).filter(F.col("est_jaccard") >= 0.5).localCheckpoint()
+        for cc in [connected_components_star] + ([minlabel_only] if L in minlabel_L else []):
+            row, lab = loop(pairs, label, cc)
             results["runs"].append(row)
-            labels["star"] = out
-        if L in minlabel_L:
-            row, out = run(df, "minlabel", max_iter=L + 10, label=f"chain_{L}")
-            results["runs"].append(row)
-            labels["minlabel"] = out
-        if len(labels) == 2:  # label-identical where both ran
-            diff = (
-                labels["star"].select("doc_id", "cluster_id")
-                .exceptAll(labels["minlabel"].select("doc_id", "cluster_id"))
-                .count()
-            )
-            assert diff == 0, f"label mismatch at L={L}: {diff} rows"
-            results["runs"].append({"label": f"chain_{L}", "labels_match": True})
+            # the pair graph's nodes carry the same labels as the auto path
+            diff = lab.exceptAll(out.select("doc_id", "cluster_id")).count()
+            assert diff == 0, f"label mismatch at L={L} ({row['path']}): {diff} rows"
+        results["runs"].append({"label": label, "labels_match": True})
 
     # --- pre-contraction on verbatim replicas ------------------------------
     rep_df = build_replica_corpus(spark, families=total_docs // 100,
                                   replicas=10).localCheckpoint()
-    row_plain, _ = run(rep_df, "star", max_iter=60, label="replicas_plain")
-    stats: dict = {}
-    t0 = time.time()
-    out = fuzzy_dedup_docs(
-        rep_df, algorithm="star", max_iter=60, pre_contract_exact=True,
-        num_hashes=32, bands=16,
-        driver_threshold=0, cc_stats=stats,
+    row_plain, _ = auto(rep_df, "replicas_plain")
+    row_pc, out = auto(rep_df, "replicas_pre_contract", pre_contract_exact=True)
+    row_pc["full_families_resolved"] = (
+        out.filter(F.col("cluster_size") == 10).select("cluster_id").distinct().count()
     )
-    n = out.filter(F.col("cluster_size") == 10).count()
-    row_pc = {
-        "algorithm": "star", "label": "replicas_pre_contract",
-        "wall_sec": round(time.time() - t0, 2),
-        "rounds": stats.get("rounds"),
-        "sym_edges": stats.get("sym_edges", 0),
-        "full_families_resolved": int(n),
-    }
-    print(json.dumps(row_pc))
     results["runs"].append(row_plain)
     results["runs"].append(row_pc)
 
@@ -195,33 +209,33 @@ def main() -> int:
         "banded PATH with diameter ~ L/10: min-label's worst case. Run with",
         "num_hashes=32/bands=16 (2-row bands) so correlated signature flips",
         "at window boundaries cannot cut the chain (see module docstring);",
-        "giant == L in every row verifies one component end-to-end. Wall",
-        "includes the full LSH chain over all 50k docs each run; the first",
-        "row additionally carries Spark session warm-up. min-label rounds",
-        "track the diameter LINEARLY (8/14/26 at L=64/128/256 ~ L/10); star",
-        "rounds track log2(L) (+2 per 4x L) — at L=16000 star needs 12",
-        "rounds where min-label would need ~1,600.",
+        "giant == L in every row verifies one component end-to-end. The",
+        "automatic rows (path driver-union-find / minlabel / minlabel→star)",
+        "time the whole fuzzy_dedup_docs over all docs, the first one with",
+        "Spark session warm-up; the other rows time one CC loop alone on the",
+        "same checkpointed pair graph. min-label rounds track the diameter",
+        "LINEARLY; star rounds track log2(L).",
         "",
-        "| chain L | algorithm | rounds | log2(L) | wall (s) | giant |",
-        "|---|---|---|---|---|---|",
+        "| chain L | path | min-label rounds | star rounds | log2(L) | wall (s) | giant |",
+        "|---|---|---|---|---|---|---|",
     ]
     for r in results["runs"]:
-        if "rounds" in r and r.get("label", "").startswith("chain_"):
+        if "path" in r and r["label"].startswith("chain_"):
             L = int(r["label"].split("_")[1])
             lines.append(
-                f"| {L} | {r['algorithm']} | {r['rounds']} | "
-                f"{math.log2(L):.1f} | {r['wall_sec']} | "
+                f"| {L} | {r['path']} | {r['minlabel_rounds']} | "
+                f"{r['star_rounds']} | {math.log2(L):.1f} | {r['wall_sec']} | "
                 f"{r['giant_component']} |"
             )
     lines += [
         "",
         f"Pre-contraction (10x verbatim replicas, {total_docs // 100} "
-        "families): plain star edge count "
+        "families): symmetric edge count "
         f"{row_plain['sym_edges']} vs {row_pc['sym_edges']} after exact "
         "pre-contraction "
         f"({row_plain['wall_sec']}s vs {row_pc['wall_sec']}s; "
-        f"{row_pc.get('full_families_resolved', 0)} families fully "
-        "resolved either way).",
+        f"{row_pc['full_families_resolved']} families fully "
+        "resolved with it).",
     ]
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     body = ""

@@ -3,45 +3,60 @@ pairs and one-keeper-per-cluster semantics (VERDICT r3 #2)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+from safe_zone_spark.operators import dedup
+from safe_zone_spark.operators.dedup import (
+    connected_components,
+    connected_components_star,
+    fuzzy_dedup_docs,
+)
 
-from safe_zone_spark.operators.dedup import connected_components, fuzzy_dedup_docs
+
+def _labels(df, stats=None):
+    return {r["u"]: r["label"] for r in connected_components(df, stats=stats).collect()}
 
 
-def _cc(spark, edges):
+def _distributed(monkeypatch, rounds=None):
+    """Send every graph past the driver union-find; ``rounds`` sets the
+    min-label budget (a small one forces the star escalation)."""
+    monkeypatch.setattr(dedup, "_DRIVER_EDGES", -1)
+    if rounds is not None:
+        monkeypatch.setattr(dedup, "_MINLABEL_ROUNDS", rounds)
+
+
+def _cc(spark, monkeypatch, edges):
     """Run BOTH the driver union-find fast path (default threshold) and the
-    distributed min-label loop (driver_threshold=0), assert they agree,
-    return the label map."""
+    distributed min-label loop (a budget no component here can exhaust:
+    rounds needed <= edges + 1), assert they agree, return the label map."""
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    fast = {r["u"]: r["label"] for r in connected_components(df).collect()}
-    dist = {
-        r["u"]: r["label"]
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
-    assert fast == dist
+    fast = _labels(df)
+    with monkeypatch.context() as m:
+        _distributed(m, rounds=len(edges) + 1)
+        stats: dict = {}
+        assert _labels(df, stats=stats) == fast
+        assert stats["path"] == "minlabel"
     return fast
 
 
-def test_connected_components_basic(spark):
+def test_connected_components_basic(spark, monkeypatch):
     # two components: {1,2,3} (chain) and {7,9}
-    labels = _cc(spark, [(1, 2), (2, 3), (7, 9)])
+    labels = _cc(spark, monkeypatch, [(1, 2), (2, 3), (7, 9)])
     assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     # a 12-node path needs multiple propagation rounds (diameter 11) —
     # proves the fixpoint loop actually iterates past round one
     edges = [(i, i + 1) for i in range(10, 22)]
-    labels = _cc(spark, edges)
+    labels = _cc(spark, monkeypatch, edges)
     assert set(labels.values()) == {10}
     assert len(labels) == 13
 
 
-def test_connected_components_bridge_merge(spark):
+def test_connected_components_bridge_merge(spark, monkeypatch):
     # two dense families joined by one bridge edge collapse to ONE cluster
     fam_a = [(1, 2), (1, 3), (2, 3)]
     fam_b = [(20, 21), (20, 22), (21, 22)]
-    labels = _cc(spark, fam_a + fam_b + [(3, 20)])
+    labels = _cc(spark, monkeypatch, fam_a + fam_b + [(3, 20)])
     assert set(labels.values()) == {1}
 
 
@@ -95,8 +110,6 @@ def test_star_cc_equals_minlabel_on_random_graphs(spark):
     graphs with mixed component shapes, plus a long path and a bridge."""
     import random
 
-    from safe_zone_spark.operators.dedup import connected_components_star
-
     cases = []
     for seed in (11, 12, 13):
         rng = random.Random(seed)
@@ -107,33 +120,34 @@ def test_star_cc_equals_minlabel_on_random_graphs(spark):
         cases.append(edges)
     cases.append([(i, i + 1) for i in range(200, 215)])          # path
     cases.append([(1, 2), (1, 3), (2, 3), (20, 21), (3, 20)])    # bridge
+    cases.append([(5, 5), (6, 7), (7, 7)])                        # self-loops
 
     for edges in cases:
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = {r["u"]: r["label"] for r in connected_components(df).collect()}
+        a = _labels(df)
         b = {r["u"]: r["label"] for r in connected_components_star(df).collect()}
         assert a == b, f"divergence on {edges[:5]}..."
 
 
-def test_fuzzy_dedup_star_and_precontract_match_default(spark):
-    """Both the 'star' CC loop and exact-dup pre-contraction must leave the
-    end-to-end cluster output unchanged on a corpus of >=shingle_n-word
-    docs with verbatim replicas (the boilerplate shape pre-contraction
-    exists to defuse)."""
+def test_fuzzy_dedup_star_and_precontract_match_default(spark, monkeypatch):
+    """Both the star escalation (forced by a one-round min-label budget) and
+    exact-dup pre-contraction must leave the end-to-end cluster output
+    unchanged on a corpus of >=shingle_n-word docs with verbatim replicas
+    (the boilerplate shape pre-contraction exists to defuse)."""
     rows = [(i, f"shared boilerplate text body number {i % 3} end") for i in range(24)]
     rows += [(100 + i, f"wholly unique document number {i} talks about topic {i}")
              for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     base = sorted(tuple(r) for r in fuzzy_dedup_docs(df).collect())
-    star = sorted(tuple(r) for r in fuzzy_dedup_docs(df, algorithm="star").collect())
     contracted = sorted(
         tuple(r) for r in fuzzy_dedup_docs(df, pre_contract_exact=True).collect()
     )
+    _distributed(monkeypatch, rounds=1)
+    stats: dict = {}
+    star = sorted(tuple(r) for r in fuzzy_dedup_docs(df, cc_stats=stats).collect())
+    assert stats["path"] == "minlabel→star"
     both = sorted(
-        tuple(r)
-        for r in fuzzy_dedup_docs(
-            df, algorithm="star", pre_contract_exact=True
-        ).collect()
+        tuple(r) for r in fuzzy_dedup_docs(df, pre_contract_exact=True).collect()
     )
     assert base == star == contracted == both
 
@@ -154,37 +168,51 @@ def test_precontract_clusters_subshingle_exact_dups(spark):
     assert con[1]["cluster_size"] == 3
 
 
-def test_cc_nonconvergence_raises(spark):
-    """Exhausting max_iter must fail LOUDLY — silent partial labels would
-    ship corrupt keep/drop decisions and diverge from the oracle's full
-    recursive closure."""
-    import pytest
-
-    edges = [(i, i + 1) for i in range(300, 330)]  # diameter 30
+def test_cc_deep_path_escalates_to_star(spark, monkeypatch):
+    """A component deeper than the min-label budget must still resolve
+    fully — partial labels would ship corrupt keep/drop decisions — by
+    escalating to large-star/small-star on the same edges."""
+    edges = [(i, i + 1) for i in range(300, 330)]  # 31 nodes, diameter 30
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=3, driver_threshold=0)
-    # the driver fast path has no iteration cap — same input resolves fine
-    labels = {r["u"]: r["label"] for r in connected_components(df).collect()}
-    assert set(labels.values()) == {300}
+    _distributed(monkeypatch, rounds=3)
+    stats: dict = {}
+    labels = _labels(df, stats=stats)
+    assert stats["path"] == "minlabel→star"
+    assert stats["minlabel_rounds"] == 3 and stats["star_rounds"] > 0
+    assert stats["sym_edges"] == 60
+    assert len(labels) == 31 and set(labels.values()) == {300}
 
 
-def test_cc_string_ids_both_paths(spark):
+def test_cc_shallow_cliques_stay_on_minlabel(spark, monkeypatch):
+    """Dense near-dup families (10-node cliques, diameter 1) converge in two
+    min-label rounds: one that labels, one that sees no change."""
+    edges = [
+        (c * 100 + i, c * 100 + j)
+        for c in range(5) for i in range(10) for j in range(i + 1, 10)
+    ]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    _distributed(monkeypatch)
+    stats: dict = {}
+    labels = _labels(df, stats=stats)
+    assert stats["path"] == "minlabel"
+    assert stats["minlabel_rounds"] == 2 and stats["star_rounds"] == 0
+    assert labels == {c * 100 + i: c * 100 for c in range(5) for i in range(10)}
+
+
+def test_cc_string_ids_both_paths(spark, monkeypatch):
     """id_col is a public parameter — string ids (urls, hash-hex) must work
-    on the driver fast path AND the distributed loop (the old convergence
+    on the driver fast path AND the distributed loops (the old convergence
     check summed ids and only worked for numerics)."""
-    from safe_zone_spark.operators.dedup import connected_components_star
-
     edges = [("urlB", "urlC"), ("urlA", "urlB"), ("x", "y")]
     df = spark.createDataFrame(edges, "id_a string, id_b string")
     want = {"urlA": "urlA", "urlB": "urlA", "urlC": "urlA", "x": "x", "y": "x"}
-    fast = {r["u"]: r["label"] for r in connected_components(df).collect()}
-    dist = {
-        r["u"]: r["label"]
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
+    fast = _labels(df)
+    _distributed(monkeypatch)
+    dist = _labels(df)
     star = {r["u"]: r["label"] for r in connected_components_star(df).collect()}
-    assert fast == dist == star == want
+    monkeypatch.setattr(dedup, "_MINLABEL_ROUNDS", 1)
+    escalated = _labels(df)
+    assert fast == dist == star == escalated == want
 
 
 def test_precontract_null_text_stays_singleton(spark):
