@@ -11,7 +11,7 @@ Layout:
     oracle       pure-Python reference implementation of the Detect pipeline
                  (parity target: /root/reference/internal/guardrails/guardrails.go:60-377)
     checksums    TCKN / Luhn digit checksums (scalar + numpy-vectorized)
-    operators/   scan (mapInPandas detect), dedup, similarity search
+    operators/   scan (mapInArrow detect), dedup, similarity search
     functions/   quality heuristics, langid, perplexity, text analysis,
                  confidence/action column expressions
     sources/     deterministic synthetic corpus generator, HTML extraction, IO

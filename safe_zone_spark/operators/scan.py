@@ -2,7 +2,7 @@
 
 The reference processes one HTTP request at a time
 (/root/reference/internal/guardrails/guardrails.go:60-377); here a whole
-Arrow batch of documents flows through ``mapInPandas`` at once, and each
+Arrow batch of documents flows through ``mapInArrow`` at once, and each
 needle — the blocklist words (sorted, as escaped regexes) then the active
 patterns in table order — follows one rule, domain × window × mode, all
 read from Python's own parse of the needle's regex (``_plan``):
@@ -42,12 +42,15 @@ genuine improvement Spark's batching buys, with identical results.
 Per-document sequential steps (canonical sort, greedy overlap resolution,
 scrub rebuild) reuse the oracle's functions directly — those are cheap
 (few candidates per doc) and being shared code makes Spark≡oracle structural.
+They run only for a doc with candidates or validators, and build only the
+fields the caller asked for (``_decide``).
 
 Scale notes (100 TB / 1000 executors):
-* narrow stage — no shuffle; parallelism = input partitions. Callers defuse
-  host skew *before* this op: ``ensure_parallelism`` salts a scan with too
-  few splits; the batch commit (``run_with_manifest``) rebalances such a
-  scan by work unit instead, the shuffle that also lays out its
+* narrow stage — no shuffle; parallelism = input partitions. Parquet row
+  groups are row-count-uniform, so host skew does not skew splits; a scan
+  that yields fewer splits than cores is salted by ``ensure_parallelism``,
+  and the batch commit (``run_with_manifest``) rebalances a scan under two
+  splits per core by work unit instead, the shuffle that also lays out its
   unit-partitioned write (plans/pipeline.py).
 * rules ride a Spark broadcast (collected once on the driver, like the
   reference's Redis cache, cache/redis.go:40-58); regexes compile once per
@@ -69,6 +72,7 @@ from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..oracle import (
     Detection,
@@ -377,6 +381,90 @@ def _scan_blob(encoded: list[bytes], blob: bytes, starts: np.ndarray,
     return per_doc
 
 
+def _decide(texts: list, encoded: list[bytes], per_doc: list[list[Detection]], rules: RuleSet,
+            fields: tuple[str, ...], *, mode: str, validator_names: tuple[str, ...] = (),
+            expected_formats=None) -> dict:
+    """The decision columns ``fields`` (a subset of SCAN_OUTPUT_FIELDS) of one
+    batch, from its ``texts`` (None reads as ""), their UTF-8 ``encoded``
+    forms and their ``per_doc`` candidates (:func:`_scan_blob`). Only the
+    requested fields are built. A doc with no candidate and no validator
+    keeps the vectorized defaults (kept, its own text, confidence 0, no
+    detections or message) and never enters the per-doc loop."""
+    n = len(texts)
+    want = set(fields)
+    blocked = np.zeros(n, dtype=bool)
+    n_det = np.zeros(n, dtype=np.int32)
+    overall_conf = np.zeros(n, dtype=np.float64)
+    scrubbed = [t or "" for t in texts] if "scrubbed_text" in want else None
+    rows = [[] for _ in range(n)] if "detections" in want else None
+    breakdowns = [{} for _ in range(n)] if "breakdown" in want else None
+    messages = [""] * n if "message" in want else None
+    job_names = set(validator_names)
+    fmts = repeat(None, n) if expected_formats is None else expected_formats
+    allow_t, block_t = rules.allow_threshold, rules.block_threshold
+    for i, fmt in enumerate(fmts):
+        if not (per_doc[i] or fmt or job_names):
+            continue
+        is_blocked = False
+        msgs: list[str] = []
+        validator_confs: list[float] = []
+        for vname in sorted(job_names | {fmt} if fmt else job_names):
+            valid, err = validate_format(texts[i] or "", vname, rules)
+            if err is not None:
+                conf, is_blocked = 1.0, True
+                msgs.append(f"Error in guardrail '{vname}': {err}")
+            elif not valid:
+                conf, is_blocked = 0.9, True
+                msgs.append(f"Content blocked by security policy: {vname}")
+            else:
+                conf = 0.7
+            validator_confs.append(round_confidence(conf))
+
+        detections = resolve_overlaps(per_doc[i])
+        overall = weight = 0.0
+        for d in detections:
+            action = resolve_action(d.confidence, allow_t, block_t)
+            if action == "BLOCK":
+                is_blocked = True
+                msgs.append("Blocked due to high confidence detection: " + d.type)
+            w = 2.0 if d.type == "BLOCKLIST" else 1.0
+            overall += d.confidence * w
+            weight += w
+            if rows is not None:
+                rows[i].append({"type": d.type, "value": d.value, "placeholder": d.placeholder,
+                                "start": d.start, "end": d.end, "confidence": d.confidence,
+                                "action": action})
+            if breakdowns is not None:
+                breakdowns[i][d.type] = breakdowns[i].get(d.type, 0) + 1
+        if mode == "BLOCK" and detections:
+            is_blocked = True
+            msgs.append("PII detected, request blocked by mode.")
+        for conf in validator_confs:
+            overall += conf * 1.5
+            weight += 1.5
+        if weight > 0:
+            overall /= weight
+
+        if scrubbed is not None and detections:
+            scrubbed[i] = scrub_text(encoded[i], detections).decode("utf-8", "surrogateescape")
+        if messages is not None:
+            messages[i] = "; ".join(msgs)
+        blocked[i] = is_blocked
+        overall_conf[i] = round_confidence(overall)
+        n_det[i] = len(detections)
+
+    columns = {
+        "detections": rows, "breakdown": breakdowns, "contains_pii": n_det > 0,
+        "blocked": blocked, "keep": ~blocked, "scrubbed_text": scrubbed,
+        "overall_confidence": overall_conf, "message": messages, "n_detections": n_det,
+    }
+    return {f: columns[f] for f in fields}
+
+
+def _encode(texts: list) -> list[bytes]:
+    return [("" if t is None else t).encode("utf-8") for t in texts]
+
+
 def detect_batch(
     texts: "pd.Series",
     rules: RuleSet,
@@ -398,107 +486,40 @@ def detect_batch(
     # one materialization up front — per-row Series.iloc in the doc loop
     # costs ~15us each (measured 0.2s per 13k rows)
     texts = texts.tolist() if hasattr(texts, "tolist") else list(texts)
-    encoded = [("" if t is None else t).encode("utf-8") for t in texts]
-    n = len(encoded)
-    blob, starts = _join(encoded)
+    encoded = _encode(texts)
+    per_doc = _scan_blob(encoded, *_join(encoded), rules)
+    return pd.DataFrame(_decide(texts, encoded, per_doc, rules, SCAN_OUTPUT_FIELDS, mode=mode,
+                                validator_names=validator_names,
+                                expected_formats=expected_formats))
 
-    per_doc = _scan_blob(encoded, blob, starts, rules)
 
-    # shared per-doc validator results (same names for every doc in the job)
-    out = {
-        "detections": [],
-        "breakdown": [],
-        "contains_pii": np.zeros(n, dtype=bool),
-        "blocked": np.zeros(n, dtype=bool),
-        "keep": np.zeros(n, dtype=bool),
-        "scrubbed_text": [],
-        "overall_confidence": np.zeros(n, dtype=np.float64),
-        "message": [],
-        "n_detections": np.zeros(n, dtype=np.int32),
-    }
+def _crossing_batch(names: list[str], arrays: list, texts: list, rules: RuleSet,
+                    appended, fields: tuple[str, ...], extra_scorers: dict,
+                    **decide) -> pa.RecordBatch:
+    """One output batch of the Arrow crossing: the ``arrays`` (named
+    ``names``) as they are, then the decision ``fields`` of ``texts`` and
+    each extra scorer's column, typed by ``appended`` (the Arrow schema of
+    those columns). A scorer takes the texts as a ``pd.Series`` and returns
+    a same-length sequence; NaN and None become nulls, as in a pandas UDF."""
+    encoded = _encode(texts)
+    got = _decide(texts, encoded, _scan_blob(encoded, *_join(encoded), rules), rules, fields,
+                  **decide)
+    values = [got[f] for f in fields]
+    if extra_scorers:
+        series = pd.Series(texts, dtype=object)
+        values += [fn(series) for _, fn in extra_scorers.values()]
+    arrays = [*arrays, *(pa.array(v, type=f.type, from_pandas=True, size=len(texts))
+                         for v, f in zip(values, appended))]
+    return pa.RecordBatch.from_arrays(arrays, names=[*names, *appended.names])
 
-    allow_t, block_t = rules.allow_threshold, rules.block_threshold
-    for i in range(n):
-        data = encoded[i]
-        blocked = False
-        messages: list[str] = []
-        validator_results: list[tuple[bool, float]] = []
-        row_names = set(validator_names)
-        if expected_formats is not None:
-            fmt = expected_formats[i]
-            if fmt:
-                row_names.add(fmt)
-        if row_names:
-            text = texts[i]
-            for vname in sorted(row_names):
-                valid, err = validate_format(text or "", vname, rules)
-                if err is not None:
-                    conf = 1.0
-                    blocked = True
-                    messages.append(f"Error in guardrail '{vname}': {err}")
-                elif not valid:
-                    conf = 0.9
-                    blocked = True
-                    messages.append(f"Content blocked by security policy: {vname}")
-                else:
-                    conf = 0.7
-                validator_results.append((valid and err is None, round_confidence(conf)))
 
-        detections = resolve_overlaps(per_doc[i])
+def _map_in_arrow(df, run, schema, n_passed: int):
+    """``df.mapInArrow(run(batch, appended), schema)``, where ``appended`` is
+    the Arrow schema of ``schema``'s fields after the first ``n_passed``."""
+    from pyspark.sql.pandas.types import to_arrow_type
 
-        breakdown: dict[str, int] = {}
-        rows = []
-        overall = 0.0
-        weight = 0.0
-        for d in detections:
-            breakdown[d.type] = breakdown.get(d.type, 0) + 1
-            action = resolve_action(d.confidence, allow_t, block_t)
-            if action == "BLOCK":
-                blocked = True
-                messages.append("Blocked due to high confidence detection: " + d.type)
-            w = 2.0 if d.type == "BLOCKLIST" else 1.0
-            overall += d.confidence * w
-            weight += w
-            rows.append(
-                {
-                    "type": d.type,
-                    "value": d.value,
-                    "placeholder": d.placeholder,
-                    "start": d.start,
-                    "end": d.end,
-                    "confidence": d.confidence,
-                    "action": action,
-                }
-            )
-
-        contains = len(detections) > 0
-        if mode == "BLOCK" and contains:
-            blocked = True
-            messages.append("PII detected, request blocked by mode.")
-
-        for _, conf in validator_results:
-            overall += conf * 1.5
-            weight += 1.5
-        if weight > 0:
-            overall /= weight
-
-        scrubbed = (
-            scrub_text(data, detections).decode("utf-8", "surrogateescape")
-            if contains
-            else texts[i] or ""
-        )
-
-        out["detections"].append(rows)
-        out["breakdown"].append(breakdown)
-        out["contains_pii"][i] = contains
-        out["blocked"][i] = blocked
-        out["keep"][i] = not blocked
-        out["scrubbed_text"].append(scrubbed)
-        out["overall_confidence"][i] = round_confidence(overall)
-        out["message"].append("; ".join(messages))
-        out["n_detections"][i] = len(detections)
-
-    return pd.DataFrame(out)
+    appended = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schema.fields[n_passed:]])
+    return df.mapInArrow(lambda batches: (run(b, appended) for b in batches), schema)
 
 
 def extract_and_scan(
@@ -511,82 +532,62 @@ def extract_and_scan(
     fields: tuple[str, ...] | None = None,
     extra_scorers: "dict[str, tuple[str, object]] | None" = None,
 ):
-    """Fused html→text extraction + detect/scrub in ONE python stage.
+    """Fused html→text extraction + detect/scrub in ONE Arrow map stage.
 
-    ``fields`` selects which SCAN_OUTPUT_FIELDS cross back to the JVM —
-    Catalyst cannot column-prune through a mapInPandas schema, so a caller
-    that only needs (keep, scrubbed_text) should say so and halve the
-    Arrow return payload (detections arrays + breakdown maps are the bulk).
+    ``fields`` selects which SCAN_OUTPUT_FIELDS are built and cross back to
+    the JVM (in SCAN_OUTPUT_FIELDS order). Catalyst cannot column-prune
+    through a ``mapInArrow`` schema, so a caller that only needs (keep,
+    scrubbed_text) should say so: detections arrays, breakdown maps and
+    messages are the bulk of both the return payload and the per-doc work.
 
     ``extra_scorers`` fuses additional per-text batch scorers into the SAME
     crossing: ``{col_name: (spark_type_ddl, fn)}`` where ``fn`` takes the
     extracted text pd.Series and returns a same-length sequence. The
     north-star chain (langid + perplexity after extract+scan) rides here —
-    each dropped ArrowEvalPython stage saves a full serialize/deserialize
-    of the text column plus a stage scheduling barrier, overhead that does
-    NOT shrink with cores and therefore taxes wide configs' scaling
-    efficiency hardest. ``fn`` must be a module-level callable (or close
-    over module-level state) so executors rebuild any model it uses on
-    import, exactly like the standalone UDFs.
+    each dropped Python stage saves a full serialize/deserialize of the text
+    column plus a stage scheduling barrier. ``fn`` must be a module-level
+    callable (or close over module-level state) so executors rebuild any
+    model it uses on import, exactly like the standalone UDFs.
 
-    Each mapInPandas stage is a full Arrow round trip (JVM columnar → Arrow
-    → pandas → Arrow → JVM), and that conversion runs in the same task
-    threads as the scan itself — measured at sf-bench scale, a separate
-    extract stage + unpruned passthrough cost 3-5x the fused form (the scan
-    alone sustains ~213k docs/s at 32 cores vs ~80k with two crossings).
-    So the production path crosses once: html in → (kept cols, text, scan
-    fields, extra scores) out. Quality exprs stay JVM-side AFTER this stage
-    (free, whole-stage codegen over the emitted text column).
+    The stage reads the html as Arrow binary and returns one
+    ``pa.RecordBatch`` per input batch: the kept columns are the input
+    batch's own arrays, and the rest are built straight from the Python
+    values, so no pandas frame is built on either side. Output: kept cols,
+    ``text``, the scan fields, the extra scores. Quality exprs stay
+    JVM-side AFTER this stage (whole-stage codegen over the emitted text).
     """
     rules = rules or default_rules()
     mode_resolved = mode or rules.mode or "MASK"
-    spark = df.sparkSession
-    b_rules = spark.sparkContext.broadcast(rules)
+    b_rules = df.sparkSession.sparkContext.broadcast(rules)
 
     from pyspark.sql import types as T
 
     from ..sources.corpus import extract_text_from_html
 
-    fields = fields or SCAN_OUTPUT_FIELDS
+    fields = tuple(f for f in SCAN_OUTPUT_FIELDS if f in (fields or SCAN_OUTPUT_FIELDS))
     extra_scorers = extra_scorers or {}
-    base = T.StructType([df.schema[c] for c in keep_cols])
-    full = scan_output_schema(
-        T.StructType(base.fields + [T.StructField("text", T.StringType())])
-    )
-    wanted = list(keep_cols) + ["text"] + list(fields)
+    passed = list(keep_cols) + ["text"]
+    full = scan_output_schema(T.StructType(
+        [df.schema[c] for c in keep_cols] + [T.StructField("text", T.StringType())]))
     schema = T.StructType(
-        [f for f in full.fields if f.name in wanted]
+        [f for f in full.fields if f.name in passed or f.name in fields]
         + [T.StructField(
             name,
             t if isinstance(t, T.DataType) else T._parse_datatype_string(t),
         ) for name, (t, _) in extra_scorers.items()]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = b_rules.value
-        for pdf in batches:
-            texts = pd.Series(
-                [extract_text_from_html(h) for h in pdf[html_col]], index=pdf.index
-            )
-            res = detect_batch(texts, r, mode=mode_resolved)
-            res.index = pdf.index
-            out = pdf[list(keep_cols)].copy()
-            out["text"] = texts
-            parts = [out, res[list(fields)]]
-            if extra_scorers:
-                parts.append(pd.DataFrame(
-                    {name: pd.Series(list(fn(texts)), index=pdf.index)
-                     for name, (_, fn) in extra_scorers.items()},
-                    index=pdf.index,
-                ))
-            yield pd.concat(parts, axis=1)
+    def run(batch, appended):
+        texts = [extract_text_from_html(h) for h in batch.column(html_col).to_pylist()]
+        arrays = [batch.column(c) for c in keep_cols] + [pa.array(texts, pa.string())]
+        return _crossing_batch(passed, arrays, texts, b_rules.value, appended, fields,
+                               extra_scorers, mode=mode_resolved)
 
     # explicit projection (guide §4.1): Catalyst cannot see which columns an
-    # opaque mapInPandas touches, so every input column would cross the
+    # opaque Python map touches, so every input column would cross the
     # Arrow boundary — select exactly the kept columns + html
-    return df.select(*dict.fromkeys(list(keep_cols) + [html_col])).mapInPandas(
-        run, schema
-    )
+    return _map_in_arrow(df.select(*dict.fromkeys(list(keep_cols) + [html_col])), run,
+                         schema, len(passed))
 
 
 def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_id",
@@ -618,7 +619,7 @@ def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_i
         r = b_rules.value
         for pdf in batches:
             texts = pdf[text_col]
-            encoded = [("" if t is None else t).encode("utf-8") for t in texts]
+            encoded = _encode(texts)
             n = len(encoded)
             per_doc = _scan_blob(encoded, *_join(encoded), replace(r, blocklist=frozenset()))
             ids, types, hits = [], [], []
@@ -649,7 +650,9 @@ def scan(
 
     ``spark.read...`` → ``scan(df)`` → ``.filter("keep")`` is the flagship
     pipeline. The rule bundle is shipped via Spark broadcast so executors
-    deserialize it once per task-set instead of once per task closure.
+    deserialize it once per task-set instead of once per task closure. The
+    input columns cross as one Arrow batch and return as the same arrays,
+    in one ``mapInArrow`` stage (see :func:`extract_and_scan`).
 
     ``expected_format_col`` names a string column of per-row validator names
     (null/'' = none), set-unioned with the job-global ``validator_names``
@@ -657,27 +660,13 @@ def scan(
     """
     rules = rules or default_rules()
     mode_resolved = mode or rules.mode or "MASK"
-    spark = df.sparkSession
-    b_rules = spark.sparkContext.broadcast(rules)
+    b_rules = df.sparkSession.sparkContext.broadcast(rules)
 
-    schema = scan_output_schema(df.schema)
+    def run(batch, appended):
+        fmts = batch.column(expected_format_col).to_pylist() if expected_format_col else None
+        return _crossing_batch(batch.schema.names, batch.columns,
+                               batch.column(text_col).to_pylist(), b_rules.value, appended,
+                               SCAN_OUTPUT_FIELDS, {}, mode=mode_resolved,
+                               validator_names=validator_names, expected_formats=fmts)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = b_rules.value
-        for pdf in batches:
-            fmts = (
-                ["" if v is None else v for v in pdf[expected_format_col]]
-                if expected_format_col
-                else None
-            )
-            res = detect_batch(
-                pdf[text_col],
-                r,
-                mode=mode_resolved,
-                validator_names=validator_names,
-                expected_formats=fmts,
-            )
-            res.index = pdf.index
-            yield pd.concat([pdf, res], axis=1)
-
-    return df.mapInPandas(run, schema=schema)
+    return _map_in_arrow(df, run, scan_output_schema(df.schema), len(df.columns))

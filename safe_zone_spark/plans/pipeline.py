@@ -28,12 +28,15 @@ Design for 100 TB:
   split into several files), not multiplied by the task count. Where the
   rebalance runs depends on the input's split count. A scan with at least
   two splits per core stays narrow through the transform, and its output is
-  rebalanced before the write. A narrower scan would need a shuffle before
-  the Arrow crossing anyway (``ensure_parallelism`` salts it), so the
-  rebalance moves to the input: that one exchange feeds the crossing, and
-  because the transform's stages are narrow (``mapInPandas`` keeps its
-  child's partitioning) it also lays out the write. There the advisory
-  size is measured on input bytes. Without AQE Spark plans a plain hash
+  rebalanced before the write. A narrower scan is rebalanced at the input
+  instead: that one exchange feeds the crossing, and because the
+  transform's stages are narrow (``mapInArrow`` keeps its child's
+  partitioning) it also lays out the write. There the advisory size is
+  measured on input bytes. The two-splits-per-core line is a measured
+  choice, not implied by ``ensure_parallelism`` (which leaves a scan of one
+  split per core narrow): on perfbench's ``commit_pii_long`` (4 splits, 4
+  cores) the input rebalance used less CPU than the salted crossing plus
+  output rebalance it replaced. Without AQE Spark plans a plain hash
   exchange on ``unit``, so one task writes each unit.
 * **Atomicity**: outputs land under ``.../unit=<k>/`` via Spark's committer
   (dynamic partition overwrite, so a unit's rewrite replaces its own
@@ -84,20 +87,26 @@ def _planned_width(df: DataFrame) -> int | None:
 
 def ensure_parallelism(df: DataFrame, min_partitions: int, *, key_col: str = "url",
                        salt: int = 42) -> DataFrame:
-    """Salted-repartition ONLY when the input can't feed every core.
+    """Salted-repartition to ``min_partitions`` ONLY when the input can't feed
+    every core: when its planned width is below both ``min_partitions`` and
+    the cores (``defaultParallelism``). Any other input is returned as is.
 
     A shuffle of raw page bytes is pure overhead when the scan already
-    yields >= min_partitions balanced splits (parquet row groups are
-    row-count-uniform, so host skew does not skew split sizes). It earns
-    its cost only when splits are few (tiny table, giant files) — then we
-    pay one shuffle to unlock full width. This keeps the flagship pipeline
-    narrow end-to-end in the common case (SURVEY §3.1).
+    yields a balanced split per core (parquet row groups are
+    row-count-uniform, so host skew does not skew split sizes): asking for
+    2 × cores adds no core, only a shuffle. It earns its cost only when
+    splits are fewer than cores (tiny table, giant files) — then we pay one
+    shuffle to unlock full width. This keeps the flagship pipeline narrow
+    end-to-end in the common case (SURVEY §3.1). On perfbench's
+    ``clean_short`` (a 4-split scan on 4 cores) the salt to 8 shuffled
+    3.4 MiB of html per pass.
 
-    The width is :func:`_planned_width`'s. A rebalanced input (as
-    ``run_with_manifest`` hands its transform when the scan is narrow) is
-    returned as is without running a job: its producer chose its layout."""
+    The width is :func:`_planned_width`'s, read without a Spark job. A
+    rebalanced input (as ``run_with_manifest`` hands its transform when the
+    scan is narrow) is returned as is: its producer chose its layout."""
     width = _planned_width(df)
-    if width is None or width >= min_partitions:
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if width is None or width >= min(min_partitions, cores):
         return df
     return salted_repartition(df, min_partitions, key_col=key_col, salt=salt)
 
@@ -220,10 +229,10 @@ def run_with_manifest(
     rebalanced, so the crossing is fed and the write laid out by that one
     shuffle (the advisory size then applies to input bytes); this holds
     while ``transform`` keeps rows in their partitions (column
-    expressions, ``mapInPandas``). Otherwise ``transform`` receives the
-    narrow scan and its output is rebalanced. The rebalance needs AQE;
-    without it the hint plans a plain hash exchange on ``unit`` and one
-    task writes each unit."""
+    expressions, ``mapInArrow``, ``mapInPandas``). Otherwise ``transform``
+    receives the narrow scan and its output is rebalanced. The rebalance
+    needs AQE; without it the hint plans a plain hash exchange on ``unit``
+    and one task writes each unit."""
     spark = df.sparkSession
     manifest = read_manifest(spark, manifest_path)
     done = set() if manifest is None else {
@@ -235,7 +244,8 @@ def run_with_manifest(
     if not units:
         return 0
     pending = assign_units(df, num_units, key_col=key_col).filter(F.col(UNIT_COL).isin(units))
-    # with fewer than two splits per core the crossing needs a shuffle anyway
+    # under two splits per core, one rebalance at the input feeds the
+    # crossing and lays out the write (a measured choice: see the module doc)
     width = _planned_width(pending)
     narrow = width is not None and width < 2 * spark.sparkContext.defaultParallelism
     out = transform(pending.hint("rebalance", UNIT_COL) if narrow else pending)

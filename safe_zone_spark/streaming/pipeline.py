@@ -54,10 +54,12 @@ def build_stream(spark: SparkSession, source_dir: str, *, schema,
 
 def transform(docs: DataFrame, rules: RuleSet | None = None) -> DataFrame:
     """The same stages as the batch flagship — streaming DataFrames accept
-    mapInPandas unchanged (narrow map stages). Fused extract+scan = one
-    Arrow crossing; quality exprs JVM-side after it."""
+    mapInArrow unchanged (narrow map stages). Fused extract+scan = one
+    Arrow crossing that builds only the scan fields the sinks read
+    (:func:`write_batch_sinks`); quality exprs JVM-side after it."""
     rules = rules or default_rules()
-    out = extract_and_scan(docs, rules, keep_cols=("url", "warc_ts"))
+    out = extract_and_scan(docs, rules, keep_cols=("url", "warc_ts"),
+                           fields=("keep", "scrubbed_text", "overall_confidence", "detections"))
     q = gopher_quality_columns("text")
     return out.withColumn(
         "final_keep", F.col("keep") & q["quality_keep"]

@@ -239,7 +239,7 @@ def test_commit_shuffles_once_by_unit(spark, multi_split_corpus, tmp_path, min_s
     tree, details = _final_write_plan(spark, marker, out_path)
     nodes = [line.strip(" +-*:") for line in tree.splitlines() if line.strip()]
     exchanges = [i for i, node in enumerate(nodes) if node.startswith("Exchange")]
-    crossing = [i for i, node in enumerate(nodes) if node.startswith("MapInPandas")]
+    crossing = [i for i, node in enumerate(nodes) if node.startswith("MapInArrow")]
     assert len(exchanges) == 1 and len(crossing) == 1
     # the tree lists a node above its input
     assert (crossing[0] < exchanges[0]) == (min_splits is None)
@@ -276,6 +276,8 @@ def test_commit_splits_units_past_the_advisory_size(spark, multi_split_corpus, t
 
 
 def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus, tmp_path):
+    """The input is salted to ``min_partitions`` only when it is narrower
+    than both ``min_partitions`` and the cores (local[4])."""
     wide = corpus.repartition(8)
     # enough partitions → returned as-is, no extra shuffle stage
     assert ensure_parallelism(wide, 4) is wide
@@ -285,40 +287,51 @@ def test_ensure_parallelism_shuffles_only_when_needed(spark, corpus, tmp_path):
     assert out.count() == corpus.count()
 
     # the decision follows Spark's split settings: 16 small files pack into
-    # fewer than 8 splits at local[4], but minPartitionNum=8 yields 8
+    # fewer than 8 splits but at least one per core at local[4], which feeds
+    # every core; maxPartitionNum=2 packs them into 2 splits, which are
+    # salted; minPartitionNum=8 yields 8
     path = str(tmp_path / "files16")
     spark.range(1600).selectExpr("cast(id as string) as url").repartition(16) \
         .write.parquet(path)
     files = spark.read.parquet(path)
-    assert ensure_parallelism(files, 8) is not files
-    spark.conf.set("spark.sql.files.minPartitionNum", "8")
-    try:
-        files = spark.read.parquet(path)
-        assert ensure_parallelism(files, 8) is files
-    finally:
-        spark.conf.unset("spark.sql.files.minPartitionNum")
+    assert 4 <= files.rdd.getNumPartitions() < 8
+    assert ensure_parallelism(files, 8) is files
+    for conf, value, salted in (("maxPartitionNum", "2", True),
+                                ("minPartitionNum", "8", False)):
+        spark.conf.set(f"spark.sql.files.{conf}", value)
+        try:
+            files = spark.read.parquet(path)
+            assert (ensure_parallelism(files, 8) is not files) == salted, conf
+        finally:
+            spark.conf.unset(f"spark.sql.files.{conf}")
 
 
-def test_ensure_parallelism_runs_no_job(spark, multi_split_corpus):
+def test_ensure_parallelism_runs_no_job(spark, multi_split_corpus, tmp_path):
     """A rebalanced or repartitioned input is decided from its plan, and a
     scan from its splits, without running a Spark job: counting a shuffled
     input's partitions through ``df.rdd`` would run its shuffle map stage,
-    which the consumer then runs again. A repartition or coalesce to fewer
-    partitions than asked for is still salted."""
+    which the consumer then runs again. A scan with a split per core but
+    fewer than asked for is returned as is; a scan, repartition or coalesce
+    narrower than the cores (local[4]) is still salted."""
+    one_file = str(tmp_path / "one_file")
+    multi_split_corpus.coalesce(1).write.parquet(one_file)
+    single_split = spark.read.parquet(one_file)
     kept = [
         multi_split_corpus.hint("rebalance", "url"),
         multi_split_corpus.repartition("url"),
         multi_split_corpus.repartition(8, "url"),
         multi_split_corpus.repartition(8),
+        multi_split_corpus,  # cores <= splits < min_partitions
     ]
     narrow = [
-        multi_split_corpus,
+        single_split,
         multi_split_corpus.repartition(2, "url"),
         multi_split_corpus.coalesce(1),
     ]
     with _job_group(spark, "ensure_parallelism") as jobs:
-        kept_out = [ensure_parallelism(df, 8) for df in kept]
-        narrow_out = [ensure_parallelism(df, 64 if df is multi_split_corpus else 8)
+        kept_out = [ensure_parallelism(df, 64 if df is multi_split_corpus else 8)
+                    for df in kept]
+        narrow_out = [ensure_parallelism(df, 64 if df is single_split else 8)
                       for df in narrow]
     assert jobs == []
     assert all(out is df for out, df in zip(kept_out, kept))

@@ -59,6 +59,38 @@ def test_filters_pushed_below_scan_not_udf(spark):
     assert "PushedFilters: [IsNotNull(n_chars), GreaterThan(n_chars,50)" in plan
 
 
+def test_flagship_plan_is_one_narrow_arrow_stage(spark, tmp_path):
+    """Over a scan with at least one split per core, the flagship plan
+    (``ensure_parallelism(…, 2 × cores)`` → ``extract_and_scan`` with the
+    langid and perplexity scorers → quality → noop) runs no shuffle and
+    crosses into Python once."""
+    from safe_zone_spark.functions.langid import classify_series
+    from safe_zone_spark.functions.perplexity import perplexity_series
+    from safe_zone_spark.operators.scan import extract_and_scan
+    from safe_zone_spark.plans.pipeline import ensure_parallelism
+    from safe_zone_spark.rules import default_rules
+
+    path = str(tmp_path / "docs")
+    generate_corpus(spark, 200, seed=5).repartition(8).write.parquet(path)
+    raw = spark.read.parquet(path).select("url", "warc_ts", "html")
+    cores = spark.sparkContext.defaultParallelism
+    assert raw.rdd.getNumPartitions() >= cores
+    out = extract_and_scan(
+        ensure_parallelism(raw, 2 * cores), default_rules(), keep_cols=("url",),
+        fields=("keep", "scrubbed_text", "overall_confidence"),
+        extra_scorers={"lang_pred": ("string", classify_series),
+                       "ppl": ("double", perplexity_series)},
+    )
+    q = gopher_quality_columns("text")
+    final = out.select("url", (F.col("keep") & q["quality_keep"]).alias("final_keep"),
+                       "scrubbed_text", "overall_confidence", "lang_pred", "ppl")
+    plan = plan_of(final)
+    assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan and "EvalPython" not in plan
+    final.write.format("noop").mode("overwrite").save()
+
+
 def _sql_executions(spark) -> list:
     """The session's SQL executions as its status store has recorded them,
     once the listener bus has delivered every event posted so far."""

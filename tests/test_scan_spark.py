@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 from safe_zone_spark.operators import detect_batch, scan
+from safe_zone_spark.operators.scan import SCAN_OUTPUT_FIELDS
 from safe_zone_spark.oracle import detect
 from safe_zone_spark.rules import default_rules
 from safe_zone_spark.sources import extract_text_from_html, generate_corpus_pandas
@@ -108,24 +109,97 @@ def test_empty_partitions_ok(spark):
     assert scan(sdf, RULES).count() == 0
 
 
+# the field sets callers ask for: clean_short's, the batch job's, streaming's
+CALLER_FIELDS = {
+    "clean_short": ("keep", "scrubbed_text", "overall_confidence"),
+    "batch_job": ("breakdown", "keep", "scrubbed_text", "overall_confidence"),
+    "streaming": ("detections", "keep", "scrubbed_text", "overall_confidence"),
+    "all": SCAN_OUTPUT_FIELDS,
+}
+
+
+@pytest.mark.parametrize("mode", ["MASK", "BLOCK", "DETECT"])
+@pytest.mark.parametrize("validators", ["none", "per_row", "job_and_per_row"])
+def test_decision_core_fields_equal_detect_batch(corpus_pdf, mode, validators):
+    """The decision core builds each requested field exactly as
+    ``detect_batch`` returns it (bitwise for the confidences), and
+    ``detect_batch`` equals the oracle on every doc: blocklist and
+    allowlist hits, None and empty texts, non-ASCII texts and validators."""
+    from safe_zone_spark.operators.scan import _decide, _encode, _join, _scan_blob
+
+    texts = corpus_pdf["text"].head(120).tolist() + [
+        None, "", "PROJECT-X launch", "mail support@example.com or x@y.org",
+        "ünïcödé café 123-45-6789 şğı", "日本語 secretword テキスト", '{"a": 1}',
+        "not json at all", "12345", "PROJECT-X a@b.co 4111 1111 1111 1111 PROJECT-X",
+    ]
+    formats = {"none": None}.get(validators, [
+        ("JSON", "NUMERIC", "", None)[i % 4] for i in range(len(texts))])
+    job = ("NO_SPACES",) if validators == "job_and_per_row" else ()
+    want = detect_batch(pd.Series(texts), RULES, mode=mode, validator_names=job,
+                        expected_formats=formats)
+    for i, text in enumerate(texts):
+        o = detect(text or "", RULES, mode=mode, guardrails=job,
+                   expected_format=(formats[i] or "") if formats else "")
+        assert (want["keep"][i], want["blocked"][i], want["contains_pii"][i]) == (
+            o.keep, o.blocked, o.contains_pii), text
+        assert want["scrubbed_text"][i] == o.redacted_text
+        assert want["overall_confidence"][i] == o.overall_confidence
+        assert want["message"][i] == o.message
+        assert want["breakdown"][i] == o.breakdown
+        assert [(d["type"], d["start"], d["end"], d["value"], d["confidence"])
+                for d in want["detections"][i]] == [
+            (d.type, d.start, d.end, d.value, d.confidence) for d in o.detections]
+    encoded = _encode(texts)
+    per_doc = _scan_blob(encoded, *_join(encoded), RULES)
+    for fields in CALLER_FIELDS.values():
+        got = _decide(texts, encoded, per_doc, RULES, fields, mode=mode,
+                      validator_names=job, expected_formats=formats)
+        assert tuple(got) == fields
+        for f in fields:
+            assert pd.Series(got[f]).equals(want[f]), f
+
+
 def test_extract_and_scan_fused_matches_two_stage(spark, corpus_pdf):
-    """The fused fast path must equal extract_text + scan composed."""
-    from safe_zone_spark.operators.scan import extract_and_scan
+    """The fused Arrow crossing must equal extract_text + scan composed and
+    ``detect_batch`` on every field (detections, breakdown maps, messages),
+    pass a null ``warc_ts`` through, keep its schema for every field set
+    and survive empty partitions and an empty batch."""
+    import pyarrow as pa
+
+    from safe_zone_spark.operators.scan import _crossing_batch, extract_and_scan
     from safe_zone_spark.sources.extract import extract_text
 
+    pdf = corpus_pdf[["url", "html"]].copy()
+    pdf["warc_ts"] = [None if i % 7 == 0 else pd.Timestamp("2025-06-01") + pd.Timedelta(hours=i)
+                      for i in range(len(pdf))]
     sdf = spark.createDataFrame(
-        corpus_pdf[["url", "html"]], schema="url string, html binary"
+        pdf, schema="url string, html binary, warc_ts timestamp"
     ).repartition(4)
-    fused = extract_and_scan(sdf, RULES, keep_cols=("url",))
-    two = scan(extract_text(sdf).select("url", "text"), RULES)
-    f = {r["url"]: r for r in fused.collect()}
-    t = {r["url"]: r for r in two.collect()}
-    assert set(f) == set(t)
-    for url in f:
-        assert f[url]["text"] == t[url]["text"]
-        assert f[url]["keep"] == t[url]["keep"]
-        assert f[url]["scrubbed_text"] == t[url]["scrubbed_text"]
-        assert f[url]["breakdown"] == t[url]["breakdown"]
+    fused = extract_and_scan(sdf, RULES, keep_cols=("url", "warc_ts"))
+    two = scan(extract_text(sdf).select("url", "warc_ts", "text"), RULES)
+    assert fused.schema == two.schema
+    f = {r["url"]: r.asDict(recursive=True) for r in fused.collect()}
+    t = {r["url"]: r.asDict(recursive=True) for r in two.collect()}
+    assert f == t
+    assert sum(r["warc_ts"] is None for r in f.values()) == (len(pdf) + 6) // 7
+    res = detect_batch(corpus_pdf["text"], RULES)
+    for i, url in enumerate(corpus_pdf["url"]):
+        for col in SCAN_OUTPUT_FIELDS:
+            assert f[url][col] == res[col][i], col
+    for fields in CALLER_FIELDS.values():
+        part = extract_and_scan(sdf, RULES, keep_cols=("url",), fields=fields[::-1])
+        assert part.columns == ["url", "text"] + [c for c in SCAN_OUTPUT_FIELDS if c in fields]
+        got = {r["url"]: r.asDict(recursive=True) for r in part.collect()}
+        assert got == {u: {c: r[c] for c in part.columns} for u, r in f.items()}
+    # more partitions than rows: some tasks see no batch or an empty one
+    few = extract_and_scan(sdf.limit(3).repartition(8), RULES, keep_cols=("url", "warc_ts"))
+    assert {r["url"]: r.asDict(recursive=True) for r in few.collect()} == {
+        u: f[u] for u in few.toPandas()["url"]}
+    assert extract_and_scan(sdf.filter("false"), RULES).count() == 0
+    appended = pa.schema([("keep", pa.bool_()), ("breakdown", pa.map_(pa.string(), pa.int32()))])
+    empty = _crossing_batch(["url"], [pa.array([], pa.string())], [], RULES, appended,
+                            ("keep", "breakdown"), {}, mode="MASK")
+    assert (empty.num_rows, empty.schema.names) == (0, ["url", "keep", "breakdown"])
 
 
 def test_invalid_utf8_page_fails_only_itself(spark, corpus_pdf):
