@@ -1156,51 +1156,34 @@ def q_perplexity(spark, sf_dir):
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship north-star pipeline on sf0.001: Gopher/C4 quality exprs
-    (incl. the Table A1 repetition gates) → langid (verified against the
-    claimed ``lang`` column) → perplexity → trained NB quality model →
-    detector scan/scrub → final keep = NOT blocked AND quality_ok AND
-    rep_ok AND lang_ok AND ppl_ok (SURVEY §7.1 step 5). The model-based
-    quality gate (``qmodel_ok``) is emitted alongside but does not join
-    ``final_keep``: the heuristics stay the keep contract."""
+    """Flagship north-star pipeline on sf0.001 (``plans.flagship``): its one
+    Arrow crossing also scores the Gopher Table A1 repetition gate and the
+    trained NB quality model. ``final_keep`` is the flagship's contract:
+    keep AND quality_keep AND lang_pred <> 'und' AND ppl <= DEFAULT_PPL_MAX
+    (SURVEY §7.1 step 5). ``rep_ok``, ``qmodel_ok`` and ``lang_ok`` (the
+    prediction equals the claimed ``lang``) are diagnostics beside it."""
     from safe_zone_spark.functions.quality import repetition_series
-    from safe_zone_spark.functions.quality_model import (
-        GATE_THRESHOLD,
-        quality_logit_udf,
-    )
+    from safe_zone_spark.functions.quality_model import GATE_THRESHOLD, quality_logit_series
+    from safe_zone_spark.plans.flagship import flagship
 
-    aug = _aug(spark, SF_DEFAULT, extra_cols=", lang")  # one scan, no join
-    q = gopher_quality_columns("text")
-    rep_udf = F.pandas_udf(
-        "dlf double, dcf double, f2 double, f3 double, f4 double, rep_keep boolean"
-    )(repetition_series)
-    qm_udf = quality_logit_udf()
-    staged = aug.select(
-        "doc_id", "text", "lang",
-        q["word_count"].alias("word_count"),
-        q["quality_keep"].alias("quality_keep"),
-        rep_udf(F.col("text")).getField("rep_keep").alias("rep_ok"),
-        langid_ngram_udf()(F.col("text")).alias("lang_pred"),
-        perplexity_udf()(F.col("text")).alias("ppl"),
-        qm_udf(F.col("text")).alias("qm_logit"),
+    out = flagship(
+        _aug(spark, SF_DEFAULT, extra_cols=", lang"), SCAN_RULES,  # one scan, no join
+        keep_cols=("doc_id", "lang"),
+        fields=("contains_pii", "scrubbed_text", "overall_confidence"),
+        extra_scorers={"rep_ok": ("boolean", lambda t: repetition_series(t)["rep_keep"]),
+                       "qm_logit": ("long", quality_logit_series)},
     )
-    scanned = scan(staged, SCAN_RULES)
-    lang_ok = F.col("lang_pred") == F.col("lang")
-    ppl_ok = F.col("ppl") <= DEFAULT_PPL_MAX  # calibrated next to the LM
-    qmodel_ok = F.col("qm_logit") >= GATE_THRESHOLD
-    final = (F.col("keep") & F.col("quality_keep") & F.col("rep_ok")
-             & lang_ok & ppl_ok)
-    return scanned.select(
+    return out.select(
         "doc_id",
-        "word_count",
+        gopher_quality_columns("text")["word_count"].alias("word_count"),
         "quality_keep",
         "rep_ok",
-        lang_ok.alias("lang_ok"),
-        ppl_ok.alias("ppl_ok"),
-        qmodel_ok.alias("qmodel_ok"),
+        (F.col("lang_pred") == F.col("lang")).alias("lang_ok"),
+        (F.col("ppl") <= DEFAULT_PPL_MAX).alias("ppl_ok"),
+        (F.col("qm_logit") >= GATE_THRESHOLD).alias("qmodel_ok"),
         "contains_pii",
         "keep",
-        final.alias("final_keep"),
+        "final_keep",
         "scrubbed_text",
         "overall_confidence",
     )

@@ -4,9 +4,10 @@ Runs the headline queries from __spark_entry__.queries() at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this process may run on,
 ``os.sched_getaffinity``), plus the flagship end-to-end corpus-safety
-pipeline (html→text extract → quality exprs → detect/scrub → keep/drop)
-over a deterministic synthetic Common-Crawl-style corpus
-(BENCH_CORPUS_ROWS rows, seed 42), reporting docs/sec.
+pipeline (``plans.flagship``: html→text extract → detect/scrub → langid →
+perplexity → quality exprs → ``final_keep``) over a deterministic
+synthetic Common-Crawl-style corpus (BENCH_CORPUS_ROWS rows, seed 42),
+reporting docs/sec.
 
 Output: {"metric": "e2e_pipeline_sec", "value": N, "unit": "sec",
          "queries": {...per-query sec...}, "sf": 0.1, "docs_per_sec": X, ...}
@@ -50,48 +51,26 @@ def force(df) -> int:
     return 0
 
 
-def fused_scan(raw):
-    """extract → detect/scrub → langid → perplexity fused into ONE Arrow
-    crossing (extra_scorers). The second ArrowEvalPython stage the r2
-    pipeline paid for langid+ppl re-serialized every text both ways and
-    added a stage barrier — fixed overhead that taxed the wide config's
-    scaling."""
-    from safe_zone_spark.functions.langid import classify_series
-    from safe_zone_spark.functions.perplexity import perplexity_series
-    from safe_zone_spark.operators.scan import extract_and_scan
+def pipeline(raw):
+    """The flagship plan (``plans.flagship``: extract → detect/scrub →
+    langid → perplexity in ONE Arrow crossing, Gopher quality exprs on the
+    JVM, ``final_keep``) with the columns a job keeps."""
+    from safe_zone_spark.plans.flagship import flagship
     from safe_zone_spark.rules import default_rules
 
-    return extract_and_scan(
-        raw, default_rules(), keep_cols=("url",),
-        fields=("keep", "scrubbed_text", "overall_confidence"),
-        extra_scorers={
-            "lang_pred": ("string", classify_series),
-            "ppl": ("double", perplexity_series),
-        },
-    )
+    return flagship(
+        raw, default_rules(), keep_cols=("url",), fields=("scrubbed_text", "overall_confidence"),
+    ).select("url", "final_keep", "scrubbed_text", "overall_confidence")
 
 
 def run_pipeline(spark, corpus_path: str) -> float:
-    """Flagship e2e — the full north-star stage list in ONE python stage
-    (:func:`fused_scan`), then Gopher quality exprs (JVM) → final keep."""
-    from pyspark.sql import functions as F
-
-    from safe_zone_spark.functions.perplexity import DEFAULT_PPL_MAX
-    from safe_zone_spark.functions.quality import gopher_quality_columns
+    """Flagship e2e (:func:`pipeline`) over the bench corpus."""
     from safe_zone_spark.plans.pipeline import ensure_parallelism
 
     raw = spark.read.parquet(corpus_path).select("url", "warc_ts", "html")
     # narrow end-to-end when the input already feeds every core; pay the
     # salted shuffle only if splits are too few (SURVEY §3.1)
-    out = fused_scan(ensure_parallelism(raw, CPUS * 2))
-    q = gopher_quality_columns("text")
-    final = out.select(
-        "url",
-        (F.col("keep") & q["quality_keep"] & (F.col("lang_pred") != "und")
-         & (F.col("ppl") <= DEFAULT_PPL_MAX)).alias("final_keep"),
-        "scrubbed_text",
-        "overall_confidence",
-    )
+    final = pipeline(ensure_parallelism(raw, CPUS * 2))
     t0 = time.time()
     force(final)
     return time.time() - t0
@@ -110,42 +89,11 @@ def main() -> None:
 
     corpus_path = ensure_corpus(spark)
 
-    # Warm the JVM AND the Python-worker pool through the real UDF path —
-    # a bare .count() leaves worker fork + module imports to the first
-    # timed query (round-1 bench: pii_contains 3.85s vs 0.79s for the
-    # strictly-heavier scrub_full, pure warmup pollution).
-    def warm(src: str) -> None:
-        from pyspark.sql import functions as F
-
-        from safe_zone_spark.functions.langid import langid_ngram_udf
-        from safe_zone_spark.operators.scan import scan
-        from safe_zone_spark.rules import default_rules
-
-        small = (
-            spark.read.parquet(src)
-            .limit(CPUS * 64)
-            .repartition(CPUS)  # touch every worker slot
-        )
-        text_col = "text" if "text" in small.columns else "html"
-        small = small.withColumn("text", F.col(text_col).cast("string"))
-        force(
-            scan(small, default_rules()).select(
-                "keep", langid_ngram_udf()(F.col("text")).alias("l")
-            )
-        )
-
-    def warm_fused(html_corpus: str) -> None:
-        """Warm the FUSED extract+scan+extra_scorers shape run_pipeline
-        uses (VERDICT r3: the first timed rep otherwise pays the
-        per-worker model build inside the timed window). Must read the
-        html-bearing bench corpus — extract_and_scan starts from raw
-        html, which the sf documents table doesn't carry."""
-        force(fused_scan(
-            spark.read.parquet(html_corpus).limit(CPUS * 64).repartition(CPUS)
-        ))
-
-    warm(f"{SF_DIR}/documents.parquet")
-    warm_fused(corpus_path)
+    # Warm the JVM and every Python worker slot through the flagship's
+    # crossing, which also loads each worker's models (VERDICT r3: the first
+    # timed rep otherwise pays that); the sf0.001 pass below warms each
+    # query's shape
+    force(pipeline(spark.read.parquet(corpus_path).limit(CPUS * 64).repartition(CPUS)))
 
     import __spark_entry__ as entry_mod
 

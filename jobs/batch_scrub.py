@@ -12,20 +12,40 @@ Run on a cluster (BASELINE.json north_rule):
         --run-id 2026-08-16 --units 4096
 
 Pipeline: read (url, warc_ts, html) → pick the pending work units (a
-url-only read less the units the manifest holds) → html→text extract +
-detect/scrub in one Arrow crossing → Gopher quality exprs → keep/drop →
-commit output partitioned by work unit → append lineage manifests. The
+url-only read less the units the manifest holds) → the flagship plan
+(plans/flagship.py) → commit ``final_keep``, ``lang_pred``, ``ppl`` and the
+scrub partitioned by work unit → append lineage manifests. The
 commit rebalances rows by unit: before the crossing when the input has
 fewer than two splits per core (that shuffle then also spreads the
 crossing over the cores), after the transform otherwise (see
 plans/pipeline.py). Re-running the same command after a failure resumes:
 the units the manifest holds for the run id are left out before any html
 is read.
+
+Units committed before the job wrote ``lang_pred`` and ``ppl`` lack both
+columns, and a resumed run writes its units with them: read such an
+output with ``mergeSchema`` (the old units' rows read both as null).
 """
 
 from __future__ import annotations
 
 import argparse
+
+
+def transform(df, rules):
+    """The job's commit columns: the flagship plan over the pending rows
+    (``unit``, ``url``, ``warc_ts`` and ``html``), with ``warc_date``."""
+    from pyspark.sql import functions as F
+
+    from safe_zone_spark.plans.flagship import flagship
+
+    return flagship(
+        df, rules, keep_cols=("unit", "url", "warc_ts"),
+        fields=("scrubbed_text", "overall_confidence", "breakdown"),
+    ).select(
+        "unit", "url", "warc_ts", F.to_date("warc_ts").alias("warc_date"), "final_keep",
+        "lang_pred", "ppl", "scrubbed_text", "overall_confidence", "breakdown",
+    )
 
 
 def main() -> None:
@@ -40,14 +60,10 @@ def main() -> None:
     p.add_argument("--blocklist", default="", help="comma-separated blocked terms")
     args = p.parse_args()
 
-    from pyspark.sql import functions as F
-
     from safe_zone_spark.session import session_builder
 
     spark = session_builder(f"safe-zone-scrub-{args.run_id}").getOrCreate()
 
-    from safe_zone_spark.functions.quality import gopher_quality_columns
-    from safe_zone_spark.operators.scan import extract_and_scan, scan
     from safe_zone_spark.plans.pipeline import run_with_manifest
     from safe_zone_spark.rules import default_rules
 
@@ -55,28 +71,10 @@ def main() -> None:
         blocklist=frozenset(t for t in args.blocklist.split(",") if t)
     )
 
-    def transform(df):
-        if "html" in df.columns:
-            out = extract_and_scan(
-                df, rules, keep_cols=("unit", "url", "warc_ts"),
-                fields=("keep", "scrubbed_text", "overall_confidence", "breakdown"),
-            )
-        else:
-            out = scan(df, rules)
-        q = gopher_quality_columns("text")
-        return (
-            out.withColumn("final_keep", F.col("keep") & q["quality_keep"])
-            .withColumn("warc_date", F.to_date("warc_ts"))
-            .select(
-                "unit", "url", "warc_ts", "warc_date", "final_keep",
-                "scrubbed_text", "overall_confidence", "breakdown",
-            )
-        )
-
     raw = spark.read.parquet(args.input)
     n = run_with_manifest(
         raw,
-        transform,
+        lambda df: transform(df, rules),
         output_path=args.output,
         manifest_path=args.manifest,
         run_id=args.run_id,

@@ -12,8 +12,9 @@ Run on a cluster (BASELINE.json north_rule):
         [--kept-table lake.db.kept_docs] [--continuous]
 
 Pipeline per micro-batch: readStream over arriving WARC-derived parquet →
-fused extract+scan → quality exprs → exactly-once sinks (kept docs,
-security events, lineage manifests — see streaming/pipeline.py's
+the flagship plan (plans/flagship.py) → exactly-once sinks (kept docs
+with ``lang_pred`` and ``ppl``, security events, lineage manifests — see
+streaming/pipeline.py's
 commit-marker idempotence). Default is one availableNow drain (cron-
 friendly: each invocation processes exactly the files that arrived since
 the last checkpoint, then exits); ``--continuous`` keeps the query

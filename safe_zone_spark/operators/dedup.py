@@ -506,7 +506,8 @@ def connected_components(
       Rounds needed = component diameter + 1; near-dup families pair
       densely, so 2-4 in practice;
     * not converged within ``_MINLABEL_ROUNDS`` (a deep component, e.g. a
-      boilerplate chain): the same edges go to
+      boilerplate chain): the same edges plus the (node, label) shortcuts
+      min-label has found go to
       :func:`connected_components_star`, O(log d) alternations, and one
       warning names both round counts.
 
@@ -600,9 +601,11 @@ def connected_components(
         labels = stepped.select("u", "label")
         if not stepped.agg(F.sum("changed")).collect()[0][0]:
             return labels
-    # partial labels would split clusters: resolve the same edges with star
+    # partial labels would split clusters: star resolves the same edges plus
+    # min-label's (u, label) shortcuts, which lie inside u's component
     star: dict = {}
-    labels = connected_components_star(adj, src="u", dst="v", stats=star)
+    shortcuts = labels.filter(F.col("u") != F.col("label")).select("u", F.col("label").alias("v"))
+    labels = connected_components_star(adj.union(shortcuts), src="u", dst="v", stats=star)
     stats.update(path="minlabel→star", star_rounds=star["star_rounds"])
     _log.warning(
         "connected_components: min-label did not converge in %d rounds; "

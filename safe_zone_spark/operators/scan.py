@@ -513,13 +513,25 @@ def _crossing_batch(names: list[str], arrays: list, texts: list, rules: RuleSet,
     return pa.RecordBatch.from_arrays(arrays, names=[*names, *appended.names])
 
 
-def _map_in_arrow(df, run, schema, n_passed: int):
-    """``df.mapInArrow(run(batch, appended), schema)``, where ``appended`` is
-    the Arrow schema of ``schema``'s fields after the first ``n_passed``."""
+def _fields(fields) -> tuple[str, ...]:
+    """``fields`` (all when None) in SCAN_OUTPUT_FIELDS order, as emitted."""
+    return tuple(f for f in SCAN_OUTPUT_FIELDS if f in (fields or SCAN_OUTPUT_FIELDS))
+
+
+def _map_in_arrow(df, run, passed, fields: tuple[str, ...], extra_scorers: dict):
+    """``df.mapInArrow`` returning the ``passed`` StructFields, then the scan
+    ``fields``, then one column per extra scorer (``{name: (type, fn)}``, the
+    type a DataType or DDL string); ``run(batch, appended)`` gets the Arrow
+    schema of the columns after ``passed``."""
+    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_type
 
-    appended = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schema.fields[n_passed:]])
-    return df.mapInArrow(lambda batches: (run(b, appended) for b in batches), schema)
+    added = [f for f in scan_output_schema(T.StructType()).fields if f.name in fields] + [
+        T.StructField(name, t if isinstance(t, T.DataType) else T._parse_datatype_string(t))
+        for name, (t, _) in extra_scorers.items()]
+    appended = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in added])
+    return df.mapInArrow(lambda batches: (run(b, appended) for b in batches),
+                         T.StructType([*passed, *added]))
 
 
 def extract_and_scan(
@@ -540,14 +552,11 @@ def extract_and_scan(
     scrubbed_text) should say so: detections arrays, breakdown maps and
     messages are the bulk of both the return payload and the per-doc work.
 
-    ``extra_scorers`` fuses additional per-text batch scorers into the SAME
-    crossing: ``{col_name: (spark_type_ddl, fn)}`` where ``fn`` takes the
-    extracted text pd.Series and returns a same-length sequence. The
-    north-star chain (langid + perplexity after extract+scan) rides here —
-    each dropped Python stage saves a full serialize/deserialize of the text
-    column plus a stage scheduling barrier. ``fn`` must be a module-level
-    callable (or close over module-level state) so executors rebuild any
-    model it uses on import, exactly like the standalone UDFs.
+    ``extra_scorers`` fuses per-text batch scorers into the SAME crossing
+    (langid and perplexity in ``plans.flagship``): ``{col_name:
+    (spark_type_ddl, fn)}``, ``fn`` taking the text pd.Series and returning
+    a same-length sequence; it must be module-level (or close over
+    module-level state) so executors rebuild its model on import.
 
     The stage reads the html as Arrow binary and returns one
     ``pa.RecordBatch`` per input batch: the kept columns are the input
@@ -564,18 +573,9 @@ def extract_and_scan(
 
     from ..sources.corpus import extract_text_from_html
 
-    fields = tuple(f for f in SCAN_OUTPUT_FIELDS if f in (fields or SCAN_OUTPUT_FIELDS))
+    fields = _fields(fields)
     extra_scorers = extra_scorers or {}
     passed = list(keep_cols) + ["text"]
-    full = scan_output_schema(T.StructType(
-        [df.schema[c] for c in keep_cols] + [T.StructField("text", T.StringType())]))
-    schema = T.StructType(
-        [f for f in full.fields if f.name in passed or f.name in fields]
-        + [T.StructField(
-            name,
-            t if isinstance(t, T.DataType) else T._parse_datatype_string(t),
-        ) for name, (t, _) in extra_scorers.items()]
-    )
 
     def run(batch, appended):
         texts = [extract_text_from_html(h) for h in batch.column(html_col).to_pylist()]
@@ -586,8 +586,9 @@ def extract_and_scan(
     # explicit projection (guide §4.1): Catalyst cannot see which columns an
     # opaque Python map touches, so every input column would cross the
     # Arrow boundary — select exactly the kept columns + html
+    text = T.StructField("text", T.StringType())
     return _map_in_arrow(df.select(*dict.fromkeys(list(keep_cols) + [html_col])), run,
-                         schema, len(passed))
+                         [*(df.schema[c] for c in keep_cols), text], fields, extra_scorers)
 
 
 def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_id",
@@ -645,6 +646,8 @@ def scan(
     mode: str | None = None,
     validator_names: tuple[str, ...] = (),
     expected_format_col: str | None = None,
+    fields: tuple[str, ...] | None = None,
+    extra_scorers: "dict[str, tuple[str, object]] | None" = None,
 ):
     """DataFrame → DataFrame: append detection/decision columns.
 
@@ -652,7 +655,8 @@ def scan(
     pipeline. The rule bundle is shipped via Spark broadcast so executors
     deserialize it once per task-set instead of once per task closure. The
     input columns cross as one Arrow batch and return as the same arrays,
-    in one ``mapInArrow`` stage (see :func:`extract_and_scan`).
+    in one ``mapInArrow`` stage, followed by the ``fields`` (all when None)
+    and the ``extra_scorers`` of ``text_col`` (see :func:`extract_and_scan`).
 
     ``expected_format_col`` names a string column of per-row validator names
     (null/'' = none), set-unioned with the job-global ``validator_names``
@@ -661,12 +665,14 @@ def scan(
     rules = rules or default_rules()
     mode_resolved = mode or rules.mode or "MASK"
     b_rules = df.sparkSession.sparkContext.broadcast(rules)
+    fields = _fields(fields)
+    extra_scorers = extra_scorers or {}
 
     def run(batch, appended):
         fmts = batch.column(expected_format_col).to_pylist() if expected_format_col else None
         return _crossing_batch(batch.schema.names, batch.columns,
                                batch.column(text_col).to_pylist(), b_rules.value, appended,
-                               SCAN_OUTPUT_FIELDS, {}, mode=mode_resolved,
+                               fields, extra_scorers, mode=mode_resolved,
                                validator_names=validator_names, expected_formats=fmts)
 
-    return _map_in_arrow(df, run, scan_output_schema(df.schema), len(df.columns))
+    return _map_in_arrow(df, run, df.schema.fields, fields, extra_scorers)

@@ -51,11 +51,15 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 UNIT_COL = "unit"
+
+_log = logging.getLogger(__name__)
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, *, key_col: str = "url",
@@ -103,12 +107,14 @@ def ensure_parallelism(df: DataFrame, min_partitions: int, *, key_col: str = "ur
 
     The width is :func:`_planned_width`'s, read without a Spark job. A
     rebalanced input (as ``run_with_manifest`` hands its transform when the
-    scan is narrow) is returned as is: its producer chose its layout."""
+    scan is narrow) is returned as is: its producer chose its layout. One
+    INFO line says which way it went."""
     width = _planned_width(df)
     cores = df.sparkSession.sparkContext.defaultParallelism
-    if width is None or width >= min(min_partitions, cores):
-        return df
-    return salted_repartition(df, min_partitions, key_col=key_col, salt=salt)
+    salted = width is not None and width < min(min_partitions, cores)
+    _log.info("ensure_parallelism: %s (planned width %s, %d cores, min_partitions %d)",
+              "salted" if salted else "not salted", width, cores, min_partitions)
+    return salted_repartition(df, min_partitions, key_col=key_col, salt=salt) if salted else df
 
 
 def assign_units(df: DataFrame, num_units: int, *, key_col: str = "url",
@@ -232,7 +238,8 @@ def run_with_manifest(
     expressions, ``mapInArrow``, ``mapInPandas``). Otherwise ``transform``
     receives the narrow scan and its output is rebalanced. The rebalance
     needs AQE; without it the hint plans a plain hash exchange on ``unit``
-    and one task writes each unit."""
+    and one task writes each unit. One INFO line says where the rebalance
+    ran and why."""
     spark = df.sparkSession
     manifest = read_manifest(spark, manifest_path)
     done = set() if manifest is None else {
@@ -247,7 +254,10 @@ def run_with_manifest(
     # under two splits per core, one rebalance at the input feeds the
     # crossing and lays out the write (a measured choice: see the module doc)
     width = _planned_width(pending)
-    narrow = width is not None and width < 2 * spark.sparkContext.defaultParallelism
+    cores = spark.sparkContext.defaultParallelism
+    narrow = width is not None and width < 2 * cores
+    _log.info("run_with_manifest: %d units pending; rebalanced by unit at the %s (%s input "
+              "splits, %d cores)", len(units), "input" if narrow else "output", width, cores)
     out = transform(pending.hint("rebalance", UNIT_COL) if narrow else pending)
     if UNIT_COL not in out.columns:
         raise ValueError("transform must preserve the unit column")

@@ -90,8 +90,23 @@ def write_days_partitioned(
     return "parquet"
 
 
+def add_missing_columns(df: DataFrame, table: str) -> None:
+    """Schema evolution before an append: ``ALTER TABLE … ADD COLUMNS`` for
+    each column of ``df`` that ``table`` lacks (say, a kept-docs table
+    created before the sink wrote ``lang_pred`` and ``ppl``). An append
+    with more columns than the table fails; rows already written read the
+    added columns as null."""
+    spark = df.sparkSession
+    have = {c.lower() for c in spark.table(table).columns}
+    new = [f for f in df.schema.fields if f.name.lower() not in have]
+    if new:
+        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in new)
+        spark.sql(f"ALTER TABLE {table} ADD COLUMNS ({cols})")
+
+
 def append_or_create(df: DataFrame, table: str, *, ts_col: str = "warc_ts") -> None:
-    """Append to an Iceberg table, creating it (hidden days(ts_col)
+    """Append to an Iceberg table, adding the columns it lacks
+    (:func:`add_missing_columns`), or create it (hidden days(ts_col)
     partitioning) on first write. The existence check is EXPLICIT —
     an except-Exception around create() would misread permission/schema/
     catalog errors as 'table exists' and fail later with an unrelated
@@ -99,6 +114,7 @@ def append_or_create(df: DataFrame, table: str, *, ts_col: str = "warc_ts") -> N
     from pyspark.sql.functions import days
 
     if df.sparkSession.catalog.tableExists(table):
+        add_missing_columns(df, table)
         df.writeTo(table).append()
         return
     try:
@@ -108,6 +124,7 @@ def append_or_create(df: DataFrame, table: str, *, ts_col: str = "warc_ts") -> N
         # appeared since the check, the create loser appends; any OTHER
         # create failure (permissions, schema, catalog) re-raises intact
         if df.sparkSession.catalog.tableExists(table):
+            add_missing_columns(df, table)
             df.writeTo(table).append()
         else:
             raise

@@ -1,11 +1,14 @@
 """End-to-end streaming corpus pipeline (SURVEY §7.1 step 8).
 
-``readStream`` over arriving WARC-derived parquet → extract → quality exprs
-→ detect/scrub → ``foreachBatch``: per micro-batch, atomically append
+``readStream`` over arriving WARC-derived parquet → the flagship plan
+(plans/flagship.py: extract, detect/scrub, langid and perplexity in one
+Arrow crossing, Gopher quality exprs, ``final_keep``) → ``foreachBatch``:
+per micro-batch, atomically append
 
-* kept scrubbed documents, partitioned by ``warc_date`` (the parquet
-  fallback of Iceberg's hidden ``days(warc_ts)`` partitioning — swap the
-  writer for ``.writeTo(table)`` when an Iceberg catalog is configured),
+* kept scrubbed documents with their ``lang_pred`` and ``ppl``,
+  partitioned by ``warc_date`` (the parquet fallback of Iceberg's hidden
+  ``days(warc_ts)`` partitioning — swap the writer for ``.writeTo(table)``
+  when an Iceberg catalog is configured),
 * one security-event row per kept detection (E1),
 * one lineage-manifest row per micro-batch (L1): doc counts, kept counts,
   input fingerprint — the streaming twin of plans/run_with_manifest, with
@@ -22,6 +25,11 @@ crash between the three sink writes. The sink makes replays idempotent:
   different run into the same directory can never touch this run's
   partitions.
 
+Batches committed before the sink wrote ``lang_pred`` and ``ppl`` lack
+both: an Iceberg table gains them before the next append
+(``sinks.iceberg.add_missing_columns``); a parquet ``kept_docs`` is read
+with ``mergeSchema``, the old rows reading null.
+
 Net effect: exactly-once per (run, batch). Resume = Structured Streaming
 checkpointing; the manifest table lets an auditor verify which inputs
 reached the sink (BASELINE.json north_rule). The Iceberg path gets the
@@ -34,10 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.quality import gopher_quality_columns
-from ..operators.scan import extract_and_scan
+from ..plans.flagship import flagship
 from ..plans.pipeline import commit_stamp, manifest_aggs, read_manifest
-from ..rules import RuleSet, default_rules
+from ..rules import RuleSet
 
 # The streaming manifest's columns, in write order (one row per micro-batch).
 STREAM_MANIFEST_SCHEMA = ("n_docs bigint, n_kept bigint, input_fingerprint bigint, "
@@ -53,16 +60,13 @@ def build_stream(spark: SparkSession, source_dir: str, *, schema,
 
 
 def transform(docs: DataFrame, rules: RuleSet | None = None) -> DataFrame:
-    """The same stages as the batch flagship — streaming DataFrames accept
-    mapInArrow unchanged (narrow map stages). Fused extract+scan = one
-    Arrow crossing that builds only the scan fields the sinks read
-    (:func:`write_batch_sinks`); quality exprs JVM-side after it."""
-    rules = rules or default_rules()
-    out = extract_and_scan(docs, rules, keep_cols=("url", "warc_ts"),
-                           fields=("keep", "scrubbed_text", "overall_confidence", "detections"))
-    q = gopher_quality_columns("text")
-    return out.withColumn(
-        "final_keep", F.col("keep") & q["quality_keep"]
+    """The flagship plan (:func:`..plans.flagship.flagship`) with the scan
+    fields the sinks read (:func:`write_batch_sinks`) and the kept docs'
+    ``warc_date`` partition. Streaming DataFrames accept its ``mapInArrow``
+    unchanged (a narrow map stage)."""
+    return flagship(
+        docs, rules, keep_cols=("url", "warc_ts"),
+        fields=("scrubbed_text", "overall_confidence", "detections"),
     ).withColumn("warc_date", F.to_date("warc_ts"))
 
 
@@ -99,7 +103,7 @@ def write_batch_sinks(batch_df: DataFrame, out_dir: str, run_id: str, batch_id: 
         batch_df.filter(F.col("final_keep"))
         .crossJoin(stamp)
         .select("url", "warc_ts", "warc_date", "scrubbed_text", "overall_confidence",
-                F.lit(run_id).alias("run_id"), "batch_id")
+                "lang_pred", "ppl", F.lit(run_id).alias("run_id"), "batch_id")
     )
     if kept_table is not None:
         from ..sinks.iceberg import append_or_create, delete_batch_rows

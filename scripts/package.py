@@ -19,10 +19,10 @@ sys.path.insert(0, REPO)
 from safe_zone_spark.functions.model_store import all_specs, model_table_path  # noqa: E402
 
 
-def main() -> str:
+def build(dist: str) -> str:
+    """Write ``<dist>/safe_zone_spark.zip`` and return its path."""
     # raises unless each table is in the package under the loaded model's key
     tables = [os.path.relpath(p, REPO) for spec in all_specs() for p in model_table_path(spec)]
-    dist = os.path.join(REPO, "dist")
     os.makedirs(dist, exist_ok=True)
     out = shutil.make_archive(
         os.path.join(dist, "safe_zone_spark"), "zip", REPO, "safe_zone_spark"
@@ -31,9 +31,8 @@ def main() -> str:
         missing = set(tables) - set(z.namelist())
     if missing:
         raise SystemExit(f"{out} lacks the model tables {sorted(missing)}")
-    print(out)
     return out
 
 
 if __name__ == "__main__":
-    main()
+    print(build(os.path.join(REPO, "dist")))

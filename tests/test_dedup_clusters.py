@@ -183,6 +183,22 @@ def test_cc_deep_path_escalates_to_star(spark, monkeypatch):
     assert len(labels) == 31 and set(labels.values()) == {300}
 
 
+def test_cc_escalation_keeps_minlabel_progress(spark, monkeypatch):
+    """A graph deeper than the min-label budget escalates after it, and
+    star starts from min-label's labels, not from scratch: it gives
+    star-alone's labels in fewer alternations than star alone."""
+    edges = [(p * 100 + i, p * 100 + i + 1) for p in range(4) for i in range(63)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")  # four 64-node paths
+    alone: dict = {}
+    want = {r["u"]: r["label"] for r in connected_components_star(df, stats=alone).collect()}
+    _distributed(monkeypatch)
+    stats: dict = {}
+    assert _labels(df, stats=stats) == want
+    assert set(want.values()) == {0, 100, 200, 300}
+    assert stats["path"] == "minlabel→star" and stats["minlabel_rounds"] == 12
+    assert 0 < stats["star_rounds"] < alone["star_rounds"]
+
+
 def test_cc_shallow_cliques_stay_on_minlabel(spark, monkeypatch):
     """Dense near-dup families (10-node cliques, diameter 1) converge in two
     min-label rounds: one that labels, one that sees no change."""

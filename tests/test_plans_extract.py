@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import contextlib
+import logging
 import re
 
 import pyspark.sql.functions as F
@@ -337,6 +338,37 @@ def test_ensure_parallelism_runs_no_job(spark, multi_split_corpus, tmp_path):
     assert all(out is df for out, df in zip(kept_out, kept))
     for out in narrow_out:
         assert "REPARTITION_BY_NUM" in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_layout_decisions_are_logged(spark, corpus, multi_split_corpus, tmp_path, caplog):
+    """``ensure_parallelism`` and ``run_with_manifest`` each log one INFO
+    line naming the layout they chose and the widths it came from."""
+    caplog.set_level(logging.INFO, logger="safe_zone_spark.plans.pipeline")
+    ensure_parallelism(corpus.coalesce(1), 8)
+    ensure_parallelism(multi_split_corpus, 4)
+    assert [r.getMessage() for r in caplog.records] == [
+        "ensure_parallelism: salted (planned width 1, 4 cores, min_partitions 8)",
+        "ensure_parallelism: not salted (planned width "
+        f"{multi_split_corpus.rdd.getNumPartitions()}, 4 cores, min_partitions 4)",
+    ]
+    one_file = str(tmp_path / "one_file")
+    corpus.coalesce(1).write.parquet(one_file)
+    caplog.clear()
+    spark.conf.set("spark.sql.files.minPartitionNum", "8")
+    try:
+        for name, df in (("narrow", spark.read.parquet(one_file)), ("wide", multi_split_corpus)):
+            assert run_with_manifest(
+                df, _keep_all, output_path=str(tmp_path / name / "out"),
+                manifest_path=str(tmp_path / name / "m"), run_id="r", num_units=4,
+            ) == 4
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    assert [r.getMessage() for r in caplog.records] == [
+        "run_with_manifest: 4 units pending; rebalanced by unit at the input "
+        "(1 input splits, 4 cores)",
+        "run_with_manifest: 4 units pending; rebalanced by unit at the output "
+        "(8 input splits, 4 cores)",
+    ]
 
 
 def test_resume_without_manifest_rows_runs_every_unit(spark, corpus, tmp_path):

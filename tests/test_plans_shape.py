@@ -61,12 +61,10 @@ def test_filters_pushed_below_scan_not_udf(spark):
 
 def test_flagship_plan_is_one_narrow_arrow_stage(spark, tmp_path):
     """Over a scan with at least one split per core, the flagship plan
-    (``ensure_parallelism(…, 2 × cores)`` → ``extract_and_scan`` with the
-    langid and perplexity scorers → quality → noop) runs no shuffle and
-    crosses into Python once."""
-    from safe_zone_spark.functions.langid import classify_series
-    from safe_zone_spark.functions.perplexity import perplexity_series
-    from safe_zone_spark.operators.scan import extract_and_scan
+    (``ensure_parallelism(…, 2 × cores)`` → ``plans.flagship``: extract,
+    scan, langid and perplexity → quality → keep → noop) runs no shuffle
+    and crosses into Python once."""
+    from safe_zone_spark.plans.flagship import flagship
     from safe_zone_spark.plans.pipeline import ensure_parallelism
     from safe_zone_spark.rules import default_rules
 
@@ -75,15 +73,10 @@ def test_flagship_plan_is_one_narrow_arrow_stage(spark, tmp_path):
     raw = spark.read.parquet(path).select("url", "warc_ts", "html")
     cores = spark.sparkContext.defaultParallelism
     assert raw.rdd.getNumPartitions() >= cores
-    out = extract_and_scan(
+    final = flagship(
         ensure_parallelism(raw, 2 * cores), default_rules(), keep_cols=("url",),
-        fields=("keep", "scrubbed_text", "overall_confidence"),
-        extra_scorers={"lang_pred": ("string", classify_series),
-                       "ppl": ("double", perplexity_series)},
-    )
-    q = gopher_quality_columns("text")
-    final = out.select("url", (F.col("keep") & q["quality_keep"]).alias("final_keep"),
-                       "scrubbed_text", "overall_confidence", "lang_pred", "ppl")
+        fields=("scrubbed_text", "overall_confidence"),
+    ).select("url", "final_keep", "scrubbed_text", "overall_confidence", "lang_pred", "ppl")
     plan = plan_of(final)
     assert "Exchange" not in plan
     assert plan.count("MapInArrow") == 1

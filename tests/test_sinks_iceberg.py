@@ -10,7 +10,11 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from safe_zone_spark.sinks.iceberg import iceberg_available, write_days_partitioned
+from safe_zone_spark.sinks.iceberg import (
+    add_missing_columns,
+    iceberg_available,
+    write_days_partitioned,
+)
 
 ICEBERG = None  # resolved lazily against the shared session
 
@@ -47,6 +51,32 @@ def test_fallback_requires_dir(spark):
     )
     with pytest.raises(RuntimeError, match="parquet_fallback_dir"):
         write_days_partitioned(df, "lake.db.x")
+
+
+def test_append_adds_the_columns_an_existing_table_lacks(spark, tmp_path):
+    """A kept-docs table created before the sink wrote ``lang_pred`` and
+    ``ppl`` gains both before the next append; old rows read them as null,
+    and a second call alters nothing. A parquet table in the session
+    catalog takes the same ALTER as an Iceberg one (its v1 writer takes no
+    ``writeTo`` append, so the append itself runs only on Iceberg)."""
+    spark.sql("DROP TABLE IF EXISTS kept_evolve")
+    spark.sql(f"CREATE TABLE kept_evolve (url string, warc_ts timestamp) USING parquet "
+              f"LOCATION '{tmp_path / 'kept_evolve'}'")
+    try:
+        spark.sql("INSERT INTO kept_evolve VALUES ('u0', TIMESTAMP '2026-01-01 00:00:00')")
+        df = spark.range(1).select(
+            F.lit("u1").alias("url"), F.current_timestamp().alias("warc_ts"),
+            F.lit("en").alias("lang_pred"), F.lit(12.5).alias("ppl"),
+        )
+        add_missing_columns(df, "kept_evolve")
+        table = spark.table("kept_evolve")
+        assert table.columns == ["url", "warc_ts", "lang_pred", "ppl"]
+        assert dict(table.dtypes)["ppl"] == "double"
+        assert table.select("lang_pred", "ppl").collect() == [(None, None)]
+        add_missing_columns(df.select("url", "lang_pred"), "kept_evolve")
+        assert spark.table("kept_evolve").columns == ["url", "warc_ts", "lang_pred", "ppl"]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS kept_evolve")
 
 
 @pytest.mark.skipif(True, reason="iceberg-spark-runtime jar not available in sandbox")
