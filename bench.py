@@ -82,10 +82,14 @@ def main() -> None:
     # of 2 reps where 4 manual warm reps read 1.8-2.2 s
     reps = int(os.environ.get("BENCH_REPS", "3"))
 
+    import __spark_entry__ as entry_mod
     from safe_zone_spark.session import session_builder
 
     spark = session_builder(f"szs-bench-{CPUS}", cores=CPUS).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    # the corpus is generated by Python workers: ship the package first, so
+    # they import it from any working directory
+    entry_mod._ensure_shipped(spark)
 
     corpus_path = ensure_corpus(spark)
 
@@ -94,8 +98,6 @@ def main() -> None:
     # timed rep otherwise pays that); the sf0.001 pass below warms each
     # query's shape
     force(pipeline(spark.read.parquet(corpus_path).limit(CPUS * 64).repartition(CPUS)))
-
-    import __spark_entry__ as entry_mod
 
     timings: dict[str, float] = {}
     # full warm pass at the smallest sf: JIT + codegen + python-worker

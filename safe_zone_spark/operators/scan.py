@@ -5,7 +5,9 @@ The reference processes one HTTP request at a time
 Arrow batch of documents flows through ``mapInArrow`` at once, and each
 needle — the blocklist words (sorted, as escaped regexes) then the active
 patterns in table order — follows one rule, domain × window × mode, all
-read from Python's own parse of the needle's regex (``_plan``):
+read from the one walk of the needle's bytes parse that also decides it is
+RE2 syntax (``rules._plan``; a rule outside RE2's syntax never reaches the
+scan, as in the reference's ``regexp.Compile``):
 
 * **domain** — the docs holding every *factor* of the regex, a set of
   byte strings one of which each match must contain (a required byte
@@ -17,8 +19,7 @@ read from Python's own parse of the needle's regex (``_plan``):
   byte of its rarest one-byte factor. Runs come from a ``bytes.translate``
   mark and C-level ``find``: from each anchor byte when anchors × width <
   alphabet bytes in the batch, else from ``find(b"\\x01" * width)``. A
-  needle with a lookaround or a minimum width of 0 has one window, its
-  whole domain;
+  needle of minimum width 0 has one window, its whole domain;
 * **mode** — a blob-safe needle runs finditer per window of its domain's
   NUL-joined sub-blob and routes matches back to docs with one vectorized
   ``np.searchsorted`` over the doc starts; a needle that could match the
@@ -66,9 +67,7 @@ import functools
 import re
 from dataclasses import replace
 from itertools import repeat
-from re import _constants as C
-from re import _parser
-from typing import Iterator, NamedTuple
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -83,7 +82,7 @@ from ..oracle import (
     round_confidence,
     scrub_text,
 )
-from ..rules import RuleSet, compile_bytes_regex, compile_patterns, default_rules
+from ..rules import Plan, RuleSet, _plan, compile_patterns, default_rules
 from ..validators import validate_format
 
 # Appended by scan(); every input column is passed through unchanged.
@@ -135,126 +134,6 @@ def _join(parts: list[bytes]) -> tuple[bytes, np.ndarray]:
     if n > 1:
         np.cumsum(lengths[:-1] + 1, out=starts[1:])
     return _SEP.join(parts), starts
-
-
-_ALL = frozenset(range(256))
-_DIGIT, _SPACE = frozenset(b"0123456789"), frozenset(b" \t\n\r\f\v")
-_WORD = _DIGIT | frozenset(b"_abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
-# in a bytes regex \d \s \w and their complements are ASCII classes
-_CATEGORY = {C.CATEGORY_DIGIT: _DIGIT, C.CATEGORY_SPACE: _SPACE, C.CATEGORY_WORD: _WORD,
-             C.CATEGORY_NOT_DIGIT: _ALL - _DIGIT, C.CATEGORY_NOT_SPACE: _ALL - _SPACE,
-             C.CATEGORY_NOT_WORD: _ALL - _WORD}
-
-
-def _node_bytes(op, av) -> frozenset[int] | None:
-    """The bytes a one-byte node can match, case-sensitively, or ``None``
-    for any other node."""
-    if op is C.LITERAL:
-        return frozenset((av,))
-    if op is C.NOT_LITERAL:
-        return _ALL - {av}
-    if op is C.ANY:
-        return _ALL
-    if op is not C.IN:
-        return None
-    got = set()
-    for iop, iav in av:
-        if iop is C.LITERAL:
-            got.add(iav)
-        elif iop is C.RANGE:
-            got.update(range(iav[0], iav[1] + 1))
-        elif iop is C.CATEGORY and iav in _CATEGORY:
-            got |= _CATEGORY[iav]
-        elif iop is not C.NEGATE:  # unknown item: any byte
-            return _ALL
-    return _ALL - got if av and av[0][0] is C.NEGATE else frozenset(got)
-
-
-def _fold(got: frozenset[int]) -> frozenset[int]:
-    """``got`` with the other case of each ASCII letter: all that a bytes
-    regex's IGNORECASE folds."""
-    return got | {b ^ 32 for b in got if 97 <= b | 32 <= 122}
-
-
-class Plan(NamedTuple):
-    """How one needle is scanned, read from its regex's bytes parse."""
-
-    safe: bool  # no node can match byte 0 and no anchor but \b: blob mode
-    icase: bool
-    factors: tuple[frozenset[bytes], ...]  # every match holds a string of each
-    # every byte a match can hold (both cases only in a (?i) scope), or None:
-    # the needle scans its whole domain (not blob-safe, a lookaround, width 0)
-    alphabet: frozenset[int] | None
-    width: int  # the shortest match's length
-
-
-@functools.cache
-def _plan(source: str) -> Plan:
-    """The needle's :class:`Plan` from the regex's bytes parse. Blob-safe:
-    no node can match byte 0 and no anchor but ``\\b``. Every match holds
-    a string of each factor: a required byte class (ASCII-folded); a run of
-    2+ required literals (lowercased under ``(?i)``); one factor per
-    alternation branch, unioned. Min-0 repeats and lookarounds add none; an
-    unknown opcode adds none and is unsafe. The alphabet is the union of
-    every consuming node's bytes, folded only inside an IGNORECASE scope. A
-    plan may widen a scan, never drop a match."""
-    tree = _parser.parse(source.encode("utf-8"))
-    icase = bool(tree.state.flags & C.SRE_FLAG_IGNORECASE)
-    if tree.state.flags & C.SRE_FLAG_LOCALE:  # locale classes and folding
-        return Plan(False, icase, (), None, 0)
-    safe, lookaround, alphabet = True, False, set()
-
-    def walk(seq, runs: bool, fold: bool) -> list[frozenset[bytes]]:
-        # runs=False in a case-sensitive regex's (?i:…) group (raw-blob find);
-        # fold: inside an IGNORECASE scope
-        nonlocal safe, lookaround
-        out: list[frozenset[bytes]] = []
-        run = bytearray()
-        for op, av in [*seq, (None, None)]:
-            got = _node_bytes(op, av)
-            if got is not None:
-                folded = _fold(got)
-                alphabet.update(folded if fold else got)
-                safe &= 0 not in folded
-            if op is C.LITERAL and runs:
-                run.append(av)
-                continue
-            if run:
-                out.append(frozenset(bytes((b,)) for b in _fold({run[0]})) if len(run) == 1
-                           else frozenset((bytes(run).lower() if icase else bytes(run),)))
-            run.clear()
-            if got is not None:
-                out.append(frozenset(bytes((b,)) for b in folded))
-            elif op is C.SUBPATTERN and not av[1] & C.SRE_FLAG_LOCALE:
-                add, drop = av[1] & C.SRE_FLAG_IGNORECASE, av[2] & C.SRE_FLAG_IGNORECASE
-                out += walk(av[3], runs and (icase or not add), (fold or add) and not drop)
-            elif op is C.BRANCH:
-                branches = [walk(b, runs, fold) for b in av[1]]
-                if all(branches):
-                    out.append(frozenset().union(
-                        *(min(b, key=lambda f: (-min(map(len, f)), len(f))) for b in branches)))
-            elif op in (C.MAX_REPEAT, C.MIN_REPEAT, C.POSSESSIVE_REPEAT):
-                inner = walk(av[2], runs, fold)
-                out += inner if av[0] else []
-            elif op is C.ATOMIC_GROUP:
-                out += walk(av, runs, fold)
-            elif op is C.ASSERT or op is C.ASSERT_NOT:
-                lookaround = True  # it reads bytes outside the match
-                walk(av[1], runs, fold)
-            elif op is C.AT:
-                safe &= av is C.AT_BOUNDARY  # \B matches an empty doc's NUL
-            elif op is not None:
-                safe = False
-        return out
-
-    factors = walk(tree, True, icase)
-    # drop a factor that holds all of another's strings (it admits every doc
-    # the other does); one-byte factors first, as they only read the table
-    factors = [f for f in dict.fromkeys(factors) if not any(g < f for g in factors)]
-    width = tree.getwidth()[0]
-    windowed = safe and not lookaround and width > 0
-    return Plan(safe, icase, tuple(sorted(factors, key=lambda f: max(map(len, f)) > 1)),
-                frozenset(alphabet) if windowed else None, width)
 
 
 @functools.cache
@@ -315,13 +194,14 @@ def _factor_docs(factor, table: np.ndarray, hay: bytes, starts: np.ndarray) -> n
 
 
 def _needles(rules: RuleSet) -> list[tuple]:
-    """``(type, regex, compiled, placeholder, score, allowlist)`` in candidate
-    order: sorted blocklist words as escaped regexes, then active patterns."""
-    out = [("BLOCKLIST", src, compile_bytes_regex(src), "[BLOCKED]", 1.0, frozenset())
-           for src in (re.escape(w) for w in sorted(rules.blocklist) if w)]
-    for p, compiled in compile_patterns(rules):
+    """``(type, plan, placeholder, score, allowlist)`` in candidate order:
+    sorted blocklist words as escaped regexes, then the active patterns in
+    RE2's syntax."""
+    out = [("BLOCKLIST", _plan(re.escape(w)), "[BLOCKED]", 1.0, frozenset())
+           for w in sorted(rules.blocklist) if w]
+    for p, _ in compile_patterns(rules):
         score = round_confidence(compute_confidence(category=p.category, active=p.is_active))
-        out.append((p.name, p.regex, compiled, make_placeholder(p.name), score, rules.allowlist))
+        out.append((p.name, _plan(p.regex), make_placeholder(p.name), score, rules.allowlist))
     return out
 
 
@@ -343,8 +223,7 @@ def _scan_blob(encoded: list[bytes], blob: bytes, starts: np.ndarray,
                   for k in range(0, len(codes), 1 << 20)), np.zeros(256, dtype=np.int64))
     hays = {False: blob, True: blob.lower()}
     masks, domains = {}, {}
-    for name, source, compiled, placeholder, score, allow in _needles(rules):
-        plan = _plan(source)
+    for name, plan, placeholder, score, allow in _needles(rules):
         admit = np.ones(n_docs, dtype=bool)
         for factor in plan.factors:
             if (plan.icase, factor) not in masks:
@@ -362,13 +241,13 @@ def _scan_blob(encoded: list[bytes], blob: bytes, starts: np.ndarray,
             continue
         if not plan.safe:
             hits = ((i, encoded[i], 0, m.span())
-                    for i in docs for m in compiled.finditer(encoded[i]))
+                    for i in docs for m in plan.compiled.finditer(encoded[i]))
         else:
             if plan.alphabet is None:
-                spans = [m.span() for m in compiled.finditer(sub)]
+                spans = [m.span() for m in plan.compiled.finditer(sub)]
             else:  # endpos e + 1 lets \b see sub[e], which no match can hold
                 spans = [m.span() for s, e in _windows(sub, plan, counts)
-                         for m in compiled.finditer(sub, s, e + 1)]
+                         for m in plan.compiled.finditer(sub, s, e + 1)]
             local = np.searchsorted(sub_starts, [s for s, _ in spans], side="right") - 1
             # plain ints: per-match numpy scalar indexing is measurably slower
             hits = zip([docs[j] for j in local.tolist()], repeat(sub),

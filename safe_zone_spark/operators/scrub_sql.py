@@ -33,7 +33,7 @@ from __future__ import annotations
 import re
 
 from ..oracle import compute_confidence, round_confidence
-from ..rules import RuleSet
+from ..rules import RuleSet, compile_patterns
 
 
 def _sq(s: str) -> str:
@@ -71,7 +71,7 @@ def _candidate_union(rules: RuleSet) -> str:
     for w_i, word in enumerate(sorted(rules.blocklist)):
         selects.append(one(re.escape(word), "BLOCKLIST", "[BLOCKED]", 1.0, w_i))
     base = len(rules.blocklist)
-    for p_i, p in enumerate(rules.active_patterns()):
+    for p_i, (p, _) in enumerate(compile_patterns(rules)):  # RE2-syntax rules only
         conf = round_confidence(
             compute_confidence(category=p.category, active=p.is_active)
         )

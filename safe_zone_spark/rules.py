@@ -22,10 +22,15 @@ text. This pins three semantics to the Go reference in one move:
 from __future__ import annotations
 
 import functools
+import logging
 import re
+import warnings
 from dataclasses import dataclass, field
 from re import _constants as C
 from re import _parser
+from typing import NamedTuple
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -169,67 +174,176 @@ def default_rules(**overrides) -> RuleSet:
 
 
 # ---------------------------------------------------------------------------
-# Compiled-regex cache (per process; executors hit this once per pattern).
-# Mirrors guardrails.go:19-32 getCachedRegex.
+# The pattern language: RE2's syntax, decided by one walk of one parse.
 # ---------------------------------------------------------------------------
 
-def _captures_under_possessive(seq, inside: bool = False) -> bool:
-    """Whether a capturing group sits inside a possessive repeat's body."""
-    for op, av in seq:
-        if inside and op is C.SUBPATTERN and av[0] is not None:
-            return True
-        nested = inside or op is C.POSSESSIVE_REPEAT
-        stack = [av]
-        while stack:
-            x = stack.pop()
-            if isinstance(x, _parser.SubPattern):
-                if _captures_under_possessive(x, nested):
-                    return True
-            elif isinstance(x, (tuple, list)):
-                stack += x
-    return False
+_ALL = frozenset(range(256))
+_DIGIT, _SPACE = frozenset(b"0123456789"), frozenset(b" \t\n\r\f\v")
+_WORD = _DIGIT | frozenset(b"_abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
+# in a bytes regex \d \s \w and their complements are ASCII classes
+_CATEGORY = {C.CATEGORY_DIGIT: _DIGIT, C.CATEGORY_SPACE: _SPACE, C.CATEGORY_WORD: _WORD,
+             C.CATEGORY_NOT_DIGIT: _ALL - _DIGIT, C.CATEGORY_NOT_SPACE: _ALL - _SPACE,
+             C.CATEGORY_NOT_WORD: _ALL - _WORD}
+# what RE2 has of Python's flags and anchors (^ $ \A \b \B; no \Z), and its
+# bound on the product of nested counted repeats (parse.cc RepetitionWalker)
+_RE2_FLAGS = C.SRE_FLAG_IGNORECASE | C.SRE_FLAG_MULTILINE | C.SRE_FLAG_DOTALL
+_RE2_AT = {C.AT_BEGINNING, C.AT_END, C.AT_BEGINNING_STRING, C.AT_BOUNDARY, C.AT_NON_BOUNDARY}
+_RE2_MAX_REPEAT = 1000
+_NOT_RE2 = {C.ASSERT: "a lookaround", C.ASSERT_NOT: "a lookaround",
+            C.ATOMIC_GROUP: "an atomic group", C.POSSESSIVE_REPEAT: "a possessive repeat",
+            C.GROUPREF: "a backreference", C.GROUPREF_EXISTS: "a conditional group",
+            C.AT: r"the anchor \Z"}
+
+
+def _node_bytes(op, av) -> frozenset[int] | None:
+    """The bytes a one-byte node can match, case-sensitively, or ``None``
+    for any other node."""
+    if op is C.LITERAL:
+        return frozenset((av,))
+    if op is C.NOT_LITERAL:
+        return _ALL - {av}
+    if op is C.ANY:
+        return _ALL
+    if op is not C.IN:
+        return None
+    got = set()
+    for iop, iav in av:
+        if iop is C.LITERAL:
+            got.add(iav)
+        elif iop is C.RANGE:
+            got.update(range(iav[0], iav[1] + 1))
+        elif iop is C.CATEGORY:
+            got |= _CATEGORY[iav]
+    return _ALL - got if av and av[0][0] is C.NEGATE else frozenset(got)
+
+
+def _fold(got: frozenset[int]) -> frozenset[int]:
+    """``got`` with the other case of each ASCII letter: all that a bytes
+    regex's IGNORECASE folds."""
+    return got | {b ^ 32 for b in got if 97 <= b | 32 <= 122}
+
+
+class Plan(NamedTuple):
+    """How the scan reads one RE2-syntax needle (``operators/scan.py``)."""
+
+    safe: bool  # no node can match byte 0 and no anchor but \b: blob mode
+    icase: bool
+    factors: tuple[frozenset[bytes], ...]  # every match holds a string of each
+    # every byte a match can hold (both cases only in a (?i) scope), or None:
+    # the needle scans its whole domain (not blob-safe, or width 0)
+    alphabet: frozenset[int] | None
+    width: int  # the shortest match's length
+    compiled: re.Pattern[bytes]
 
 
 @functools.cache
-def _compiled_or_error(source: str) -> re.Pattern[bytes] | re.error:
-    data = source.encode("utf-8")
+def _plan(source: str) -> Plan | str:
+    """The needle's compiled :class:`Plan`, or why RE2 would not compile it,
+    from one walk of the regex's bytes parse. Rejected: a parse error; a
+    node outside LITERAL, NOT_LITERAL, ANY, IN, SUBPATTERN, BRANCH,
+    MAX_REPEAT, MIN_REPEAT and AT; ``\\Z``; a flag other than ``i m s``;
+    nested counted repeats whose bounds (a max, or the min when unbounded)
+    multiply past 1000; a "Possible nested set" warning (RE2 reads
+    ``[[:alpha:]]`` as a class). Blob-safe: no node can match byte 0 and no
+    anchor but ``\\b``. Every match holds a string of each factor: a
+    required byte class (ASCII-folded); a run of 2+ required literals
+    (lowercased under ``(?i)``); one factor per alternation branch, unioned.
+    Min-0 repeats add none. The alphabet is the union of every consuming
+    node's bytes, folded only inside an IGNORECASE scope. A plan may widen a
+    scan, never drop a match."""
     try:
-        if _captures_under_possessive(_parser.parse(data)):
-            raise re.error("possessive repeat over a capturing group", source)
-        return re.compile(data)
+        with warnings.catch_warnings():
+            warnings.filterwarnings("error", "Possible nested set", FutureWarning)
+            tree = _parser.parse(source.encode("utf-8"))
+        icase = bool(tree.state.flags & C.SRE_FLAG_IGNORECASE)
+        safe, alphabet = True, set()
+
+        def walk(seq, runs: bool, fold: bool, budget: int) -> list[frozenset[bytes]]:
+            # runs=False in a case-sensitive regex's (?i:…) group (raw-blob
+            # find); fold: inside an IGNORECASE scope; budget: the count the
+            # enclosing counted repeats leave a nested one
+            nonlocal safe
+            out: list[frozenset[bytes]] = []
+            run = bytearray()
+            for op, av in [*seq, (None, None)]:
+                got = _node_bytes(op, av)
+                if got is not None:
+                    folded = _fold(got)
+                    alphabet.update(folded if fold else got)
+                    safe &= 0 not in folded
+                if op is C.LITERAL and runs:
+                    run.append(av)
+                    continue
+                if run:
+                    out.append(frozenset(bytes((b,)) for b in _fold({run[0]})) if len(run) == 1
+                               else frozenset((bytes(run).lower() if icase else bytes(run),)))
+                run.clear()
+                if got is not None:
+                    out.append(frozenset(bytes((b,)) for b in folded))
+                elif op is C.SUBPATTERN:
+                    if (av[1] | av[2]) & ~_RE2_FLAGS:
+                        raise re.error(f"the flag {re.RegexFlag((av[1] | av[2]) & ~_RE2_FLAGS)!r}")
+                    add, drop = av[1] & C.SRE_FLAG_IGNORECASE, av[2] & C.SRE_FLAG_IGNORECASE
+                    out += walk(av[3], runs and (icase or not add), (fold or add) and not drop,
+                                budget)
+                elif op is C.BRANCH:
+                    branches = [walk(b, runs, fold, budget) for b in av[1]]
+                    if all(branches):
+                        out.append(frozenset().union(
+                            *(min(b, key=lambda f: (-min(map(len, f)), len(f))) for b in branches)))
+                elif op is C.MAX_REPEAT or op is C.MIN_REPEAT:
+                    count = av[0] if av[1] == C.MAXREPEAT else av[1]
+                    if count > budget:
+                        raise re.error(f"nested counted repeats multiply past {_RE2_MAX_REPEAT}")
+                    inner = walk(av[2], runs, fold, budget // max(count, 1))
+                    out += inner if av[0] else []
+                elif op is C.AT and av in _RE2_AT:
+                    safe &= av is C.AT_BOUNDARY  # \B matches an empty doc's NUL
+                elif op is not None:
+                    raise re.error(_NOT_RE2.get(op, str(op)))
+            return out
+
+        # the global flags as the root's group flags
+        factors = walk([(C.SUBPATTERN, (None, tree.state.flags, 0, tree))], True, False,
+                       _RE2_MAX_REPEAT)
+        compiled = re.compile(source.encode("utf-8"))
+    except FutureWarning as w:
+        return f"{w} (RE2 reads [[:alpha:]] as a class)"
     except re.error as e:
-        return e.with_traceback(None)
+        return str(e)
+    # drop a factor that holds all of another's strings (it admits every doc
+    # the other does); one-byte factors first, as they only read the table
+    factors = [f for f in dict.fromkeys(factors) if not any(g < f for g in factors)]
+    width = tree.getwidth()[0]
+    return Plan(safe, icase, tuple(sorted(factors, key=lambda f: max(map(len, f)) > 1)),
+                frozenset(alphabet) if safe and width > 0 else None, width, compiled)
 
 
 def compile_bytes_regex(source: str) -> re.Pattern[bytes]:
-    """Compile a pattern for byte-offset scanning over UTF-8 text.
+    """Compile an RE2-syntax pattern for byte-offset scanning over UTF-8
+    text (ASCII-only ``\\b``/``\\d``/``\\w`` and byte offsets, as Go's RE2
+    gives on the seed patterns); any other source raises ``re.error`` naming
+    what RE2 lacks. Cached with its rejections: one walk per process."""
+    plan = _plan(source)
+    if isinstance(plan, str):
+        raise re.error(plan, source)
+    return plan.compiled
 
-    Bytes patterns give ASCII-only ``\\b``/``\\d``/``\\w`` and byte offsets —
-    both matching Go's RE2 behavior on the seed patterns.
 
-    A possessive repeat whose body holds a capturing group raises
-    ``re.error``: CPython 3.11's matcher can raise ``SystemError`` ("The
-    span of capturing group is wrong") on such a pattern mid-scan, e.g.
-    ``(?:(\\s){2}|\\d)++`` on ordinary text. RE2 has no possessive
-    repeats, so the reference cannot compile these either.
-
-    Rejections are cached with the compiled patterns, so a bad rule is
-    parsed once per process, not on every ``compile_patterns`` call.
-    """
-    compiled = _compiled_or_error(source)
-    if isinstance(compiled, re.error):
-        raise compiled.with_traceback(None)
-    return compiled
+@functools.cache
+def _warn_rejected(name: str, source: str, why: str) -> None:
+    _log.warning("rule %s skipped: %r is not RE2 syntax (%s)", name, source, why)
 
 
 def compile_patterns(rules: RuleSet) -> list[tuple[Pattern, re.Pattern[bytes]]]:
     """Compile active patterns in table order; skip ones that fail to compile
-    (guardrails.go:172-176 logs-and-continues on bad regex)."""
+    (guardrails.go:172-176 logs-and-continues on bad regex), with one
+    warning per rule and process."""
     out: list[tuple[Pattern, re.Pattern[bytes]]] = []
     for p in rules.active_patterns():
-        try:
-            out.append((p, compile_bytes_regex(p.regex)))
-        except re.error:
-            continue
+        plan = _plan(p.regex)
+        if isinstance(plan, str):
+            _warn_rejected(p.name, p.regex, plan)
+        else:
+            out.append((p, plan.compiled))
     return out
-

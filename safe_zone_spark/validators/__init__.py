@@ -35,7 +35,7 @@ import re
 import xml.etree.ElementTree as ET
 
 from ..checksums import luhn_valid, tckn_valid
-from ..rules import RuleSet, Validator
+from ..rules import RuleSet, Validator, compile_bytes_regex
 
 
 def _reject_constant(_):
@@ -76,6 +76,9 @@ def _go_anchored(rule: str) -> str:
 
 @functools.cache
 def _compile_rule(rule: str) -> re.Pattern[str]:
+    """The rule as Go's ``regexp.MatchString`` takes it: a rule outside
+    RE2's syntax raises ``re.error``, as it errors there."""
+    compile_bytes_regex(rule)
     return re.compile(_go_anchored(rule))
 
 

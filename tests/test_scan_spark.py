@@ -262,8 +262,8 @@ def test_blob_unsafe_patterns_fall_back_to_per_doc():
     (regression: blob finditer would anchor ^ to the blob and let `.`, a
     class holding NUL or a blocklist word holding NUL cross the NUL
     separators)."""
-    from safe_zone_spark.operators.scan import _plan, detect_batch
-    from safe_zone_spark.rules import Pattern, RuleSet
+    from safe_zone_spark.operators.scan import detect_batch
+    from safe_zone_spark.rules import Pattern, RuleSet, _plan
 
     def blob_safe(source):
         return _plan(source)[0]
@@ -329,20 +329,41 @@ def test_blob_unsafe_patterns_fall_back_to_per_doc():
     assert [len(d) for d in res["detections"]] == [3, 1, 3, 3, 0]
 
 
-def test_possessive_repeat_over_a_capture_is_skipped_like_a_bad_regex():
-    """CPython 3.11 raises SystemError matching ``(?:(\\s){2}|\\d)++`` on this
-    doc; the rule is rejected at compile time, so the scan and the oracle
-    both skip it and still report every other rule's detections."""
+# a rule that stalled a scan task on Python's backtracking matcher (seconds
+# on 24 bytes of "A"); RE2 rejects its lookbehind
+STALLING_RULE = r"((?:[^\db-d\x00]|[^\s]))*(?-i:(?<=A))b"
+NOT_RE2 = {
+    "lookahead": r"\d+(?=x)",
+    "lookbehind": r"(?<=a)\d+",
+    "atomic": r"(?>\d+)a",
+    # CPython 3.11 raises SystemError matching this on the first text
+    "possessive": r"(?:(\s){2}|\d)++",
+    "backreference": r"(\d)\1",
+    "end_Z": r"\d+\Z",
+    "flag_x": r"(?x)\d + \d",
+    "flag_a": r"(?a)\w+\d",
+    "flag_L": r"(?L)\w+\d",
+    "repeat_1001": r"\d{1001}",
+    "nested_repeat_1010": r"(\d{10}){101}",
+    "posix_class": r"[[:alpha:]]+\d",
+    "stalling_rule": STALLING_RULE,
+}
+
+
+@pytest.mark.parametrize("source", NOT_RE2.values(), ids=NOT_RE2.keys())
+def test_constructs_outside_re2_are_skipped_alike(source):
+    """A rule outside RE2's syntax does not compile, and the scan and the
+    oracle both skip it and still report every other rule's detections."""
     import re
 
     from safe_zone_spark.rules import Pattern, RuleSet, compile_bytes_regex
 
-    bad = r"(?:(\s){2}|\d)++"
     with pytest.raises(re.error):
-        compile_bytes_regex(bad)
+        compile_bytes_regex(source)
     seed = default_rules()
-    rules = RuleSet(patterns=(Pattern("POSSESSIVE", bad),) + seed.patterns)
-    texts = ["the quick  brown fox 123  456", "ssn 123-45-6789 mail a@b.co  9"]
+    rules = RuleSet(patterns=(Pattern("NOT_RE2", source),) + seed.patterns)
+    texts = ["the quick  brown fox 123  456", "ssn 123-45-6789 mail a@b.co  9",
+             "xAb 1234567890 ab:c " + "A" * 24]
     res = detect_batch(pd.Series(texts), rules, mode="MASK")
     for i, text in enumerate(texts):
         want = [(d.type, d.start, d.end, d.value) for d in detect(text, seed, mode="MASK").detections]
@@ -352,10 +373,32 @@ def test_possessive_repeat_over_a_capture_is_skipped_like_a_bad_regex():
     assert [d["type"] for d in res["detections"][1]] == ["US_SSN", "EMAIL"]
 
 
+def test_each_rejected_rule_warns_once(caplog):
+    """One WARNING per rule outside RE2's syntax per process, naming the
+    rule and the construct, however often the rules are compiled."""
+    import logging
+
+    from safe_zone_spark.rules import Pattern, RuleSet, compile_patterns
+
+    bad = {"LOUD_LOOKAHEAD": (r"\d+(?=loud)", "lookaround"),
+           "LOUD_ATOMIC": (r"(?>loud)\d", "atomic group")}
+    rules = RuleSet(patterns=tuple(Pattern(n, src) for n, (src, _) in bad.items())
+                    + default_rules().patterns)
+    with caplog.at_level(logging.WARNING, logger="safe_zone_spark.rules"):
+        for _ in range(2):
+            assert len(compile_patterns(rules)) == 20
+        for text in ("loud 123", "12 loud", "a@b.co"):
+            detect(text, rules, mode="MASK")
+    for name, (_, construct) in bad.items():
+        [record] = [r for r in caplog.records if name in r.getMessage()]
+        assert record.levelno == logging.WARNING and construct in record.getMessage()
+    assert len(caplog.records) == len(bad)
+
+
 def test_rejected_rules_are_parsed_once():
-    """A rule that fails to compile, or is rejected as a possessive repeat
-    over a capture, is parsed on the first ``compile_patterns`` call only:
-    the scan compiles once per batch and the oracle once per doc."""
+    """A rule that fails to parse, or is not RE2 syntax, is parsed on the
+    first ``compile_patterns`` call only: the scan compiles once per batch
+    and the oracle once per doc."""
     from re import _parser
 
     from safe_zone_spark.rules import Pattern, RuleSet, compile_patterns
@@ -383,8 +426,7 @@ def test_seed_plans_are_pinned():
     """The plans read from ``re._parser`` for the seed patterns: a change in
     that private parser must fail here, not silently scan every doc or
     every window."""
-    from safe_zone_spark.operators.scan import _plan
-    from safe_zone_spark.rules import SEED_PATTERNS
+    from safe_zone_spark.rules import SEED_PATTERNS, _plan
 
     plans = {p.name: _plan(p.regex) for p in SEED_PATTERNS}
     assert len(plans) == 20
@@ -428,15 +470,31 @@ def test_seed_plans_are_pinned():
     assert {n: (plan.alphabet, plan.width) for n, plan in plans.items()} == {
         n: (frozenset(alphabet), width) for n, (alphabet, width) in want.items()}
 
-    # scoped case folding; a lookaround, a group reference or width 0 scans
-    # the whole domain (no alphabet)
+    # scoped case folding; width 0 scans the whole domain (no alphabet)
     assert _plan(r"(?i:ab)c").alphabet == frozenset(b"abABc")
     assert _plan(r"(?i)a(?-i:b)").alphabet == frozenset(b"aAb")
-    assert _plan(r"\d+(?=x)").alphabet is None
-    assert _plan(r"(?<!a)\d+").alphabet is None
-    assert _plan(r"(a)\1").alphabet is None
     assert _plan(r"\d*").alphabet is None
-    assert _plan(r"(?>\d+)a|b++").alphabet == frozenset(b"0123456789ab")
+
+
+def test_only_rules_reads_the_regex_parser():
+    """``rules._plan`` is the one reading of a pattern's parse: no other
+    package module imports ``re._parser`` (or its alias ``sre_parse``)."""
+    import ast
+    from pathlib import Path
+
+    package = Path(__file__).resolve().parents[1] / "safe_zone_spark"
+    readers = []
+    for path in package.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [f"{node.module}.{a.name}" for a in node.names]
+            else:
+                continue
+            if any(n.startswith(("re._parser", "sre_parse")) for n in names):
+                readers.append(f"{path.relative_to(package)}:{node.lineno}")
+    assert [r for r in readers if not r.startswith("rules.py:")] == []
 
 
 def test_checksums_reject_unicode_digits():

@@ -61,3 +61,34 @@ def test_sql_twin_matches_oracle(duck_results, i):
 def test_blocklist_blocks():
     resp = detect(TEXTS[1], RULES)
     assert not resp.keep  # confidence-1.0 BLOCKLIST hit ⇒ BLOCK ⇒ dropped
+
+
+def test_rule_outside_re2_is_skipped_by_scan_oracle_and_twin(caplog):
+    """A rule table holding a rule RE2 cannot compile (its lookbehind): the
+    DuckDB twin skips it like the scan and the oracle, all three give the
+    seed-only answer, and one warning names the rule."""
+    import logging
+
+    import pandas as pd
+
+    from safe_zone_spark.operators.scan import detect_batch
+    from safe_zone_spark.rules import Pattern, RuleSet
+
+    rules = RuleSet(patterns=(Pattern("STALLS", r"((?:[^\db-d\x00]|[^\s]))*(?-i:(?<=A))b"),)
+                    + RULES.patterns, blocklist=RULES.blocklist)
+    rows = ", ".join(f"({i}, '" + t.replace("'", "''") + "')" for i, t in enumerate(TEXTS))
+    aug_cte = f"WITH aug AS (SELECT doc_id, text FROM (VALUES {rows}) v(doc_id, text))"
+    con = duckdb.connect()
+    with caplog.at_level(logging.WARNING, logger="safe_zone_spark.rules"):
+        duck = {r[0]: (r[1], r[2], r[3])
+                for r in con.sql(scrub_full_sql(aug_cte, rules)).fetchall()}
+        scanned = detect_batch(pd.Series(TEXTS), rules)
+        for i, text in enumerate(TEXTS):
+            seed = detect(text, RULES)
+            assert detect(text, rules) == seed
+            assert duck[i] == (seed.redacted_text, seed.keep, len(seed.detections)), text
+            assert scanned["scrubbed_text"][i] == seed.redacted_text
+            got = [(d["type"], d["start"], d["end"]) for d in scanned["detections"][i]]
+            assert got == [(d.type, d.start, d.end) for d in seed.detections]
+    [warning] = [r for r in caplog.records if "STALLS" in r.getMessage()]
+    assert "lookaround" in warning.getMessage()

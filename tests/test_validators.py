@@ -79,6 +79,20 @@ def test_regex_validators_go_anchoring():
     assert regex_match(r"[0-9]{3}", "ab 123 cd")[0] is True
 
 
+def test_regex_validator_outside_re2_syntax_errors_and_blocks():
+    """A rule Go's RE2 cannot compile errors as ``regexp.MatchString``
+    does, so the validator blocks at confidence 1.0 (guardrails.go:84-88)."""
+    from safe_zone_spark.oracle import detect
+    from safe_zone_spark.rules import Validator
+
+    valid, err = regex_match(r"^(?=.*\d).+$", "a1")
+    assert valid is False and err.startswith("bad regex: ") and "lookaround" in err
+    rules = default_rules(validators=(Validator("HAS_DIGIT", "REGEX", r"^(?=.*\d).+$"),))
+    resp = detect("a1", rules, expected_format="HAS_DIGIT")
+    assert resp.blocked and resp.overall_confidence == 1.0
+    assert resp.message == "Error in guardrail 'HAS_DIGIT': " + err
+
+
 @pytest.mark.parametrize(
     "name,text,expect_valid",
     [
