@@ -11,8 +11,8 @@ Run on a cluster (BASELINE.json north_rule):
         --manifest s3://bucket/clean/manifests \\
         --run-id 2026-08-16 --units 4096
 
-Pipeline: read (url, warc_ts, html) → pick the pending work units (a
-url-only read less the units the manifest holds) → the flagship plan
+Pipeline: read (url, warc_ts, html) → pick the pending work units (the
+unit ids the manifest does not hold for the run id) → the flagship plan
 (plans/flagship.py) → commit ``final_keep``, ``lang_pred``, ``ppl`` and the
 scrub partitioned by work unit → append lineage manifests. The
 commit rebalances rows by unit: before the crossing when the input has
@@ -20,7 +20,7 @@ fewer than two splits per core (that shuffle then also spreads the
 crossing over the cores), after the transform otherwise (see
 plans/pipeline.py). Re-running the same command after a failure resumes:
 the units the manifest holds for the run id are left out before any html
-is read.
+is read, and with none left the job reads only the manifest.
 
 Units committed before the job wrote ``lang_pred`` and ``ppl`` lack both
 columns, and a resumed run writes its units with them: read such an
@@ -71,7 +71,7 @@ def main() -> None:
         blocklist=frozenset(t for t in args.blocklist.split(",") if t)
     )
 
-    raw = spark.read.parquet(args.input)
+    raw = spark.read.schema("url string, warc_ts timestamp, html binary").parquet(args.input)
     n = run_with_manifest(
         raw,
         lambda df: transform(df, rules),

@@ -14,13 +14,11 @@ Design for 100 TB:
 * **Skew defusal**: heavy hosts (a handful of domains can be 10%+ of a
   crawl) share a url-hash, but hashing the full url (not the host) spreads
   them; the salt decorrelates from any downstream hash-partitioning.
-* **Resume**: the driver collects the pending units (at most
-  ``num_units``) from a ``key_col``-only read of the input less the units
-  the manifest holds for the run, so a resume with nothing pending reads
-  one input column and returns. With work pending every input row is read
-  again (with the columns the transform needs) and the finished units'
-  rows are dropped before the transform: a unit is a hash of the key, so
-  no scan can prune by it.
+* **Resume**: the pending units are the unit ids the manifest does not
+  hold for the run; a resume with nothing pending reads only the manifest.
+  Otherwise every input row is read (with the columns the transform needs)
+  and the finished units' rows are dropped before the transform: a unit is
+  a hash of the key, so no scan can prune by it.
 * **Layout**: rows are rebalanced by unit (AQE's ``RebalancePartitions``)
   so each unit is written by one task rather than by every task of the
   transform: files per unit are bounded by
@@ -54,7 +52,7 @@ from __future__ import annotations
 import logging
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 UNIT_COL = "unit"
@@ -135,32 +133,15 @@ def read_manifest(spark: SparkSession, manifest_path: str,
     """The manifest table read with its known ``schema`` (no schema-inference
     job), or None when its path does not exist. A directory without data
     files (a crash during the first manifest append leaves one) reads as no
-    rows. One data file's footer is read on the driver, as inference would
-    read it, so a manifest that exists but cannot be read raises
-    (``CANNOT_READ_FILE_FOOTER``): treating it as empty would re-run
-    committed work and append duplicate manifest rows.
-
-    The footer read calls JVM internals, not public API: Spark 4.1's
-    ``ParquetFileFormat$.MODULE$.readParquetFootersInParallel`` and Scala
-    2.13's ``scala.jdk.javaapi.CollectionConverters``.
-    ``test_manifest_footer_check_entry_points_exist`` names either one when
-    an upgrade removes it."""
+    rows. A data file that cannot be read raises (``FAILED_READ_FILE``)
+    when the rows are read, as every caller reads them: treating it as empty
+    would re-run committed work and append duplicate manifest rows."""
     try:
-        manifest = spark.read.schema(schema).parquet(manifest_path)
+        return spark.read.schema(schema).parquet(manifest_path)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
-    files = manifest.inputFiles()
-    if files:
-        jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(files[0]))
-        status = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
-            [path.getFileSystem(conf).getFileStatus(path)]).toList()
-        parquet = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
-                          "ParquetFileFormat$")
-        getattr(parquet, "MODULE$").readParquetFootersInParallel(conf, status, False)
-    return manifest
 
 
 def manifest_aggs(key_col: str, kept_col: str | None) -> list[Column]:
@@ -219,13 +200,22 @@ def run_with_manifest(
     max_units: int | None = None,
 ) -> int:
     """Checkpointed execution: pick the pending units → transform them →
-    commit output (partitioned by unit) → append their manifest rows from a
-    read-back of the committed units (``unit``, ``key_col`` and, when the
-    output has it, ``kept_col``). Returns the number of units processed
-    this invocation. ``max_units`` caps work per call to the lowest pending
-    units (used by tests to simulate a mid-run crash). With no unit
-    pending it returns 0 before ``transform`` is called or any input column
-    but ``key_col`` is read.
+    commit output (partitioned by unit) → append the committed units'
+    manifest rows from a read-back of them (``unit``, ``key_col`` and, when
+    the output has it, ``kept_col``). Returns the number of units this call
+    committed.
+
+    The pending units are the ids in ``range(num_units)`` that the manifest
+    does not hold for ``run_id``, the lowest ``max_units`` of them when it
+    is set (used by tests to simulate a mid-run crash). With none pending
+    it returns 0 after reading the manifest alone: ``transform`` is not
+    called and no input column is read. The write itself reports which
+    units it committed (an observed ``collect_set`` of ``unit``), so the
+    input is read once. An id that no input row hashes to stays pending:
+    each later call reads the input again, commits nothing and returns 0.
+    With ``n`` rows, some id lacks a row with probability about
+    ``num_units · exp(−n / num_units)`` (at 256 units, 0.1 for 2,000 rows
+    and 1e-6 for 5,000), and such ids count toward ``max_units``.
 
     The commit rebalances rows on ``unit``, so each unit is written by one
     task and its file count is bounded by the advisory partition size
@@ -242,12 +232,11 @@ def run_with_manifest(
     ran and why."""
     spark = df.sparkSession
     manifest = read_manifest(spark, manifest_path)
+    # a set dedups the rows of repeated appends: no shuffle for distinct()
     done = set() if manifest is None else {
-        r[0] for r in
-        manifest.filter(F.col("run_id") == run_id).select(UNIT_COL).distinct().collect()
+        r[0] for r in manifest.filter(F.col("run_id") == run_id).select(UNIT_COL).collect()
     }
-    present = assign_units(df.select(key_col), num_units, key_col=key_col).select(UNIT_COL)
-    units = sorted({r[0] for r in present.distinct().collect()} - done)[:max_units]
+    units = sorted(set(range(num_units)) - done)[:max_units]
     if not units:
         return 0
     pending = assign_units(df, num_units, key_col=key_col).filter(F.col(UNIT_COL).isin(units))
@@ -261,16 +250,21 @@ def run_with_manifest(
     out = transform(pending.hint("rebalance", UNIT_COL) if narrow else pending)
     if UNIT_COL not in out.columns:
         raise ValueError("transform must preserve the unit column")
+    written = Observation()
     (
         (out if narrow else out.hint("rebalance", UNIT_COL))
+        .observe(written, F.collect_set(UNIT_COL).alias("units"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(UNIT_COL)
         .parquet(output_path)
     )
+    committed_units = written.get["units"]
+    if not committed_units:
+        return 0
     audited = [UNIT_COL, key_col, *[c for c in [kept_col] if c in out.columns]]
     # the output's schema is known, so the read-back runs no inference job
     committed = spark.read.schema(out.select(*audited).schema).parquet(output_path)
-    write_manifest(committed.filter(F.col(UNIT_COL).isin(units)), manifest_path, run_id,
-                   key_col=key_col, kept_col=kept_col)
-    return len(units)
+    write_manifest(committed.filter(F.col(UNIT_COL).isin(committed_units)), manifest_path,
+                   run_id, key_col=key_col, kept_col=kept_col)
+    return len(committed_units)

@@ -13,7 +13,8 @@ text. This pins three semantics to the Go reference in one move:
 
 * offsets are byte offsets (Go ``regexp.FindAllStringIndex`` returns byte
   indices, guardrails.go:178),
-* ``\\b`` / ``\\d`` / ``\\w`` are ASCII-only (Go RE2 default),
+* ``\\b`` / ``\\d`` / ``\\w`` are ASCII-only (Go RE2 default), and ``\\s``
+  is RE2's ``[\\t\\n\\f\\r ]`` (Python's adds ``\\v``; see ``_plan``),
 * matches can never split a multi-byte UTF-8 character, because every literal
   byte in the seed patterns is ASCII (< 0x80) and UTF-8 continuation bytes are
   >= 0x80.
@@ -27,7 +28,7 @@ import re
 import warnings
 from dataclasses import dataclass, field
 from re import _constants as C
-from re import _parser
+from re import _compiler, _parser
 from typing import NamedTuple
 
 _log = logging.getLogger(__name__)
@@ -178,12 +179,14 @@ def default_rules(**overrides) -> RuleSet:
 # ---------------------------------------------------------------------------
 
 _ALL = frozenset(range(256))
-_DIGIT, _SPACE = frozenset(b"0123456789"), frozenset(b" \t\n\r\f\v")
+_DIGIT, _SPACE = frozenset(b"0123456789"), frozenset(b"\t\n\f\r ")
 _WORD = _DIGIT | frozenset(b"_abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
-# in a bytes regex \d \s \w and their complements are ASCII classes
-_CATEGORY = {C.CATEGORY_DIGIT: _DIGIT, C.CATEGORY_SPACE: _SPACE, C.CATEGORY_WORD: _WORD,
-             C.CATEGORY_NOT_DIGIT: _ALL - _DIGIT, C.CATEGORY_NOT_SPACE: _ALL - _SPACE,
-             C.CATEGORY_NOT_WORD: _ALL - _WORD}
+# in a bytes regex \d \w and their complements are ASCII classes
+_CATEGORY = {C.CATEGORY_DIGIT: _DIGIT, C.CATEGORY_WORD: _WORD,
+             C.CATEGORY_NOT_DIGIT: _ALL - _DIGIT, C.CATEGORY_NOT_WORD: _ALL - _WORD}
+# RE2's \s is [\t\n\f\r ], and Python's also matches \v: the walk spells \s
+# and \S as these classes in the parse it compiles
+_SPACE_CLASS = {C.CATEGORY_SPACE: _SPACE, C.CATEGORY_NOT_SPACE: _ALL - _SPACE}
 # what RE2 has of Python's flags and anchors (^ $ \A \b \B; no \Z), and its
 # bound on the product of nested counted repeats (parse.cc RepetitionWalker)
 _RE2_FLAGS = C.SRE_FLAG_IGNORECASE | C.SRE_FLAG_MULTILINE | C.SRE_FLAG_DOTALL
@@ -215,6 +218,17 @@ def _node_bytes(op, av) -> frozenset[int] | None:
         elif iop is C.CATEGORY:
             got |= _CATEGORY[iav]
     return _ALL - got if av and av[0][0] is C.NEGATE else frozenset(got)
+
+
+def _re2_spaces(items: list) -> list:
+    """An IN node's items with ``\\s`` and ``\\S`` spelled as RE2's classes."""
+    out = []
+    for iop, iav in items:
+        if iop is C.CATEGORY and iav in _SPACE_CLASS:
+            out += [(C.LITERAL, b) for b in sorted(_SPACE_CLASS[iav])]
+        else:
+            out.append((iop, iav))
+    return out
 
 
 def _fold(got: frozenset[int]) -> frozenset[int]:
@@ -250,7 +264,9 @@ def _plan(source: str) -> Plan | str:
     (lowercased under ``(?i)``); one factor per alternation branch, unioned.
     Min-0 repeats add none. The alphabet is the union of every consuming
     node's bytes, folded only inside an IGNORECASE scope. A plan may widen a
-    scan, never drop a match."""
+    scan, never drop a match. The walk spells ``\\s`` and ``\\S`` as RE2's
+    ``[\\t\\n\\f\\r ]`` and its complement in the parse, and the pattern is
+    compiled from that parse."""
     try:
         with warnings.catch_warnings():
             warnings.filterwarnings("error", "Possible nested set", FutureWarning)
@@ -265,7 +281,10 @@ def _plan(source: str) -> Plan | str:
             nonlocal safe
             out: list[frozenset[bytes]] = []
             run = bytearray()
-            for op, av in [*seq, (None, None)]:
+            for i, (op, av) in enumerate([*seq, (None, None)]):
+                if op is C.IN:  # replaced, not edited: the parser shares \s's items
+                    av = _re2_spaces(av)
+                    seq[i] = (op, av)
                 got = _node_bytes(op, av)
                 if got is not None:
                     folded = _fold(got)
@@ -306,7 +325,7 @@ def _plan(source: str) -> Plan | str:
         # the global flags as the root's group flags
         factors = walk([(C.SUBPATTERN, (None, tree.state.flags, 0, tree))], True, False,
                        _RE2_MAX_REPEAT)
-        compiled = re.compile(source.encode("utf-8"))
+        compiled = _compiler.compile(tree)
     except FutureWarning as w:
         return f"{w} (RE2 reads [[:alpha:]] as a class)"
     except re.error as e:

@@ -77,9 +77,11 @@ def _go_anchored(rule: str) -> str:
 @functools.cache
 def _compile_rule(rule: str) -> re.Pattern[str]:
     """The rule as Go's ``regexp.MatchString`` takes it: a rule outside
-    RE2's syntax raises ``re.error``, as it errors there."""
+    RE2's syntax raises ``re.error``, as it errors there, and ``\\d``,
+    ``\\w`` and ``\\b`` are ASCII classes, as RE2 reads them (``\\s``
+    still matches ``\\v``, which RE2's does not)."""
     compile_bytes_regex(rule)
-    return re.compile(_go_anchored(rule))
+    return re.compile(_go_anchored(rule), re.ASCII)
 
 
 def regex_match(rule: str, text: str) -> tuple[bool, str | None]:

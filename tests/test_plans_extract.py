@@ -119,6 +119,30 @@ def test_crash_between_commit_and_manifest_recommits_the_units(
     _assert_one_committed_run(spark, corpus, out_path, man_path)
 
 
+def test_units_without_input_rows_commit_nothing(spark, corpus, tmp_path):
+    """Pending units are taken from the manifest alone, and the count and
+    manifest rows from what the write committed: over an input holding rows
+    of 3 of 8 units, the first call commits those 3, and the next finds 5
+    pending, commits none of them and appends no manifest row or file."""
+    import os
+
+    present = [1, 4, 6]
+    sub = assign_units(corpus, 8).filter(F.col("unit").isin(present)).drop("unit")
+    man_path = str(tmp_path / "manifest")
+    kw = dict(output_path=str(tmp_path / "out"), manifest_path=man_path, run_id="r1",
+              num_units=8)
+    assert run_with_manifest(sub, _keep_nonempty, **kw) == 3
+    man = spark.read.parquet(man_path)
+    assert sorted(r["unit"] for r in man.collect()) == present
+    assert man.agg(F.sum("n_docs")).head()[0] == sub.count()
+    files = sorted(os.listdir(man_path))
+    assert run_with_manifest(sub, _keep_nonempty, **kw) == 0
+    assert sorted(os.listdir(man_path)) == files
+    assert spark.read.parquet(man_path).count() == 3
+    assert sorted(_data_files_per_dir(kw["output_path"], "unit")) == [
+        f"unit={k}" for k in present]
+
+
 def _data_files_per_dir(root, prefix):
     """{partition dir name: data file count} for the ``prefix=`` dirs under
     ``root`` (Spark's ``_SUCCESS`` and ``.crc`` files are not data)."""
@@ -231,11 +255,11 @@ def test_commit_shuffles_once_by_unit(spark, multi_split_corpus, tmp_path, min_s
         spark.conf.unset("spark.sql.files.minPartitionNum")
     assert n == 8
     assert (splits < width) == (min_splits is None)
-    # the pending-unit collect, the write and the manifest append run a
-    # shuffle map job and a result job each; a job that counts a shuffled
-    # input's partitions, or a broadcast of the manifest's stamp row, would
-    # add one
-    assert len(jobs) == 6
+    # with no manifest yet, the write and the manifest append run a shuffle
+    # map job and a result job each; a job that counts a shuffled input's
+    # partitions, a read of the input to find its units, or a broadcast of
+    # the manifest's stamp row would add one
+    assert len(jobs) == 4
 
     tree, details = _final_write_plan(spark, marker, out_path)
     nodes = [line.strip(" +-*:") for line in tree.splitlines() if line.strip()]
@@ -407,31 +431,13 @@ def test_warm_manifest_appends_compile_no_classes(spark, corpus, tmp_path):
     assert man.select("committed_at").distinct().count() == 3
 
 
-def test_manifest_footer_check_entry_points_exist(spark):
-    """``read_manifest``'s footer check calls two JVM internals (Spark 4.1,
-    Scala 2.13); a Spark or Scala upgrade that removes one fails here by
-    name, not deep inside every resume."""
-    from py4j.protocol import Py4JJavaError
-
-    for cls, method in [
-        ("org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$",
-         "readParquetFootersInParallel"),
-        ("scala.jdk.javaapi.CollectionConverters", "asScala"),
-    ]:
-        try:
-            names = {m.getName() for m in spark._jvm.java.lang.Class.forName(cls).getMethods()}
-        except Py4JJavaError:
-            pytest.fail(f"{cls} is gone; read_manifest's footer check needs it")
-        assert method in names, f"{cls}.{method} is gone; read_manifest's footer check needs it"
-
-
 def test_resume_raises_on_unreadable_manifest(spark, corpus, tmp_path):
     """A manifest that exists but cannot be read must not pass for "nothing
     completed": that would re-run every unit and duplicate manifest rows."""
     manifest = tmp_path / "m"
     manifest.mkdir()
     (manifest / "part-00000.parquet").write_bytes(b"PAR1 not a parquet footer")
-    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
         run_with_manifest(
             corpus, _keep_all, output_path=str(tmp_path / "out"),
             manifest_path=str(manifest), run_id="r9", num_units=4,

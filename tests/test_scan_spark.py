@@ -441,7 +441,7 @@ def test_seed_plans_are_pinned():
         assert any(f <= digits for f in plans[name][2]), name
 
     # alphabets (both cases only under (?i)) and minimum widths
-    ws, dig = b" \t\n\r\f\v", b"0123456789"
+    ws, dig = b" \t\n\r\f", b"0123456789"
     up, low = bytes(range(65, 91)), bytes(range(97, 123))
     hexd = dig + b"ABCDEFabcdef"
     inj, dan = b"ignore previous instructions forget all prior", b"dan mode do anything now"
@@ -474,6 +474,36 @@ def test_seed_plans_are_pinned():
     assert _plan(r"(?i:ab)c").alphabet == frozenset(b"abABc")
     assert _plan(r"(?i)a(?-i:b)").alphabet == frozenset(b"aAb")
     assert _plan(r"\d*").alphabet is None
+
+
+def test_space_class_excludes_vertical_tab_as_in_duckdb():
+    """``\\s`` is RE2's ``[\\t\\n\\f\\r ]``: Python's own ``\\s`` also matches
+    ``\\v``. On text spaced with ``\\v`` (and a spaced control), the four
+    seeds with ``\\s`` find what DuckDB's RE2 finds, in the oracle and in
+    the blob scan."""
+    import duckdb
+
+    from safe_zone_spark.rules import SEED_PATTERNS, RuleSet
+
+    texts = {
+        "PHONE_TR": ["532\v123\v45\v67", "0532 123\v45 67", "+90 532\t123 45 67"],
+        "IBAN_TR": ["TR33\v0006\v1005\v1978\v6457\v8413\v26",
+                    "TR33 0006 1005 1978 6457 8413 26"],
+        "TURKISH_PLATE": ["34\vABC\v123", "x 06\vAB 99", "34 ABC 123"],
+        "GENERIC_API_KEY": ["api_key\v=\vabcdefghijklmnop12", "token: api_key= abcdefghijklmnop12"],
+    }
+    con = duckdb.connect()
+    for name, docs in texts.items():
+        pattern = next(p for p in SEED_PATTERNS if p.name == name)
+        rules = RuleSet(patterns=(pattern,), validators=())
+        res = detect_batch(pd.Series(docs), rules, mode="MASK")
+        for i, text in enumerate(docs):
+            re2 = con.execute("SELECT regexp_extract_all(?, ?)", [text, pattern.regex]).fetchone()[0]
+            oracle = [d.value for d in detect(text, rules, mode="MASK").detections]
+            assert oracle == re2, (name, text)
+            assert [d["value"] for d in res["detections"][i]] == re2, (name, text)
+        assert any(con.execute("SELECT regexp_matches(?, ?)", [t, pattern.regex]).fetchone()[0]
+                   for t in docs), name
 
 
 def test_only_rules_reads_the_regex_parser():

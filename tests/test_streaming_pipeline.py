@@ -215,7 +215,7 @@ def test_unreadable_manifest_fails_the_batch(spark, tmp_path):
     generate_corpus(spark, 20, seed=5).coalesce(1).write.parquet(src)
     (out / "manifests").mkdir(parents=True)
     (out / "manifests" / "part-0.parquet").write_bytes(b"PAR1 not a parquet footer")
-    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
         run_pipeline(spark, src, str(out), schema=corpus_schema(), rules=RULES,
                      run_id="bad")
     assert not (out / "kept_docs").exists()

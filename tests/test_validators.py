@@ -79,6 +79,17 @@ def test_regex_validators_go_anchoring():
     assert regex_match(r"[0-9]{3}", "ab 123 cd")[0] is True
 
 
+def test_regex_validator_classes_are_ascii():
+    """``\\d`` and ``\\w`` read as RE2 reads them: ASCII only, so Arabic-Indic
+    digits are not digits, as DuckDB's ``regexp_matches`` agrees."""
+    import duckdb
+
+    for rule, text in ((r"^\d+$", "١٢٣"), (r"^\w+$", "çağ")):
+        assert regex_match(rule, text) == (False, None)
+        assert duckdb.execute("SELECT regexp_matches(?, ?)", [text, rule]).fetchone()[0] is False
+    assert regex_match(r"^\d+$", "123") == (True, None)
+
+
 def test_regex_validator_outside_re2_syntax_errors_and_blocks():
     """A rule Go's RE2 cannot compile errors as ``regexp.MatchString``
     does, so the validator blocks at confidence 1.0 (guardrails.go:84-88)."""
