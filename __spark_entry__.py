@@ -21,18 +21,19 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from safe_zone_spark.crossing import map_batches, pylist, strings, text_udf
 from safe_zone_spark.functions.confidence import action_expr, confidence_expr
 from safe_zone_spark.functions.langid import (
     LANGID_MARKER_ORACLE_SQL,
+    classify_texts,
     langid_marker_columns,
     langid_ngram_oracle_sql,
-    langid_ngram_udf,
     langid_scores_oracle_sql,
 )
 from safe_zone_spark.functions.perplexity import (
     DEFAULT_PPL_MAX,
+    perplexity_batch,
     perplexity_oracle_sql,
-    perplexity_udf,
 )
 from safe_zone_spark.functions.quality import (
     C4_ORACLE_SQL,
@@ -316,10 +317,10 @@ def q_winnowing(spark, sf_dir):
     round-2 md5-per-gram relational form (posexplode + window) paid ~100x
     the hash cost plus a per-doc window shuffle for nothing. Emitted
     comma-joined: array outputs stringify differently across engines."""
-    from safe_zone_spark.functions.text_analysis import winnow_fp_udf
+    from safe_zone_spark.functions.text_analysis import winnow_fingerprints
 
     return _docs(spark, sf_dir).select(
-        "doc_id", winnow_fp_udf()(F.col("text")).alias("winnow_fp")
+        "doc_id", text_udf(winnow_fingerprints, "string")(F.col("text")).alias("winnow_fp")
     )
 
 
@@ -696,7 +697,7 @@ def q_model_eval(spark, sf_dir):
     deterministic boilerplate — operators/model_eval.py): per threshold,
     exact confusion counts + precision/recall/F1/accuracy. The sweep
     aggregates a (label, score) HISTOGRAM, never thresholds × corpus."""
-    from safe_zone_spark.functions.quality_model import quality_logit_udf
+    from safe_zone_spark.functions.quality_model import quality_logit_series
     from safe_zone_spark.operators.model_eval import (
         EVAL_THRESHOLDS,
         eval_corpus,
@@ -705,7 +706,7 @@ def q_model_eval(spark, sf_dir):
 
     corpus = eval_corpus(_docs(spark, sf_dir))
     scored = corpus.select(
-        "label", quality_logit_udf()(F.col("text")).alias("score")
+        "label", text_udf(quality_logit_series, "long")(F.col("text")).alias("score")
     )
     return threshold_sweep(scored, thresholds=EVAL_THRESHOLDS)
 
@@ -915,17 +916,13 @@ def q_schema_validator(spark, sf_dir):
     non-objects, and on missing/mistyped fields, per jsonschema."""
     from safe_zone_spark.validators import validate_format
 
-    def run(batches):
-        import pandas as pd
+    def person_ok(t: str) -> bool:
+        valid, err = validate_format(t, "JSON_PERSON", SCAN_RULES)
+        return bool(valid) and err is None
 
-        for pdf in batches:
-            ok = []
-            for t in pdf["text"]:
-                valid, err = validate_format(t or "", "JSON_PERSON", SCAN_RULES)
-                ok.append(bool(valid) and err is None)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "person_ok": ok})
-
-    return _aug(spark, sf_dir).mapInPandas(run, "doc_id bigint, person_ok boolean")
+    return _aug(spark, sf_dir).select(
+        "doc_id", text_udf(lambda texts: [person_ok(t) for t in texts], "boolean")(
+            F.col("text")).alias("person_ok"))
 
 
 def q_ai_confidence(spark, sf_dir):
@@ -1019,7 +1016,7 @@ def q_scrub_full(spark, sf_dir):
 
 def q_langid_ngram(spark, sf_dir):
     return _docs(spark, sf_dir).select(
-        "doc_id", langid_ngram_udf()(F.col("text")).alias("lang_pred")
+        "doc_id", text_udf(classify_texts, "string")(F.col("text")).alias("lang_pred")
     )
 
 
@@ -1027,22 +1024,16 @@ def q_langid_scores(spark, sf_dir):
     """CCNet-style langid confidence surface: top-2 (lang, integer score)
     per doc + margin — a thin margin flags the ambiguous-language bucket.
     Integer scoring keeps the twin exact (no float argmax ulp)."""
-    import pandas as pd
-
     from safe_zone_spark.functions.langid import score_texts_top2
 
-    def run(batches):
-        for pdf in batches:
-            rows = score_texts_top2(pdf["text"].fillna("").tolist())
-            out = pd.DataFrame(
-                rows, columns=["lang_top", "score_top", "lang_second", "score_second"]
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            out["margin"] = out["score_top"] - out["score_second"]
-            yield out
+    def run(batch):
+        rows = score_texts_top2(strings(pylist(batch.column("text"))))
+        top, s1, second, s2 = ([r[k] for r in rows] for k in range(4))
+        return {"lang_top": top, "score_top": s1, "lang_second": second, "score_second": s2,
+                "margin": [a - b for a, b in zip(s1, s2)]}
 
-    return _docs(spark, sf_dir).mapInPandas(
-        run,
+    return map_batches(
+        _docs(spark, sf_dir).select("doc_id", "text"), run,
         "doc_id long, lang_top string, score_top long, "
         "lang_second string, score_second long, margin long",
     )
@@ -1065,7 +1056,8 @@ def q_langid_chunks(spark, sf_dir):
         ).alias("chunk"),
     )
     agg = (
-        chunks.select("doc_id", langid_ngram_udf()(F.col("chunk")).alias("lang_pred"))
+        chunks.select("doc_id",
+                      text_udf(classify_texts, "string")(F.col("chunk")).alias("lang_pred"))
         .groupBy("doc_id", "lang_pred")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1087,10 +1079,9 @@ def q_langid_chunks(spark, sf_dir):
 def q_quality_repetition(spark, sf_dir):
     """Gopher repetition filters (Rae et al. Table A1): duplicate-line
     fraction/char-fraction + most-frequent 2/3/4-gram char fractions.
-    Fused numpy-batch form — ONE Arrow crossing, zero shuffles (the
-    relational form shuffled ~3× the corpus words for a doc-local metric;
-    it survives as the in-engine equivalence twin, and the relational
-    DuckDB oracle stays the independent referee)."""
+    Fused numpy-batch form — ONE Arrow crossing, zero shuffles (a
+    relational form shuffles ~3× the corpus words for a doc-local metric);
+    the relational DuckDB oracle is the independent referee."""
     from safe_zone_spark.functions.quality import repetition_metrics_fused
 
     return repetition_metrics_fused(_docs(spark, sf_dir))
@@ -1103,21 +1094,14 @@ def q_tokenize(spark, sf_dir):
     (token_col='bpe_tokens'). One Arrow crossing, Zipf word cache; the
     DuckDB twin re-derives every count from the merge table by recursive
     min-rank merging over UNIQUE words."""
-    import pandas as pd
-
     from safe_zone_spark.functions.bpe import bpe_token_counts
 
-    def run(batches):
-        for pdf in batches:
-            nw, nt = bpe_token_counts(pdf["text"].fillna("").tolist())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "n_words": nw,
-                 "bpe_tokens": nt}
-            )
+    def run(batch):
+        nw, nt = bpe_token_counts(strings(pylist(batch.column("text"))))
+        return {"n_words": nw, "bpe_tokens": nt}
 
-    return _docs(spark, sf_dir).mapInPandas(
-        run, "doc_id long, n_words long, bpe_tokens long"
-    )
+    return map_batches(_docs(spark, sf_dir).select("doc_id", "text"), run,
+                       "doc_id long, n_words long, bpe_tokens long")
 
 
 def q_quality_model(spark, sf_dir):
@@ -1126,24 +1110,19 @@ def q_quality_model(spark, sf_dir):
     difference as the quality logit, pred = logit >= the calibrated
     GATE_THRESHOLD. Same quantized machinery and relational oracle as
     langid — model-as-data."""
-    import pandas as pd
-
     from safe_zone_spark.functions.quality_model import (
         GATE_THRESHOLD as GATE,
         quality_scores,
     )
 
-    def run(batches):
-        for pdf in batches:
-            s = quality_scores(pdf["text"].fillna("").tolist())
-            out = pd.DataFrame(s, columns=["score_hi", "score_lo"])
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            out["quality_logit"] = out["score_hi"] - out["score_lo"]
-            out["quality_pred"] = out["quality_logit"] >= GATE
-            yield out
+    def run(batch):
+        scores = quality_scores(strings(pylist(batch.column("text"))))
+        logits = [hi - lo for hi, lo in scores]
+        return {"score_hi": [hi for hi, _ in scores], "score_lo": [lo for _, lo in scores],
+                "quality_logit": logits, "quality_pred": [x >= GATE for x in logits]}
 
-    return _docs(spark, sf_dir).mapInPandas(
-        run,
+    return map_batches(
+        _docs(spark, sf_dir).select("doc_id", "text"), run,
         "doc_id long, score_hi long, score_lo long, "
         "quality_logit long, quality_pred boolean",
     )
@@ -1151,7 +1130,7 @@ def q_quality_model(spark, sf_dir):
 
 def q_perplexity(spark, sf_dir):
     return _docs(spark, sf_dir).select(
-        "doc_id", F.round(perplexity_udf()(F.col("text")), 4).alias("ppl")
+        "doc_id", F.round(text_udf(perplexity_batch, "double")(F.col("text")), 4).alias("ppl")
     )
 
 
@@ -1162,7 +1141,7 @@ def entry(spark: SparkSession) -> DataFrame:
     keep AND quality_keep AND lang_pred <> 'und' AND ppl <= DEFAULT_PPL_MAX
     (SURVEY §7.1 step 5). ``rep_ok``, ``qmodel_ok`` and ``lang_ok`` (the
     prediction equals the claimed ``lang``) are diagnostics beside it."""
-    from safe_zone_spark.functions.quality import repetition_series
+    from safe_zone_spark.functions.quality import repetition_columns
     from safe_zone_spark.functions.quality_model import GATE_THRESHOLD, quality_logit_series
     from safe_zone_spark.plans.flagship import flagship
 
@@ -1170,7 +1149,7 @@ def entry(spark: SparkSession) -> DataFrame:
         _aug(spark, SF_DEFAULT, extra_cols=", lang"), SCAN_RULES,  # one scan, no join
         keep_cols=("doc_id", "lang"),
         fields=("contains_pii", "scrubbed_text", "overall_confidence"),
-        extra_scorers={"rep_ok": ("boolean", lambda t: repetition_series(t)["rep_keep"]),
+        extra_scorers={"rep_ok": ("boolean", lambda t: repetition_columns(t)["rep_keep"]),
                        "qm_logit": ("long", quality_logit_series)},
     )
     return out.select(

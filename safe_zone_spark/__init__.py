@@ -3,7 +3,7 @@
 Rebuilds the query/data-processing capabilities of the thyrisAI/safe-zone
 (TSZ) reference — PII/secret/injection detection, allow/block policy,
 confidence scoring, redaction — as Spark DataFrame transforms + Arrow-batched
-pandas UDFs over web-corpus tables, extended with the language-ID /
+Python stages over web-corpus tables, extended with the language-ID /
 perplexity / heuristic-quality stages a 100 TB training-data pipeline needs.
 
 Layout:
@@ -11,6 +11,8 @@ Layout:
     oracle       pure-Python reference implementation of the Detect pipeline
                  (parity target: /root/reference/internal/guardrails/guardrails.go:60-377)
     checksums    TCKN / Luhn digit checksums (scalar + numpy-vectorized)
+    crossing     the one Python crossing: Arrow in, Arrow out (map_batches,
+                 apply_groups, text_udf)
     operators/   scan (mapInArrow detect), dedup, similarity search
     functions/   quality heuristics, langid, perplexity, text analysis,
                  confidence/action column expressions

@@ -7,7 +7,7 @@ as a post-filter on CREDIT_CARD candidates (the Go CREDIT_CARD regex at
 init.sql:28 is generic and checksum-free).
 
 Both are provided as scalar functions (for the oracle / unit tests) and as
-numpy-vectorized batch functions (for use inside Arrow-batched pandas UDFs —
+numpy-vectorized batch functions (for use inside the Arrow-batched crossing —
 no per-row Python in the hot path).
 """
 

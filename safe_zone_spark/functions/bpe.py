@@ -31,10 +31,6 @@ depth unbounded.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-
 from .model_store import ModelSpec, load_or_train, write_tables
 
 # \x1f (unit separator) encodes token boundaries in the string form, so it
@@ -231,18 +227,6 @@ def bpe_token_counts(texts: "list[str]") -> "tuple[list[int], list[int]]":
         n_words.append(len(words))
         n_tokens.append(total)
     return n_words, n_tokens
-
-
-def bpe_count_udf():
-    @F.pandas_udf("long")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            np.asarray(bpe_token_counts(texts.fillna("").tolist())[1],
-                       dtype=np.int64),
-            index=texts.index,
-        )
-
-    return _udf
 
 
 # --- DuckDB twin --------------------------------------------------------------

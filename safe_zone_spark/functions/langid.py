@@ -5,8 +5,9 @@
    stopword counts + CJK charset, argmax with alphabetical tie-break). It is
    weaker but has an exact SQL twin, so it anchors the DuckDB correctness
    check for the langid stage.
-2. ``langid_ngram_udf`` — a fastText-style hashed character-n-gram linear
-   classifier as an Arrow-batched pandas UDF. The default model is a
+2. ``classify_texts`` — a fastText-style hashed character-n-gram linear
+   classifier over a batch of texts, run on Spark as
+   ``crossing.text_udf(classify_texts, "string")``. The default model is a
    16-language multinomial-NB trigram scorer loaded (or trained) at import from
    the embedded multilingual word stocks (functions/langid_data.py — incl.
    the es/pt, it/fr, de/nl close pairs the north-star's CCNet-style stage
@@ -19,10 +20,10 @@ from __future__ import annotations
 
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..crossing import strings
 from ..sources.corpus import LANGS
 from .model_store import ModelSpec, load_or_train, write_tables
 
@@ -295,26 +296,12 @@ def score_texts_top2(texts, model=None) -> "list[tuple[str, int, str, int]]":
     return out
 
 
-def classify_series(texts: pd.Series) -> list[str]:
-    """pd.Series → default-model predictions: the module-level batch entry
-    point for fused extra_scorers (extract_and_scan) — picklable by name,
-    executors rebuild the import-time model exactly like the UDF path."""
-    return classify_texts(texts.fillna("").tolist())
-
-
-def langid_ngram_udf(model=None):
-    """``model`` = (int64 centroids, langs) plugs a corpus-trained or
-    imported model into the same Arrow-batched scoring path (rides the UDF
-    closure → one broadcast-sized copy per executor)."""
-
-    @F.pandas_udf("string")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            classify_texts(texts.fillna("").tolist(), model=model),
-            index=texts.index,
-        )
-
-    return _udf
+def classify_series(texts) -> list[str]:
+    """Any sequence of texts (each non-str as "") → default-model
+    predictions: the module-level batch entry point for fused
+    extra_scorers (extract_and_scan) — picklable by name, executors rebuild
+    the import-time model on import."""
+    return classify_texts(strings(texts))
 
 
 # --- DuckDB twin: model-as-data + relational scoring -------------------------
@@ -412,7 +399,7 @@ _UND_SQL = "d.text IS NULL OR NOT regexp_matches(d.text, '[^ \\t\\n\\r\\f\\v]')"
 
 
 def langid_ngram_oracle_sql(centroid_path: str, *, table: str = "documents") -> str:
-    """DuckDB twin of ``langid_ngram_udf``: argmax with alphabetical
+    """DuckDB twin of ``classify_texts``: argmax with alphabetical
     tie-break over the shared scoring CTEs."""
     return f"""{_scoring_ctes(centroid_path, table)}
 SELECT d.doc_id,

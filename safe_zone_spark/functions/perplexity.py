@@ -1,4 +1,4 @@
-"""KenLM-style n-gram perplexity scoring as an Arrow-batched pandas UDF.
+"""KenLM-style n-gram perplexity scoring over Arrow batches of texts.
 
 The north-star spec calls for KenLM-style LM scoring (CCNet lineage) as a
 quality signal. The sandbox has no KenLM binary and no external model
@@ -26,9 +26,8 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
 
+from ..crossing import strings
 from .model_store import ModelSpec, load_or_train, write_tables
 
 
@@ -190,23 +189,11 @@ def perplexity_batch(texts, lm: TrigramLM | None = None) -> np.ndarray:
     return out
 
 
-def perplexity_series(texts: pd.Series) -> np.ndarray:
-    """pd.Series → default-model perplexities: the module-level batch entry
-    point for fused extra_scorers (extract_and_scan) — picklable by name."""
-    return perplexity_batch(texts.fillna("").tolist())
-
-
-def perplexity_udf(lm: TrigramLM | None = None):
-    """Column UDF: text → double perplexity (lower = more natural).
-    ``lm`` plugs a corpus-trained model (``train_trigram_lm(texts)``) or an
-    imported KenLM-derived table into the same scoring path."""
-
-    @F.pandas_udf("double")
-    def _udf(texts: pd.Series) -> pd.Series:
-        vals = perplexity_batch(texts.fillna("").tolist(), lm)
-        return pd.Series(vals, index=texts.index)
-
-    return _udf
+def perplexity_series(texts) -> np.ndarray:
+    """Any sequence of texts (each non-str as "") → default-model
+    perplexities: the module-level batch entry point for fused
+    extra_scorers (extract_and_scan) — picklable by name."""
+    return perplexity_batch(strings(texts))
 
 
 # --- DuckDB twin: model-as-data + relational scoring -------------------------
@@ -266,7 +253,7 @@ _LM = load_or_train(SPEC)
 
 def perplexity_oracle_sql(tri_path: str, ctx_path: str, *,
                           table: str = "documents", digits: int = 4) -> str:
-    """DuckDB twin of ``round(perplexity_udf()(text), digits)``: unnest
+    """DuckDB twin of ``round(text_udf(perplexity_batch, "double")(text), digits)``: unnest
     packed byte-trigram keys, LEFT JOIN the sparse trigram table, back off
     to the context table, then the constant; exp(-avg). Valid for ASCII
     corpora (ascii(char) == the UTF-8 byte); the engine itself handles

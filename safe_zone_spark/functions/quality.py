@@ -13,9 +13,10 @@ Every formula here has an exact ANSI-SQL twin used as the DuckDB oracle in
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..crossing import text_udf
 
 # word tokens = single-space split (our corpus normalizes whitespace);
 # the SQL twin is len(string_split(text, ' ')).
@@ -120,8 +121,8 @@ def _repetition_raw(t: str) -> tuple[float, float, float, float, float]:
     return dlf, dcf, fr[0], fr[1], fr[2]
 
 
-def repetition_series(texts: "pd.Series") -> "pd.DataFrame":
-    """pd.Series of texts → DataFrame of RAW repetition fractions + keep —
+def repetition_columns(texts) -> dict[str, np.ndarray]:
+    """Texts (each non-str as "") → columns of RAW repetition fractions + keep —
     the batch entry point (module-level, picklable by name for fused
     extra_scorers use). Rounding is deliberately NOT done here: np.round /
     Python round are banker's while Spark F.round and DuckDB round are
@@ -137,13 +138,8 @@ def repetition_series(texts: "pd.Series") -> "pd.DataFrame":
         & (arr[:, 3] <= TOP_NGRAM_CAPS[3])
         & (arr[:, 4] <= TOP_NGRAM_CAPS[4])
     )
-    return pd.DataFrame(
-        {
-            "dlf": arr[:, 0], "dcf": arr[:, 1],
-            "f2": arr[:, 2], "f3": arr[:, 3], "f4": arr[:, 4],
-            "rep_keep": keep,
-        }
-    )
+    return {"dlf": arr[:, 0], "dcf": arr[:, 1], "f2": arr[:, 2], "f3": arr[:, 3],
+            "f4": arr[:, 4], "rep_keep": keep}
 
 
 def repetition_metrics_fused(df, *, id_col: str = "doc_id", text_col: str = "text"):
@@ -167,9 +163,9 @@ def repetition_metrics_fused(df, *, id_col: str = "doc_id", text_col: str = "tex
     rep_keep applies the raw (unrounded) fractions against the Gopher
     Table A1 caps; emitted fractions are rounded to 4 JVM-side (filter on
     RAW, emit rounded — the repo-wide twin convention)."""
-    raw_udf = F.pandas_udf(
-        "dlf double, dcf double, f2 double, f3 double, f4 double, rep_keep boolean"
-    )(repetition_series)
+    raw_udf = text_udf(
+        repetition_columns,
+        "dlf double, dcf double, f2 double, f3 double, f4 double, rep_keep boolean")
     r = df.select(F.col(id_col), raw_udf(F.col(text_col)).alias("_r"))
     return r.select(
         id_col,

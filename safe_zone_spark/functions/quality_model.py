@@ -35,9 +35,8 @@ before training); arbitrary label strings are not supported.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
 
+from ..crossing import strings
 from .langid import (
     _DIM,
     _NB_SCALE,
@@ -203,18 +202,10 @@ SPEC = ModelSpec(
 _WEIGHTS, _CLASSES, GATE_THRESHOLD = load_or_train(SPEC)
 
 
-def quality_logit_series(texts: pd.Series) -> "list[int]":
-    """extra_scorers entry point: integer quality logit (hi - lo)."""
-    return [h - lo for h, lo in quality_scores(texts.fillna("").tolist())]
-
-
-def quality_logit_udf(model=None):
-    @F.pandas_udf("long")
-    def _udf(texts: pd.Series) -> pd.Series:
-        scores = quality_scores(texts.fillna("").tolist(), model=model)
-        return pd.Series([h - lo for h, lo in scores], index=texts.index)
-
-    return _udf
+def quality_logit_series(texts) -> "list[int]":
+    """extra_scorers entry point: integer quality logit (hi - lo) of any
+    sequence of texts (each non-str as "")."""
+    return [h - lo for h, lo in quality_scores(strings(texts))]
 
 
 # --- DuckDB twin --------------------------------------------------------------

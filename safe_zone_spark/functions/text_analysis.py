@@ -5,7 +5,6 @@ exists; UDF forms for the rest."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -183,32 +182,28 @@ def codepoints_sql(text: str = "text") -> str:
     )
 
 
-def winnow_fp_udf(*, k: int = 8, window: int = 4):
-    """Winnowing document fingerprints (Schleimer et al.) as ONE Arrow
-    crossing, zero shuffle: per batch, polynomial gram hashes via
-    :func:`gram_hashes_batch`, sliding-window minima and sorted-distinct
-    per doc in numpy, emitted comma-joined (array outputs stringify
-    differently across engines). Guarantee: any shared substring of length
-    >= k + window - 1 between two documents yields at least one shared
-    fingerprint."""
-
-    @F.pandas_udf("string")
-    def _udf(texts: pd.Series) -> pd.Series:
-        tl = texts.fillna("").tolist()
-        out = []
-        for h in gram_hashes_batch(tl, k):
-            if len(h) < window:
-                out.append("")
-                continue
-            mins = np.lib.stride_tricks.sliding_window_view(h, window).min(axis=1)
-            out.append(",".join(map(str, np.unique(mins))))
-        return pd.Series(out, index=texts.index)
-
-    return _udf
+def winnow_fingerprints(texts: list[str]) -> list[str]:
+    """Winnowing document fingerprints (Schleimer et al.) of a batch of
+    texts, run on Spark as ONE Arrow crossing with zero shuffle
+    (``crossing.text_udf(winnow_fingerprints, "string")``): polynomial gram
+    hashes via :func:`gram_hashes_batch`, sliding-window minima and
+    sorted-distinct per doc in numpy, emitted comma-joined (array outputs
+    stringify differently across engines). Guarantee: any shared substring
+    of length >= k + window - 1 between two documents yields at least one
+    shared fingerprint. k = 8 char grams, window = 4, as the twins' defaults."""
+    k, window = 8, 4
+    out = []
+    for h in gram_hashes_batch(texts, k):
+        if len(h) < window:
+            out.append("")
+            continue
+        mins = np.lib.stride_tricks.sliding_window_view(h, window).min(axis=1)
+        out.append(",".join(map(str, np.unique(mins))))
+    return out
 
 
 def winnowing_expr(text: Column | str = "text", *, k: int = 8, window: int = 4) -> Column:
-    """Pure-Catalyst twin of :func:`winnow_fp_udf` (array<long> form): gram
+    """Pure-Catalyst twin of :func:`winnow_fingerprints` (array<long> form): gram
     hashes via :func:`poly_gram_hashes_expr`, sliding minima via slice +
     array_min. Kept for cross-engine validation tests; the UDF is the
     production path (one Arrow crossing vs O(n·k) re-inlined substrs)."""
@@ -226,7 +221,7 @@ def winnowing_expr(text: Column | str = "text", *, k: int = 8, window: int = 4) 
 
 def winnowing_sql(*, k: int = 8, window: int = 4, table: str = "documents",
                   id_col: str = "doc_id") -> str:
-    """DuckDB twin of winnow_fp_udf (1-indexed substr/list semantics;
+    """DuckDB twin of winnow_fingerprints (1-indexed substr/list semantics;
     identical polynomial hash — see the module-level hash contract)."""
     return f"""
 WITH cp AS (

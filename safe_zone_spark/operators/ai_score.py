@@ -22,11 +22,11 @@ dedup/join plumbing end-to-end. Swapping in a real LLM = replacing
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..crossing import map_batches, pylist, strings
 
 
 def _pseudo_score(value: str) -> float:
@@ -42,22 +42,17 @@ def ai_confidence_join(
 ) -> DataFrame:
     """detections(…, value, confidence) → + (ai_score, fused).
 
-    Plan: ``dropDuplicates(value)`` → batch scorer (mapInPandas) →
+    Plan: ``dropDuplicates(value)`` → batch scorer (one Arrow map) →
     broadcast join back (distinct-value side is small by construction).
     fused = round((regex + ai) / 2, 2) — confidence.go:41-44 averaging.
     """
 
-    def score_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    value_col: pdf[value_col],
-                    "ai_score": [_pseudo_score(v or "") for v in pdf[value_col]],
-                }
-            )
+    def score_batch(batch):
+        values = strings(pylist(batch.column(value_col)))
+        return {"ai_score": [_pseudo_score(v) for v in values]}
 
     distinct = detections.select(value_col).dropDuplicates([value_col])
-    scores = distinct.mapInPandas(score_batch, f"{value_col} string, ai_score double")
+    scores = map_batches(distinct, score_batch, f"{value_col} string, ai_score double")
     # no rounding: the pseudo score is n/100 and fusion averages — rounding
     # at a .005 half-boundary is engine-dependent (HALF_UP vs print-based),
     # while the raw doubles are bit-identical on both engines

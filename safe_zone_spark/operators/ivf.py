@@ -19,9 +19,11 @@ model-table pattern as functions/langid.py).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..crossing import map_batches
+from .similarity import _matrix
 
 
 def _centroid_matrix(emb: DataFrame, id_col: str, vec_col: str,
@@ -46,21 +48,12 @@ def ivf_assign(
     cnorm = np.linalg.norm(cents, axis=1)
     id_type = emb.schema[id_col].dataType.simpleString()
 
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            scores = (v @ cents.T) / (
-                np.linalg.norm(v, axis=1)[:, None] * cnorm[None, :]
-            )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "cell": np.argmax(scores, axis=1).astype("int32")}
-            )
+    def assign(batch):
+        v = _matrix(batch.column(vec_col), cents.shape[1])
+        scores = (v @ cents.T) / (np.linalg.norm(v, axis=1)[:, None] * cnorm[None, :])
+        return {"cell": np.argmax(scores, axis=1).astype("int32")}
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} {id_type}, cell int"
-    )
+    return map_batches(emb.select(id_col, vec_col), assign, f"{id_col} {id_type}, cell int")
 
 
 def ivf_topk(
@@ -88,22 +81,13 @@ def ivf_topk(
     cand = assigned.join(emb.select(id_col, vec_col), id_col)
     id_type = emb.schema[id_col].dataType.simpleString()
 
-    def rerank(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cos = (v @ qvec) / (np.linalg.norm(v, axis=1) * np.linalg.norm(qvec))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cos_sim": np.round(cos, 4),
-                    "cell": pdf["cell"],
-                }
-            )
+    def rerank(batch):
+        v = _matrix(batch.column(vec_col), len(qvec))
+        cos = (v @ qvec) / (np.linalg.norm(v, axis=1) * np.linalg.norm(qvec))
+        return {"cos_sim": np.round(cos, 4)}
 
     return (
-        cand.mapInPandas(rerank, f"{id_col} {id_type}, cos_sim double, cell int")
+        map_batches(cand, rerank, f"{id_col} {id_type}, cos_sim double, cell int")
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
     )

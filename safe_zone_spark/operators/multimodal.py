@@ -2,9 +2,9 @@
 
 Media rides in DataFrames as opaque ``binary`` columns plus typed metadata
 structs — the pattern for 100 TB multimodal corpora: Spark moves/partitions
-the bytes, Arrow batches them into Python, and a vectorized UDF does the
-media work. The decode step itself is STUBBED in this sandbox (no
-PIL/ffmpeg/soundfile in the container): ``decode_image`` raises
+the bytes, Arrow batches them into Python (``crossing.map_batches``), and
+the media work runs per batch. The decode step itself is STUBBED in this
+sandbox (no PIL/ffmpeg/soundfile in the container): ``decode_image`` raises
 ``NotImplementedError`` unless ``fake=True``, which substitutes a
 deterministic fake decoder (content-addressed pseudo-pixels) so the entire
 Spark-side contract — schema, batch shape, partitioning, null handling —
@@ -27,10 +27,10 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
+
+from ..crossing import map_batches, pylist
 
 # --- deterministic synthetic media (tests/bench; stands in for real blobs) --
 
@@ -129,20 +129,15 @@ def fake_media(docs, limit: int, kind: str | None = None):
     ``kind=None`` cycles video (every 3rd id) and image; the dimensions and
     the digest seed follow the same per-id recipe as ``fake_media_cte``."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            blobs = [
-                make_fake_media(
-                    kind or ("video" if i % 3 == 0 else "image"),
-                    16 + (i % 4) * 16, 16 + (i % 3) * 16, 1 + (i % 5) * 2, seed=i,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({"media_id": ids, "blob": blobs})
+    def gen(batch):
+        ids = batch.column("doc_id")
+        return {"media_id": ids, "blob": [
+            make_fake_media(kind or ("video" if i % 3 == 0 else "image"),
+                            16 + (i % 4) * 16, 16 + (i % 3) * 16, 1 + (i % 5) * 2, seed=i)
+            for i in ids.to_pylist()]}
 
     ids = docs.filter(docs["doc_id"] < limit).select("doc_id")
-    return ids.mapInPandas(gen, "media_id long, blob binary")
+    return map_batches(ids, gen, "media_id long, blob binary")
 
 
 # --- DuckDB twins: rebuild each fake blob's spec and digest per id ----------
@@ -323,21 +318,12 @@ def media_metadata(df, *, blob_col: str = "blob", id_col: str = "media_id"):
     """(id, meta struct) — typed header parse, vectorized batch pass."""
     id_type = df.schema[id_col].dataType.simpleString()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [parse_header(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": [m and m["kind"] for m in metas],
-                    "width": [m and m["width"] for m in metas],
-                    "height": [m and m["height"] for m in metas],
-                    "frames": [m and m["frames"] for m in metas],
-                    "n_bytes": [m and m["n_bytes"] for m in metas],
-                }
-            )
+    def run(batch):
+        metas = [parse_header(b) for b in pylist(batch.column(blob_col))]
+        return {k: [m and m[k] for m in metas]
+                for k in ("kind", "width", "height", "frames", "n_bytes")}
 
-    return df.mapInPandas(run, f"{id_col} {id_type}, {_META_SCHEMA}")
+    return map_batches(df.select(id_col, blob_col), run, f"{id_col} {id_type}, {_META_SCHEMA}")
 
 
 def image_features(df, *, blob_col: str = "blob", id_col: str = "media_id",
@@ -350,40 +336,36 @@ def image_features(df, *, blob_col: str = "blob", id_col: str = "media_id",
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, mean_rgb array<double>, std_rgb array<double>, ahash string"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means, stds, hashes = [], [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    img = decode_image(blob, fake=fake_decode)
-                except (NotImplementedError, ValueError):
-                    ids.append(mid); means.append(None); stds.append(None); hashes.append(None)
-                    continue
-                f = img.astype(np.float64)
-                # 3*gray as int64: "pixel gray > mean gray" becomes the
-                # EXACT integer test 64*g3_i > Σg3 — no float rounding, so
-                # the SQL referee reproduces every bit
-                gray3 = img.astype(np.int64).sum(axis=2)
-                h, w = gray3.shape
-                ys = (np.arange(8) * h // 8)
-                xs = (np.arange(8) * w // 8)
-                small3 = gray3[np.ix_(ys, xs)]
-                bits = (64 * small3 > small3.sum()).flatten()
-                # packbits(bitorder='big') == the (val<<1)|bit fold
-                val = int.from_bytes(np.packbits(bits).tobytes(), "big")
-                ids.append(mid)
-                # half-AWAY rounding (positive values): power-of-two pixel
-                # counts make exact .xxxx5 means common, and numpy's
-                # banker's rounding would diverge from the SQL referee
-                r4 = lambda x: math.floor(x * 1e4 + 0.5) / 1e4
-                means.append([r4(x) for x in f.mean(axis=(0, 1))])
-                stds.append([r4(x) for x in f.std(axis=(0, 1))])
-                hashes.append(format(val, "016x"))
-            yield pd.DataFrame(
-                {id_col: ids, "mean_rgb": means, "std_rgb": stds, "ahash": hashes}
-            )
+    def run(batch):
+        means, stds, hashes = [], [], []
+        for blob in pylist(batch.column(blob_col)):
+            try:
+                img = decode_image(blob, fake=fake_decode)
+            except (NotImplementedError, ValueError):
+                means.append(None); stds.append(None); hashes.append(None)
+                continue
+            f = img.astype(np.float64)
+            # 3*gray as int64: "pixel gray > mean gray" becomes the
+            # EXACT integer test 64*g3_i > Σg3 — no float rounding, so
+            # the SQL referee reproduces every bit
+            gray3 = img.astype(np.int64).sum(axis=2)
+            h, w = gray3.shape
+            ys = (np.arange(8) * h // 8)
+            xs = (np.arange(8) * w // 8)
+            small3 = gray3[np.ix_(ys, xs)]
+            bits = (64 * small3 > small3.sum()).flatten()
+            # packbits(bitorder='big') == the (val<<1)|bit fold
+            val = int.from_bytes(np.packbits(bits).tobytes(), "big")
+            # half-AWAY rounding (positive values): power-of-two pixel
+            # counts make exact .xxxx5 means common, and numpy's
+            # banker's rounding would diverge from the SQL referee
+            r4 = lambda x: math.floor(x * 1e4 + 0.5) / 1e4
+            means.append([r4(x) for x in f.mean(axis=(0, 1))])
+            stds.append([r4(x) for x in f.std(axis=(0, 1))])
+            hashes.append(format(val, "016x"))
+        return {"mean_rgb": means, "std_rgb": stds, "ahash": hashes}
 
-    return df.mapInPandas(run, schema)
+    return map_batches(df.select(id_col, blob_col), run, schema)
 
 
 def image_resize(df, *, out_w: int, out_h: int, blob_col: str = "blob",
@@ -392,24 +374,23 @@ def image_resize(df, *, out_w: int, out_h: int, blob_col: str = "blob",
     into the same container — byte sizes shrink deterministically."""
     id_type = df.schema[id_col].dataType.simpleString()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for blob in pdf[blob_col]:
-                try:
-                    img = decode_image(blob, fake=fake_decode)
-                except (NotImplementedError, ValueError):
-                    out.append(None)
-                    continue
-                h, w, _ = img.shape
-                ys = (np.arange(out_h) * h // out_h)
-                xs = (np.arange(out_w) * w // out_w)
-                resized = img[np.ix_(ys, xs)]
-                header = MAGIC + b"\x00" + struct.pack(">HHH", out_w, out_h, 1)
-                out.append(header + resized.tobytes())
-            yield pd.DataFrame({id_col: pdf[id_col], blob_col: out})
+    def run(batch):
+        out = []
+        for blob in pylist(batch.column(blob_col)):
+            try:
+                img = decode_image(blob, fake=fake_decode)
+            except (NotImplementedError, ValueError):
+                out.append(None)
+                continue
+            h, w, _ = img.shape
+            ys = (np.arange(out_h) * h // out_h)
+            xs = (np.arange(out_w) * w // out_w)
+            resized = img[np.ix_(ys, xs)]
+            header = MAGIC + b"\x00" + struct.pack(">HHH", out_w, out_h, 1)
+            out.append(header + resized.tobytes())
+        return {blob_col: out}
 
-    return df.mapInPandas(run, f"{id_col} {id_type}, {blob_col} binary")
+    return map_batches(df.select(id_col, blob_col), run, f"{id_col} {id_type}, {blob_col} binary")
 
 
 def frame_sample(df, *, every_k: int, blob_col: str = "blob",
@@ -421,25 +402,20 @@ def frame_sample(df, *, every_k: int, blob_col: str = "blob",
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, frame_idx int, frame_offset_bytes long"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, offs = [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_header(blob)
-                if meta is None or meta["kind"] != "video":
-                    continue
-                frame_bytes = meta["width"] * meta["height"] * 3
-                for i in range(0, meta["frames"], every_k):
-                    ids.append(mid)
-                    idxs.append(i)
-                    offs.append(11 + i * frame_bytes)
-            yield pd.DataFrame(
-                {id_col: ids,
-                 "frame_idx": pd.array(idxs, dtype="int32"),
-                 "frame_offset_bytes": pd.array(offs, dtype="int64")}
-            )
+    def run(batch):
+        ids, idxs, offs = [], [], []
+        for mid, blob in zip(batch.column(id_col).to_pylist(), pylist(batch.column(blob_col))):
+            meta = parse_header(blob)
+            if meta is None or meta["kind"] != "video":
+                continue
+            frame_bytes = meta["width"] * meta["height"] * 3
+            for i in range(0, meta["frames"], every_k):
+                ids.append(mid)
+                idxs.append(i)
+                offs.append(11 + i * frame_bytes)
+        return {id_col: ids, "frame_idx": idxs, "frame_offset_bytes": offs}
 
-    return df.mapInPandas(run, schema)
+    return map_batches(df.select(id_col, blob_col), run, schema)
 
 
 def audio_features(df, *, blob_col: str = "blob", id_col: str = "media_id"):
@@ -453,23 +429,17 @@ def audio_features(df, *, blob_col: str = "blob", id_col: str = "media_id"):
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, n_samples long, rms double, zero_crossings long"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, rms, zc = [], [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_header(blob)
-                if meta is None or meta["kind"] != "audio":
-                    continue
-                sig = np.frombuffer(blob[11:], dtype=np.uint8).astype(np.float64) - 128.0
-                ids.append(mid)
-                ns.append(len(sig))
-                rms.append(round(float(np.sqrt(np.mean(sig**2))), 4) if len(sig) else 0.0)
-                zc.append(int(np.sum(np.signbit(sig[:-1]) != np.signbit(sig[1:]))))
-            yield pd.DataFrame(
-                {id_col: ids,
-                 "n_samples": pd.array(ns, dtype="int64"),
-                 "rms": pd.array(rms, dtype="float64"),
-                 "zero_crossings": pd.array(zc, dtype="int64")}
-            )
+    def run(batch):
+        ids, ns, rms, zc = [], [], [], []
+        for mid, blob in zip(batch.column(id_col).to_pylist(), pylist(batch.column(blob_col))):
+            meta = parse_header(blob)
+            if meta is None or meta["kind"] != "audio":
+                continue
+            sig = np.frombuffer(blob[11:], dtype=np.uint8).astype(np.float64) - 128.0
+            ids.append(mid)
+            ns.append(len(sig))
+            rms.append(round(float(np.sqrt(np.mean(sig**2))), 4) if len(sig) else 0.0)
+            zc.append(int(np.sum(np.signbit(sig[:-1]) != np.signbit(sig[1:]))))
+        return {id_col: ids, "n_samples": ns, "rms": rms, "zero_crossings": zc}
 
-    return df.mapInPandas(run, schema)
+    return map_batches(df.select(id_col, blob_col), run, schema)

@@ -65,14 +65,15 @@ from __future__ import annotations
 
 import functools
 import re
+from collections import Counter
 from dataclasses import replace
 from itertools import repeat
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 
+from ..crossing import map_batches, pylist, spark_type
 from ..oracle import (
     Detection,
     compute_confidence,
@@ -372,24 +373,16 @@ def detect_batch(
                                 expected_formats=expected_formats))
 
 
-def _crossing_batch(names: list[str], arrays: list, texts: list, rules: RuleSet,
-                    appended, fields: tuple[str, ...], extra_scorers: dict,
-                    **decide) -> pa.RecordBatch:
-    """One output batch of the Arrow crossing: the ``arrays`` (named
-    ``names``) as they are, then the decision ``fields`` of ``texts`` and
-    each extra scorer's column, typed by ``appended`` (the Arrow schema of
-    those columns). A scorer takes the texts as a ``pd.Series`` and returns
-    a same-length sequence; NaN and None become nulls, as in a pandas UDF."""
+def _crossing_batch(texts: list, rules: RuleSet, fields: tuple[str, ...],
+                    extra_scorers: dict, **decide) -> dict:
+    """The crossing's columns for one batch of ``texts``: the decision
+    ``fields``, then each extra scorer's column. A scorer takes the list of
+    texts and returns a same-length sequence; NaN and None become nulls, as
+    in a pandas UDF."""
     encoded = _encode(texts)
     got = _decide(texts, encoded, _scan_blob(encoded, *_join(encoded), rules), rules, fields,
                   **decide)
-    values = [got[f] for f in fields]
-    if extra_scorers:
-        series = pd.Series(texts, dtype=object)
-        values += [fn(series) for _, fn in extra_scorers.values()]
-    arrays = [*arrays, *(pa.array(v, type=f.type, from_pandas=True, size=len(texts))
-                         for v, f in zip(values, appended))]
-    return pa.RecordBatch.from_arrays(arrays, names=[*names, *appended.names])
+    return got | {name: fn(texts) for name, (_, fn) in extra_scorers.items()}
 
 
 def _fields(fields) -> tuple[str, ...]:
@@ -397,20 +390,15 @@ def _fields(fields) -> tuple[str, ...]:
     return tuple(f for f in SCAN_OUTPUT_FIELDS if f in (fields or SCAN_OUTPUT_FIELDS))
 
 
-def _map_in_arrow(df, run, passed, fields: tuple[str, ...], extra_scorers: dict):
-    """``df.mapInArrow`` returning the ``passed`` StructFields, then the scan
-    ``fields``, then one column per extra scorer (``{name: (type, fn)}``, the
-    type a DataType or DDL string); ``run(batch, appended)`` gets the Arrow
-    schema of the columns after ``passed``."""
+def _crossing_schema(passed, fields: tuple[str, ...], extra_scorers: dict):
+    """The ``passed`` StructFields, then the scan ``fields``, then one
+    column per extra scorer (``{name: (type, fn)}``, the type a DataType or
+    DDL string)."""
     from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    added = [f for f in scan_output_schema(T.StructType()).fields if f.name in fields] + [
-        T.StructField(name, t if isinstance(t, T.DataType) else T._parse_datatype_string(t))
-        for name, (t, _) in extra_scorers.items()]
-    appended = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in added])
-    return df.mapInArrow(lambda batches: (run(b, appended) for b in batches),
-                         T.StructType([*passed, *added]))
+    return T.StructType([
+        *passed, *(f for f in scan_output_schema(T.StructType()).fields if f.name in fields),
+        *(T.StructField(name, spark_type(t)) for name, (t, _) in extra_scorers.items())])
 
 
 def extract_and_scan(
@@ -433,14 +421,14 @@ def extract_and_scan(
 
     ``extra_scorers`` fuses per-text batch scorers into the SAME crossing
     (langid and perplexity in ``plans.flagship``): ``{col_name:
-    (spark_type_ddl, fn)}``, ``fn`` taking the text pd.Series and returning
-    a same-length sequence; it must be module-level (or close over
-    module-level state) so executors rebuild its model on import.
+    (spark_type_ddl, fn)}``, ``fn`` taking the batch's list of texts and
+    returning a same-length sequence; it must be module-level (or close
+    over module-level state) so executors rebuild its model on import.
 
-    The stage reads the html as Arrow binary and returns one
-    ``pa.RecordBatch`` per input batch: the kept columns are the input
-    batch's own arrays, and the rest are built straight from the Python
-    values, so no pandas frame is built on either side. Output: kept cols,
+    The stage reads the html as Arrow binary and returns one Arrow batch
+    per input batch (``crossing.map_batches``): the kept columns are the
+    input batch's own arrays, and the rest are built straight from the
+    Python values, so no pandas frame is built on either side. Output: kept cols,
     ``text``, the scan fields, the extra scores. Quality exprs stay
     JVM-side AFTER this stage (whole-stage codegen over the emitted text).
     """
@@ -454,20 +442,18 @@ def extract_and_scan(
 
     fields = _fields(fields)
     extra_scorers = extra_scorers or {}
-    passed = list(keep_cols) + ["text"]
 
-    def run(batch, appended):
-        texts = [extract_text_from_html(h) for h in batch.column(html_col).to_pylist()]
-        arrays = [batch.column(c) for c in keep_cols] + [pa.array(texts, pa.string())]
-        return _crossing_batch(passed, arrays, texts, b_rules.value, appended, fields,
-                               extra_scorers, mode=mode_resolved)
+    def run(batch):
+        texts = [extract_text_from_html(h) for h in pylist(batch.column(html_col))]
+        return {"text": texts} | _crossing_batch(texts, b_rules.value, fields, extra_scorers,
+                                                 mode=mode_resolved)
 
     # explicit projection (guide §4.1): Catalyst cannot see which columns an
     # opaque Python map touches, so every input column would cross the
     # Arrow boundary — select exactly the kept columns + html
-    text = T.StructField("text", T.StringType())
-    return _map_in_arrow(df.select(*dict.fromkeys(list(keep_cols) + [html_col])), run,
-                         [*(df.schema[c] for c in keep_cols), text], fields, extra_scorers)
+    passed = [*(df.schema[c] for c in keep_cols), T.StructField("text", T.StringType())]
+    return map_batches(df.select(*dict.fromkeys(list(keep_cols) + [html_col])), run,
+                       _crossing_schema(passed, fields, extra_scorers))
 
 
 def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_id",
@@ -481,40 +467,22 @@ def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_i
     Narrow stage (no shuffle); allowlist anti-filter applies as in P2.
     """
     rules = rules or default_rules()
-    spark = df.sparkSession
-    b_rules = spark.sparkContext.broadcast(rules)
-    id_field = df.schema[id_col]
+    b_rules = df.sparkSession.sparkContext.broadcast(rules)
+    schema = f"{id_col} {df.schema[id_col].dataType.simpleString()}, type string, hits bigint"
 
-    from pyspark.sql import types as T
+    def run(batch):
+        encoded = _encode(pylist(batch.column(text_col)))
+        r = replace(b_rules.value, blocklist=frozenset())
+        per_doc = _scan_blob(encoded, *_join(encoded), r)
+        ids, types, hits = [], [], []
+        for doc_id, dets in zip(batch.column(id_col).to_pylist(), per_doc):
+            for t_name, c in Counter(d.type for d in dets).items():
+                ids.append(doc_id)
+                types.append(t_name)
+                hits.append(c)
+        return {id_col: ids, "type": types, "hits": hits}
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("type", T.StringType()),
-            T.StructField("hits", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = b_rules.value
-        for pdf in batches:
-            texts = pdf[text_col]
-            encoded = _encode(texts)
-            n = len(encoded)
-            per_doc = _scan_blob(encoded, *_join(encoded), replace(r, blocklist=frozenset()))
-            ids, types, hits = [], [], []
-            id_values = pdf[id_col].tolist()
-            for i in range(n):
-                counts: dict[str, int] = {}
-                for d in per_doc[i]:
-                    counts[d.type] = counts.get(d.type, 0) + 1
-                for t_name, c in counts.items():
-                    ids.append(id_values[i])
-                    types.append(t_name)
-                    hits.append(c)
-            yield pd.DataFrame({id_col: ids, "type": types, "hits": np.array(hits, dtype=np.int64)})
-
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df.select(id_col, text_col), run, schema)
 
 
 def scan(
@@ -547,11 +515,10 @@ def scan(
     fields = _fields(fields)
     extra_scorers = extra_scorers or {}
 
-    def run(batch, appended):
-        fmts = batch.column(expected_format_col).to_pylist() if expected_format_col else None
-        return _crossing_batch(batch.schema.names, batch.columns,
-                               batch.column(text_col).to_pylist(), b_rules.value, appended,
-                               fields, extra_scorers, mode=mode_resolved,
+    def run(batch):
+        fmts = pylist(batch.column(expected_format_col)) if expected_format_col else None
+        return _crossing_batch(pylist(batch.column(text_col)), b_rules.value, fields,
+                               extra_scorers, mode=mode_resolved,
                                validator_names=validator_names, expected_formats=fmts)
 
-    return _map_in_arrow(df, run, df.schema.fields, fields, extra_scorers)
+    return map_batches(df, run, _crossing_schema(df.schema.fields, fields, extra_scorers))

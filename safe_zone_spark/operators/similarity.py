@@ -22,6 +22,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..crossing import apply_groups, map_batches
+
 
 def hyperplanes(num_planes: int, dim: int, salt: int | None = None) -> list[list[float]]:
     """Deterministic pseudo-random planes; component in [-1, 1).
@@ -40,6 +42,13 @@ def hyperplanes(num_planes: int, dim: int, salt: int | None = None) -> list[list
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _matrix(col, dim: int):
+    """An Arrow column of equal-length vectors as a float64 (rows, dim) matrix."""
+    import numpy as np
+
+    return col.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, dim)
 
 
 def _lit_array(vals: list[float]):
@@ -137,7 +146,7 @@ def embedding_near_dups(
     is the LSH bound, not an implementation artifact; mid-similarity search
     at scale wants IVF instead."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     dim = len(emb.select(vec_col).head()[0])
     # (dim, tables*planes) plane matrix — ONE numpy matmul per Arrow batch
@@ -150,26 +159,16 @@ def embedding_near_dups(
     id_type = emb.schema[id_col].dataType.simpleString()
     vec_type = emb.schema[vec_col].dataType.simpleString()
 
-    def bucketize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (vecs @ plane_mat >= 0).reshape(len(pdf), num_tables, num_planes)
-            frames = []
-            for t in range(num_tables):
-                key = ["".join("1" if b else "0" for b in row) for row in bits[:, t, :]]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            id_col: pdf[id_col].to_numpy(),
-                            "tbl": t,
-                            "bucket": key,
-                            vec_col: pdf[vec_col].to_numpy(),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+    def bucketize(batch):
+        # every row once per table, table-major
+        n = batch.num_rows
+        bits = (_matrix(batch.column(vec_col), dim) @ plane_mat >= 0).reshape(
+            n, num_tables, num_planes)
+        return {id_col: pa.concat_arrays([batch.column(id_col)] * num_tables),
+                "tbl": np.repeat(np.arange(num_tables, dtype=np.int32), n),
+                "bucket": ["".join("1" if b else "0" for b in row)
+                           for t in range(num_tables) for row in bits[:, t, :]],
+                vec_col: pa.concat_arrays([batch.column(vec_col)] * num_tables)}
 
     # Verification happens INSIDE each (table, bucket) group: one shuffle of
     # (id, bucket, vec) rows — num_tables × n rows total — then the O(bucket²)
@@ -191,18 +190,19 @@ def embedding_near_dups(
     # verify 2.6 / 3.3 s (task-launch overhead). Results are
     # partition-invariant.
     par = emb.sparkSession.sparkContext.defaultParallelism
-    banded = emb.select(id_col, vec_col).repartition(par).mapInPandas(
-        bucketize, f"{id_col} {id_type}, tbl int, bucket string, {vec_col} {vec_type}"
-    )
+    banded = map_batches(
+        emb.select(id_col, vec_col).repartition(par), bucketize,
+        f"{id_col} {id_type}, tbl int, bucket string, {vec_col} {vec_type}")
 
-    def verify_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
+    def verify_bucket(batch):
+        n = batch.num_rows
+        empty = {"id_a": [], "id_b": [], "cos_sim": []}
         if n < 2:
             return empty
-        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
-        V = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
+        ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        V = _matrix(batch.column(vec_col), dim)[order]
         norms = np.linalg.norm(V, axis=1)
         inv = 1.0 / norms
         # BLAS matmul PREFILTER, exact einsum DECIDE: the O(bucket²) dot
@@ -238,20 +238,12 @@ def embedding_near_dups(
                 out_c.append(np.round(cos[keep], 4))
         if not out_a:
             return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos_sim": np.concatenate(out_c),
-            }
-        )
+        return {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b),
+                "cos_sim": np.concatenate(out_c)}
 
-    return (
-        banded.repartition(par, "tbl", "bucket")
-        .groupBy("tbl", "bucket")
-        .applyInPandas(verify_bucket, f"id_a {id_type}, id_b {id_type}, cos_sim double")
-        .dropDuplicates(["id_a", "id_b"])  # OR across tables: one row per pair
-    )
+    pairs = apply_groups(banded.repartition(par, "tbl", "bucket").groupBy("tbl", "bucket"),
+                         verify_bucket, f"id_a {id_type}, id_b {id_type}, cos_sim double")
+    return pairs.dropDuplicates(["id_a", "id_b"])  # OR across tables: one row per pair
 
 
 def embedding_near_dups_sql(

@@ -15,12 +15,11 @@ stage as a standalone, oracle-checkable operator.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from ..checksums import luhn_valid_np, tckn_valid_np
+from ..crossing import map_batches, pylist, strings
 from ..validators import is_valid_json, is_valid_xml, regex_match
 
 # Seed REGEX validators (init.sql:96-100) — all ^…$-anchored.
@@ -43,17 +42,15 @@ def validator_columns(df, *, id_col: str = "doc_id", text_col: str = "text"):
         "email_ok boolean, numeric_ok boolean, alnum_ok boolean"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = ["" if t is None else t for t in pdf[text_col]]
-            out = {id_col: pdf[id_col]}
-            out["json_ok"] = [is_valid_json(t) for t in texts]
-            out["xml_ok"] = [is_valid_xml(t) for t in texts]
-            for name, rule in REGEX_VALIDATORS.items():
-                out[name] = [regex_match(rule, t)[0] for t in texts]
-            yield pd.DataFrame(out)
+    def run(batch):
+        texts = strings(pylist(batch.column(text_col)))
+        out = {"json_ok": [is_valid_json(t) for t in texts],
+               "xml_ok": [is_valid_xml(t) for t in texts]}
+        for name, rule in REGEX_VALIDATORS.items():
+            out[name] = [regex_match(rule, t)[0] for t in texts]
+        return out
 
-    return df.mapInPandas(run, schema)
+    return map_batches(df.select(id_col, text_col), run, schema)
 
 
 def checksum_candidates(df, *, id_col: str = "doc_id", text_col: str = "text"):
@@ -68,25 +65,19 @@ def checksum_candidates(df, *, id_col: str = "doc_id", text_col: str = "text"):
         "tckn_candidate string, tckn_ok boolean"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = ["" if t is None else t for t in pdf[text_col]]
-            cards = [(m.group(0) if (m := _CC_RE.search(t)) else None) for t in texts]
-            tckns = [(m.group(0) if (m := _TCKN_RE.search(t)) else None) for t in texts]
-            luhn = luhn_valid_np(np.array(["" if c is None else c for c in cards], dtype=object))
-            # TCKN regex guarantees 11 digits; checksum still must pass
-            tv = tckn_valid_np(np.array(["" if c is None else c for c in tckns], dtype=object))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "card_candidate": cards,
-                    "luhn_ok": [bool(x) and c is not None for x, c in zip(luhn, cards)],
-                    "tckn_candidate": tckns,
-                    "tckn_ok": [bool(x) and c is not None for x, c in zip(tv, tckns)],
-                }
-            )
+    def run(batch):
+        texts = strings(pylist(batch.column(text_col)))
+        cards = [(m.group(0) if (m := _CC_RE.search(t)) else None) for t in texts]
+        tckns = [(m.group(0) if (m := _TCKN_RE.search(t)) else None) for t in texts]
+        luhn = luhn_valid_np(np.array(["" if c is None else c for c in cards], dtype=object))
+        # TCKN regex guarantees 11 digits; checksum still must pass
+        tv = tckn_valid_np(np.array(["" if c is None else c for c in tckns], dtype=object))
+        return {"card_candidate": cards,
+                "luhn_ok": [bool(x) and c is not None for x, c in zip(luhn, cards)],
+                "tckn_candidate": tckns,
+                "tckn_ok": [bool(x) and c is not None for x, c in zip(tv, tckns)]}
 
-    return df.mapInPandas(run, schema)
+    return map_batches(df.select(id_col, text_col), run, schema)
 
 
 # --- DuckDB twins ----------------------------------------------------------

@@ -225,7 +225,7 @@ def run_with_manifest(
     rebalanced, so the crossing is fed and the write laid out by that one
     shuffle (the advisory size then applies to input bytes); this holds
     while ``transform`` keeps rows in their partitions (column
-    expressions, ``mapInArrow``, ``mapInPandas``). Otherwise ``transform``
+    expressions, ``mapInArrow``, Arrow UDFs). Otherwise ``transform``
     receives the narrow scan and its output is rebalanced. The rebalance
     needs AQE; without it the hint plans a plain hash exchange on ``unit``
     and one task writes each unit. One INFO line says where the rebalance

@@ -25,6 +25,7 @@ from __future__ import annotations
 import functools
 import logging
 import re
+import sys
 import warnings
 from dataclasses import dataclass, field
 from re import _constants as C
@@ -179,14 +180,12 @@ def default_rules(**overrides) -> RuleSet:
 # ---------------------------------------------------------------------------
 
 _ALL = frozenset(range(256))
+# RE2's \s; Python's also matches \v (re2_parse spells RE2's in the parse)
 _DIGIT, _SPACE = frozenset(b"0123456789"), frozenset(b"\t\n\f\r ")
 _WORD = _DIGIT | frozenset(b"_abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
 # in a bytes regex \d \w and their complements are ASCII classes
 _CATEGORY = {C.CATEGORY_DIGIT: _DIGIT, C.CATEGORY_WORD: _WORD,
              C.CATEGORY_NOT_DIGIT: _ALL - _DIGIT, C.CATEGORY_NOT_WORD: _ALL - _WORD}
-# RE2's \s is [\t\n\f\r ], and Python's also matches \v: the walk spells \s
-# and \S as these classes in the parse it compiles
-_SPACE_CLASS = {C.CATEGORY_SPACE: _SPACE, C.CATEGORY_NOT_SPACE: _ALL - _SPACE}
 # what RE2 has of Python's flags and anchors (^ $ \A \b \B; no \Z), and its
 # bound on the product of nested counted repeats (parse.cc RepetitionWalker)
 _RE2_FLAGS = C.SRE_FLAG_IGNORECASE | C.SRE_FLAG_MULTILINE | C.SRE_FLAG_DOTALL
@@ -220,15 +219,45 @@ def _node_bytes(op, av) -> frozenset[int] | None:
     return _ALL - got if av and av[0][0] is C.NEGATE else frozenset(got)
 
 
-def _re2_spaces(items: list) -> list:
-    """An IN node's items with ``\\s`` and ``\\S`` spelled as RE2's classes."""
+def _re2_spaces(items: list, top: int) -> list:
+    """An IN node's items with ``\\s`` as RE2's ``[\\t\\n\\f\\r ]`` and
+    ``\\S`` as its complement up to code ``top``."""
     out = []
     for iop, iav in items:
-        if iop is C.CATEGORY and iav in _SPACE_CLASS:
-            out += [(C.LITERAL, b) for b in sorted(_SPACE_CLASS[iav])]
+        if iop is C.CATEGORY and iav is C.CATEGORY_SPACE:
+            out += [(C.LITERAL, b) for b in sorted(_SPACE)]
+        elif iop is C.CATEGORY and iav is C.CATEGORY_NOT_SPACE:
+            lo = 0
+            for b in sorted(_SPACE):
+                out += [(C.RANGE, (lo, b - 1))] if lo < b else []
+                lo = b + 1
+            out.append((C.RANGE, (lo, top)))
         else:
             out.append((iop, iav))
     return out
+
+
+def _respell(seq, top: int) -> None:
+    # replaced, not edited: the parser shares \s's item list
+    for i, (op, av) in enumerate(seq):
+        if op is C.IN:
+            seq[i] = (op, _re2_spaces(av, top))
+        elif op is C.SUBPATTERN:
+            _respell(av[3], top)
+        elif op is C.BRANCH:
+            for b in av[1]:
+                _respell(b, top)
+        elif op is C.MAX_REPEAT or op is C.MIN_REPEAT:
+            _respell(av[2], top)
+
+
+def re2_parse(source: "str | bytes", flags: int = 0):
+    """The parse of ``source`` with every ``\\s`` and ``\\S`` spelled as
+    RE2's ``[\\t\\n\\f\\r ]`` and its complement: Python's ``\\s`` also
+    matches ``\\v``. ``re._compiler.compile`` compiles it."""
+    tree = _parser.parse(source, flags)
+    _respell(tree, 0xFF if isinstance(source, bytes) else sys.maxunicode)
+    return tree
 
 
 def _fold(got: frozenset[int]) -> frozenset[int]:
@@ -264,13 +293,12 @@ def _plan(source: str) -> Plan | str:
     (lowercased under ``(?i)``); one factor per alternation branch, unioned.
     Min-0 repeats add none. The alphabet is the union of every consuming
     node's bytes, folded only inside an IGNORECASE scope. A plan may widen a
-    scan, never drop a match. The walk spells ``\\s`` and ``\\S`` as RE2's
-    ``[\\t\\n\\f\\r ]`` and its complement in the parse, and the pattern is
-    compiled from that parse."""
+    scan, never drop a match. The walk reads, and the pattern is compiled
+    from, :func:`re2_parse`'s parse."""
     try:
         with warnings.catch_warnings():
             warnings.filterwarnings("error", "Possible nested set", FutureWarning)
-            tree = _parser.parse(source.encode("utf-8"))
+            tree = re2_parse(source.encode("utf-8"))
         icase = bool(tree.state.flags & C.SRE_FLAG_IGNORECASE)
         safe, alphabet = True, set()
 
@@ -281,10 +309,7 @@ def _plan(source: str) -> Plan | str:
             nonlocal safe
             out: list[frozenset[bytes]] = []
             run = bytearray()
-            for i, (op, av) in enumerate([*seq, (None, None)]):
-                if op is C.IN:  # replaced, not edited: the parser shares \s's items
-                    av = _re2_spaces(av)
-                    seq[i] = (op, av)
+            for op, av in [*seq, (None, None)]:
                 got = _node_bytes(op, av)
                 if got is not None:
                     folded = _fold(got)

@@ -16,7 +16,7 @@ The HTML wrapper is deliberately simple (fixed boilerplate variants) so the
 extractor can recover ``text`` **byte-identically per url** — the per-row
 invariant pinned by BASELINE.json. Real-world extraction (trafilatura-class)
 is out of scope for the sandbox; the plumbing (binary column in, text column
-out, vectorized batch UDF) is the real part.
+out, one Arrow batch map) is the real part.
 """
 
 from __future__ import annotations
@@ -183,23 +183,23 @@ def generate_corpus_distributed(spark, n_rows: int, seed: int = 42, *,
                                 skew_fraction: float = 0.10,
                                 num_partitions: int | None = None):
     """Scale path: each row is generated independently from a per-row seed
-    ``(seed << 32) ^ row_id`` inside ``mapInPandas`` over ``spark.range`` —
-    deterministic regardless of partitioning, embarrassingly parallel, and
-    the same recipe would emit 10^12 rows on a real cluster (no driver-side
-    materialization)."""
+    ``(seed << 32) ^ row_id`` inside an Arrow map (``crossing.map_batches``)
+    over ``spark.range`` — deterministic regardless of partitioning,
+    embarrassingly parallel, and the same recipe would emit 10^12 rows on a
+    real cluster (no driver-side materialization). ``warc_ts`` crosses as
+    Arrow ``timestamp[us, tz=UTC]`` built from the naive UTC wall times,
+    so the rows do not depend on the session time zone."""
+    from ..crossing import map_batches
+
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     schema = corpus_schema()
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [
-                _corpus_row(random.Random((seed << 32) ^ int(i)), int(i),
-                            pii_fraction, skew_fraction)
-                for i in pdf["id"]
-            ]
-            yield pd.DataFrame(rows)
+    def gen(batch):
+        rows = [_corpus_row(random.Random((seed << 32) ^ i), i, pii_fraction, skew_fraction)
+                for i in batch.column("id").to_pylist()]
+        return {name: [r[name] for r in rows] for name in schema.names}
 
-    return spark.range(0, n_rows, 1, num_partitions).mapInPandas(gen, schema)
+    return map_batches(spark.range(0, n_rows, 1, num_partitions), gen, schema)
 
 
 def generate_corpus(spark, n_rows: int, seed: int = 42, **kw):

@@ -7,8 +7,9 @@ The per-row invariant pinned by BASELINE.json is "byte-identical extracted
 text per url" — ``extract_text_from_html`` is the deterministic inverse of
 the corpus wrapper (sources/corpus.py). Real-world extraction libraries
 (trafilatura / resiliparse) are not in this sandbox; the Spark-side plumbing
-is the real part: binary column in, Arrow batch across, vectorized pandas
-apply, narrow stage (no shuffle), schema declared up front.
+is the real part: binary column in, one Arrow batch across and back (the
+input columns pass through as its own arrays), narrow stage (no shuffle),
+schema declared up front.
 
 Reference analog: the Go service receives ready text over HTTP
 (/root/reference/internal/models/models.go:6-12) — extraction is the
@@ -17,23 +18,15 @@ capability BASELINE.json adds for the corpus setting.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
+from ..crossing import map_batches, pylist
 from .corpus import extract_text_from_html
 
 
 def extract_text(df, *, html_col: str = "html", out_col: str = "text"):
-    """Append ``out_col`` decoded from ``html_col``. Narrow mapInPandas stage."""
+    """Append ``out_col`` decoded from ``html_col``. Narrow Arrow map stage:
+    the input columns pass through as the batch's own arrays."""
     from pyspark.sql import types as T
 
     schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.StringType())])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [extract_text_from_html(h) for h in pdf[html_col]]
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return map_batches(df, lambda batch: {out_col: [
+        extract_text_from_html(h) for h in pylist(batch.column(html_col))]}, schema)

@@ -23,7 +23,9 @@ Observable semantics replicated exactly:
   suppressed by the shrink guard until sanitized length catches up).
 
 Spark mapping: ``applyInPandasWithState`` keyed by stream id; state =
-(buffer, validated_len, last_seq). Chunks are applied in ``seq`` order
+(buffer, validated_len, last_seq). It is the package's one pandas crossing
+(every other stage goes through ``crossing``): Spark 4.1 has no Arrow-typed
+form of it with the same ``GroupState`` API. Chunks are applied in ``seq`` order
 within each micro-batch, one detector pass per chunk over the accumulated
 buffer — O(buffer) per chunk, exactly the reference's cost model, bounded by
 the cap. At scale each stream is independent state (hash-partitioned by

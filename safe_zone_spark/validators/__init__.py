@@ -33,9 +33,10 @@ import functools
 import json
 import re
 import xml.etree.ElementTree as ET
+from re import _compiler
 
 from ..checksums import luhn_valid, tckn_valid
-from ..rules import RuleSet, Validator, compile_bytes_regex
+from ..rules import RuleSet, Validator, compile_bytes_regex, re2_parse
 
 
 def _reject_constant(_):
@@ -78,10 +79,10 @@ def _go_anchored(rule: str) -> str:
 def _compile_rule(rule: str) -> re.Pattern[str]:
     """The rule as Go's ``regexp.MatchString`` takes it: a rule outside
     RE2's syntax raises ``re.error``, as it errors there, and ``\\d``,
-    ``\\w`` and ``\\b`` are ASCII classes, as RE2 reads them (``\\s``
-    still matches ``\\v``, which RE2's does not)."""
+    ``\\w``, ``\\b`` and ``\\s`` are RE2's ASCII classes (``\\s`` without
+    ``\\v``, from :func:`re2_parse`)."""
     compile_bytes_regex(rule)
-    return re.compile(_go_anchored(rule), re.ASCII)
+    return _compiler.compile(re2_parse(_go_anchored(rule), re.ASCII))
 
 
 def regex_match(rule: str, text: str) -> tuple[bool, str | None]:

@@ -9,6 +9,7 @@ import random
 import duckdb
 import pytest
 
+from safe_zone_spark.crossing import text_udf
 from safe_zone_spark.functions import bpe
 
 
@@ -101,7 +102,8 @@ def test_mix_and_pack_on_bpe_tokens(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(200)
     with_tok = docs.select(
-        "doc_id", "lang", bpe.bpe_count_udf()(F.col("text")).alias("bpe_tokens")
+        "doc_id", "lang",
+        text_udf(lambda t: bpe.bpe_token_counts(t)[1], "long")(F.col("text")).alias("bpe_tokens")
     ).cache()
     totals = {
         r[0]: int(r[1])

@@ -84,7 +84,7 @@ def test_scan_fields_and_extra_scorers_ride_the_crossing(spark):
 
     df = spark.createDataFrame([(1, "mail a@b.co now"), (2, "plain text")], "id int, text string")
     out = scan(df, default_rules(), fields=("scrubbed_text", "keep"),
-               extra_scorers={"n": ("int", lambda t: t.str.len())})
+               extra_scorers={"n": ("int", lambda t: [len(s) for s in t])})
     assert out.columns == ["id", "text", "keep", "scrubbed_text", "n"]
     rows = sorted(out.collect())
     assert [r.n for r in rows] == [15, 10]

@@ -10,7 +10,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from safe_zone_spark.functions.langid import langid_ngram_udf
+from safe_zone_spark.crossing import text_udf
+from safe_zone_spark.functions.langid import classify_texts
 from safe_zone_spark.functions.quality import gopher_quality_columns
 from safe_zone_spark.plans.pipeline import run_with_manifest
 from safe_zone_spark.sources.corpus import generate_corpus
@@ -54,9 +55,13 @@ def test_filters_pushed_below_scan_not_udf(spark):
     Python stage follows (Catalyst can't reorder across a UDF barrier, so
     order in code = order in plan — SURVEY §4)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").filter(F.col("n_chars") > 50)
-    out = docs.select("doc_id", langid_ngram_udf()(F.col("text")).alias("lang"))
+    out = docs.select("doc_id", text_udf(classify_texts, "string")(F.col("text")).alias("lang"))
     plan = plan_of(out)
     assert "PushedFilters: [IsNotNull(n_chars), GreaterThan(n_chars,50)" in plan
+    # the Arrow UDF is an ArrowEvalPython node, so Catalyst still prunes the
+    # scan to the columns the query reads
+    assert "ArrowEvalPython" in plan
+    assert "ReadSchema: struct<doc_id:bigint,text:string,n_chars:bigint>" in plan
 
 
 def test_flagship_plan_is_one_narrow_arrow_stage(spark, tmp_path):
@@ -136,7 +141,7 @@ def test_partition_pruning_on_date_partitioned_output(spark, tmp_path):
 
 def test_langid_accuracy_on_labeled_corpus(spark):
     corpus = generate_corpus(spark, 500, seed=5)
-    pred = corpus.select("lang", langid_ngram_udf()(F.col("text")).alias("pred"))
+    pred = corpus.select("lang", text_udf(classify_texts, "string")(F.col("text")).alias("pred"))
     acc = pred.select(F.avg((F.col("lang") == F.col("pred")).cast("double"))).head()[0]
     assert acc >= 0.95
 

@@ -88,7 +88,7 @@ def test_repetition_fused_equals_duckdb_twin(spark):
     ``repetition_oracle_sql`` — including the half-up rounding boundary:
     doc 10 has dup_line_frac exactly 1/32 = 0.03125, where banker's
     rounding in the Python stage would emit 0.0312 vs the engines' 0.0313
-    (the reason repetition_series emits RAW doubles and rounding stays
+    (the reason repetition_columns emits RAW doubles and rounding stays
     JVM-side)."""
     lines = [f"unique line number {i} with several words" for i in range(31)]
     boundary = "\n".join(lines + [lines[0]])  # 32 lines, 1 dup

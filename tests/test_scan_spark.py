@@ -166,6 +166,7 @@ def test_extract_and_scan_fused_matches_two_stage(spark, corpus_pdf):
     and survive empty partitions and an empty batch."""
     import pyarrow as pa
 
+    from safe_zone_spark.crossing import record_batch
     from safe_zone_spark.operators.scan import _crossing_batch, extract_and_scan
     from safe_zone_spark.sources.extract import extract_text
 
@@ -196,9 +197,10 @@ def test_extract_and_scan_fused_matches_two_stage(spark, corpus_pdf):
     assert {r["url"]: r.asDict(recursive=True) for r in few.collect()} == {
         u: f[u] for u in few.toPandas()["url"]}
     assert extract_and_scan(sdf.filter("false"), RULES).count() == 0
-    appended = pa.schema([("keep", pa.bool_()), ("breakdown", pa.map_(pa.string(), pa.int32()))])
-    empty = _crossing_batch(["url"], [pa.array([], pa.string())], [], RULES, appended,
-                            ("keep", "breakdown"), {}, mode="MASK")
+    schema = pa.schema([("url", pa.string()), ("keep", pa.bool_()),
+                        ("breakdown", pa.map_(pa.string(), pa.int32()))])
+    empty = record_batch(_crossing_batch([], RULES, ("keep", "breakdown"), {}, mode="MASK"),
+                         schema, pa.record_batch([pa.array([], pa.string())], names=["url"]))
     assert (empty.num_rows, empty.schema.names) == (0, ["url", "keep", "breakdown"])
 
 
@@ -229,11 +231,12 @@ def test_invalid_utf8_page_fails_only_itself(spark, corpus_pdf):
 
 def test_extract_and_scan_fused_extra_scorers_match_udfs(spark, corpus_pdf):
     """Fused langid/ppl extra_scorers (one Arrow crossing) must equal the
-    standalone pandas-UDF composition bit-for-bit."""
+    standalone Arrow-UDF composition bit-for-bit."""
     import pyspark.sql.functions as F
 
-    from safe_zone_spark.functions.langid import classify_series, langid_ngram_udf
-    from safe_zone_spark.functions.perplexity import perplexity_series, perplexity_udf
+    from safe_zone_spark.crossing import text_udf
+    from safe_zone_spark.functions.langid import classify_series, classify_texts
+    from safe_zone_spark.functions.perplexity import perplexity_batch, perplexity_series
     from safe_zone_spark.operators.scan import extract_and_scan
 
     sdf = spark.createDataFrame(
@@ -246,8 +249,8 @@ def test_extract_and_scan_fused_extra_scorers_match_udfs(spark, corpus_pdf):
     )
     composed = extract_and_scan(sdf, RULES, keep_cols=("url",), fields=("keep",)).select(
         "url",
-        langid_ngram_udf()(F.col("text")).alias("lang_pred"),
-        perplexity_udf()(F.col("text")).alias("ppl"),
+        text_udf(classify_texts, "string")(F.col("text")).alias("lang_pred"),
+        text_udf(perplexity_batch, "double")(F.col("text")).alias("ppl"),
     )
     f = {r["url"]: r for r in fused.collect()}
     c = {r["url"]: r for r in composed.collect()}

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from safe_zone_spark.crossing import text_udf
 from safe_zone_spark.operators.validate import checksum_candidates, validator_columns
 
 
@@ -108,7 +109,7 @@ def test_poly_gram_hash_contract(spark):
         gram_hashes_batch,
         poly_gram_hashes_expr,
         poly_gram_sum_sql,
-        winnow_fp_udf,
+        winnow_fingerprints,
         winnowing_expr,
     )
 
@@ -145,7 +146,7 @@ def test_poly_gram_hash_contract(spark):
     rows = df.select(
         "doc_id",
         poly_gram_hashes_expr("text", k=k).alias("g"),
-        winnow_fp_udf()(F.col("text")).alias("u"),
+        text_udf(winnow_fingerprints, "string")(F.col("text")).alias("u"),
         F.concat_ws(",", winnowing_expr("text")).alias("e"),
     ).collect()
     for r in rows:
@@ -155,13 +156,13 @@ def test_poly_gram_hash_contract(spark):
 
 
 def test_cdc_chunks_partition_exactly(spark):
-    """cdc_chunks_udf output must PARTITION each doc: ordered concat of all
+    """cdc_chunks output must PARTITION each doc: ordered concat of all
     chunks is byte-identical to the input (the rebuild-correctness
     precondition), and boundaries are content-defined (a shared span at two
     offsets yields identical interior chunks)."""
     import pyspark.sql.functions as F
 
-    from safe_zone_spark.operators.dedup import cdc_chunks_udf
+    from safe_zone_spark.operators.dedup import cdc_chunks
 
     # "hot keg fox fig " is a verified boundary gram (hash % 64 == 0), so
     # the shared passage is GUARANTEED interior boundaries at any offset —
@@ -172,7 +173,8 @@ def test_cdc_chunks_partition_exactly(spark):
             (2, "short"), (3, "")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     ch = {r["doc_id"]: r["c"] for r in
-          df.select("doc_id", cdc_chunks_udf()(F.col("text")).alias("c")).collect()}
+          df.select("doc_id", text_udf(cdc_chunks, "array<string>")(F.col("text")).alias("c"))
+          .collect()}
     for i, t in rows:
         assert "".join(ch[i]) == t
     assert set(ch[0][1:-1]) & set(ch[1][1:-1])  # shared interior chunks

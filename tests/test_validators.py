@@ -90,6 +90,21 @@ def test_regex_validator_classes_are_ascii():
     assert regex_match(r"^\d+$", "123") == (True, None)
 
 
+def test_regex_validator_space_class_excludes_vertical_tab_as_in_duckdb():
+    """``\\s`` is RE2's ``[\\t\\n\\f\\r ]``, without the ``\\v`` Python's
+    class holds, and ``\\S`` is its complement, in and outside a bracket
+    class: each rule answers as DuckDB's ``regexp_matches`` does."""
+    import duckdb
+
+    cases = ((r"^\s$", "\v"), (r"^\S$", "\v"), (r"^[^\s]+$", "a\vb"), (r"^[\s\d]+$", "1\v2"),
+             (r"^\s+$", " \t\n\f\r"), (r"^\S+$", "a b"), (r"(?i)^\S+$", "ÄbC"))
+    for rule, text in cases:
+        want = duckdb.execute("SELECT regexp_matches(?, ?)", [text, rule]).fetchone()[0]
+        assert regex_match(rule, text) == (want, None), rule
+    assert regex_match(r"^\s$", "\v") == (False, None)
+    assert regex_match(r"^\S$", "\v") == (True, None)
+
+
 def test_regex_validator_outside_re2_syntax_errors_and_blocks():
     """A rule Go's RE2 cannot compile errors as ``regexp.MatchString``
     does, so the validator blocks at confidence 1.0 (guardrails.go:84-88)."""
